@@ -172,3 +172,31 @@ def test_precision_recall_zero_side_null_semantics(spark):
     assert rows[0] == (1.0, 0.5)
     assert rows[7][0] is None and rows[7][1] == 0.0
     assert rows[9][0] == 0.0 and rows[9][1] is None
+
+
+def test_empty_query_batch_truth_kernel_and_pair(spark):
+    """An empty query batch: exact_local_topk_kernel builds a batch_fn
+    that emits three empty arrays, and sq8_search with a truth_fn
+    returns the documented (pred, empty truth) pair."""
+    from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
+    from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
+
+    rng = np.random.default_rng(5)
+    C = rng.normal(size=(50, 8))
+    fn = exact_local_topk_kernel([], "l2", 5)
+    q, i, d = fn(C, np.arange(50, dtype=np.int64))
+    assert len(q) == len(i) == len(d) == 0
+
+    corpus = spark.createDataFrame(
+        [(i, list(map(float, C[i]))) for i in range(len(C))],
+        "id bigint, vec array<double>",
+    )
+    empty_q = spark.createDataFrame([], "query_id bigint, qvec array<double>")
+    pred, truth = sq8_search(
+        empty_q, None, sq8_stats(corpus, 8), corpus, 8, k=5, shortlist=20,
+        vectors=corpus, truth_fn=fn, qrows=[],
+    )
+    assert truth.schema.simpleString() == (
+        "struct<query_id:bigint,id:bigint,dist:double,rn:int>"
+    )
+    assert pred.count() == 0 and truth.count() == 0

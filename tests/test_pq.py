@@ -435,3 +435,45 @@ def test_adc_probe_cell_sampling_on_clustered_corpus(spark, tmp_path):
     assert cel["recommended_shortlist"] >= full["recommended_shortlist"]
     # determinism: a pure function of the store (re-run identical)
     assert adc_shortlist_probe(spark, path, sample_rows=400) == cel
+
+
+def test_residual_lut_batched_equals_one_row_calls():
+    """The batched residual LUT build (one _seq_sq_l2 per subspace over
+    all centroid rows) is bit-identical to one-row builds, and the
+    per-row cell-indexed ADC fold equals a per-cell fold."""
+    import numpy as np
+
+    from vector_search_go_spark.operators.argmin import _seq_sq_l2
+    from vector_search_go_spark.operators.pq import adc_fold, residual_lut
+
+    rng = np.random.default_rng(11)
+    n_codes = 12
+    # codeword ids out of order, one code slot left unused
+    cb_ids = {s: rng.permutation(n_codes)[: n_codes - 1] for s in range(M_SUB)}
+    cb_mats = {s: rng.standard_normal((n_codes - 1, D_SUB)) for s in range(M_SUB)}
+    q = rng.standard_normal(M_SUB * D_SUB)
+    cents = rng.standard_normal((5, M_SUB * D_SUB)) * 3.0
+
+    luts = residual_lut(q, cents, cb_ids, cb_mats, n_codes)
+    assert luts.shape == (5, M_SUB, n_codes)
+    for c, row in enumerate(cents):
+        # the one-row call and the inline per-subspace construction
+        one = np.zeros((M_SUB, n_codes))
+        qr = q - row
+        for sub in range(M_SUB):
+            sl = qr[sub * D_SUB : (sub + 1) * D_SUB][None, :]
+            one[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+        assert np.array_equal(residual_lut(q, row, cb_ids, cb_mats, n_codes), one)
+        assert np.array_equal(luts[c], one)
+
+    codes = np.stack(
+        [rng.choice(cb_ids[s], size=40) for s in range(M_SUB)], axis=1
+    )
+    cell_idx = rng.integers(0, 5, size=40)
+    got = adc_fold(luts, cell_idx, codes)
+    for c in range(5):
+        m = cell_idx == c
+        a = np.zeros(int(m.sum()))
+        for sub in range(M_SUB):
+            a = a + luts[c][sub][codes[m, sub]]
+        assert np.array_equal(got[m], a)

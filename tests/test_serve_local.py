@@ -263,10 +263,10 @@ def test_survivor_pmod_multi_matches_per_bucket():
 
 @pytest.fixture(scope="module")
 def big_bucket_store(spark, tmp_path_factory):
-    """A store whose candidate sets EXCEED the two-stage scorer's 2048
-    cutoff (k_min_vecs > corpus => one bucket per tree, no cap), so
-    these tests exercise the BLAS-prefilter + exact-rescore path, not
-    the small-set full-exact shortcut."""
+    """A store whose candidate sets EXCEED the two-stage scorer's
+    TWO_STAGE_MIN_ROWS cutoff (k_min_vecs > corpus => one bucket per
+    tree, no cap), so these tests exercise the BLAS-prefilter +
+    exact-rescore path, not the small-set full-exact shortcut."""
     from vector_search_go_spark.config import LshConfig
     from vector_search_go_spark.lsh.index import LshIndex
 
@@ -287,8 +287,8 @@ def big_bucket_store(spark, tmp_path_factory):
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_two_stage_scorer_matches_full_exact(big_bucket_store, metric):
     # preloaded reader (two-stage) vs lazy reader (always full exact
-    # kernel) on >2048-candidate sets: bit-identical rows, including
-    # the duplicate tie cluster and a threshold cut
+    # kernel) on sets above TWO_STAGE_MIN_ROWS: bit-identical rows,
+    # including the duplicate tie cluster and a threshold cut
     from vector_search_go_spark.serve.local_reader import LocalLshReader
 
     path, X = big_bucket_store
@@ -446,6 +446,71 @@ def test_local_ivf_search_many_matches_single(stores):
         ignore_index=True,
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_local_ivf_two_stage_matches_full_exact_ranking(spark, stores, tmp_path):
+    # probed-row sets below (nprobe=2) and above (nprobe=15, every
+    # cell) TWO_STAGE_MIN_ROWS: search and search_many, preloaded and
+    # lazy, with tombstones and a threshold, must equal the full
+    # single_query_dists ranking of every live probed row
+    import shutil
+
+    from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+    from vector_search_go_spark.operators.argmin import single_query_dists
+    from vector_search_go_spark.serve.local_reader import (
+        TWO_STAGE_MIN_ROWS,
+        LocalIvfReader,
+        _result_frame,
+    )
+    from vector_search_go_spark.streaming.delete import delete_ids
+
+    base, queries = stores
+    path = str(tmp_path / "ivf")
+    shutil.copytree(str(base / "ivf"), path)
+    dead = [42, 1203, 1250, 7]  # a query's own row + duplicate-block ties
+    delete_ids(spark, path, dead)
+    readers = [
+        LocalIvfReader(path, metric="cosine", preload_cells=p)
+        for p in (True, False)
+    ]
+    cells = readers[0]._mem_cells
+
+    def full_rank(q, nprobe, k, threshold, qid):
+        probed = probe_cells_for(None, None, q, "cosine", nprobe,
+                                 model=readers[0].model)
+        hit = [cells[int(c)] for c in probed if int(c) in cells]
+        ids = np.concatenate([h[0] for h in hit])
+        V = np.concatenate([h[1] for h in hit])
+        live = ~np.isin(ids, dead)
+        ids, V = ids[live], V[live]
+        d = single_query_dists("cosine", q, V)
+        if threshold is not None:
+            ids, d = ids[d <= threshold], d[d <= threshold]
+        return _result_frame(ids, d, k, qid), len(live)
+
+    Q = np.asarray(queries)
+    sizes = set()
+    for nprobe in (2, 15):
+        for k, thr in ((10, None), (400, 0.9)):
+            want = []
+            for i, q in enumerate(Q):
+                w, n_rows = full_rank(q, nprobe, k, thr, i)
+                sizes.add(n_rows > TWO_STAGE_MIN_ROWS)
+                want.append(w)
+                for rd in readers:
+                    pd.testing.assert_frame_equal(
+                        rd.search(q, k=k, nprobe=nprobe, threshold=thr,
+                                  query_id=i),
+                        w,
+                    )
+            for rd in readers:
+                pd.testing.assert_frame_equal(
+                    rd.search_many(Q, k=k, nprobe=nprobe, threshold=thr),
+                    pd.concat(want, ignore_index=True),
+                )
+    assert sizes == {False, True}  # both sides of the crossover ran
+    # the tombstones are on the tested path: query 0 is row 42's vector
+    assert 42 not in set(readers[0].search(Q[0], k=10, nprobe=15)["id"])
 
 
 def test_local_ivfpq_search_many_matches_single(stores):

@@ -9,7 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-N, DIMS = 3000, 32  # N > 2048 puts the two-stage BLAS path on the tested path
+# N > TWO_STAGE_MIN_ROWS puts the two-stage BLAS path on the tested path
+N, DIMS = 3000, 32
 
 
 @pytest.fixture(scope="module")
@@ -105,7 +106,7 @@ def test_scan_search_many_equals_per_query(scan_store):
 
 
 def test_scan_reader_small_store_exact_path(spark, tmp_path):
-    """Under the 2048-candidate cutoff the single-stage exact kernel
+    """Under the TWO_STAGE_MIN_ROWS cutoff the single-stage exact kernel
     serves; parity must hold there too."""
     from vector_search_go_spark.operators.exact_knn import (
         exact_knn_join,

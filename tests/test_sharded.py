@@ -662,6 +662,98 @@ def test_sharded_sq8_matches_unsharded(ivfpq_sq8_stores):
         sharded.close()
 
 
+def _assert_owner_routed(phase1: dict, fetches: list) -> None:
+    """Every phase-2 fetch sends a shard only ids that shard listed for
+    that query in phase 1, each kept id reaches exactly one shard, and
+    no shard is called without ids."""
+    seen: dict = {}
+    for s, ids_per_query, qids in fetches:
+        assert any(len(ids) for ids in ids_per_query)
+        f = phase1[s]
+        for qid, ids in zip(qids, ids_per_query):
+            listed = set(f.loc[f["query_id"] == qid, "id"].tolist())
+            assert ids and set(ids) <= listed, (s, qid)
+            for i in ids:
+                assert (qid, i) not in seen, (qid, i)
+                seen[(qid, i)] = s
+    assert seen
+
+
+def test_sharded_sq8_owner_routed_rerank(ivfpq_sq8_stores):
+    """Phase 2 of the sharded SQ8 protocol fetches each kept id only
+    from the shard whose phase-1 frame listed it (spied on
+    fetch_dists_many in thread mode, on the worker submits in process
+    mode), and results stay bit-identical to the unsharded reader."""
+    from vector_search_go_spark.serve import sharded as sh
+    from vector_search_go_spark.serve.local_reader import LocalIvfPqReader
+
+    base, queries, _ = ivfpq_sq8_stores
+    single = LocalIvfPqReader(str(base / "single"), preload_sq8=True)
+    kw = {"shortlist": 200, "sq8_keep": 25}
+    want1 = single.search(queries[2], k=10, rerank="sq8", **kw)
+    want_b = single.search_many(
+        queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
+    )
+
+    with sh.ShardedReader(str(base / "sharded"), preload_sq8=True) as thr:
+        phase1: dict = {}
+        fetches: list = []
+        for s, r in enumerate(thr.readers):
+            def cand(*a, _s=s, _f=r.shard_candidates_sq8, **k):
+                phase1[_s] = _f(*a, **k)
+                return phase1[_s]
+
+            def cand_many(*a, _s=s, _f=r.shard_candidates_sq8_many, **k):
+                phase1[_s] = _f(*a, **k)
+                return phase1[_s]
+
+            def fetch(Q, ids, query_ids=None, _s=s, _f=r.fetch_dists_many):
+                fetches.append((_s, ids, list(query_ids)))
+                return _f(Q, ids, query_ids=query_ids)
+
+            r.shard_candidates_sq8 = cand
+            r.shard_candidates_sq8_many = cand_many
+            r.fetch_dists_many = fetch
+        got = thr.search(queries[2], k=10, query_id=0, rerank="sq8", **kw)
+        assert _frame_rows(got) == _frame_rows(want1)
+        _assert_owner_routed(phase1, fetches)
+        phase1.clear()
+        fetches.clear()
+        got = thr.search_many(
+            queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
+        )
+        assert _frame_rows(got) == _frame_rows(want_b)
+        _assert_owner_routed(phase1, fetches)
+
+    with sh.ShardedReader(
+        str(base / "sharded"), processes=True, preload_sq8=True
+    ) as proc:
+        calls: list = []
+        for s, p in enumerate(proc._procs):
+            def submit(fn, args, _s=s, _submit=p.submit):
+                fut = _submit(fn, args)
+                calls.append((_s, fn, args, fut))
+                return fut
+
+            p.submit = submit
+        got = proc.search_many(
+            queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
+        )
+        assert _frame_rows(got) == _frame_rows(want_b)
+        _assert_owner_routed(
+            {
+                s: fut.result()
+                for s, fn, _a, fut in calls
+                if fn is sh._shard_worker_ivfpq_sq8_cand_many
+            },
+            [
+                (s, a[1], a[2])
+                for s, fn, a, _f in calls
+                if fn is sh._shard_worker_fetch_dists_many
+            ],
+        )
+
+
 def test_sq8_augment_existing_store(spark, ivfpq_sq8_stores):
     """A tier-less store raises a clear error on rerank='sq8';
     sq8_augment_store adds the tier in place, after which results are

@@ -110,6 +110,12 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
     code path. ``qrows`` must be the sorted (query_id, qvec) batch."""
     from vector_search_go_spark.operators.argmin import _seq_cosine, _seq_sq_l2
 
+    if not qrows:
+        # empty query batch: no truth rows (Q would be 1-D below)
+        def empty_fn(V, ids_b):
+            return (np.empty(0, dtype=np.int64), ids_b[:0], np.empty(0))
+
+        return empty_fn
     qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
     Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
     is_cos = metric in ("cosine", "angular")

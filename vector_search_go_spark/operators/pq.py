@@ -315,21 +315,40 @@ def pq_codes_residual_udf(codebook: DataFrame, coarse_cents):
     return codes_udf
 
 
-def residual_lut(q: np.ndarray, cent_row: np.ndarray, cb_ids, cb_mats,
+def residual_lut(q: np.ndarray, cent_rows: np.ndarray, cb_ids, cb_mats,
                  n_codes: int) -> np.ndarray:
-    """The per-(query, cell) ADC lookup table of a residual store:
-    LUT[sub][code] = squared L2 from (q - centroid(cell))'s sub-th
+    """The per-(query, cell) ADC lookup tables of a residual store:
+    LUT[cell][sub][code] = squared L2 from (q - centroid(cell))'s sub-th
     subvector to that codeword — same sequential-IEEE kernel as the raw
     LUT, so the table is bit-identical wherever it is built (Spark
-    point paths, local reader, shard readers, shortlist probe)."""
+    point paths, local reader, shard readers, shortlist probe).
+
+    ``cent_rows`` is a (n_cells, D) matrix of centroid rows -> tables
+    (n_cells, M_SUB, n_codes), built with ONE _seq_sq_l2 call per
+    subspace; a single (D,) row -> its (M_SUB, n_codes) table. Each
+    table is bit-identical to a one-row call (_seq_sq_l2's adds are
+    per row)."""
     from vector_search_go_spark.operators.argmin import _seq_sq_l2
 
-    qr = q - cent_row
-    lut = np.zeros((M_SUB, n_codes))
+    cent_rows = np.asarray(cent_rows, dtype=np.float64)
+    QR = q[None, :] - np.atleast_2d(cent_rows)
+    lut = np.zeros((len(QR), M_SUB, n_codes))
     for sub in range(M_SUB):
-        sl = qr[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-        lut[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
-    return lut
+        lut[:, sub, cb_ids[sub]] = _seq_sq_l2(
+            QR[:, sub * D_SUB : (sub + 1) * D_SUB], cb_mats[sub]
+        )
+    return lut[0] if cent_rows.ndim == 1 else lut
+
+
+def adc_fold(luts: np.ndarray, lut_idx: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Squared ADC sum of each codes row under its own table
+    ``luts[lut_idx[row]]`` — M_SUB sequential adds in subspace order,
+    the per-row float order every ADC scorer shares (sqrt is the
+    caller's)."""
+    acc = np.zeros(len(codes))
+    for sub in range(M_SUB):
+        acc = acc + luts[lut_idx, sub, codes[:, sub]]
+    return acc
 
 
 def pq_adc_candidates(
@@ -823,10 +842,7 @@ def ivfpq_adc_candidates_res(
             lut3 = np.stack(
                 [lut_for(qpos[int(q)], int(c)) for q, c in uq]
             )
-            acc = np.zeros(len(Cd))
-            for sub in range(M_SUB):
-                acc = acc + lut3[pair_idx, sub, Cd[:, sub]]
-            d = np.sqrt(acc)
+            d = np.sqrt(adc_fold(lut3, pair_idx, Cd))
             if local_topk is not None and len(d) > local_topk:
                 keep = local_topk_flat(q_arr, ids_arr, d, local_topk)
                 q_arr, ids_arr, d = q_arr[keep], ids_arr[keep], d[keep]
@@ -1528,9 +1544,8 @@ def adc_shortlist_probe(
     if enc == "residual":
         # residual ADC ranks score each sampled row under ITS OWN
         # cell's LUT — exactly what serving's per-(query, cell) tables
-        # compute. One vectorized LUT build over the sample's distinct
-        # cells per query (_seq_sq_l2 is row-independent, so each
-        # cell's row equals the serving-side residual_lut)
+        # compute. One batched residual_lut build over the sample's
+        # distinct cells per query
         dcells = np.unique(cellarr)
         cell_idx = np.searchsorted(dcells, cellarr)
         from vector_search_go_spark.operators.ann_ivf import load_ivf_model
@@ -1545,16 +1560,12 @@ def adc_shortlist_probe(
         q = X[qi]
         exact = sq - 2.0 * (X @ q) + (q @ q)
         truth = np.lexsort((ids, exact))[:k]
-        adc = np.zeros(m)
         if enc == "residual":
-            R = q[None, :] - Cd
-            for sub in range(M_SUB):
-                lut_sub = np.zeros((len(dcells), n_codes))
-                lut_sub[:, cb_ids[sub]] = _seq_sq_l2(
-                    R[:, sub * D_SUB : (sub + 1) * D_SUB], cb_mats[sub]
-                )
-                adc = adc + lut_sub[cell_idx, codes[:, sub]]
+            adc = adc_fold(
+                residual_lut(q, Cd, cb_ids, cb_mats, n_codes), cell_idx, codes
+            )
         else:
+            adc = np.zeros(m)
             lut = np.zeros((M_SUB, n_codes))
             for sub in range(M_SUB):
                 sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
@@ -1694,25 +1705,18 @@ def ivfpq_point_search(
     n_codes = max(int(ids[s].max()) for s in ids) + 1
     if enc == "residual":
         C, cpos = _coarse_pos(coarse_model)
-        luts = {
-            int(c): residual_lut(q, C[cpos[int(c)]], ids, mats, n_codes)
-            for c in probe_cells
-        }
+        # one batched table per probed cell (sorted), each row's table
+        # picked by its cell's position
+        pcells = np.unique(np.asarray(probe_cells, dtype=np.int64))
+        luts = residual_lut(
+            q, C[[cpos[int(c)] for c in pcells]], ids, mats, n_codes
+        )
 
         @pandas_udf("double")
         def adc_res(cells: pd.Series, codes: pd.Series) -> pd.Series:
-            Cd = np.array(codes.tolist(), dtype=np.int64)
-            cellv = cells.to_numpy()
-            acc = np.empty(len(Cd))
-            for cell in np.unique(cellv):
-                m = cellv == cell
-                lut = luts[int(cell)]
-                a = np.zeros(int(m.sum()))
-                Cm = Cd[m]
-                for sub in range(M_SUB):
-                    a = a + lut[sub][Cm[:, sub]]
-                acc[m] = a
-            return pd.Series(np.sqrt(acc))
+            Cd = np.array(codes.tolist(), dtype=np.int64).reshape(-1, M_SUB)
+            idx = np.searchsorted(pcells, cells.to_numpy())
+            return pd.Series(np.sqrt(adc_fold(luts, idx, Cd)))
 
         adc_col = adc_res(F.col("cell"), F.col("codes"))
     else:

@@ -143,10 +143,17 @@ def sq8_search(
         if not qrows:
             # empty query batch: Q would be 1-D and the kernel slices
             # invalid — feed an empty approx frame to the shared rerank
-            approx = queries.sparkSession.createDataFrame(
+            # (and, with truth_fn, pair it with an empty truth table)
+            spark = queries.sparkSession
+            approx = spark.createDataFrame(
                 [], "query_id long, id long, approx_dist double"
             )
-            return _sq8_finish(approx, queries, corpus, k, shortlist)
+            pred = _sq8_finish(approx, queries, corpus, k, shortlist)
+            if truth_fn is None:
+                return pred
+            return pred, spark.createDataFrame(
+                [], "query_id long, id long, dist double, rn int"
+            )
         qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
         Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
 

@@ -209,6 +209,15 @@ def _swap_retry(fn):
 # (dist, id) ranking of the returned rows.
 TWO_STAGE_MARGIN = 1e-4
 
+# candidate-set size at or below which _two_stage_dists runs the
+# sequential exact kernel on every row instead: the BLAS pass + margin
+# select + partial rescore has a fixed cost that only pays above it.
+# Measured (k=10, one BLAS thread, 4-core x86 box): the two-stage
+# scorer breaks even at ~256-768 rows for 64-d and ~512-1024 rows for
+# 16-d vectors; at 1024 rows it is 1.0-1.7x faster, at 2048 rows
+# 1.4-3.3x, at 8192 rows 2-8x (l2 and cosine).
+TWO_STAGE_MIN_ROWS = 1024
+
 
 def _two_stage_dists(
     metric: str,
@@ -223,8 +232,11 @@ def _two_stage_dists(
     single_query_dists on every row that can be returned: a BLAS
     approximate pass (precomputed squared norms ``n2``) picks the
     margin set, the sequential-IEEE exact kernel rescores only that
-    set. Shared by the LSH candidate scorer and the scan reader."""
+    set. Sets of at most TWO_STAGE_MIN_ROWS rows take the exact kernel
+    whole. Shared by the LSH, IVF and scan readers."""
     n = len(V)
+    if n <= TWO_STAGE_MIN_ROWS:
+        return single_query_dists(metric, q, V)
     is_cos = metric in ("cosine", "angular")
     q2 = float(q @ q)
     dot = V @ q
@@ -503,7 +515,7 @@ class LocalLshReader:
         use the shared two-stage scorer (_two_stage_dists) — the
         64-strided-pass exact kernel over 40k+ candidates was ~50 ms
         of the serving path."""
-        if rows is None or len(V) <= 2048:
+        if rows is None:
             return single_query_dists(self.metric, q, V)
         return _two_stage_dists(
             self.metric, q, V, self._norms2[rows], k, threshold,
@@ -581,10 +593,16 @@ class LocalIvfReader:
     """Point lookups over a saved IVF store (ivf_save layout:
     centroids + cells/cell=N/ holding full vectors).
 
-    ``preload_cells=True`` pins every cell's (ids, matrix) in reader
-    RAM at init — the fully in-memory regime (same trade as the LSH
-    reader's ``preload_buckets``): a probe becomes a dict lookup +
-    numpy concat instead of per-query parquet decode."""
+    Probed rows are scored by the shared two-stage scorer
+    (_two_stage_dists: BLAS bound, exact rescore of the margin set)
+    above TWO_STAGE_MIN_ROWS, so returned rows stay bit-identical to
+    single_query_dists over every probed row.
+
+    ``preload_cells=True`` pins every cell's (ids, matrix, squared
+    norms) in reader RAM at init — the fully in-memory regime (same
+    trade as the LSH reader's ``preload_buckets``): a probe becomes a
+    dict lookup + numpy concat instead of per-query parquet decode.
+    The norms cost 8 B per row; the lazy path computes them per read."""
 
     def __init__(self, path: str, metric: str = "cosine",
                  preload_cells: bool = False):
@@ -609,10 +627,36 @@ class LocalIvfReader:
             # parquet reads release the GIL — fan the one-time preload
             # across the index's thread pool instead of one cell at a
             # time
-            self._mem_cells = _cell_arrays(
-                self._cells, self._cells.values(), "vec",
+            self._mem_cells = self._read_cells(self._cells.values())
+
+    def _read_cells(self, values) -> dict:
+        """{cell: (ids, V, squared row norms)} of the given cells."""
+        return {
+            c: (ids, V, np.einsum("ij,ij->i", V, V))
+            for c, (ids, V) in _cell_arrays(
+                self._cells, values, "vec",
                 lambda t: list_column_matrix(t, "vec", self.dims),
-            )
+            ).items()
+        }
+
+    def _query_frame(self, q, hits, k: int, threshold: float | None,
+                     query_id: int) -> pd.DataFrame:
+        """One query's result frame from its probed cells' (ids, V, n2)
+        in probe order: tombstones dropped, two-stage scored,
+        threshold applied."""
+        if not hits:
+            return _result_frame([], [], k, query_id)
+        ids, V, n2 = drop_tombstoned(
+            self._tomb, *(np.concatenate(col) for col in zip(*hits))
+        )
+        if len(ids) == 0:
+            return _result_frame([], [], k, query_id)
+        dists = _two_stage_dists(self.metric, q, V, n2, k, threshold)
+        if threshold is not None:
+            m = dists <= float(threshold)
+            ids = ids[m]
+            dists = dists[m]
+        return _result_frame(ids, dists, k, query_id)
 
     @_swap_retry
     def search(
@@ -623,42 +667,16 @@ class LocalIvfReader:
         threshold: float | None = None,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        import pyarrow as pa
-
         from vector_search_go_spark.operators.ann_ivf import probe_cells_for
 
         q = np.asarray(list(qvec), dtype=np.float64)
         probed = probe_cells_for(None, None, q, self.metric, nprobe, model=self.model)
-        if self._mem_cells is not None:
-            hits = [
-                self._mem_cells[int(c)]
-                for c in probed
-                if int(c) in self._mem_cells
-            ]
-            if not hits:
-                return _result_frame([], [], k, query_id)
-            ids = np.concatenate([h[0] for h in hits])
-            V = np.concatenate([h[1] for h in hits])
-        else:
-            tbls = [
-                t for t in
-                self._cells.read_values_parallel(probed, ["id", "vec"]).values()
-                if t is not None and t.num_rows
-            ]
-            if not tbls:
-                return _result_frame([], [], k, query_id)
-            tbl = pa.concat_tables(tbls, promote_options="permissive")
-            ids = tbl.column("id").to_numpy(zero_copy_only=False)
-            V = list_column_matrix(tbl, "vec", self.dims)
-        ids, V = drop_tombstoned(self._tomb, ids, V)
-        if len(ids) == 0:
-            return _result_frame([], [], k, query_id)
-        dists = single_query_dists(self.metric, q, V)
-        if threshold is not None:
-            m = dists <= float(threshold)
-            ids = ids[m]
-            dists = dists[m]
-        return _result_frame(ids, dists, k, query_id)
+        cell_map = (
+            self._mem_cells if self._mem_cells is not None
+            else self._read_cells(probed)
+        )
+        hits = [cell_map[int(c)] for c in probed if int(c) in cell_map]
+        return self._query_frame(q, hits, k, threshold, query_id)
 
     @_swap_retry
     def search_many(
@@ -686,33 +704,18 @@ class LocalIvfReader:
                             model=self.model)
             for i in range(len(Q))
         ]
-        if self._mem_cells is not None:
-            cell_map = self._mem_cells
-        else:
-            cell_map = _cell_arrays(
-                self._cells, _union_values(probes), "vec",
-                lambda t: list_column_matrix(t, "vec", self.dims),
+        cell_map = (
+            self._mem_cells if self._mem_cells is not None
+            else self._read_cells(_union_values(probes))
+        )
+        frames = [
+            self._query_frame(
+                Q[i],
+                [cell_map[int(c)] for c in probes[i] if int(c) in cell_map],
+                k, threshold, int(qid),
             )
-        frames = []
-        for i, qid in enumerate(query_ids):
-            hits = [
-                cell_map[int(c)] for c in probes[i] if int(c) in cell_map
-            ]
-            if not hits:
-                frames.append(_result_frame([], [], k, int(qid)))
-                continue
-            ids = np.concatenate([h[0] for h in hits])
-            V = np.concatenate([h[1] for h in hits])
-            ids, V = drop_tombstoned(self._tomb, ids, V)
-            if len(ids) == 0:
-                frames.append(_result_frame([], [], k, int(qid)))
-                continue
-            dists = single_query_dists(self.metric, Q[i], V)
-            if threshold is not None:
-                m = dists <= float(threshold)
-                ids = ids[m]
-                dists = dists[m]
-            frames.append(_result_frame(ids, dists, k, int(qid)))
+            for i, qid in enumerate(query_ids)
+        ]
         return pd.concat(frames, ignore_index=True)
 
 
@@ -1046,29 +1049,23 @@ class LocalIvfPqReader:
         """ADC score of every candidate row under the store's own
         encoding — THE scoring entry point all four search paths call.
         Raw: one global LUT per query (_query_lut + _adc_of). Residual:
-        one LUT per (query, candidate cell) over q - centroid(cell)
-        (pq.residual_lut — the same sequential-IEEE construction the
-        Spark point paths and the shortlist probe use, so sharded /
-        unsharded / Spark stay bit-identical)."""
-        from vector_search_go_spark.operators.pq import M_SUB, residual_lut
+        one LUT per (query, candidate cell) over q - centroid(cell),
+        all cells' tables in ONE batched pq.residual_lut build and one
+        pq.adc_fold keyed by each row's cell (the same sequential-IEEE
+        construction and subspace-ordered adds the Spark point paths
+        and the shortlist probe use, so sharded / unsharded / Spark
+        stay bit-identical)."""
+        from vector_search_go_spark.operators.pq import adc_fold, residual_lut
 
         n_codes = self._n_codes()
         if self.encoding != "residual":
             return self._adc_of(self._query_lut(q, n_codes), C)
-        Cmat = self.coarse[1]
-        acc = np.empty(len(C))
-        for cell in np.unique(cells):
-            m = cells == cell
-            lut = residual_lut(
-                q, Cmat[self._cpos[int(cell)]], self.cb_ids, self.cb_mats,
-                n_codes,
-            )
-            a = np.zeros(int(m.sum()))
-            Cm = C[m]
-            for sub in range(M_SUB):
-                a = a + lut[sub][Cm[:, sub]]
-            acc[m] = a
-        return np.sqrt(acc)
+        ucells, cell_idx = np.unique(cells, return_inverse=True)
+        luts = residual_lut(
+            q, self.coarse[1][[self._cpos[int(c)] for c in ucells]],
+            self.cb_ids, self.cb_mats, n_codes,
+        )
+        return np.sqrt(adc_fold(luts, cell_idx, C))
 
     @staticmethod
     def _adc_topl(ids, adc: np.ndarray, shortlist: int):
@@ -1650,13 +1647,10 @@ class LocalScanReader:
         query_id: int = 0,
     ) -> pd.DataFrame:
         q = np.asarray(list(qvec), dtype=np.float64)
-        if len(self.mat) <= 2048:
-            dists = single_query_dists(self.metric, q, self.mat)
-        else:
-            dists = _two_stage_dists(
-                self.metric, q, self.mat, self._norms2, k, threshold,
-                self.TWO_STAGE_MARGIN,
-            )
+        dists = _two_stage_dists(
+            self.metric, q, self.mat, self._norms2, k, threshold,
+            self.TWO_STAGE_MARGIN,
+        )
         ids = self.ids
         if threshold is not None:
             m = dists <= float(threshold)

@@ -560,40 +560,66 @@ class ShardedReader:
             kept[int(qid)] = sorted(int(x) for x in ua[ksel])
         return kept
 
-    def _finish_sq8(self, kept: dict, Q, qids, k: int) -> pd.DataFrame:
-        """Phase 2: exact distances for each query's kept ids from every
-        shard (ids are disjoint across shards — each contributes only
-        its own rows, with vectors-table multiplicity), then top-k by
-        (dist, id) per query in caller order."""
-        ids_per_query = [kept[int(q)] for q in qids]
+    def _finish_sq8(
+        self, phase1: list[pd.DataFrame], kept: dict, Q, qids, k: int
+    ) -> pd.DataFrame:
+        """Phase 2: exact distances for each query's kept ids, then
+        top-k by (dist, id) per query in caller order.
+
+        Owner routing: each kept id goes only to the shard(s) whose
+        phase-1 frame (``phase1[s]``) listed it for that query, and a
+        shard with no ids gets no call. Ids are disjoint across shards
+        (the pmod split) and a kept id is in its own shard's local
+        top-L (selection monotone), so its owner always listed it —
+        the fetched rows, with vectors-table multiplicity, are exactly
+        what asking every shard returns, without decoding row groups
+        for ids a shard cannot hold."""
+        qids = [int(q) for q in qids]
+        Q = np.asarray(Q, dtype=np.float64)
+        calls = []  # (shard, query rows, ids per routed query)
+        for s, f in enumerate(phase1):
+            listed = {
+                int(q): sub["id"].to_numpy()
+                for q, sub in f.groupby("query_id", sort=False)
+            }
+            rows, ids = [], []
+            for j, qid in enumerate(qids):
+                want = np.asarray(kept[qid], dtype=np.int64)
+                own = want[np.isin(want, listed.get(qid, []))]
+                if len(own):
+                    rows.append(j)
+                    ids.append(own.tolist())
+            if rows:
+                calls.append((s, rows, ids))
         if self._procs is not None:
-            qmat = [[float(x) for x in q] for q in np.asarray(Q, dtype=np.float64)]
             futs = [
-                p.submit(
+                self._procs[s].submit(
                     _shard_worker_fetch_dists_many,
-                    (qmat, ids_per_query, [int(q) for q in qids]),
+                    (Q[rows].tolist(), ids, [qids[j] for j in rows]),
                 )
-                for p in self._procs
+                for s, rows, ids in calls
             ]
             frames = [f.result() for f in futs]
         else:
             frames = list(
                 self._pool.map(
-                    lambda r: r.fetch_dists_many(
-                        Q, ids_per_query, query_ids=[int(q) for q in qids]
+                    lambda c: self.readers[c[0]].fetch_dists_many(
+                        Q[c[1]], c[2], query_ids=[qids[j] for j in c[1]]
                     ),
-                    self.readers,
+                    calls,
                 )
             )
-        allf = pd.concat(frames, ignore_index=True)
-        out = []
-        for qid in qids:
-            sub = allf[allf["query_id"] == int(qid)]
-            out.append(
-                _result_frame(
-                    sub["id"].tolist(), sub["dist"].tolist(), k, int(qid)
-                )
-            )
+        # one groupby pass, not a full-frame scan per query
+        groups = {}
+        if frames:
+            allf = pd.concat(frames, ignore_index=True)
+            groups = {
+                int(q): (sub["id"].tolist(), sub["dist"].tolist())
+                for q, sub in allf.groupby("query_id", sort=False)
+            }
+        out = [
+            _result_frame(*groups.get(qid, ([], [])), k, qid) for qid in qids
+        ]
         return pd.concat(out, ignore_index=True)
 
     def _resolve_sq8_keep(self, k: int, sq8_keep) -> int:
@@ -635,7 +661,9 @@ class ShardedReader:
                         )
                     )
                 kept = self._sq8_keep_ids(frames, shortlist, keep, [query_id])
-                return self._finish_sq8(kept, [list(qvec)], [query_id], k)
+                return self._finish_sq8(
+                    frames, kept, [list(qvec)], [query_id], k
+                )
             if rerank != "exact":
                 raise ValueError(f"unknown rerank mode {rerank!r}")
             if self._procs is not None:
@@ -728,7 +756,7 @@ class ShardedReader:
                     )
                 kept = self._sq8_keep_ids(frames, shortlist, keep, sent_ids)
                 Qn, _ = _batch_queries(Q, query_ids)
-                return self._finish_sq8(kept, Qn, sent_ids, k)
+                return self._finish_sq8(frames, kept, Qn, sent_ids, k)
             if rerank != "exact":
                 raise ValueError(f"unknown rerank mode {rerank!r}")
             if self._procs is not None:
