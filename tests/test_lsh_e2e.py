@@ -70,6 +70,64 @@ def test_index_save_load(spark, corpus, tmp_path):
     assert [(r["id"], r["dist"]) for r in r1] == [(r["id"], r["dist"]) for r in r2]
 
 
+def test_load_forest_fallback_is_narrow_and_logged(
+    spark, corpus, tmp_path, monkeypatch, caplog
+):
+    """The driver-side model read falls back to the Spark reader only
+    on read/parse errors, and logs it: a garbled model_config line
+    (single-quoted JSON, which Spark's JSON reader accepts and the
+    plain parser rejects) still loads the same forest, with a warning;
+    a TypeError raised inside the driver read is a bug and
+    propagates."""
+    import glob
+    import json
+    import logging
+    import os
+
+    import pyarrow.parquet as pa_pq
+
+    idx = LshIndex.train(spark, corpus, LshConfig(dims=2, n_trees=3, k_min_vecs=2))
+    path = str(tmp_path / "lsh_index")
+    idx.save(path)
+    logger = "vector_search_go_spark.lsh.index"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        want = LshIndex.load_forest(spark, path)
+    assert not caplog.records
+
+    part = next(
+        f
+        for f in sorted(glob.glob(os.path.join(path, "model_config", "*")))
+        if not os.path.basename(f).startswith(("_", ".")) and os.path.getsize(f)
+    )
+    with open(part) as fh:
+        good = fh.read()
+    cfg_json = json.loads(good.splitlines()[0])["config_json"]
+    assert "'" not in cfg_json
+    with open(part, "w") as fh:
+        fh.write("{'config_json': '" + cfg_json + "'}\n")
+    # the rewritten part no longer matches Hadoop's checksum sidecar
+    for crc in glob.glob(os.path.join(path, "model_config", ".*.crc")):
+        os.remove(crc)
+    with caplog.at_level(logging.WARNING, logger=logger):
+        got = LshIndex.load_forest(spark, path)
+    assert got.to_json() == want.to_json()
+    assert any(
+        "falling back to the Spark reader" in r.getMessage()
+        and "JSONDecodeError" in r.getMessage()
+        for r in caplog.records
+    )
+
+    with open(part, "w") as fh:
+        fh.write(good)
+
+    def broken(*_a, **_k):
+        raise TypeError("driver read bug")
+
+    monkeypatch.setattr(pa_pq, "read_table", broken)
+    with pytest.raises(TypeError, match="driver read bug"):
+        LshIndex.load_forest(spark, path)
+
+
 def test_max_candidates_cap(spark, corpus):
     cfg = LshConfig(dims=2, n_trees=10, k_min_vecs=2, max_candidates=2)
     idx = LshIndex.train(spark, corpus, cfg)

@@ -438,23 +438,28 @@ def test_adc_probe_cell_sampling_on_clustered_corpus(spark, tmp_path):
 
 
 def test_residual_lut_batched_equals_one_row_calls():
-    """The batched residual LUT build (one _seq_sq_l2 per subspace over
-    all centroid rows) is bit-identical to one-row builds, and the
-    per-row cell-indexed ADC fold equals a per-cell fold."""
+    """The batched residual LUT build (one broadcast over all centroid
+    rows) is bit-identical to one-row builds, and the per-row
+    cell-indexed ADC fold equals a per-cell fold."""
     import numpy as np
 
     from vector_search_go_spark.operators.argmin import _seq_sq_l2
-    from vector_search_go_spark.operators.pq import adc_fold, residual_lut
+    from vector_search_go_spark.operators.pq import (
+        adc_fold,
+        residual_lut,
+        stack_codebook,
+    )
 
     rng = np.random.default_rng(11)
-    n_codes = 12
     # codeword ids out of order, one code slot left unused
-    cb_ids = {s: rng.permutation(n_codes)[: n_codes - 1] for s in range(M_SUB)}
-    cb_mats = {s: rng.standard_normal((n_codes - 1, D_SUB)) for s in range(M_SUB)}
+    cb_ids = {s: rng.permutation(12)[:11] for s in range(M_SUB)}
+    cb_mats = {s: rng.standard_normal((11, D_SUB)) for s in range(M_SUB)}
     q = rng.standard_normal(M_SUB * D_SUB)
     cents = rng.standard_normal((5, M_SUB * D_SUB)) * 3.0
+    cbs = stack_codebook(cb_ids, cb_mats)
+    n_codes = cbs[0].shape[1]
 
-    luts = residual_lut(q, cents, cb_ids, cb_mats, n_codes)
+    luts = residual_lut(q, cents, cbs)
     assert luts.shape == (5, M_SUB, n_codes)
     for c, row in enumerate(cents):
         # the one-row call and the inline per-subspace construction
@@ -463,7 +468,7 @@ def test_residual_lut_batched_equals_one_row_calls():
         for sub in range(M_SUB):
             sl = qr[sub * D_SUB : (sub + 1) * D_SUB][None, :]
             one[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
-        assert np.array_equal(residual_lut(q, row, cb_ids, cb_mats, n_codes), one)
+        assert np.array_equal(residual_lut(q, row, cbs), one)
         assert np.array_equal(luts[c], one)
 
     codes = np.stack(
@@ -477,3 +482,38 @@ def test_residual_lut_batched_equals_one_row_calls():
         for sub in range(M_SUB):
             a = a + luts[c][sub][codes[m, sub]]
         assert np.array_equal(got[m], a)
+
+
+def test_residual_lut_stacked_equals_per_subspace_tables():
+    """ONE residual_lut broadcast over the stacked codebook gives, bit
+    for bit, the tables of one _seq_sq_l2 call per subspace — residual
+    rows and the raw (zero-centroid) table alike — and the code slots a
+    ragged trained codebook leaves empty in one subspace stay 0.0."""
+    import numpy as np
+
+    from vector_search_go_spark.operators.argmin import _seq_sq_l2
+    from vector_search_go_spark.operators.pq import residual_lut, stack_codebook
+
+    rng = np.random.default_rng(23)
+    n_codes = 16
+    cb_ids = {s: np.arange(n_codes) for s in range(M_SUB)}
+    # subspace 5 lacks codes 3, 9 and the top code; its ids are shuffled
+    cb_ids[5] = rng.permutation(np.setdiff1d(np.arange(n_codes), [3, 9, 15]))
+    cb_mats = {
+        s: rng.standard_normal((len(cb_ids[s]), D_SUB)) * 10.0 ** (s % 5 - 2)
+        for s in range(M_SUB)
+    }
+    q = rng.standard_normal(M_SUB * D_SUB) * 7.0
+    cents = np.vstack(
+        [rng.standard_normal((6, M_SUB * D_SUB)), np.zeros(M_SUB * D_SUB)]
+    )
+    luts = residual_lut(q, cents, stack_codebook(cb_ids, cb_mats))
+    assert luts.shape == (len(cents), M_SUB, n_codes)
+    for c, row in enumerate(cents):
+        want = np.zeros((M_SUB, n_codes))
+        for sub in range(M_SUB):
+            sl = (q - row)[sub * D_SUB : (sub + 1) * D_SUB][None, :]
+            want[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+        assert np.array_equal(luts[c], want), c
+    assert (luts[:, 5, [3, 9, 15]] == 0.0).all()
+    assert (luts[:, 4, 15] > 0.0).all()

@@ -676,3 +676,60 @@ def test_local_ivfpq_reader_preload_vectors(spark, stores):
         mem.shard_candidates_many(Q, shortlist=17, nprobe=3),
         lazy.shard_candidates_many(Q, shortlist=17, nprobe=3),
     )
+
+
+def test_topn_equals_full_lexsort_under_pivot_ties():
+    """The shared partition-then-lexsort top-n (every reader's result
+    ranking, the IVFADC shortlist and the sharded router) equals a full
+    (dist, id) lexsort when many rows tie with the n-th distance —
+    including duplicate (dist, id) rows, which keep their row order."""
+    from vector_search_go_spark.serve.local_reader import _topn
+
+    rng = np.random.default_rng(19)
+    for trial in range(300):
+        m = int(rng.integers(1, 500))
+        n = int(rng.integers(1, 40))
+        d = rng.choice([0.25, 0.5, 0.75, 1.0], size=m)
+        if trial % 3:
+            ids = rng.permutation(10 * m)[:m]
+        else:
+            ids = rng.integers(0, max(1, m // 4), size=m)  # repeated ids
+        want = np.lexsort((ids, d))[:n]
+        assert np.array_equal(_topn(ids, d, n), want), trial
+
+
+def test_row_group_index_serial_and_parallel_reads_identical(tmp_path):
+    """RowGroupIndex's serial and thread-pool reads return identical
+    tables (same rows, same order) for the same matched groups —
+    sorted files plus an appended unsorted one whose group ranges
+    overlap — whichever side of _PARALLEL_MIN_GROUPS a read lands."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vector_search_go_spark.serve.pqindex import RowGroupIndex
+
+    rng = np.random.default_rng(29)
+
+    def write(name, ids):
+        vec = pa.array(rng.standard_normal((len(ids), 4)).tolist())
+        pq.write_table(
+            pa.table({"id": pa.array(ids, pa.int64()), "vec": vec}),
+            str(tmp_path / name), row_group_size=7,
+        )
+
+    write("part-0.parquet", np.arange(0, 300))
+    write("part-1.parquet", np.arange(300, 520))
+    write("part-2.parquet", rng.permutation(np.arange(100, 400))[:60])
+    idx = RowGroupIndex(sorted(str(p) for p in tmp_path.glob("*.parquet")), "id")
+    for keys in ([5], [3, 150, 301, 519], rng.choice(520, 90, replace=False)):
+        mg = idx.matching_groups(keys)
+        serial = pa.concat_tables(idx._read_serial(mg, ["id", "vec"]))
+        parallel = pa.concat_tables(idx._read_parallel(mg, ["id", "vec"]))
+        assert serial.equals(parallel)
+        idx._PARALLEL_MIN_GROUPS = 1
+        via_parallel = idx.read(keys, ["id", "vec"])
+        idx._PARALLEL_MIN_GROUPS = 10**9
+        assert via_parallel.equals(idx.read(keys, ["id", "vec"]))
+        assert via_parallel.equals(serial)
+        got = set(serial.column("id").to_pylist())
+        assert {int(k) for k in keys} <= got

@@ -6,6 +6,7 @@ keep_mod contract)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -752,6 +753,42 @@ def test_sharded_sq8_owner_routed_rerank(ivfpq_sq8_stores):
                 if fn is sh._shard_worker_fetch_dists_many
             ],
         )
+
+
+def test_sharded_sq8_frames_equal_unsharded_thread_and_process(ivfpq_sq8_stores):
+    """Sharded rerank='sq8' lookups return frames EQUAL to the
+    unsharded reader's (values, dtypes, row order) in thread mode and
+    in process mode — single lookups and a batch whose query_ids are
+    not sorted, so the router's query segments must come back in the
+    caller's order."""
+    from vector_search_go_spark.serve.local_reader import LocalIvfPqReader
+    from vector_search_go_spark.serve.sharded import ShardedReader
+
+    base, queries, _ = ivfpq_sq8_stores
+    single = LocalIvfPqReader(str(base / "single"), preload_sq8=True)
+    qids = [11, 3, 7, 5]
+    kws = (
+        {"nprobe": 3, "shortlist": 200, "sq8_keep": 25},
+        {"nprobe": 2, "shortlist": 60, "sq8_keep": 15},
+    )
+    for processes in (False, True):
+        with ShardedReader(
+            str(base / "sharded"), processes=processes, preload_sq8=True
+        ) as rd:
+            for kw in kws:
+                want = single.search_many(
+                    queries, k=10, query_ids=qids, rerank="sq8", **kw
+                )
+                got = rd.search_many(
+                    queries, k=10, query_ids=qids, rerank="sq8", **kw
+                )
+                pd.testing.assert_frame_equal(got, want)
+                assert got["query_id"].drop_duplicates().tolist() == qids
+                for q, qid in zip(queries, qids):
+                    pd.testing.assert_frame_equal(
+                        rd.search(q, k=10, query_id=qid, rerank="sq8", **kw),
+                        single.search(q, k=10, query_id=qid, rerank="sq8", **kw),
+                    )
 
 
 def test_sq8_augment_existing_store(spark, ivfpq_sq8_stores):

@@ -148,10 +148,6 @@ def footer_rows(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(f"{sf_dir}/{name}.parquet").metadata.num_rows
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so queries can use spark.sql."""
     for t in TABLES:

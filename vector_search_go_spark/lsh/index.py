@@ -23,6 +23,8 @@ row groups; the model itself is tiny (KBs-MBs) and rides the broadcast.
 from __future__ import annotations
 
 import json
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -280,15 +282,18 @@ class LshIndex:
                 # local store: the model is KBs — read it driver-side
                 # (pyarrow + plain JSON) instead of scheduling two Spark
                 # collect jobs per index load (guide §5; the serving
-                # readers already load models this way). Any failure
-                # (absent/empty/compressed config parts — ADVICE r11)
-                # falls through to the Spark reader below, which handles
-                # every layout Spark itself can write.
+                # readers already load models this way). A part the
+                # plain reader cannot read or parse (absent/empty/
+                # compressed config parts — ADVICE r11) falls through,
+                # logged, to the Spark reader below, which handles
+                # every layout Spark itself can write; any other error
+                # is a bug and propagates.
+                import glob
+
+                import pyarrow as pa
+                import pyarrow.parquet as pa_pq
+
                 try:
-                    import glob
-
-                    import pyarrow.parquet as pa_pq
-
                     cfg_files = [
                         f
                         for f in sorted(
@@ -311,8 +316,13 @@ class LshIndex:
                         return Forest.from_node_rows(
                             LshConfig(**json.loads(cfg_json)), rows
                         )
-                except Exception:
-                    pass
+                    reason = "no non-empty model_config line"
+                except (OSError, ValueError, KeyError, pa.ArrowInvalid) as exc:
+                    reason = f"{type(exc).__name__}: {exc}"
+                logging.getLogger(__name__).warning(
+                    "driver-side LSH model read of %s failed (%s); "
+                    "falling back to the Spark reader", path, reason,
+                )
             cfg_json = spark.read.json(f"{path}/model_config").collect()[0][
                 "config_json"
             ]

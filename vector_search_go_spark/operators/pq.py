@@ -315,28 +315,44 @@ def pq_codes_residual_udf(codebook: DataFrame, coarse_cents):
     return codes_udf
 
 
-def residual_lut(q: np.ndarray, cent_rows: np.ndarray, cb_ids, cb_mats,
-                 n_codes: int) -> np.ndarray:
+def stack_codebook(cb_ids, cb_mats) -> tuple[np.ndarray, np.ndarray]:
+    """({sub: code ids}, {sub: codeword rows}) -> (cb3, missing): the
+    (M_SUB, n_codes, D_SUB) codeword tensor residual_lut broadcasts
+    over, and the (M_SUB, n_codes) mask of code slots a ragged trained
+    codebook leaves empty (their table entries stay 0.0). Built once
+    per loaded codebook."""
+    n_codes = max(int(cb_ids[s].max()) for s in cb_ids) + 1
+    cb3 = np.zeros((M_SUB, n_codes, D_SUB))
+    missing = np.ones((M_SUB, n_codes), dtype=bool)
+    for sub in range(M_SUB):
+        cb3[sub, cb_ids[sub]] = cb_mats[sub]
+        missing[sub, cb_ids[sub]] = False
+    return cb3, missing
+
+
+def residual_lut(q: np.ndarray, cent_rows: np.ndarray, codebook) -> np.ndarray:
     """The per-(query, cell) ADC lookup tables of a residual store:
     LUT[cell][sub][code] = squared L2 from (q - centroid(cell))'s sub-th
     subvector to that codeword — same sequential-IEEE kernel as the raw
     LUT, so the table is bit-identical wherever it is built (Spark
-    point paths, local reader, shard readers, shortlist probe).
+    point paths, local reader, shard readers, shortlist probe). A raw
+    store's table is the one for a zero centroid row (q - 0.0 == q).
 
-    ``cent_rows`` is a (n_cells, D) matrix of centroid rows -> tables
-    (n_cells, M_SUB, n_codes), built with ONE _seq_sq_l2 call per
-    subspace; a single (D,) row -> its (M_SUB, n_codes) table. Each
-    table is bit-identical to a one-row call (_seq_sq_l2's adds are
-    per row)."""
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
+    ``codebook`` is stack_codebook's (cb3, missing). ``cent_rows`` is a
+    (n_cells, D) matrix of centroid rows -> tables (n_cells, M_SUB,
+    n_codes); a single (D,) row -> its (M_SUB, n_codes) table. All
+    subspaces and cells come from ONE broadcast over the stacked
+    codebook whose D_SUB per-dimension adds run in the order
+    _seq_sq_l2 uses, so every float equals the per-subspace
+    _seq_sq_l2 table's."""
+    cb3, missing = codebook
     cent_rows = np.asarray(cent_rows, dtype=np.float64)
-    QR = q[None, :] - np.atleast_2d(cent_rows)
-    lut = np.zeros((len(QR), M_SUB, n_codes))
-    for sub in range(M_SUB):
-        lut[:, sub, cb_ids[sub]] = _seq_sq_l2(
-            QR[:, sub * D_SUB : (sub + 1) * D_SUB], cb_mats[sub]
-        )
+    QR = (q[None, :] - np.atleast_2d(cent_rows)).reshape(-1, M_SUB, 1, D_SUB)
+    lut = np.zeros((len(QR), M_SUB, cb3.shape[1]))
+    for d in range(D_SUB):
+        diff = QR[..., d] - cb3[None, :, :, d]
+        lut += diff * diff
+    lut[:, missing] = 0.0
     return lut[0] if cent_rows.ndim == 1 else lut
 
 
@@ -637,11 +653,11 @@ def ivfpq_adc_scores_fused(
     Arrow map stage over the corpus (guide §4.2: one batched kernel in
     place of a chain of map stages). Replaces the three-piece plan
     assign_cells -> pq_codes_residual_udf -> broadcast(probe) join ->
-    ivfpq_adc_candidates_res, which paid two Python boundary crossings
-    plus a broadcast build per invocation and shipped the code arrays
-    through Arrow twice.
+    per-(query, cell) residual ADC kernel, which paid two Python
+    boundary crossings plus a broadcast build per invocation and
+    shipped the code arrays through Arrow twice.
 
-    Bit-identical to the unfused chain, piece by piece:
+    Bit-identical to that unfused chain, piece by piece:
 
       - assignment: sqrt'd sequential-IEEE L2 + first-min argmin over
         ascending cids == argmin_id_arrow(metric='l2') == the Catalyst
@@ -649,8 +665,9 @@ def ivfpq_adc_scores_fused(
       - residual codes: same _seq_sq_l2 argmin over the sorted
         codebook == pq_codes_residual_udf;
       - ADC: residual_lut tables gathered per (query, cell), per-pair
-        adds in subspace order, sqrt at the end == the unfused kernel
-        (the ivfpq_residual_adc_verdict oracle hash pins every float);
+        adds in subspace order, sqrt at the end == the serving readers'
+        adc_fold (the ivfpq_residual_adc_verdict oracle hash pins every
+        float);
       - ``local_topk`` is the same exact per-batch (approx_dist, id)
         truncation — selection-monotone for every downstream
         topk(shortlist) -> rerank -> topk(k) consumer.
@@ -682,7 +699,7 @@ def ivfpq_adc_scores_fused(
     qpos = {int(r["query_id"]): i for i, r in enumerate(qrows)}
     Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
     cb_ids, cb_mats = _codebook_mats(codebook)
-    n_codes = max(int(cb_ids[s].max()) for s in cb_ids) + 1
+    cbs = stack_codebook(cb_ids, cb_mats)
     C, cpos = _coarse_pos(coarse_cents)
     cids_sorted = np.array(sorted(cpos, key=lambda c: cpos[c]), dtype=np.int64)
     c2q = {int(c): [int(q) for q in qs] for c, qs in cell_to_queries.items()}
@@ -696,7 +713,7 @@ def ivfpq_adc_scores_fused(
             key = (qp, cell)
             lut = lut_memo.get(key)
             if lut is None:
-                lut = residual_lut(Q[qp], C[cpos[cell]], cb_ids, cb_mats, n_codes)
+                lut = residual_lut(Q[qp], C[cpos[cell]], cbs)
                 if len(lut_memo) >= LUT_MEMO_CAP:
                     lut_memo.clear()
                 lut_memo[key] = lut
@@ -759,100 +776,6 @@ def ivfpq_adc_scores_fused(
             yield pd.DataFrame(out)
 
     return corpus.select("id", "vec").mapInPandas(gen, out_schema)
-
-
-def ivfpq_adc_candidates_res(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    coarse_cents: DataFrame,
-    local_topk: int | None = None,
-    qrows: list | None = None,
-) -> DataFrame:
-    """(query_id, id, approx_dist) over RESIDUAL-encoded candidates —
-    the residual twin of pq_adc_candidates' arrow path. ``codes`` rows
-    are (query_id, cell, id, codes array<int>) pairs already restricted
-    by the coarse probe join; the ADC value of a candidate depends on
-    its CELL (LUT over q - centroid(cell)), so lookup tables are built
-    per (query, cell) — lazily inside the Arrow kernel from the
-    broadcast-sized models (queries x probed cells of them, each
-    M x C doubles), never shipped as a batch x nprobe LUT blob.
-
-    Bit-portability: residual_lut uses the sequential-IEEE kernel, the
-    per-row fold adds its M terms in subspace order, and ``local_topk``
-    is the same exact per-batch (approx_dist, id) truncation as
-    pq_adc_candidates (selection-monotone for the downstream
-    topk(shortlist) -> rerank -> topk(k))."""
-    from vector_search_go_spark.operators.argmin import local_topk_flat
-
-    if qrows is None:
-        # one collect job per invocation unless the caller already
-        # materialized the query batch (the ivfpq query entries share
-        # one collect across probe selection and this kernel)
-        qrows = queries.select("query_id", "qvec").collect()
-    qrows = sorted(qrows, key=lambda r: r["query_id"])
-    if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, id long, approx_dist double"
-        )
-    qpos = {int(r["query_id"]): i for i, r in enumerate(qrows)}
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    cb_ids, cb_mats = _codebook_mats(codebook)
-    n_codes = max(int(cb_ids[s].max()) for s in cb_ids) + 1
-    C, cpos = _coarse_pos(coarse_cents)
-
-    def gen(batches):
-        # bounded cross-batch LUT cache (ADVICE r10): each table is
-        # M_SUB x n_codes doubles (~32 KB at 16x256); unbounded growth
-        # is queries x probed-cells per executor — fine at bench scale,
-        # not for large query batches. Within-batch reuse is via the
-        # uq/np.stack gather regardless, so a full clear on overflow
-        # only costs recomputing tables that span the boundary.
-        LUT_MEMO_CAP = 1024
-        lut_memo: dict = {}
-
-        def lut_for(qp: int, cell: int) -> np.ndarray:
-            key = (qp, cell)
-            lut = lut_memo.get(key)
-            if lut is None:
-                lut = residual_lut(
-                    Q[qp], C[cpos[cell]], cb_ids, cb_mats, n_codes
-                )
-                if len(lut_memo) >= LUT_MEMO_CAP:
-                    lut_memo.clear()
-                lut_memo[key] = lut
-            return lut
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cd = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            q_arr = pdf["query_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            ids_arr = pdf["id"].to_numpy()
-            # one gather per subspace over a stacked LUT tensor instead
-            # of a Python loop per (query, cell) group — per-row float
-            # op order is the same per-sub sequential add either way
-            # (adds are elementwise; grouping cannot change them), and
-            # a batch with hundreds of (query, cell) groups was paying
-            # ~2x the kernel time in group masking alone
-            uq, pair_idx = np.unique(
-                np.column_stack([q_arr, cells]), axis=0, return_inverse=True
-            )
-            lut3 = np.stack(
-                [lut_for(qpos[int(q)], int(c)) for q, c in uq]
-            )
-            d = np.sqrt(adc_fold(lut3, pair_idx, Cd))
-            if local_topk is not None and len(d) > local_topk:
-                keep = local_topk_flat(q_arr, ids_arr, d, local_topk)
-                q_arr, ids_arr, d = q_arr[keep], ids_arr[keep], d[keep]
-            yield pd.DataFrame(
-                {"query_id": q_arr, "id": ids_arr, "approx_dist": d}
-            )
-
-    return codes.select("query_id", "cell", "id", "codes").mapInPandas(
-        gen, "query_id long, id long, approx_dist double"
-    )
 
 
 def pq_rerank(
@@ -1385,8 +1308,6 @@ def adc_shortlist_probe(
     near the knee. ``sample_mode='uniform'`` keeps the pre-r11 path."""
     import numpy as np
 
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
     smeta = None
     if "://" not in path:
         from vector_search_go_spark.serve.sharded import read_shards_meta
@@ -1534,8 +1455,7 @@ def adc_shortlist_probe(
     # exact squared-L2 ranking (ranks only — BLAS form is fine here)
     sq = (X * X).sum(axis=1)
     codes = np.array([code_map[int(i)][1] for i in ids], dtype=np.int64)
-    cb_ids, cb_mats = _codebook_mats(codebook_df.select("sub", "code", "cvec"))
-    n_codes = max(int(cb_ids[s].max()) for s in cb_ids) + 1
+    cbs = stack_codebook(*_codebook_mats(codebook_df.select("sub", "code", "cvec")))
     # per-row cell labels: the residual scorer keys its LUTs on them,
     # and the cells-mode extrapolation splits rank mass by them
     cellarr = np.array(
@@ -1553,6 +1473,10 @@ def adc_shortlist_probe(
         cids_all, C_all = load_ivf_model(spark, cents_path)
         cpos_all = {int(c): i for i, c in enumerate(cids_all)}
         Cd = C_all[[cpos_all[int(c)] for c in dcells]]
+    else:
+        # a raw store's one table per query is the zero-centroid one
+        Cd = np.zeros((1, X.shape[1]))
+        cell_idx = np.zeros(m, dtype=np.int64)
 
     ranks_needed = []
     needed_global = []
@@ -1560,18 +1484,7 @@ def adc_shortlist_probe(
         q = X[qi]
         exact = sq - 2.0 * (X @ q) + (q @ q)
         truth = np.lexsort((ids, exact))[:k]
-        if enc == "residual":
-            adc = adc_fold(
-                residual_lut(q, Cd, cb_ids, cb_mats, n_codes), cell_idx, codes
-            )
-        else:
-            adc = np.zeros(m)
-            lut = np.zeros((M_SUB, n_codes))
-            for sub in range(M_SUB):
-                sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-                lut[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
-            for sub in range(M_SUB):
-                adc = adc + lut[sub][codes[:, sub]]
+        adc = adc_fold(residual_lut(q, Cd, cbs), cell_idx, codes)
         order = np.lexsort((ids, adc))
         pos = np.empty(m, dtype=np.int64)
         pos[order] = np.arange(m)
@@ -1709,7 +1622,7 @@ def ivfpq_point_search(
         # picked by its cell's position
         pcells = np.unique(np.asarray(probe_cells, dtype=np.int64))
         luts = residual_lut(
-            q, C[[cpos[int(c)] for c in pcells]], ids, mats, n_codes
+            q, C[[cpos[int(c)] for c in pcells]], stack_codebook(ids, mats)
         )
 
         @pandas_udf("double")
@@ -1846,6 +1759,7 @@ def ivfpq_point_search_batch(
         # batch x nprobe LUT blob would be MBs of closure for nothing
         C_mat, cpos = _coarse_pos(coarse_model)
         cent_rows = {c: C_mat[cpos[c]] for c in cell_qpos}
+        cbs = stack_codebook(ids, mats)
 
         def make_lut_for():
             memo: dict = {}
@@ -1853,9 +1767,7 @@ def ivfpq_point_search_batch(
             def lut_for(pos: int, cell: int) -> np.ndarray:
                 lut = memo.get((pos, cell))
                 if lut is None:
-                    lut = residual_lut(
-                        Q[pos], cent_rows[cell], ids, mats, n_codes
-                    )
+                    lut = residual_lut(Q[pos], cent_rows[cell], cbs)
                     memo[(pos, cell)] = lut
                 return lut
 

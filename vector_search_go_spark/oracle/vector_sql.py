@@ -62,14 +62,6 @@ def sql_cosine_dist(a: str, b: str) -> str:
     )
 
 
-def sql_metric_dist(metric: str, a: str, b: str) -> str:
-    if metric == "l2":
-        return sql_l2_dist(a, b)
-    if metric in ("cosine", "angular"):
-        return sql_cosine_dist(a, b)
-    raise ValueError(f"unknown metric {metric!r}")
-
-
 def sql_kmeans(
     corpus: str,
     k: int,

@@ -57,10 +57,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from vector_search_go_spark.operators.argmin import (
-    _seq_sq_l2,
-    single_query_dists,
-)
+from vector_search_go_spark.operators.argmin import single_query_dists
 from vector_search_go_spark.streaming.delete import (
     drop_tombstoned,
     load_tombstone_array,
@@ -83,6 +80,55 @@ from vector_search_go_spark.serve.xxh64 import (
 )
 
 
+def _topn(ids: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
+    """Indices of the ``n`` smallest rows of numeric ``ids`` by
+    (d, id) — the tie-break of every reader, shard leg and router
+    merge. A lexsort over thousands of candidates is ms-visible, so
+    past 4n rows: partition to the n smallest ``d``, keep EVERY row
+    tied with the n-th (<= pivot), and lexsort only that set —
+    identical ranking by construction."""
+    if len(d) > 4 * n:
+        pivot = np.partition(d, n - 1)[n - 1]
+        keep = np.nonzero(d <= pivot)[0]
+        return keep[np.lexsort((ids[keep], d[keep]))[:n]]
+    return np.lexsort((ids, d))[:n]
+
+
+def _span_rows(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The row indices of the sorted-array spans [lo[i], hi[i]),
+    concatenated (searchsorted left/right bounds of a key set)."""
+    n = hi - lo
+    return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
+
+
+def _id_array(ids) -> np.ndarray:
+    """Any iterable of integer ids -> int64 array (arrays pass
+    through)."""
+    if isinstance(ids, np.ndarray):
+        return ids.astype(np.int64, copy=False)
+    return np.fromiter(ids, dtype=np.int64)
+
+
+def _slot_frame(query_ids, parts, cols: dict) -> pd.DataFrame:
+    """Per-query slot arrays ``(query position, ids, *cols)`` -> ONE
+    (query_id, id, *cols) frame in batch order with ``cols``' dtypes:
+    the wire schema of the sharded IVFADC legs."""
+    qids = np.asarray(query_ids, dtype=np.int64)
+
+    def cat(arrs, dtype):
+        if not arrs:
+            return np.empty(0, dtype=dtype)
+        return np.concatenate(arrs).astype(dtype, copy=False)
+
+    frame = {
+        "query_id": cat([np.full(len(p[1]), qids[p[0]]) for p in parts], np.int64),
+        "id": cat([p[1] for p in parts], np.int64),
+    }
+    for c, (name, dtype) in enumerate(cols.items()):
+        frame[name] = cat([p[2 + c] for p in parts], dtype)
+    return pd.DataFrame(frame)
+
+
 def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
     """threshold-filtered candidates -> top-k by (dist, id) with rn,
     the exact (query_id, id, dist, rn) contract of the Spark paths
@@ -92,17 +138,7 @@ def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
     ids_arr = np.asarray(ids)
     if len(ids_arr) and np.issubdtype(ids_arr.dtype, np.number):
         d = np.asarray(dists, dtype=np.float64)
-        if len(d) > 4 * k:
-            # lexsort over 40k candidates is ms-visible; partition to
-            # the k smallest dists, keep EVERY row tied with the k-th
-            # (<= pivot), and lexsort only that set — identical
-            # (dist, id) ranking by construction
-            pivot = np.partition(d, k - 1)[k - 1]
-            keep = np.nonzero(d <= pivot)[0]
-            sub = np.lexsort((ids_arr[keep], d[keep]))[:k]
-            order = keep[sub]
-        else:
-            order = np.lexsort((ids_arr, d))[:k]
+        order = _topn(ids_arr, d, k)
         return pd.DataFrame(
             {
                 "query_id": np.full(len(order), query_id, dtype=np.int64),
@@ -751,6 +787,8 @@ class LocalIvfPqReader:
     ):
         import pyarrow.parquet as pq
 
+        from vector_search_go_spark.operators.pq import stack_codebook
+
         self._ctor = dict(
             path=path,
             preload_codes=preload_codes,
@@ -775,12 +813,14 @@ class LocalIvfPqReader:
                 btbl.column("cvec").to_pylist(),
             )
         )
-        self.cb_ids: dict[int, np.ndarray] = {}
-        self.cb_mats: dict[int, np.ndarray] = {}
+        cb_ids: dict[int, np.ndarray] = {}
+        cb_mats: dict[int, np.ndarray] = {}
         for sub in sorted({r[0] for r in brows}):
             sr = [r for r in brows if r[0] == sub]
-            self.cb_ids[sub] = np.array([r[1] for r in sr], dtype=np.int64)
-            self.cb_mats[sub] = np.array([r[2] for r in sr], dtype=np.float64)
+            cb_ids[sub] = np.array([r[1] for r in sr], dtype=np.int64)
+            cb_mats[sub] = np.array([r[2] for r in sr], dtype=np.float64)
+        # stacked once: every ADC table is one residual_lut broadcast
+        self._codebook = stack_codebook(cb_ids, cb_mats)
         self.dims = self.coarse[1].shape[1]
         self._cpos = {int(c): i for i, c in enumerate(self.coarse[0])}
         self._cells = HivePartIndex(os.path.join(path, "cells"), "cell")
@@ -851,40 +891,71 @@ class LocalIvfPqReader:
                     np.ascontiguousarray(C[order]),
                 )
 
-    # -- shared pieces of the ADC pipeline (search / shard_candidates) --
+    # -- the ADC pipeline every search path shares -------------------
 
-    def _n_codes(self) -> int:
-        return max(int(self.cb_ids[s].max()) for s in self.cb_ids) + 1
+    def _adc_dists(self, q: np.ndarray, C: np.ndarray,
+                   cells: np.ndarray) -> np.ndarray:
+        """ADC score of every candidate row under the store's own
+        encoding. Residual: one table per (query, candidate cell) over
+        q - centroid(cell); raw: the one zero-centroid table (q - 0.0
+        == q, so it IS the raw LUT). Either way one pq.residual_lut
+        build and one pq.adc_fold keyed by each row's table — the same
+        sequential-IEEE construction and subspace-ordered adds the
+        Spark point paths and the shortlist probe use, so sharded /
+        unsharded / Spark stay bit-identical."""
+        from vector_search_go_spark.operators.pq import adc_fold, residual_lut
 
-    def _query_lut(self, q: np.ndarray, n_codes: int) -> np.ndarray:
-        """The query's per-subspace ADC lookup table — same construction
-        as ivfpq_point_search (sequential-IEEE kernel, so the table is
-        bit-identical wherever it is built: unsharded reader, shard
-        reader, Spark path)."""
-        from vector_search_go_spark.operators.pq import D_SUB, M_SUB
+        if self.encoding == "residual":
+            ucells, cell_idx = np.unique(cells, return_inverse=True)
+            cents = self.coarse[1][[self._cpos[int(c)] for c in ucells]]
+        else:
+            cents = np.zeros((1, self.dims))
+            cell_idx = np.zeros(len(C), dtype=np.int64)
+        return np.sqrt(
+            adc_fold(residual_lut(q, cents, self._codebook), cell_idx, C)
+        )
 
-        lut = np.zeros((M_SUB, n_codes))
-        for sub in range(M_SUB):
-            sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-            lut[sub, self.cb_ids[sub]] = _seq_sq_l2(sl, self.cb_mats[sub])[0]
-        return lut
+    @staticmethod
+    def _adc_topl(ids, adc: np.ndarray, shortlist: int):
+        """Indices of the local ADC top-``shortlist`` by (adc, id) —
+        the same tie-break as the unsharded shortlist selection."""
+        if np.issubdtype(np.asarray(ids).dtype, np.number):
+            return _topn(np.asarray(ids), adc, shortlist)
+        return np.asarray(
+            sorted(range(len(ids)), key=lambda i: (adc[i], ids[i]))[:shortlist],
+            dtype=np.int64,
+        )
 
-    def _gather_codes(self, probed):
-        """(ids, codes matrix, cell per row) of the probed cells —
-        preloaded arrays or a parallel parquet decode; (None, None,
-        None) when nothing is hit. The per-row cell array is what the
-        residual scorer keys its per-cell LUTs on (raw stores ignore
-        it)."""
+    def _shortlists(self, Q: np.ndarray, nprobe: int, shortlist: int):
+        """Per query of the batch, its local ADC top-``shortlist`` slots
+        ``(ids, adc)`` by (adc, id), or None when no probed cell holds
+        a live row — the probe / gather / score / select pipeline of
+        every search path, single or batch. Each distinct probed cell
+        is decoded once per batch (or read from the pinned codes);
+        per query, cells come in probe order and rows in store order,
+        and slot selection keys on (adc, id), so a query's slots never
+        depend on the rest of the batch."""
+        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
         from vector_search_go_spark.operators.pq import M_SUB
 
+        probes = [
+            probe_cells_for(None, None, q, "l2", nprobe, model=self.coarse)
+            for q in Q
+        ]
         if self._mem_codes is not None:
+            cell_map = self._mem_codes
+        else:
+            cell_map = _cell_arrays(
+                self._cells, _union_values(probes), "codes",
+                lambda t: list_column_int_matrix(t, "codes", M_SUB),
+            )
+        for q, probed in zip(Q, probes):
             hits = [
-                (int(c), *self._mem_codes[int(c)])
-                for c in probed
-                if int(c) in self._mem_codes
+                (int(c), *cell_map[int(c)]) for c in probed if int(c) in cell_map
             ]
             if not hits:
-                return None, None, None
+                yield None
+                continue
             ids, C, cells = drop_tombstoned(
                 self._tomb,
                 np.concatenate([h[1] for h in hits]),
@@ -893,53 +964,35 @@ class LocalIvfPqReader:
                     [np.full(len(h[1]), h[0], dtype=np.int64) for h in hits]
                 ),
             )
-            return (ids, C, cells) if len(ids) else (None, None, None)
-        tbls = [
-            (int(v), t)
-            for v, t in self._cells.read_values_parallel(
-                probed, ["id", "codes"]
-            ).items()
-            if t is not None and t.num_rows
-        ]
-        if not tbls:
-            return None, None, None
-        ids, C, cells = drop_tombstoned(
-            self._tomb,
-            np.concatenate(
-                [t.column("id").to_numpy(zero_copy_only=False) for _, t in tbls]
-            ),
-            np.concatenate(
-                [list_column_int_matrix(t, "codes", M_SUB) for _, t in tbls]
-            ),
-            np.concatenate(
-                [np.full(t.num_rows, v, dtype=np.int64) for v, t in tbls]
-            ),
-        )
-        return (ids, C, cells) if len(ids) else (None, None, None)
+            if not len(ids):
+                yield None
+                continue
+            adc = self._adc_dists(q, C, cells)
+            short = self._adc_topl(ids, adc, shortlist)
+            yield ids[short], adc[short]
 
     def _rerank_rows(self, short_ids):
         """(ids, V) of every vectors row whose id is in ``short_ids``,
-        WITH multiplicity — the rerank fetch all four search paths
-        share. Preloaded regime: searchsorted slices over the pinned
-        id-sorted arrays; disk regime: stats-pruned row-group read +
-        exact isin filter. Row ORDER differs between the regimes
-        (id-sorted vs store order) and between serial/parallel disk
-        reads is identical; every consumer is order-independent —
-        _result_frame ranks by (dist, id) and the dmap/vcount builders
-        aggregate per id (replay-duplicate rows carry identical vecs).
-        Returns (None, None) when nothing matches."""
+        WITH multiplicity — the one float fetch behind every rerank.
+        Preloaded regime: searchsorted slices over the pinned id-sorted
+        arrays; disk regime: stats-pruned row-group read + exact isin
+        filter. Row ORDER differs between the regimes (id-sorted vs
+        store order; serial and parallel disk reads are identical);
+        every consumer is order-independent — _union_dists slices the
+        rows per query by id. Returns (None, None) when nothing
+        matches."""
         # unique: a replayed id can occupy several shortlist SLOTS; the
         # fetch is keyed per id (the isin mask is set-semantic, and a
         # duplicated searchsorted span would emit its rows twice)
-        ks = np.unique(np.fromiter(short_ids, dtype=np.int64))
+        ks = np.unique(_id_array(short_ids))
         if self._mem_vectors is not None:
             rid_s, V_s = self._mem_vectors
-            lo = np.searchsorted(rid_s, ks, side="left")
-            hi = np.searchsorted(rid_s, ks, side="right")
-            spans = [(a, b) for a, b in zip(lo, hi) if b > a]
-            if not spans:
+            sel = _span_rows(
+                np.searchsorted(rid_s, ks, side="left"),
+                np.searchsorted(rid_s, ks, side="right"),
+            )
+            if not len(sel):
                 return None, None
-            sel = np.concatenate([np.arange(a, b) for a, b in spans])
             return rid_s[sel], V_s[sel]
         vtbl = self._vectors.read(ks.tolist(), ["id", "vec"])
         if vtbl is None or vtbl.num_rows == 0:
@@ -950,12 +1003,49 @@ class LocalIvfPqReader:
             return None, None
         return rid[mask], list_column_matrix(vtbl, "vec", self.dims)[mask]
 
+    def _union_dists(self, Q: np.ndarray, ids_per_query):
+        """Exact L2 rows ``(qpos, id, dist)``: one per vectors row whose
+        id is in query ``qpos``'s entry of ``ids_per_query``, with
+        vectors-table multiplicity, grouped by ascending qpos and
+        id-sorted within a query. ONE union read (_rerank_rows) serves
+        the batch; each query scores only its own id slice of it, so
+        a row's distance never depends on the rest of the batch
+        (single_query_dists is per row)."""
+        want = [np.unique(_id_array(ids)) for ids in ids_per_query]
+        union = np.concatenate(want) if want else np.empty(0, dtype=np.int64)
+        rid, V = self._rerank_rows(union) if len(union) else (None, None)
+        if rid is None:
+            return (
+                np.empty(0, dtype=np.int64),
+                np.empty(0, dtype=np.int64),
+                np.empty(0, dtype=np.float64),
+            )
+        order = np.argsort(rid, kind="stable")
+        rid_s = rid[order]
+        qpos, sel, dist = [], [], []
+        for i, w in enumerate(want):
+            rows = order[
+                _span_rows(
+                    np.searchsorted(rid_s, w, side="left"),
+                    np.searchsorted(rid_s, w, side="right"),
+                )
+            ]
+            qpos.append(np.full(len(rows), i, dtype=np.int64))
+            sel.append(rows)
+            dist.append(single_query_dists("l2", Q[i], V[rows]))
+        sel = np.concatenate(sel)
+        return (
+            np.concatenate(qpos),
+            rid[sel],
+            np.concatenate(dist).astype(np.float64, copy=False),
+        )
+
     def _sq8_rows(self, short_ids):
-        """(unique ids, uint8 codes) of the SQ8-tier rows whose id is in
-        ``short_ids`` — the compressed twin of _rerank_rows. Duplicates
-        (streaming replays) carry identical codes, so one row per id is
-        kept; (None, None) when nothing matches."""
-        ks = np.unique(np.fromiter(short_ids, dtype=np.int64))
+        """(unique sorted ids, uint8 codes) of the SQ8-tier rows whose
+        id is in ``short_ids`` — the compressed twin of _rerank_rows.
+        Duplicates (streaming replays) carry identical codes, so one
+        row per id is kept; (None, None) when nothing matches."""
+        ks = np.unique(_id_array(short_ids))
         if self._mem_sq8 is not None:
             rid_s, C_s = self._mem_sq8
             lo = np.searchsorted(rid_s, ks, side="left")
@@ -976,6 +1066,34 @@ class LocalIvfPqReader:
         uid, first = np.unique(rid, return_index=True)
         return uid, C[first]
 
+    def _sq8_dists(self, q: np.ndarray, sids: np.ndarray) -> np.ndarray:
+        """SQ8 distance per slot id, aligned with ``sids``; NaN for an
+        id with no SQ8 row."""
+        from vector_search_go_spark.operators.sq8 import sq8_dists_np
+
+        out = np.full(len(sids), np.nan)
+        uid, C8 = self._sq8_rows(sids)
+        if uid is not None:
+            pos = np.minimum(np.searchsorted(uid, sids), len(uid) - 1)
+            hit = uid[pos] == sids
+            mins, scales = self._sq8_stats
+            out[hit] = sq8_dists_np(q, mins, scales, C8)[pos[hit]]
+        return out
+
+    def _sq8_select(self, q: np.ndarray, slot_ids, keep: int) -> np.ndarray:
+        """ADC-shortlist slot ids -> the top-``keep`` unique ids by
+        (sq8_dist, id) — the compressed-domain refinement between ADC
+        shortlist and exact rerank. Ids with no SQ8 row drop here, the
+        same place the exact path's isin mask drops ids with no
+        vectors row."""
+        from vector_search_go_spark.operators.sq8 import sq8_dists_np
+
+        uid, C = self._sq8_rows(slot_ids)
+        if uid is None:
+            return np.empty(0, dtype=np.int64)
+        mins, scales = self._sq8_stats
+        return uid[_topn(uid, sq8_dists_np(q, mins, scales, C), keep)]
+
     def _require_sq8(self) -> None:
         if self._sq8_stats is None:
             raise ValueError(
@@ -989,115 +1107,6 @@ class LocalIvfPqReader:
 
         return pq_shortlist(k) if sq8_keep is None else int(sq8_keep)
 
-    def _sq8_select(self, q: np.ndarray, slot_ids, keep: int):
-        """ADC-shortlist slot ids -> the top-``keep`` unique ids by
-        (sq8_dist, id) — the compressed-domain refinement between ADC
-        shortlist and exact rerank. Ids with no SQ8 row drop here, the
-        same place the exact path's isin mask would drop ids with no
-        vectors row. None when nothing matches."""
-        from vector_search_go_spark.operators.sq8 import sq8_dists_np
-
-        uid, C = self._sq8_rows(slot_ids)
-        if uid is None:
-            return None
-        mins, scales = self._sq8_stats
-        d8 = sq8_dists_np(q, mins, scales, C)
-        sel = np.lexsort((uid, d8))[:keep]
-        return uid[sel]
-
-    @_swap_retry
-    def fetch_dists(self, qvec, ids, query_id: int = 0) -> pd.DataFrame:
-        """(query_id, id, dist) of THIS store's vectors rows whose id is
-        in ``ids`` — exact L2, one row per vectors row (multiplicity
-        preserved). The phase-2 leg of the sharded SQ8-rerank protocol:
-        the router selects the global sq8-top-K' and asks each shard
-        for exact distances of just those ids (each id lives in exactly
-        one shard, so the union is disjoint)."""
-        q = np.asarray(list(qvec), dtype=np.float64)
-        ids = np.asarray(list(ids), dtype=np.int64)
-        if not len(ids):
-            return pd.DataFrame(
-                {"query_id": [], "id": [], "dist": []}
-            ).astype({"query_id": np.int64, "id": np.int64, "dist": np.float64})
-        rids, V = self._rerank_rows(ids)
-        if rids is None:
-            return pd.DataFrame(
-                {"query_id": [], "id": [], "dist": []}
-            ).astype({"query_id": np.int64, "id": np.int64, "dist": np.float64})
-        dists = single_query_dists("l2", q, V)
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(rids), query_id, dtype=np.int64),
-                "id": rids,
-                "dist": np.asarray(dists, dtype=np.float64),
-            }
-        )
-
-    @staticmethod
-    def _adc_of(lut: np.ndarray, C: np.ndarray) -> np.ndarray:
-        """sqrt of the subspace-ordered LUT fold — the exact float the
-        unsharded search computes per candidate."""
-        from vector_search_go_spark.operators.pq import M_SUB
-
-        acc = np.zeros(len(C))
-        for sub in range(M_SUB):
-            acc = acc + lut[sub][C[:, sub]]
-        return np.sqrt(acc)
-
-    def _adc_dists(self, q: np.ndarray, C: np.ndarray,
-                   cells: np.ndarray) -> np.ndarray:
-        """ADC score of every candidate row under the store's own
-        encoding — THE scoring entry point all four search paths call.
-        Raw: one global LUT per query (_query_lut + _adc_of). Residual:
-        one LUT per (query, candidate cell) over q - centroid(cell),
-        all cells' tables in ONE batched pq.residual_lut build and one
-        pq.adc_fold keyed by each row's cell (the same sequential-IEEE
-        construction and subspace-ordered adds the Spark point paths
-        and the shortlist probe use, so sharded / unsharded / Spark
-        stay bit-identical)."""
-        from vector_search_go_spark.operators.pq import adc_fold, residual_lut
-
-        n_codes = self._n_codes()
-        if self.encoding != "residual":
-            return self._adc_of(self._query_lut(q, n_codes), C)
-        ucells, cell_idx = np.unique(cells, return_inverse=True)
-        luts = residual_lut(
-            q, self.coarse[1][[self._cpos[int(c)] for c in ucells]],
-            self.cb_ids, self.cb_mats, n_codes,
-        )
-        return np.sqrt(adc_fold(luts, cell_idx, C))
-
-    @staticmethod
-    def _adc_topl(ids, adc: np.ndarray, shortlist: int):
-        """Indices of the local ADC top-``shortlist`` by (adc, id) —
-        the same tie-break as the unsharded shortlist selection."""
-        if np.issubdtype(np.asarray(ids).dtype, np.number):
-            return np.lexsort((ids, adc))[:shortlist]
-        return np.asarray(
-            sorted(range(len(ids)), key=lambda i: (adc[i], ids[i]))[:shortlist],
-            dtype=np.int64,
-        )
-
-    @staticmethod
-    def _cand_frame(query_id: int, ids, adc, dist, vmult) -> pd.DataFrame:
-        """One row per local-shortlist SLOT. ``vmult`` = this id's row
-        count in the shard's vectors table: the unsharded search's
-        output multiplicity is the VECTORS multiplicity (its isin mask
-        selects vectors rows), while shortlist slots are CODES-row
-        multiplicity — at-least-once streaming replays or a
-        one-component dedup compaction can make these differ, so the
-        router needs both to reproduce the unsharded rows exactly."""
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(ids), query_id, dtype=np.int64),
-                "id": ids,
-                "adc": np.asarray(adc, dtype=np.float64),
-                "dist": np.asarray(dist, dtype=np.float64),
-                "vmult": np.asarray(vmult, dtype=np.int64),
-            }
-        )
-
-    @_swap_retry
     def search(
         self,
         qvec,
@@ -1115,40 +1124,13 @@ class LocalIvfPqReader:
         sq8_keep >= shortlist the sq8 stage keeps everything, so the
         result is identical to rerank='exact' (the parity pin); with a
         large measured shortlist and a floor-sized keep it trades the
-        bulk of the rerank IO for 8x-cheaper compressed reads."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-        from vector_search_go_spark.operators.pq import pq_shortlist
-
-        if rerank not in ("exact", "sq8"):
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if rerank == "sq8":
-            self._require_sq8()
-        if shortlist is None:
-            shortlist = max(self._rec_shortlist, pq_shortlist(k))
-        q = np.asarray(list(qvec), dtype=np.float64)
-        probed = probe_cells_for(None, None, q, "l2", nprobe, model=self.coarse)
-        # the bit-parity-critical ADC pipeline lives ONCE in the shared
-        # helpers — search, search_many, and the shard_candidates legs
-        # all call the same gather/LUT/fold/tie-break code
-        ids, C, cells = self._gather_codes(probed)
-        if ids is None:
-            return _result_frame([], [], k, query_id)
-        adc = self._adc_dists(q, C, cells)
-        short = self._adc_topl(ids, adc, shortlist)
-        short_ids = (ids[i] for i in short)
-        if rerank == "sq8":
-            kept = self._sq8_select(
-                q, (ids[i] for i in short),
-                self._resolve_sq8_keep(k, sq8_keep),
-            )
-            if kept is None:
-                return _result_frame([], [], k, query_id)
-            short_ids = kept
-        rids, V = self._rerank_rows(short_ids)
-        if rids is None:
-            return _result_frame([], [], k, query_id)
-        dists = single_query_dists("l2", q, V)
-        return _result_frame(rids.tolist(), list(dists), k, query_id)
+        bulk of the rerank IO for 8x-cheaper compressed reads. A
+        one-query search_many: single lookups and batches share one
+        pipeline."""
+        return self.search_many(
+            [list(qvec)], k=k, nprobe=nprobe, shortlist=shortlist,
+            query_ids=[query_id], rerank=rerank, sq8_keep=sq8_keep,
+        )
 
     @_swap_retry
     def search_many(
@@ -1163,15 +1145,11 @@ class LocalIvfPqReader:
     ) -> pd.DataFrame:
         """Batch point lookups, row-identical to per-query ``search``
         concatenated (pinned in tests/test_serve_local.py). Two batch
-        amortizations, neither able to change results: (a) each
-        distinct probed cell's (ids, codes) decode is shared across
-        the batch (per-query ADC order is unchanged: cells in probe
-        order, rows in store order); (b) the shortlist vector rerank
-        reads the UNION of the batch's shortlist ids in one id-sorted
-        pass — per query the isin mask selects exactly the rows its
-        own read would have, in the same store order."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-        from vector_search_go_spark.operators.pq import M_SUB, pq_shortlist
+        amortizations, neither able to change results: each distinct
+        probed cell's (ids, codes) decode is shared across the batch
+        (_shortlists), and the rerank reads the UNION of the batch's
+        shortlist ids in one pass (_union_dists)."""
+        from vector_search_go_spark.operators.pq import pq_shortlist
 
         if rerank not in ("exact", "sq8"):
             raise ValueError(f"unknown rerank mode {rerank!r}")
@@ -1182,73 +1160,49 @@ class LocalIvfPqReader:
         Q, query_ids = _batch_queries(Q, query_ids)
         if len(Q) == 0:
             return _result_frame([], [], k, 0)
-        probes = [
-            probe_cells_for(None, None, Q[i], "l2", nprobe, model=self.coarse)
-            for i in range(len(Q))
-        ]
-        if self._mem_codes is not None:
-            cell_map = self._mem_codes
-        else:
-            cell_map = _cell_arrays(
-                self._cells, _union_values(probes), "codes",
-                lambda t: list_column_int_matrix(t, "codes", M_SUB),
-            )
-
-        per_query = []  # (qid, qvec, short_ids) -- scored after one union read
-        union_ids: set = set()
-        for i, qid in enumerate(query_ids):
-            hits = [
-                (int(c), *cell_map[int(c)])
-                for c in probes[i]
-                if int(c) in cell_map
-            ]
-            if not hits:
-                per_query.append((int(qid), Q[i], None))
-                continue
-            ids = np.concatenate([h[1] for h in hits])
-            C = np.concatenate([h[2] for h in hits])
-            cells = np.concatenate(
-                [np.full(len(h[1]), h[0], dtype=np.int64) for h in hits]
-            )
-            ids, C, cells = drop_tombstoned(self._tomb, ids, C, cells)
-            if len(ids) == 0:
-                per_query.append((int(qid), Q[i], None))
-                continue
-            adc = self._adc_dists(Q[i], C, cells)
-            short = self._adc_topl(ids, adc, shortlist)
-            if rerank == "sq8":
-                kept = self._sq8_select(
-                    Q[i], (ids[j] for j in short),
-                    self._resolve_sq8_keep(k, sq8_keep),
-                )
-                if kept is None:
-                    per_query.append((int(qid), Q[i], None))
-                    continue
-                short_ids = sorted(int(x) for x in kept)
+        keep = self._resolve_sq8_keep(k, sq8_keep)
+        want = []
+        for q, got in zip(Q, self._shortlists(Q, nprobe, shortlist)):
+            if got is None:
+                want.append(np.empty(0, dtype=np.int64))
+            elif rerank == "sq8":
+                want.append(self._sq8_select(q, got[0], keep))
             else:
-                short_ids = sorted(ids[j] for j in short)
-            union_ids.update(short_ids)
-            per_query.append((int(qid), Q[i], short_ids))
-
-        rid_all, V_all = (
-            self._rerank_rows(union_ids) if union_ids else (None, None)
+                want.append(got[0])
+        qpos, rid, dist = self._union_dists(Q, want)
+        bounds = np.searchsorted(qpos, np.arange(len(Q) + 1))
+        return pd.concat(
+            [
+                _result_frame(
+                    rid[bounds[j] : bounds[j + 1]],
+                    dist[bounds[j] : bounds[j + 1]],
+                    k, int(qid),
+                )
+                for j, qid in enumerate(query_ids)
+            ],
+            ignore_index=True,
         )
 
-        frames = []
-        for qid, qv, short_ids in per_query:
-            if short_ids is None or rid_all is None:
-                frames.append(_result_frame([], [], k, qid))
-                continue
-            mask = np.isin(rid_all, np.asarray(short_ids))
-            rids = rid_all[mask].tolist()
-            if not rids:
-                frames.append(_result_frame([], [], k, qid))
-                continue
-            dists = single_query_dists("l2", qv, V_all[mask])
-            frames.append(_result_frame(rids, list(dists), k, qid))
-        return pd.concat(frames, ignore_index=True)
+    # -- sharded legs (serve/sharded.py) ------------------------------
+    #
+    # Exact-rerank protocol: each shard returns its LOCAL ADC
+    # top-``shortlist`` slots with their exact distances
+    # (shard_candidates); the router merges by (adc, id).
+    #
+    # SQ8 protocol: the exact leg fetches `shortlist` float rows PER
+    # SHARD per query — at the measured exact-set budgets that is the
+    # whole serving latency. So it is two-phase: phase 1 returns ADC +
+    # SQ8 scores only (no float IO); the ROUTER selects the global ADC
+    # top-L, then the global sq8-top-K' by (sq8, id); phase 2
+    # (fetch_dists_many) reads floats for just those K' ids across ALL
+    # shards combined. Per-shard sq8 truncation would NOT be
+    # selection-monotone (a shard-local ADC top-L member outside the
+    # GLOBAL top-L can displace a global keeper from the shard's sq8
+    # top-K'), hence the second round trip.
+    #
+    # Every leg is a batch call; the single-query legs are one-query
+    # batches, so both run the same pipeline and build one frame.
 
-    @_swap_retry
     def shard_candidates(
         self,
         qvec,
@@ -1256,10 +1210,10 @@ class LocalIvfPqReader:
         nprobe: int = 4,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        """The per-shard leg of the sharded IVFADC composition
-        (serve/sharded.py): this store's LOCAL ADC top-``shortlist`` by
-        (adc, id), each row carrying BOTH its ADC score and its exact
-        rerank distance -> (query_id, id, adc, dist).
+        """The per-shard leg of the sharded IVFADC composition: this
+        store's LOCAL ADC top-``shortlist`` by (adc, id), each row
+        carrying BOTH its ADC score and its exact rerank distance ->
+        (query_id, id, adc, dist, vmult).
 
         The router merges these by (adc, id), keeps the GLOBAL
         top-``shortlist``, and ranks those by (dist, id) — bit-identical
@@ -1272,41 +1226,14 @@ class LocalIvfPqReader:
         for an id whose vectors row is missing — the router drops those
         AFTER the global shortlist selection, exactly where the
         unsharded search's isin mask drops them. ``vmult`` carries the
-        id's VECTORS-table row count (see _cand_frame): replay
-        duplicates make slot and output multiplicities differ, and the
-        unsharded output multiplicity is the vectors one."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-
-        q = np.asarray(list(qvec), dtype=np.float64)
-        probed = probe_cells_for(None, None, q, "l2", nprobe, model=self.coarse)
-        ids, C, cells = self._gather_codes(probed)
-        if ids is None:
-            return self._cand_frame(
-                query_id, np.empty(0, dtype=np.int64), [], [], []
-            )
-        adc = self._adc_dists(q, C, cells)
-        short = self._adc_topl(ids, adc, shortlist)
-        sids, sadc = ids[short], adc[short]
-        dmap, vcount = self._rerank_maps(q, sorted(sids.tolist()))
-        dist = [dmap.get(i, np.nan) for i in sids.tolist()]
-        vmult = [vcount.get(i, 0) for i in sids.tolist()]
-        return self._cand_frame(query_id, sids, sadc, dist, vmult)
-
-    def _rerank_maps(self, q: np.ndarray, short_ids):
-        """{id: exact dist} + {id: vectors-row count} for a shortlist's
-        vector fetch (_rerank_rows). Replay-duplicate vectors rows carry
-        identical vecs, so one dist per id suffices; the COUNT is what
-        the router needs to reproduce the unsharded output
-        multiplicity."""
-        dmap: dict = {}
-        vcount: dict = {}
-        rid, V = self._rerank_rows(short_ids)
-        if rid is not None:
-            dd = single_query_dists("l2", q, V)
-            for i, d in zip(rid.tolist(), dd.tolist()):
-                vcount[i] = vcount.get(i, 0) + 1
-                dmap.setdefault(i, d)
-        return dmap, vcount
+        id's VECTORS-table row count: the unsharded output multiplicity
+        is the vectors one, while shortlist slots are CODES-row
+        multiplicity — at-least-once streaming replays or a
+        one-component dedup compaction can make these differ."""
+        return self.shard_candidates_many(
+            [list(qvec)], shortlist=shortlist, nprobe=nprobe,
+            query_ids=[query_id],
+        )
 
     @_swap_retry
     def shard_candidates_many(
@@ -1316,115 +1243,39 @@ class LocalIvfPqReader:
         nprobe: int = 4,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch twin of ``shard_candidates``, row-identical to the
-        per-query calls concatenated — the same two amortizations as
-        search_many (shared cell decode across the batch; one id-sorted
-        union read for the rerank vectors), neither able to change a
-        per-row value."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-        from vector_search_go_spark.operators.pq import M_SUB
-
+        """Batch ``shard_candidates``, row-identical to the per-query
+        calls concatenated (shared cell decode; one union read for the
+        rerank vectors)."""
         Q, query_ids = _batch_queries(Q, query_ids)
-        if len(Q) == 0:
-            return self._cand_frame(0, np.empty(0, dtype=np.int64), [], [], [])
-        probes = [
-            probe_cells_for(None, None, Q[i], "l2", nprobe, model=self.coarse)
-            for i in range(len(Q))
-        ]
-        if self._mem_codes is not None:
-            cell_map = self._mem_codes
-        else:
-            cell_map = _cell_arrays(
-                self._cells, _union_values(probes), "codes",
-                lambda t: list_column_int_matrix(t, "codes", M_SUB),
-            )
-        per_query = []  # (qid, qvec, sids, sadc) scored after one union read
-        union_ids: set = set()
-        for i, qid in enumerate(query_ids):
-            hits = [
-                (int(c), *cell_map[int(c)])
-                for c in probes[i]
-                if int(c) in cell_map
-            ]
-            if not hits:
-                per_query.append((int(qid), Q[i], None, None))
+        slots = list(self._shortlists(Q, nprobe, shortlist))
+        qpos, rid, dist = self._union_dists(
+            Q, [np.empty(0, dtype=np.int64) if s is None else s[0] for s in slots]
+        )
+        bounds = np.searchsorted(qpos, np.arange(len(Q) + 1))
+        parts = []
+        for j, s in enumerate(slots):
+            if s is None:
                 continue
-            ids = np.concatenate([h[1] for h in hits])
-            C = np.concatenate([h[2] for h in hits])
-            cells = np.concatenate(
-                [np.full(len(h[1]), h[0], dtype=np.int64) for h in hits]
+            sids, sadc = s
+            # this query's rows are id-sorted: one dist per id (replay
+            # duplicates carry identical vecs) and its row count
+            r_ids = rid[bounds[j] : bounds[j + 1]]
+            uid, first, count = np.unique(
+                r_ids, return_index=True, return_counts=True
             )
-            ids, C, cells = drop_tombstoned(self._tomb, ids, C, cells)
-            if len(ids) == 0:
-                per_query.append((int(qid), Q[i], None, None))
-                continue
-            adc = self._adc_dists(Q[i], C, cells)
-            short = self._adc_topl(ids, adc, shortlist)
-            sids, sadc = ids[short], adc[short]
-            union_ids.update(sids.tolist())
-            per_query.append((int(qid), Q[i], sids, sadc))
-
-        rid_all, V_all = (
-            self._rerank_rows(union_ids) if union_ids else (None, None)
+            d = np.full(len(sids), np.nan)
+            vmult = np.zeros(len(sids), dtype=np.int64)
+            if len(uid):
+                pos = np.minimum(np.searchsorted(uid, sids), len(uid) - 1)
+                hit = uid[pos] == sids
+                d[hit] = dist[bounds[j] + first[pos[hit]]]
+                vmult[hit] = count[pos[hit]]
+            parts.append((j, sids, sadc, d, vmult))
+        return _slot_frame(
+            query_ids, parts,
+            {"adc": np.float64, "dist": np.float64, "vmult": np.int64},
         )
 
-        frames = []
-        for qid, qv, sids, sadc in per_query:
-            if sids is None:
-                frames.append(
-                    self._cand_frame(qid, np.empty(0, dtype=np.int64), [], [], [])
-                )
-                continue
-            dmap: dict = {}
-            vcount: dict = {}
-            if rid_all is not None:
-                mask = np.isin(rid_all, np.asarray(sorted(sids.tolist())))
-                if mask.any():
-                    dd = single_query_dists("l2", qv, V_all[mask])
-                    for i, d in zip(rid_all[mask].tolist(), dd.tolist()):
-                        vcount[i] = vcount.get(i, 0) + 1
-                        dmap.setdefault(i, d)
-            dist = [dmap.get(i, np.nan) for i in sids.tolist()]
-            vmult = [vcount.get(i, 0) for i in sids.tolist()]
-            frames.append(self._cand_frame(qid, sids, sadc, dist, vmult))
-        return pd.concat(frames, ignore_index=True)
-
-    # -- sharded SQ8-rerank legs (VERDICT r10 item 4) -----------------
-    #
-    # The exact-rerank shard leg (shard_candidates) fetches `shortlist`
-    # float rows PER SHARD per query — at the measured exact-set
-    # budgets that is the whole serving latency. The SQ8 protocol is
-    # two-phase: phase 1 returns ADC + SQ8 scores only (no float IO);
-    # the ROUTER selects the global ADC top-L, then the global
-    # sq8-top-K' by (sq8, id); phase 2 (fetch_dists) reads floats for
-    # just those K' ids across ALL shards combined. Per-shard sq8
-    # truncation would NOT be selection-monotone (a shard-local ADC
-    # top-L member outside the GLOBAL top-L can displace a global
-    # keeper from the shard's sq8 top-K'), hence the second round trip.
-
-    @staticmethod
-    def _sq8_cand_frame(query_id: int, ids, adc, sq8) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(ids), query_id, dtype=np.int64),
-                "id": ids,
-                "adc": np.asarray(adc, dtype=np.float64),
-                "sq8": np.asarray(sq8, dtype=np.float64),
-            }
-        )
-
-    def _sq8_map(self, q: np.ndarray, sids: np.ndarray) -> dict:
-        """{id: sq8 dist} for the slot ids that have an SQ8 row."""
-        from vector_search_go_spark.operators.sq8 import sq8_dists_np
-
-        uid, C8 = self._sq8_rows(sids.tolist())
-        if uid is None:
-            return {}
-        mins, scales = self._sq8_stats
-        d8 = sq8_dists_np(q, mins, scales, C8)
-        return dict(zip(uid.tolist(), d8.tolist()))
-
-    @_swap_retry
     def shard_candidates_sq8(
         self,
         qvec,
@@ -1434,24 +1285,12 @@ class LocalIvfPqReader:
     ) -> pd.DataFrame:
         """Phase-1 leg: this store's local ADC top-``shortlist`` slots
         as (query_id, id, adc, sq8) — sq8 is NaN for an id with no SQ8
-        row (the router drops those exactly where the unsharded
-        _sq8_select drops them). No float vector IO."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-
-        self._require_sq8()
-        q = np.asarray(list(qvec), dtype=np.float64)
-        probed = probe_cells_for(None, None, q, "l2", nprobe, model=self.coarse)
-        ids, C, cells = self._gather_codes(probed)
-        if ids is None:
-            return self._sq8_cand_frame(
-                query_id, np.empty(0, dtype=np.int64), [], []
-            )
-        adc = self._adc_dists(q, C, cells)
-        short = self._adc_topl(ids, adc, shortlist)
-        sids, sadc = ids[short], adc[short]
-        smap = self._sq8_map(q, sids)
-        sq8d = [smap.get(i, np.nan) for i in sids.tolist()]
-        return self._sq8_cand_frame(query_id, sids, sadc, sq8d)
+        row (the router drops those exactly where the unsharded search
+        drops them). No float vector IO."""
+        return self.shard_candidates_sq8_many(
+            [list(qvec)], shortlist=shortlist, nprobe=nprobe,
+            query_ids=[query_id],
+        )
 
     @_swap_retry
     def shard_candidates_sq8_many(
@@ -1461,104 +1300,34 @@ class LocalIvfPqReader:
         nprobe: int = 4,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch twin of ``shard_candidates_sq8``, row-identical to the
+        """Batch ``shard_candidates_sq8``, row-identical to the
         per-query calls concatenated (shared cell decode; the sq8 code
         fetch is per query over pinned arrays or pruned row groups)."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-        from vector_search_go_spark.operators.pq import M_SUB
-
         self._require_sq8()
         Q, query_ids = _batch_queries(Q, query_ids)
-        if len(Q) == 0:
-            return self._sq8_cand_frame(0, np.empty(0, dtype=np.int64), [], [])
-        probes = [
-            probe_cells_for(None, None, Q[i], "l2", nprobe, model=self.coarse)
-            for i in range(len(Q))
+        parts = [
+            (j, s[0], s[1], self._sq8_dists(Q[j], s[0]))
+            for j, s in enumerate(self._shortlists(Q, nprobe, shortlist))
+            if s is not None
         ]
-        if self._mem_codes is not None:
-            cell_map = self._mem_codes
-        else:
-            cell_map = _cell_arrays(
-                self._cells, _union_values(probes), "codes",
-                lambda t: list_column_int_matrix(t, "codes", M_SUB),
-            )
-        frames = []
-        for i, qid in enumerate(query_ids):
-            hits = [
-                (int(c), *cell_map[int(c)])
-                for c in probes[i]
-                if int(c) in cell_map
-            ]
-            if not hits:
-                frames.append(
-                    self._sq8_cand_frame(
-                        int(qid), np.empty(0, dtype=np.int64), [], []
-                    )
-                )
-                continue
-            ids = np.concatenate([h[1] for h in hits])
-            C = np.concatenate([h[2] for h in hits])
-            cells = np.concatenate(
-                [np.full(len(h[1]), h[0], dtype=np.int64) for h in hits]
-            )
-            ids, C, cells = drop_tombstoned(self._tomb, ids, C, cells)
-            if len(ids) == 0:
-                frames.append(
-                    self._sq8_cand_frame(
-                        int(qid), np.empty(0, dtype=np.int64), [], []
-                    )
-                )
-                continue
-            adc = self._adc_dists(Q[i], C, cells)
-            short = self._adc_topl(ids, adc, shortlist)
-            sids, sadc = ids[short], adc[short]
-            smap = self._sq8_map(Q[i], sids)
-            sq8d = [smap.get(j, np.nan) for j in sids.tolist()]
-            frames.append(self._sq8_cand_frame(int(qid), sids, sadc, sq8d))
-        return pd.concat(frames, ignore_index=True)
+        return _slot_frame(
+            query_ids, parts, {"adc": np.float64, "sq8": np.float64}
+        )
 
     @_swap_retry
     def fetch_dists_many(self, Q, ids_per_query, query_ids=None) -> pd.DataFrame:
-        """Phase-2 batch: exact (query_id, id, dist) rows for each
-        query's selected ids, one union id-sorted float read."""
+        """Phase-2 leg: exact (query_id, id, dist) rows, one per vectors
+        row whose id is in that query's ``ids_per_query`` entry
+        (multiplicity preserved), from one union read, as one frame."""
         Q, query_ids = _batch_queries(Q, query_ids)
-        union: set = set()
-        for ids in ids_per_query:
-            union.update(int(x) for x in ids)
-        rid_all, V_all = (
-            self._rerank_rows(union) if union else (None, None)
+        qpos, rid, dist = self._union_dists(Q, ids_per_query)
+        return pd.DataFrame(
+            {
+                "query_id": np.asarray(query_ids, dtype=np.int64)[qpos],
+                "id": rid,
+                "dist": dist,
+            }
         )
-        frames = []
-        for i, qid in enumerate(query_ids):
-            ids = np.asarray(sorted(int(x) for x in ids_per_query[i]),
-                             dtype=np.int64)
-            if rid_all is None or not len(ids):
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": np.empty(0, dtype=np.int64),
-                         "id": np.empty(0, dtype=np.int64),
-                         "dist": np.empty(0, dtype=np.float64)}
-                    )
-                )
-                continue
-            mask = np.isin(rid_all, ids)
-            dd = (
-                single_query_dists("l2", Q[i], V_all[mask])
-                if mask.any()
-                else np.empty(0)
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.full(
-                            int(mask.sum()), int(qid), dtype=np.int64
-                        ),
-                        "id": rid_all[mask],
-                        "dist": np.asarray(dd, dtype=np.float64),
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
 
 
 class LocalScanReader:

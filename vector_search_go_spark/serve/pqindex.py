@@ -146,14 +146,22 @@ class RowGroupIndex:
     # shortlist matches thousands of scattered groups, and decoding them
     # serially was 70% of the batch path's wall time (measured 670 ->
     # 126 ms for a 3.6k-group read at 16 threads on the 2M profiling
-    # store). Small point reads stay serial — pool dispatch would only
-    # add overhead to a handful of groups.
+    # store). Serial reads decode on the calling thread (no Arrow CPU
+    # pool: callers such as ShardedReader already run reads side by
+    # side). Crossover measured on the serve_ingest_100k benchmark's
+    # vectors table (124-row groups, 4 cores), serial vs parallel ms:
+    # ONE reader alone turns parallel-faster between 16 and 32 groups
+    # (16: 1.6 vs 2.9; 32: 3.5 vs 3.1; 64: 6.9 vs 4.8; 128: 13.2 vs
+    # 7.1), while TWO shard readers reading at once stay serial-faster
+    # through 128 groups (48: 5.9 vs 9.0; 64: 7.8 vs 10.4; 128: 14.6 vs
+    # 16.5). 64 keeps sharded point reads (~47 groups per shard)
+    # serial and still fans out batch reads.
     _PARALLEL_MIN_GROUPS = 64
     _READ_WORKERS = 16
 
     def _read_serial(self, mg: dict[int, list[int]], columns: list[str]):
         return [
-            self._files[fi].read_row_groups(rgs, columns=columns)
+            self._files[fi].read_row_groups(rgs, columns=columns, use_threads=False)
             for fi, rgs in mg.items()
         ]
 
@@ -252,6 +260,11 @@ class HivePartIndex:
         files = self._parts.get(int(value))
         if not files:
             return None
+        # Arrow's own pool decodes here, unlike RowGroupIndex point
+        # reads: decoding on read_values_parallel's 8 threads instead
+        # was no faster (a lazy LocalIvfReader lookup took 6.8 ms either
+        # way at nprobe=8 on 100k x 64) and a preload_cells open on the
+        # same store peaked 67 MB higher in RSS
         return pa.concat_tables(
             (self._pf(p).read(columns=columns) for p in files),
             promote_options="permissive",

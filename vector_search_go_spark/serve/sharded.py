@@ -58,6 +58,7 @@ from vector_search_go_spark.serve.local_reader import (
     _batch_queries,
     _read_store_meta,
     _result_frame,
+    _topn,
 )
 
 _READER_CLS = {
@@ -70,6 +71,26 @@ _READER_CLS = {
 # families whose shard readers take a metric= ctor kwarg (ivfpq stores
 # are l2-only by construction — LocalIvfPqReader has no metric knob)
 _METRIC_FAMILIES = ("lsh", "ivf", "scan")
+
+
+def _segments(frames: list[pd.DataFrame], cols, order):
+    """The union of per-shard frames as one array per column of
+    ``cols``, plus, per query id of ``order``, the indices of its rows
+    in shard order then row order (what a groupby sub-frame holds).
+    One stable argsort and two searchsorted calls route every query —
+    the router's merges never build per-query frames to find rows."""
+    def cat(c):
+        if not frames:
+            return np.empty(0, dtype=np.int64)
+        return np.concatenate([f[c].to_numpy() for f in frames])
+
+    q = cat("query_id")
+    o = np.argsort(q, kind="stable")
+    keys = np.asarray([int(x) for x in order], dtype=np.int64)
+    lo = np.searchsorted(q[o], keys, side="left")
+    hi = np.searchsorted(q[o], keys, side="right")
+    return {c: cat(c) for c in cols}, [o[a:b] for a, b in zip(lo, hi)]
+
 
 # ---- process-per-shard worker plumbing (ShardedReader processes=True).
 # One single-worker spawn process per shard, each holding ITS reader as
@@ -428,20 +449,12 @@ class ShardedReader:
         reader's frame looks like (a query with zero candidates in every
         shard contributes zero rows there too). Uses the same
         _result_frame tie-break as every reader."""
-        allf = pd.concat(frames, ignore_index=True)
-        # one groupby pass, not a full-frame boolean scan per query —
-        # the merge must stay linear in batch x shards x k
-        groups = {int(q): sub for q, sub in allf.groupby("query_id", sort=False)}
-        out = []
-        for qid in order:
-            sub = groups.get(int(qid))
-            if sub is None or len(sub) == 0:
-                continue
-            out.append(
-                _result_frame(
-                    sub["id"].to_numpy(), sub["dist"].to_numpy(), k, int(qid)
-                )
-            )
+        a, segs = _segments(frames, ("id", "dist"), order)
+        out = [
+            _result_frame(a["id"][seg], a["dist"][seg], k, int(qid))
+            for qid, seg in zip(order, segs)
+            if len(seg)
+        ]
         if not out:
             return _result_frame([], [], k, int(order[0]) if len(order) else 0)
         return pd.concat(out, ignore_index=True)
@@ -481,33 +494,24 @@ class ShardedReader:
         one shard (disjoint pmod split), so its slot rows and vmult are
         mutually consistent. Queries emit in the caller's order; a
         query with no candidates anywhere contributes zero rows."""
-        allf = pd.concat(frames, ignore_index=True)
-        groups = {int(q): sub for q, sub in allf.groupby("query_id", sort=False)}
+        a, segs = _segments(frames, ("id", "adc", "dist", "vmult"), order)
         out = []
-        for qid in order:
-            sub = groups.get(int(qid))
-            if sub is None or len(sub) == 0:
-                out.append(_result_frame([], [], k, int(qid)))
-                continue
-            ids = sub["id"].to_numpy()
-            adc = sub["adc"].to_numpy()
-            dist = sub["dist"].to_numpy()
-            vmult = sub["vmult"].to_numpy()
-            sel = LocalIvfPqReader._adc_topl(ids, adc, shortlist)
-            out_ids: list = []
-            out_dist: list = []
-            seen: set = set()
-            for j in sel:
-                i = ids[j]
-                if i in seen:
-                    continue  # a second SLOT of an already-emitted id
-                seen.add(i)
-                m = int(vmult[j])
-                if m <= 0:
-                    continue  # no vectors row — the unsharded isin drop
-                out_ids.extend([i] * m)
-                out_dist.extend([float(dist[j])] * m)
-            out.append(_result_frame(out_ids, out_dist, k, int(qid)))
+        for qid, rows in zip(order, segs):
+            sel = rows[
+                LocalIvfPqReader._adc_topl(a["id"][rows], a["adc"][rows], shortlist)
+            ]
+            # first slot per unique id (a second SLOT of an id adds no
+            # row); vmult == 0 (no vectors row) is the unsharded isin drop
+            uid, first = np.unique(a["id"][sel], return_index=True)
+            m = a["vmult"][sel][first]
+            live = m > 0
+            out.append(
+                _result_frame(
+                    np.repeat(uid[live], m[live]),
+                    np.repeat(a["dist"][sel][first][live], m[live]),
+                    k, int(qid),
+                )
+            )
         if not out:
             # empty batch: same empty frame the unsharded reader (and
             # _merge) return instead of a pd.concat([]) crash
@@ -527,37 +531,17 @@ class ShardedReader:
         every global ADC top-L slot is in its own shard's top-L
         (selection monotone) and sq8 floats are comparable across
         shards (one global stats row by the save contract)."""
-        allf = pd.concat(frames, ignore_index=True)
-        groups = {int(q): sub for q, sub in allf.groupby("query_id", sort=False)}
+        a, segs = _segments(frames, ("id", "adc", "sq8"), order)
         kept: dict[int, list[int]] = {}
-        for qid in order:
-            sub = groups.get(int(qid))
-            if sub is None or len(sub) == 0:
-                kept[int(qid)] = []
-                continue
-            ids = sub["id"].to_numpy()
-            adc = sub["adc"].to_numpy()
-            s8 = sub["sq8"].to_numpy()
-            sel = LocalIvfPqReader._adc_topl(ids, adc, shortlist)
-            seen: set = set()
-            u_ids: list = []
-            u_s8: list = []
-            for j in sel:
-                i = int(ids[j])
-                if i in seen:
-                    continue
-                seen.add(i)
-                if np.isnan(s8[j]):
-                    continue
-                u_ids.append(i)
-                u_s8.append(float(s8[j]))
-            if not u_ids:
-                kept[int(qid)] = []
-                continue
-            ua = np.asarray(u_ids, dtype=np.int64)
-            sa = np.asarray(u_s8, dtype=np.float64)
-            ksel = np.lexsort((ua, sa))[:keep]
-            kept[int(qid)] = sorted(int(x) for x in ua[ksel])
+        for qid, rows in zip(order, segs):
+            sel = rows[
+                LocalIvfPqReader._adc_topl(a["id"][rows], a["adc"][rows], shortlist)
+            ]
+            uid, first = np.unique(a["id"][sel], return_index=True)
+            s8 = a["sq8"][sel][first]
+            live = ~np.isnan(s8)
+            ua, sa = uid[live], s8[live]
+            kept[int(qid)] = np.sort(ua[_topn(ua, sa, keep)]).tolist()
         return kept
 
     def _finish_sq8(
@@ -578,14 +562,11 @@ class ShardedReader:
         Q = np.asarray(Q, dtype=np.float64)
         calls = []  # (shard, query rows, ids per routed query)
         for s, f in enumerate(phase1):
-            listed = {
-                int(q): sub["id"].to_numpy()
-                for q, sub in f.groupby("query_id", sort=False)
-            }
+            a, listed = _segments([f], ("id",), qids)
             rows, ids = [], []
-            for j, qid in enumerate(qids):
+            for j, (qid, seg) in enumerate(zip(qids, listed)):
                 want = np.asarray(kept[qid], dtype=np.int64)
-                own = want[np.isin(want, listed.get(qid, []))]
+                own = want[np.isin(want, a["id"][seg])]
                 if len(own):
                     rows.append(j)
                     ids.append(own.tolist())
@@ -609,18 +590,14 @@ class ShardedReader:
                     calls,
                 )
             )
-        # one groupby pass, not a full-frame scan per query
-        groups = {}
-        if frames:
-            allf = pd.concat(frames, ignore_index=True)
-            groups = {
-                int(q): (sub["id"].tolist(), sub["dist"].tolist())
-                for q, sub in allf.groupby("query_id", sort=False)
-            }
-        out = [
-            _result_frame(*groups.get(qid, ([], [])), k, qid) for qid in qids
-        ]
-        return pd.concat(out, ignore_index=True)
+        a, segs = _segments(frames, ("id", "dist"), qids)
+        return pd.concat(
+            [
+                _result_frame(a["id"][seg], a["dist"][seg], k, qid)
+                for qid, seg in zip(qids, segs)
+            ],
+            ignore_index=True,
+        )
 
     def _resolve_sq8_keep(self, k: int, sq8_keep) -> int:
         from vector_search_go_spark.operators.pq import pq_shortlist
