@@ -121,8 +121,9 @@ def test_sq8_search_impl_parity(spark):
     codes = sq8_encode(corpus, stats, 64)
     a = [(r["query_id"], r["id"], r["dist"], r["rn"]) for r in
          sq8_search(queries, codes, stats, corpus, 64, impl="expr").collect()]
+    # the arrow impl encodes the corpus itself inside its one scan
     b = [(r["query_id"], r["id"], r["dist"], r["rn"]) for r in
-         sq8_search(queries, codes, stats, corpus, 64, impl="arrow").collect()]
+         sq8_search(queries, None, stats, corpus, 64, impl="arrow").collect()]
     assert sorted(a) == sorted(b)
 
 

@@ -124,36 +124,80 @@ def test_arrow_two_stage_matches_expr_oracle(spark, n_parts):
             assert a == b, f"metric={metric} threshold={thr}"
 
 
-def test_searches_tolerate_empty_queries(spark):
-    # the local-top-k kernels must emit well-formed empty results for an
-    # empty query batch, not crash in np.concatenate (review r5 pass 3)
+_EMPTY_PRED_SCHEMA = {
+    "ivf": "struct<query_id:bigint,id:bigint,dist:double>",
+    "pq": "struct<query_id:bigint,id:bigint,approx_dist:double>",
+    "ivfadc": "struct<query_id:bigint,id:bigint,approx_dist:double>",
+    "sq8": "struct<query_id:bigint,id:bigint,dist:double,rn:int>",
+    "exact": "struct<query_id:bigint,id:bigint,dist:double,rn:int>",
+}
+
+
+@pytest.mark.parametrize("truth_k", [None, 5])
+@pytest.mark.parametrize("family", sorted(_EMPTY_PRED_SCHEMA))
+def test_searches_tolerate_empty_queries(spark, family, truth_k):
+    """An empty query batch gives every corpus-scan family a well-formed
+    empty result with its usual schema, and with truth_k an empty truth
+    table shaped like exact_knn_join's output — not a crash in the
+    kernels (Q would be 1-D)."""
+    from vector_search_go_spark.operators.ann_ivf import ivf_scores_fused
+    from vector_search_go_spark.operators.argmin import scan_topk
+    from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
+    from vector_search_go_spark.operators.pq import (
+        ivfpq_adc_scores_fused,
+        pq_adc_scores_fused,
+        pq_codebook,
+    )
+    from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
+
     rng = np.random.default_rng(3)
-    C = rng.normal(size=(200, 8))
+    C = rng.normal(size=(200, 64))
     corpus = spark.createDataFrame(
         [(i, list(map(float, C[i]))) for i in range(len(C))],
         "id bigint, vec array<double>",
     )
     empty_q = spark.createDataFrame([], "query_id bigint, qvec array<double>")
-
-    from vector_search_go_spark.operators.pq import (
-        pq_adc_search,
-        pq_codebook,
-        pq_encode,
+    cents = (np.arange(4), C[:4])
+    cb = pq_codebook(
+        corpus.select(F.col("id").alias("vec_id"), F.col("vec").alias("embedding"))
     )
-    from vector_search_go_spark.operators.sq8 import (
-        sq8_encode,
-        sq8_search,
-        sq8_stats,
-    )
-
-    emb = corpus.select(F.col("id").alias("vec_id"), F.col("vec").alias("embedding"))
-    cb = pq_codebook(emb)
-    codes = pq_encode(corpus, cb)
-    assert pq_adc_search(empty_q, codes, cb, corpus, k=5, shortlist=20).count() == 0
-    stats = sq8_stats(corpus, 8)
-    scodes = sq8_encode(corpus, stats, 8)
-    assert sq8_search(empty_q, scodes, stats, corpus, 8, k=5, shortlist=20).count() == 0
-    assert exact_knn_join(empty_q, corpus, metric="l2", k=5).count() == 0
+    if family == "ivf":
+        out = ivf_scores_fused(
+            corpus, cents, {}, [], metric="l2", local_topk=5, truth_k=truth_k
+        )
+    elif family == "pq":
+        out = pq_adc_scores_fused(
+            corpus, cb, queries=empty_q, local_topk=20, truth_k=truth_k
+        )
+    elif family == "ivfadc":
+        out = ivfpq_adc_scores_fused(
+            corpus, cb, cents, {}, [], local_topk=20, truth_k=truth_k
+        )
+    elif family == "sq8":
+        out = sq8_search(
+            empty_q, None, sq8_stats(corpus, 64), corpus, 64, k=5,
+            shortlist=20, truth_k=truth_k,
+        )
+    elif truth_k is None:
+        out = exact_knn_join(empty_q, corpus, metric="l2", k=5)
+    else:
+        # exact search through the scan driver itself: its pred side is
+        # the candidate frame that exact_knn_join's topk consumes
+        out = scan_topk(
+            corpus, [], lambda rows: exact_local_topk_kernel(rows, "l2", 5),
+            "dist", "l2", truth_k,
+        )
+    want = _EMPTY_PRED_SCHEMA[family]
+    if family == "exact" and truth_k is not None:
+        want = _EMPTY_PRED_SCHEMA["ivf"]
+    pred, truth = out if truth_k is not None else (out, None)
+    assert pred.schema.simpleString() == want
+    assert pred.count() == 0
+    if truth is not None:
+        assert truth.schema.simpleString() == (
+            "struct<query_id:bigint,id:bigint,dist:double,rn:int>"
+        )
+        assert truth.count() == 0
 
 
 def test_precision_recall_zero_side_null_semantics(spark):
@@ -172,31 +216,3 @@ def test_precision_recall_zero_side_null_semantics(spark):
     assert rows[0] == (1.0, 0.5)
     assert rows[7][0] is None and rows[7][1] == 0.0
     assert rows[9][0] == 0.0 and rows[9][1] is None
-
-
-def test_empty_query_batch_truth_kernel_and_pair(spark):
-    """An empty query batch: exact_local_topk_kernel builds a batch_fn
-    that emits three empty arrays, and sq8_search with a truth_fn
-    returns the documented (pred, empty truth) pair."""
-    from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
-    from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
-
-    rng = np.random.default_rng(5)
-    C = rng.normal(size=(50, 8))
-    fn = exact_local_topk_kernel([], "l2", 5)
-    q, i, d = fn(C, np.arange(50, dtype=np.int64))
-    assert len(q) == len(i) == len(d) == 0
-
-    corpus = spark.createDataFrame(
-        [(i, list(map(float, C[i]))) for i in range(len(C))],
-        "id bigint, vec array<double>",
-    )
-    empty_q = spark.createDataFrame([], "query_id bigint, qvec array<double>")
-    pred, truth = sq8_search(
-        empty_q, None, sq8_stats(corpus, 8), corpus, 8, k=5, shortlist=20,
-        vectors=corpus, truth_fn=fn, qrows=[],
-    )
-    assert truth.schema.simpleString() == (
-        "struct<query_id:bigint,id:bigint,dist:double,rn:int>"
-    )
-    assert pred.count() == 0 and truth.count() == 0

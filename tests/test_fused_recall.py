@@ -1,7 +1,7 @@
-"""Parity pins for the r12 fused pred+truth kernels: every fused path
-must be bit-identical to the unfused operator chain it replaced, and
-the truth rows riding a fused corpus scan must equal exact_knn_join's
-output exactly (same kernels, same (dist, id) order)."""
+"""Parity pins for the fused corpus-scan kernels: every fused path
+must be bit-identical to the unfused operator chain or numpy reference
+it replaced, and the truth rows riding a fused corpus scan must equal
+exact_knn_join's output exactly (same kernels, same (dist, id) order)."""
 
 from __future__ import annotations
 
@@ -9,11 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.operators.exact_knn import (
-    exact_knn_join,
-    exact_local_topk_kernel,
-)
-from vector_search_go_spark.operators.recall import split_fused_pred_truth
+from vector_search_go_spark.operators.exact_knn import exact_knn_join
 from vector_search_go_spark.operators.topk import topk_per_group
 
 
@@ -72,12 +68,17 @@ def test_ivf_scores_fused_matches_ivf_search(spark, metric):
 
 
 def test_pq_adc_scores_fused_matches_unfused(spark):
+    """The fused encode+ADC scan equals an in-test numpy reference bit
+    for bit: per-subspace first-min argmin encode, a direct
+    squared-difference table per query, and the M_SUB table entries
+    summed in subspace order — over the full mesh and after the
+    local_topk=20 truncation feeding a global top-20."""
     from vector_search_go_spark.operators.pq import (
+        D_SUB,
+        M_SUB,
         N_CODES,
-        pq_adc_candidates,
         pq_adc_scores_fused,
         pq_codebook,
-        pq_encode_arr,
     )
 
     corpus, queries = _mk(spark, n_c=260, dim=64, seed=3)
@@ -85,21 +86,60 @@ def test_pq_adc_scores_fused_matches_unfused(spark):
         F.col("id").alias("vec_id"), F.col("vec").alias("embedding")
     ).filter(F.col("vec_id") < N_CODES + 200)
     cb = pq_codebook(emb)
-    old = pq_adc_candidates(
-        queries, pq_encode_arr(corpus, cb), cb, local_topk=20
-    )
     qrows = queries.select("query_id", "qvec").collect()
-    new = pq_adc_scores_fused(corpus, cb, qrows=qrows, local_topk=20)
-    assert _rows(old, ("query_id", "id", "approx_dist")) == _rows(
-        new, ("query_id", "id", "approx_dist")
+
+    cb_rows = sorted(cb.collect(), key=lambda r: (r["sub"], r["code"]))
+    books = np.array(
+        [[list(r["cvec"]) for r in cb_rows if r["sub"] == s] for s in range(M_SUB)]
     )
+    crows = sorted(corpus.collect(), key=lambda r: r["id"])
+    ids = np.array([r["id"] for r in crows])
+    V = np.array([list(r["vec"]) for r in crows])
+
+    def sq(a, b):
+        # squared L2 over the last axis, one dimension at a time
+        t = 0.0
+        for d in range(D_SUB):
+            diff = a[..., d] - b[..., d]
+            t = t + diff * diff
+        return t
+
+    sub = [slice(s * D_SUB, (s + 1) * D_SUB) for s in range(M_SUB)]
+    codes = np.stack(
+        [sq(V[:, None, sub[s]], books[s][None]).argmin(axis=1) for s in range(M_SUB)],
+        axis=1,
+    )
+    want = []
+    for r in qrows:
+        q = np.array(list(r["qvec"]))
+        acc = 0.0
+        for s in range(M_SUB):
+            table = sq(q[None, sub[s]], books[s])
+            acc = acc + table[codes[:, s]]
+        want += [(r["query_id"], i, d) for i, d in zip(ids, np.sqrt(acc))]
+    want.sort()
+
+    def arr(rows):
+        return np.array(rows, dtype=object)
+
+    cols = ("query_id", "id", "approx_dist")
+    full = _rows(pq_adc_scores_fused(corpus, cb, qrows=qrows), cols)
+    assert np.array_equal(arr(full), arr(want))
+
+    cand = pq_adc_scores_fused(corpus, cb, qrows=qrows, local_topk=20)
+    top = topk_per_group(cand, ["query_id"], "approx_dist", 20, tiebreak_cols=["id"])
+    want_top = []
+    for qid in sorted({w[0] for w in want}):
+        per_q = sorted((w for w in want if w[0] == qid), key=lambda w: (w[2], w[1]))
+        want_top += per_q[:20]
+    assert np.array_equal(arr(_rows(top, cols)), arr(sorted(want_top)))
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_fused_truth_rows_match_exact_knn_join(spark, metric):
     """The truth chain riding a fused corpus scan (here: the IVF fused
-    kernel, the same truth_fn every fused entry uses) must reproduce
-    exact_knn_join bit-for-bit."""
+    kernel; every family's truth_k runs the same scan_topk truth
+    kernel) must reproduce exact_knn_join bit-for-bit."""
     from vector_search_go_spark.operators.ann_ivf import (
         ivf_scores_fused,
         probe_cells_local,
@@ -118,30 +158,26 @@ def test_fused_truth_rows_match_exact_knn_join(spark, metric):
     for r, cs in probe_cells_local(qrows, cids, cmat, metric, 2):
         for c in cs:
             c2q.setdefault(int(c), []).append(int(r["query_id"]))
-    combined = ivf_scores_fused(
+    _approx, truth = ivf_scores_fused(
         corpus, (cids, cmat), c2q, qrows, metric=metric, local_topk=5,
-        truth_fn=exact_local_topk_kernel(qrows, metric, 5),
+        truth_k=5,
     )
-    _approx, truth = split_fused_pred_truth(combined, k=5, dist_col="dist")
     want = exact_knn_join(queries, corpus, metric=metric, k=5)
     assert _rows(want) == _rows(truth)
 
 
 def test_sq8_search_truth_fn_returns_identical_pair(spark):
+    """sq8_search with truth_k returns the same search result as without
+    it, paired with exact_knn_join's rows."""
     from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
 
     corpus, queries = _mk(spark, n_c=220, dim=8, seed=5)
     stats = sq8_stats(corpus, 8)
-    plain = sq8_search(
-        queries, None, stats, corpus, 8, k=5, shortlist=20, vectors=corpus
-    )
+    plain = sq8_search(queries, None, stats, corpus, 8, k=5, shortlist=20)
     qrows = queries.select("query_id", "qvec").collect()
     fused, truth = sq8_search(
-        queries, None, stats, corpus, 8, k=5, shortlist=20, vectors=corpus,
-        truth_fn=exact_local_topk_kernel(
-            sorted(qrows, key=lambda r: r["query_id"]), "l2", 5
-        ),
-        truth_k=5, qrows=qrows,
+        queries, None, stats, corpus, 8, k=5, shortlist=20, truth_k=5,
+        qrows=qrows,
     )
     assert _rows(plain) == _rows(fused)
     want = exact_knn_join(queries, corpus, metric="l2", k=5)

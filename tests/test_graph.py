@@ -132,3 +132,29 @@ def test_local_fast_path_parity_and_fallback(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=1, collect_threshold=3)
+
+
+@pytest.mark.parametrize("collect_threshold", [0, 100_000])
+def test_unknown_impl_raises_on_both_paths(spark, collect_threshold):
+    """An unknown ``impl`` is rejected before the size probe, so a small
+    edge list cannot slip through to the driver-side union-find."""
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    with pytest.raises(ValueError, match="unknown connected_components impl"):
+        connected_components(edges, impl="bogus", collect_threshold=collect_threshold)
+
+
+@pytest.mark.parametrize("impl", ["propagate", "star"])
+def test_null_endpoints_dropped_on_both_paths(spark, impl):
+    """Edges with a null endpoint are dropped before either path: the
+    driver-side union-find (default threshold) and the distributed loop
+    (threshold 0) return the same labels, with no null row."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 5), (6, None), (5, 1)],
+        "src bigint, dst bigint",
+    )
+    fast = {r["id"]: r["label"] for r in connected_components(edges, impl=impl).collect()}
+    dist = {
+        r["id"]: r["label"]
+        for r in connected_components(edges, impl=impl, collect_threshold=0).collect()
+    }
+    assert fast == dist == {1: 1, 2: 1, 4: 1, 5: 1}

@@ -517,3 +517,61 @@ def test_residual_lut_stacked_equals_per_subspace_tables():
         assert np.array_equal(luts[c], want), c
     assert (luts[:, 5, [3, 9, 15]] == 0.0).all()
     assert (luts[:, 4, 15] > 0.0).all()
+    # a raw store's table: one zero centroid row (the fused PQ scan and
+    # the raw point searches) equals the table built from q itself
+    raw = residual_lut(q, np.zeros(M_SUB * D_SUB), stack_codebook(cb_ids, cb_mats))
+    want = np.zeros((M_SUB, n_codes))
+    for sub in range(M_SUB):
+        sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
+        want[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+    assert np.array_equal(raw, want)
+    assert (raw[5, [3, 9, 15]] == 0.0).all()
+
+
+def test_ivfadc_dists_chunked_equals_per_pair_tables():
+    """The one IVFADC scorer over a batch with more than 1024
+    (query, cell) pairs — several table chunks — equals a per-pair
+    residual_lut table and subspace-ordered sum, bit for bit, for every
+    (query, row) pair a probe reaches and no other."""
+    import numpy as np
+
+    from vector_search_go_spark.operators.pq import (
+        ivfadc_dists,
+        residual_lut,
+        stack_codebook,
+    )
+
+    rng = np.random.default_rng(31)
+    n_codes, n_cells, n_q, dims = 16, 40, 60, M_SUB * D_SUB
+    cb_ids = {s: np.arange(n_codes) for s in range(M_SUB)}
+    cb_mats = {s: rng.standard_normal((n_codes, D_SUB)) for s in range(M_SUB)}
+    cbs = stack_codebook(cb_ids, cb_mats)
+    Q = rng.standard_normal((n_q, dims)) * 3.0
+    cent = {c: rng.standard_normal(dims) for c in range(n_cells)}
+    # cell 7 is never probed; cell 39 holds no rows
+    cell_qpos: dict = {}
+    for p in range(n_q):
+        for c in rng.choice(np.setdiff1d(range(n_cells), [7]), 25, replace=False):
+            cell_qpos.setdefault(int(c), []).append(p)
+    cells = rng.integers(0, n_cells - 1, size=700)
+    codes = rng.integers(0, n_codes, size=(700, M_SUB))
+    n_pairs = sum(len(cell_qpos.get(int(c), ())) for c in np.unique(cells))
+    assert n_pairs > 1024
+
+    got_q, got_r, got_d = ivfadc_dists(Q, cell_qpos, cent, cbs, cells, codes)
+    want_q, want_r, want_d = [], [], []
+    for c, qs in cell_qpos.items():
+        rows = np.flatnonzero(cells == c)
+        for p in qs:
+            lut = residual_lut(Q[p], cent[c], cbs)
+            acc = np.zeros(len(rows))
+            for sub in range(M_SUB):
+                acc = acc + lut[sub, codes[rows, sub]]
+            want_q.append(np.full(len(rows), p))
+            want_r.append(rows)
+            want_d.append(np.sqrt(acc))
+    want_q, want_r, want_d = map(np.concatenate, (want_q, want_r, want_d))
+    got, want = np.lexsort((got_r, got_q)), np.lexsort((want_r, want_q))
+    assert np.array_equal(got_q[got], want_q[want])
+    assert np.array_equal(got_r[got], want_r[want])
+    assert np.array_equal(got_d[got], want_d[want])

@@ -106,14 +106,14 @@ def ivf_scores_fused(
     qrows: list,
     metric: str = "cosine",
     local_topk: int | None = None,
-    truth_fn=None,
-) -> DataFrame:
+    truth_k: int | None = None,
+):
     """(query_id, id, dist) over the IVF candidate set with coarse
     assignment and candidate scoring FUSED into one Arrow stage over
-    the corpus (guide §4.2) — replaces the assign_cells projection +
-    broadcast(probes) join + broadcast(queries) join +
-    pairwise_dist_udf chain, which crossed the Python boundary twice
-    and built two broadcasts per invocation.
+    the corpus (argmin.scan_topk, guide §4.2) — replaces the
+    assign_cells projection + broadcast(probes) join +
+    broadcast(queries) join + pairwise_dist_udf chain, which crossed
+    the Python boundary twice and built two broadcasts per invocation.
 
     Bit-identical piece by piece: assignment is argmin_id_arrow's
     first-min argmin over ascending cids in the same distance domain
@@ -126,91 +126,65 @@ def ivf_scores_fused(
     ``centroids`` = DataFrame or preloaded (cids, matrix);
     ``cell_to_queries`` maps cell id -> probing query ids
     (probe_cells_local's inverse); ``qrows`` the collected query batch.
-    ``truth_fn`` (exact_knn.exact_local_topk_kernel): when given, each
-    batch also emits exact-KNN local top-k rows from the SAME decoded
-    V matrix with a ``_truth`` flag — the recall entry splits the
-    chains behind one localCheckpoint (guide §8.4)."""
+    ``truth_k``: the scan also feeds the exact-KNN truth chain and the
+    result is an (approx, truth) pair (see scan_topk)."""
     import numpy as np
-    import pandas as pd
 
     from vector_search_go_spark.operators.argmin import (
         _seq_cosine,
         _seq_sq_l2,
         collect_centroids,
         local_topk_flat,
+        query_matrix,
+        scan_topk,
     )
 
-    spark = corpus.sparkSession
-    out_schema = "query_id long, id long, dist double" + (
-        ", _truth boolean" if truth_fn is not None else ""
-    )
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    qrows = sorted(qrows, key=lambda r: r["query_id"])
-    qpos = {int(r["query_id"]): i for i, r in enumerate(qrows)}
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    if isinstance(centroids, tuple):
-        cids, cmat = centroids
+    if metric == "l2":
+        def dist(V, C):
+            return np.sqrt(_seq_sq_l2(V, C))
     else:
-        cids, cmat = collect_centroids(centroids)
-    cids = np.asarray(cids, dtype=np.int64)
-    is_l2 = metric == "l2"
+        dist = _seq_cosine
     c2q = {int(c): [int(q) for q in qs] for c, qs in cell_to_queries.items()}
 
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            ids_b = pdf["id"].to_numpy()
-            if truth_fn is not None:
-                tq, ti, td = truth_fn(V, ids_b)
-                if len(tq):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": tq,
-                            "id": ti,
-                            "dist": td,
-                            "_truth": np.ones(len(tq), dtype=bool),
-                        }
-                    )
+    def scorer(rows):
+        qids, Q = query_matrix(rows)
+        qpos = {int(q): i for i, q in enumerate(qids)}
+        if isinstance(centroids, tuple):
+            cids, cmat = centroids
+        else:
+            cids, cmat = collect_centroids(centroids)
+        cids = np.asarray(cids, dtype=np.int64)
+
+        def score(V, ids_b):
             # assignment in the same distance domain as
             # argmin_id_arrow: sqrt'd L2 / cosine, first-min over
             # ascending cids
-            Dc = np.sqrt(_seq_sq_l2(V, cmat)) if is_l2 else _seq_cosine(V, cmat)
-            cells = cids[Dc.argmin(axis=1)]
+            cells = cids[dist(V, cmat).argmin(axis=1)]
             out_q, out_i, out_d = [], [], []
             for c in np.unique(cells):
                 qs = c2q.get(int(c))
                 if not qs:
                     continue
                 m = cells == c
-                Vm = V[m]
                 idm = ids_b[m]
-                qidx = np.array([qpos[q] for q in qs], dtype=np.int64)
-                Dm = (
-                    np.sqrt(_seq_sq_l2(Vm, Q[qidx]))
-                    if is_l2
-                    else _seq_cosine(Vm, Q[qidx])
-                )
+                Dm = dist(V[m], Q[[qpos[q] for q in qs]])
                 for jj, q in enumerate(qs):
                     out_q.append(np.full(len(idm), q, dtype=np.int64))
                     out_i.append(idm)
                     out_d.append(Dm[:, jj])
             if not out_q:
-                continue
+                return np.empty(0, dtype=np.int64), ids_b[:0], np.empty(0)
             q_arr = np.concatenate(out_q)
             i_arr = np.concatenate(out_i)
             d_arr = np.concatenate(out_d)
-            if local_topk is not None and len(d_arr) > local_topk:
-                keep = local_topk_flat(q_arr, i_arr, d_arr, local_topk)
-                q_arr, i_arr, d_arr = q_arr[keep], i_arr[keep], d_arr[keep]
-            out = {"query_id": q_arr, "id": i_arr, "dist": d_arr}
-            if truth_fn is not None:
-                out["_truth"] = np.zeros(len(q_arr), dtype=bool)
-            yield pd.DataFrame(out)
+            if local_topk is None:
+                return q_arr, i_arr, d_arr
+            keep = local_topk_flat(q_arr, i_arr, d_arr, local_topk)
+            return q_arr[keep], i_arr[keep], d_arr[keep]
 
-    return corpus.select("id", "vec").mapInPandas(gen, out_schema)
+        return score
+
+    return scan_topk(corpus, qrows, scorer, "dist", metric, truth_k)
 
 
 def ivf_search(

@@ -245,6 +245,75 @@ def mesh_topk_arrays(D, ids_b, qids, L: int):
     )
 
 
+def scan_topk(corpus: DataFrame, qrows: list, scorer, dist_col: str,
+              metric: str, truth_k: int | None = None):
+    """The one corpus-scan driver of the Arrow search kernels (IVF, PQ,
+    IVFADC, SQ8 and exact KNN): one ``mapInPandas`` over
+    ``corpus.select("id", "vec")`` emitting ``(query_id, id,
+    dist_col)`` rows, in the local-top-k-then-merge shape of
+    distributed top-k search (every consumer ends in a global topk).
+
+    ``scorer(qrows)`` builds the per-batch kernel from the sorted,
+    non-empty query batch (model reads happen there, on the driver,
+    once); the kernel maps a decoded batch ``(V float64[n, D], ids)``
+    to flat ``(query_id, id, dist)`` arrays already cut to their exact
+    local top-L under the (dist, id) order — ``local_topk_flat`` for
+    flat scorers, ``mesh_topk_arrays`` for mesh scorers. This driver
+    owns the rest: sort the batch, answer an empty batch with a
+    well-formed empty frame, skip empty Arrow batches, decode V once.
+
+    ``truth_k``: each batch also emits the exact-KNN local top-truth_k
+    rows (exact_knn.exact_local_topk_kernel under ``metric``) from the
+    SAME decoded V, and the return value becomes
+    recall.split_fused_pred_truth's ``(approx, truth)`` pair — one
+    corpus scan feeds both the pred and the truth chain."""
+    from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
+    from vector_search_go_spark.operators.recall import split_fused_pred_truth
+
+    spark = corpus.sparkSession
+    schema = f"query_id long, id long, {dist_col} double"
+    qrows = sorted(qrows, key=lambda r: r["query_id"])
+    if not qrows:
+        empty = spark.createDataFrame([], schema)
+        if truth_k is None:
+            return empty
+        return empty, spark.createDataFrame(
+            [], "query_id long, id long, dist double, rn int"
+        )
+    kernels = [(scorer(qrows), False)]
+    if truth_k is not None:
+        kernels.insert(0, (exact_local_topk_kernel(qrows, metric, truth_k), True))
+        schema += ", _truth boolean"
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
+            ids_b = pdf["id"].to_numpy()
+            for kernel, is_truth in kernels:
+                q_o, i_o, d_o = kernel(V, ids_b)
+                if len(q_o) == 0:
+                    continue
+                out = {"query_id": q_o, "id": i_o, dist_col: d_o}
+                if truth_k is not None:
+                    out["_truth"] = np.full(len(q_o), is_truth)
+                yield pd.DataFrame(out)
+
+    scanned = corpus.select("id", "vec").mapInPandas(gen, schema)
+    if truth_k is None:
+        return scanned
+    return split_fused_pred_truth(scanned, k=truth_k, dist_col=dist_col)
+
+
+def query_matrix(qrows) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids int64[n], query matrix float64[n, D]) of a collected
+    (query_id, qvec) batch, in row order."""
+    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
+    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
+    return qids, Q
+
+
 def fanin_query_scorer(queries: DataFrame, metric: str,
                        qid_col: str = "query_id", qvec_col: str = "qvec",
                        tol: float = 1e-6, local_topk: int | None = None,

@@ -19,8 +19,6 @@ ANN path is ``vector_search_go_spark.lsh`` (SURVEY.md section 7 Phase 1).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
-# survive postponed annotation evaluation
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -101,23 +99,23 @@ def exact_knn_join(
 
 def exact_local_topk_kernel(qrows, metric: str, k: int):
     """Per-batch exact-KNN local top-k as a reusable closure:
-    ``fn(V, ids_b) -> (q_arr, i_arr, d_arr)`` with the EXACT logic of
-    ``_exact_knn_arrow``'s batch loop (two-stage BLAS bound +
+    ``fn(V, ids_b) -> (q_arr, i_arr, d_arr)`` — two-stage BLAS bound +
     sequential-IEEE rescore above 65,536 pairs, full sequential matrix
-    below). Factored out so fused pred+truth kernels (the
+    below. It is ``_exact_knn_arrow``'s scorer AND the truth kernel the
+    fused pred+truth scans run (argmin.scan_topk ``truth_k``: the
     ``*_recall_vs_exact`` entries share one corpus scan between the ANN
-    chain and this truth chain — guide §8.4) run the bit-identical
-    code path. ``qrows`` must be the sorted (query_id, qvec) batch."""
-    from vector_search_go_spark.operators.argmin import _seq_cosine, _seq_sq_l2
+    chain and this truth chain), so both run the bit-identical code
+    path. ``qrows`` must be the sorted, non-empty (query_id, qvec)
+    batch."""
+    from vector_search_go_spark.operators.argmin import (
+        _seq_cosine,
+        _seq_sq_l2,
+        local_topk_flat,
+        mesh_topk_arrays,
+        query_matrix,
+    )
 
-    if not qrows:
-        # empty query batch: no truth rows (Q would be 1-D below)
-        def empty_fn(V, ids_b):
-            return (np.empty(0, dtype=np.int64), ids_b[:0], np.empty(0))
-
-        return empty_fn
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
+    qids, Q = query_matrix(qrows)
     is_cos = metric in ("cosine", "angular")
     q2 = np.einsum("ij,ij->i", Q, Q)
     nq = np.sqrt(q2)
@@ -127,23 +125,6 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
     # per-query k-th approximate distance provably contains the exact
     # (dist, id) top-k
     MARGIN = 1e-4
-
-    def _emit(ids_b, sel_rows, sel_cols, dist_sel, kk):
-        # exact local top-kk per query among the rescored (row, col)
-        # pairs — (dist, id) lexicographic, the global order
-        out_q, out_i, out_d = [], [], []
-        for j in np.unique(sel_cols):
-            mask = sel_cols == j
-            d, rid = dist_sel[mask], ids_b[sel_rows[mask]]
-            take = np.lexsort((rid, d))[:kk]
-            out_q.append(np.full(len(take), qids[j], dtype=np.int64))
-            out_i.append(rid[take])
-            out_d.append(d[take])
-        return (
-            np.concatenate(out_q),
-            np.concatenate(out_i),
-            np.concatenate(out_d),
-        )
 
     def _seq_pair(V, rows, cols):
         # sequential-IEEE distances of the selected (corpus row, query)
@@ -175,8 +156,7 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
             # small block: the full sequential matrix is cheaper
             # than two stages
             D = _seq_cosine(V, Q) if is_cos else np.sqrt(_seq_sq_l2(V, Q))
-            rows, cols = np.nonzero(np.ones_like(D, dtype=bool))
-            return _emit(ids_b, rows, cols, D[rows, cols], kk)
+            return mesh_topk_arrays(D, ids_b, qids, kk)
         n2 = np.einsum("ij,ij->i", V, V)
         G = V @ Q.T
         if is_cos:
@@ -197,7 +177,9 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
         cut = np.partition(approx, kk - 1, axis=0)[kk - 1] + m
         rows, cols = np.nonzero(approx <= cut[None, :])
         dist_sel = _seq_pair(V, rows, cols)
-        return _emit(ids_b, rows, cols, dist_sel, kk)
+        # grouped by query POSITION, so duplicate query ids stay apart
+        keep = local_topk_flat(cols, ids_b[rows], dist_sel, kk)
+        return qids[cols[keep]], ids_b[rows[keep]], dist_sel[keep]
 
     return batch_fn
 
@@ -210,27 +192,14 @@ def _exact_knn_arrow(
     threshold: float | None,
     qrows: list | None = None,
 ) -> DataFrame:
+    from vector_search_go_spark.operators.argmin import scan_topk
+
     if qrows is None:
         qrows = queries.select("query_id", "qvec").collect()
-    qrows = sorted(qrows, key=lambda r: r["query_id"])
-    if len(qrows) == 0:
-        # empty query batch: Q is 1-D and every kernel slice below is
-        # invalid — short-circuit to a well-formed empty result
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, id long, dist double, rn int"
-        )
-    batch_fn = exact_local_topk_kernel(qrows, metric, k)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            ids_b = pdf["id"].to_numpy()
-            q_o, i_o, d_o = batch_fn(V, ids_b)
-            yield pd.DataFrame({"query_id": q_o, "id": i_o, "dist": d_o})
-
-    cand = corpus.mapInPandas(gen, "query_id long, id long, dist double")
+    cand = scan_topk(
+        corpus, qrows, lambda rows: exact_local_topk_kernel(rows, metric, k),
+        "dist", metric,
+    )
     if threshold is not None:
         cand = cand.filter(F.col("dist") <= F.lit(float(threshold)))
     top = topk_per_group(

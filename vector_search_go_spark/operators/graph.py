@@ -70,7 +70,13 @@ def connected_components(
     ship back as a broadcastable local relation. Edge lists that
     overflow the probe fall through to the distributed loop unchanged
     (the probe's partial rows are discarded). None disables the fast
-    path. Parity is pinned in tests/test_graph.py."""
+    path. Parity is pinned in tests/test_graph.py.
+
+    Edges with a null endpoint are dropped before either path runs, so
+    a node that appears only in such edges gets no row."""
+    if impl not in ("propagate", "star"):
+        raise ValueError(f"unknown connected_components impl {impl!r}")
+    edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
     if collect_threshold is not None:
         probe = edges.select(
             F.col(src).alias("a"), F.col(dst).alias("b")
@@ -79,8 +85,6 @@ def connected_components(
             return _cc_local(edges.sparkSession, probe, edges.schema[src].dataType)
     if impl == "star":
         return _cc_star(edges, src, dst, max_iter)
-    if impl != "propagate":
-        raise ValueError(f"unknown connected_components impl {impl!r}")
     # lazy checkpoints: the convergence count right below is the FIRST
     # action over each round's plan, so materialization rides inside
     # that job — one job per round instead of two (eager checkpoint +

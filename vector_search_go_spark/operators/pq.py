@@ -209,43 +209,35 @@ def _codebook_mats(codebook: DataFrame):
     return ids, mats
 
 
-def pq_codes_udf(codebook: DataFrame):
-    """Arrow kernel: full-width vector -> packed array<int> of M_SUB
-    codes in one pass (the codebook rides in the closure, KBs).
-    Sequential per-dimension adds + first-min argmin over ascending
-    code ids == the Catalyst min(struct(d, code)) fold."""
-    from pyspark.sql.functions import pandas_udf
-
+def pq_encode_np(V: np.ndarray, cb_ids: dict, cb_mats: dict) -> np.ndarray:
+    """float64 rows -> (n, M_SUB) int64 PQ codes: per subspace, the
+    sequential per-dimension squared L2 (_seq_sq_l2) to every codeword
+    and the FIRST minimum over ascending code ids == the Catalyst
+    min(struct(d, code)) fold. The one PQ encode every Arrow kernel
+    runs (raw and residual codes UDFs, fused ADC scans)."""
     from vector_search_go_spark.operators.argmin import _seq_sq_l2
 
+    codes = np.empty((len(V), M_SUB), dtype=np.int64)
+    for sub in range(M_SUB):
+        D = _seq_sq_l2(V[:, sub * D_SUB : (sub + 1) * D_SUB], cb_mats[sub])
+        codes[:, sub] = cb_ids[sub][D.argmin(axis=1)]
+    return codes
+
+
+def pq_codes_udf(codebook: DataFrame):
+    """Arrow kernel: full-width vector -> packed array<int> of M_SUB
+    codes in one pass (the codebook rides in the closure, KBs) —
+    pq_encode_np."""
+    from pyspark.sql.functions import pandas_udf
+
     ids, mats = _codebook_mats(codebook)
-    m_sub, d_sub = M_SUB, D_SUB
 
     @pandas_udf("array<int>")
     def codes_udf(vecs: pd.Series) -> pd.Series:
         V = np.array(vecs.tolist(), dtype=np.float64)
-        out = np.empty((V.shape[0], m_sub), dtype=np.int32)
-        for sub in range(m_sub):
-            sl = V[:, sub * d_sub : (sub + 1) * d_sub]
-            D = _seq_sq_l2(sl, mats[sub])
-            # first-min argmin + ascending code ids == min(struct(d, code))
-            out[:, sub] = ids[sub][D.argmin(axis=1)]
-        return pd.Series(list(out))
+        return pd.Series(list(pq_encode_np(V, ids, mats).astype(np.int32)))
 
     return codes_udf
-
-
-def pq_encode_arr(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(id, codes array<int>) — array-form encode, the search-path twin
-    of ``pq_encode``: one Arrow map stage, codes in subspace order.
-    Bit-identical to regrouping pq_encode's exploded (id, sub, code)
-    rows with sort_array(collect_list(struct(sub, code))) — which is a
-    corpus-wide shuffle the ADC search paid purely to undo the explode
-    the encode QUERY's output contract required (guide §2.4: remove
-    shuffles outright)."""
-    return corpus.select(
-        "id", pq_codes_udf(codebook)(F.col("vec")).alias("codes")
-    )
 
 
 def _coarse_pos(coarse_cents) -> tuple:
@@ -296,21 +288,13 @@ def pq_codes_residual_udf(codebook: DataFrame, coarse_cents):
 
     ids, mats = _codebook_mats(codebook)
     C, pos = _coarse_pos(coarse_cents)
-    m_sub, d_sub = M_SUB, D_SUB
 
     @pandas_udf("array<int>")
     def codes_udf(vecs: pd.Series, cells: pd.Series) -> pd.Series:
-        from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
         V = np.array(vecs.tolist(), dtype=np.float64)
         idx = np.array([pos[int(c)] for c in cells], dtype=np.int64)
-        R = V - C[idx]
-        out = np.empty((R.shape[0], m_sub), dtype=np.int32)
-        for sub in range(m_sub):
-            sl = R[:, sub * d_sub : (sub + 1) * d_sub]
-            D = _seq_sq_l2(sl, mats[sub])
-            out[:, sub] = ids[sub][D.argmin(axis=1)]
-        return pd.Series(list(out))
+        codes = pq_encode_np(V - C[idx], ids, mats)
+        return pd.Series(list(codes.astype(np.int32)))
 
     return codes_udf
 
@@ -367,179 +351,60 @@ def adc_fold(luts: np.ndarray, lut_idx: np.ndarray, codes: np.ndarray) -> np.nda
     return acc
 
 
-def pq_adc_candidates(
-    queries: DataFrame, codes: DataFrame, codebook: DataFrame,
-    impl: str = "arrow", local_topk: int | None = None,
-) -> DataFrame:
-    """(query_id, id, approx_dist) for every (query, candidate) pair the
-    ``codes`` side supplies — the ADC lookup-table core, factored out so
-    full-corpus PQ search and cell-restricted IVF+PQ share it. ``codes``
-    may carry a ``query_id`` column already (pre-restricted candidates,
-    e.g. from an IVF probe join); if absent every code row is scored
-    against every query.
+def ivfadc_dists(Q, cell_qpos: dict, cent: dict, codebook, cells, codes):
+    """Residual-IVFADC distances of every (row, probing query) pair of
+    one batch — the one per-(cell, query) ADC scorer of the Spark
+    IVFADC paths (the fused scan and both point searches).
 
-    ``impl='arrow'`` (default) builds the queries x M x N ADC table
-    driver-side (queries and codebook are the small sides by contract)
-    and scores each candidate batch with numpy fancy indexing — the
-    lookup-sum folds its M terms in the same subspace order, so
-    approx_dist is bit-identical to the ``impl='expr'`` expression fold
-    (pinned by the pq/ivf_pq oracle hashes).
+    ``Q`` (n_q, D) query rows; ``cell_qpos`` cell id -> positions in
+    ``Q`` of the queries probing that cell; ``cent`` cell id ->
+    centroid row (a raw store passes zero rows: residual_lut's
+    q - 0.0 == q); ``codebook`` is stack_codebook's pair; ``cells``
+    (n,) the cell of each row and ``codes`` its (n, M_SUB) codes.
 
-    ``local_topk=L`` (arrow impl only) emits each batch's exact local
-    top-L rows per query under the (approx_dist, id) order instead of
-    every pair — result-identical for the downstream
-    ``topk(shortlist) → rerank → topk(k)`` pipeline when L >= the
-    shortlist (top-L is selection-monotone across any partition of the
-    pair set), while |queries| x L rows per batch reach the shuffle
-    instead of |batch| x |queries|. ADC values are never approximated;
-    pure row reduction."""
-    has_qid = "query_id" in codes.columns
-    if "codes" in codes.columns:
-        # already array-form (pq_encode_arr): codes in subspace order —
-        # exactly what the regroup below reassembles from exploded
-        # (id, sub, code) rows, without its corpus-wide shuffle
-        codes_arr = codes
-    else:
-        codes_arr = codes.groupBy(
-            *(["query_id", "id"] if has_qid else ["id"])
-        ).agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("sub", "code"))),
-                lambda x: x["code"],
-            ).alias("codes")
-        )
-    if impl == "arrow":
-        from pyspark.sql.functions import pandas_udf  # noqa: F401
-
-        from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
-        qrows = sorted(
-            queries.select("query_id", "qvec").collect(),
-            key=lambda r: r["query_id"],
-        )
-        if not qrows:
-            # an empty query batch makes Q 1-D and every slice below
-            # invalid — short-circuit to a well-formed empty result
-            return queries.sparkSession.createDataFrame(
-                [], "query_id long, id long, approx_dist double"
-            )
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-        from vector_search_go_spark.operators.model_store import local_rows
-
-        cb_rows = local_rows(codebook, ["sub", "code", "cvec"])
-        if cb_rows is None:
-            cb_rows = codebook.select("sub", "code", "cvec").collect()
-        cb_rows = sorted(cb_rows, key=lambda r: (r["sub"], r["code"]))
-        # adc[q, sub, code]: codes must be the contiguous 0..N-1 range
-        # the element_at arithmetic of the expr path assumes too
-        adc = np.empty((len(qids), M_SUB, N_CODES))
-        for sub in range(M_SUB):
-            sub_rows = [r for r in cb_rows if r["sub"] == sub]
-            assert [r["code"] for r in sub_rows] == list(range(N_CODES)), (
-                "non-contiguous codebook codes"
-            )
-            mat = np.array([list(r["cvec"]) for r in sub_rows], dtype=np.float64)
-            sl = Q[:, sub * D_SUB : (sub + 1) * D_SUB]
-            adc[:, sub, :] = _seq_sq_l2(sl, mat)
-
-        from vector_search_go_spark.operators.argmin import (
-            local_topk_flat,
-            mesh_topk_arrays,
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-                if has_qid:
-                    q_arr = pdf["query_id"].to_numpy()
-                    qidx = np.array(
-                        [qpos[int(q)] for q in q_arr], dtype=np.int64
-                    )
-                    s = np.zeros(len(C))
-                    for j in range(M_SUB):
-                        s += adc[qidx, j, C[:, j]]
-                    d = np.sqrt(s)
-                    ids_arr = pdf["id"].to_numpy()
-                    if local_topk is not None and len(d) > local_topk:
-                        keep = local_topk_flat(q_arr, ids_arr, d, local_topk)
-                        q_arr, ids_arr, d = q_arr[keep], ids_arr[keep], d[keep]
-                    yield pd.DataFrame(
-                        {
-                            "query_id": q_arr,
-                            "id": ids_arr,
-                            "approx_dist": d,
-                        }
-                    )
-                else:
-                    n_v = len(C)
-                    s = np.zeros((n_v, len(qids)))
-                    for j in range(M_SUB):
-                        s += adc[:, j, C[:, j]].T
-                    D = np.sqrt(s)
-                    ids_b = pdf["id"].to_numpy()
-                    if (
-                        local_topk is not None
-                        and n_v > local_topk
-                        and len(qids) > 0
-                    ):
-                        q_o, i_o, d_o = mesh_topk_arrays(
-                            D, ids_b, qids, local_topk
-                        )
-                        yield pd.DataFrame(
-                            {"query_id": q_o, "id": i_o, "approx_dist": d_o}
-                        )
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.repeat(
-                                qids[None, :], n_v, axis=0
-                            ).ravel(),
-                            "id": np.repeat(ids_b, len(qids)),
-                            "approx_dist": D.ravel(),
-                        }
-                    )
-
-        return codes_arr.mapInPandas(
-            gen, "query_id long, id long, approx_dist double"
-        )
-
-    adc_long = queries.crossJoin(F.broadcast(codebook)).select(
-        "query_id",
-        "sub",
-        "code",
-        sq_l2(_subvec(F.col("qvec"), F.col("sub")), F.col("cvec")).alias("d"),
+    Tables come from residual_lut, one call per query over that
+    query's cells, and sums from adc_fold — the serving readers'
+    kernels and float order, so every distance equals theirs. The
+    (query, cell) pairs are processed in chunks of at most 1024
+    tables, so peak memory does not grow with the query batch.
+    Returns flat (query position, row index, dist) arrays."""
+    order = np.argsort(cells, kind="stable")
+    ucells, starts, counts = np.unique(
+        cells[order], return_index=True, return_counts=True
     )
-    adc_tab = adc_long.groupBy("query_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("sub", "code", "d"))),
-            lambda x: x["d"],
-        ).alias("adc")
-    )
-    if has_qid:
-        pairs = codes_arr.join(F.broadcast(adc_tab), on="query_id")
-    else:
-        pairs = codes_arr.crossJoin(F.broadcast(adc_tab))
-    return pairs.select(
-        "query_id",
-        "id",
-        F.sqrt(
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(M_SUB - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    F.col("adc"),
-                    (j * N_CODES + F.element_at(F.col("codes"), j + 1) + 1).cast(
-                        "int"
-                    ),
-                ),
-            )
-        ).alias("approx_dist"),
-    )
+    pair_q, pair_u = [], []
+    for u, c in enumerate(ucells.tolist()):
+        qs = cell_qpos.get(int(c), ())
+        pair_q.extend(qs)
+        pair_u.extend([u] * len(qs))
+    pair_q = np.asarray(pair_q, dtype=np.int64)
+    pair_u = np.asarray(pair_u, dtype=np.int64)
+    by_q = np.lexsort((pair_u, pair_q))
+    pair_q, pair_u = pair_q[by_q], pair_u[by_q]
+    out_q = [np.empty(0, dtype=np.int64)]
+    out_r = [np.empty(0, dtype=np.int64)]
+    out_d = [np.empty(0)]
+    for s0 in range(0, len(pair_q), 1024):
+        cq, cu = pair_q[s0 : s0 + 1024], pair_u[s0 : s0 + 1024]
+        # one residual_lut call per query run in the chunk
+        bounds = np.flatnonzero(np.r_[True, cq[1:] != cq[:-1], True])
+        luts = np.concatenate(
+            [
+                residual_lut(
+                    Q[cq[a]], np.array([cent[int(c)] for c in ucells[cu[a:b]]]),
+                    codebook,
+                )
+                for a, b in zip(bounds[:-1], bounds[1:])
+            ]
+        )
+        # expand each pair to its cell's rows (contiguous in ``order``)
+        n = counts[cu]
+        rows = order[np.repeat(starts[cu] - np.cumsum(n) + n, n) + np.arange(n.sum())]
+        lut_idx = np.repeat(np.arange(len(cu)), n)
+        out_q.append(np.repeat(cq, n))
+        out_r.append(rows)
+        out_d.append(np.sqrt(adc_fold(luts, lut_idx, codes[rows])))
+    return np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_d)
 
 
 def pq_adc_scores_fused(
@@ -548,95 +413,52 @@ def pq_adc_scores_fused(
     queries: DataFrame | None = None,
     qrows: list | None = None,
     local_topk: int | None = None,
-    truth_fn=None,
-) -> DataFrame:
+    truth_k: int | None = None,
+):
     """(query_id, id, approx_dist) with PQ encode and full-mesh ADC
-    scoring FUSED into one Arrow stage over the raw corpus — replaces
-    the pq_encode_arr (ArrowEvalPython) -> pq_adc_candidates
-    (MapInPandas) chain, whose code arrays crossed the Python boundary
-    twice per invocation (guide §4.2).
+    scoring FUSED into one Arrow stage over the raw corpus
+    (argmin.scan_topk): each batch is encoded (pq_encode_np) and
+    scored against every query's raw table (residual_lut over a zero
+    centroid row), the M_SUB lookups summed in subspace order — the
+    pq oracle hashes pin every float. ``local_topk`` is the exact
+    per-batch (approx_dist, id) mesh truncation, selection-monotone
+    for the downstream topk(shortlist) -> rerank -> topk(k).
 
-    Bit-identical piece by piece: encode is pq_codes_udf's per-subspace
-    sequential argmin over the ascending-code codebook; the ADC table
-    and the subspace-ordered lookup-sum are pq_adc_candidates' (the pq
-    oracle hashes pin both); ``local_topk`` is the same exact
-    (approx_dist, id) per-batch mesh truncation.
-
-    ``truth_fn`` (exact_knn.exact_local_topk_kernel): when given, each
-    batch also emits the exact-KNN local top-k rows computed from the
-    SAME decoded V matrix and the output gains a ``_truth`` flag — the
-    recall-vs-exact entries split the two chains behind one
-    localCheckpoint so the corpus is scanned once per invocation
-    (guide §8.4)."""
+    ``truth_k``: the scan also feeds the exact-KNN truth chain and the
+    result is an (approx, truth) pair (see scan_topk)."""
     from vector_search_go_spark.operators.argmin import (
-        _seq_sq_l2,
         mesh_topk_arrays,
+        query_matrix,
+        scan_topk,
     )
 
     if qrows is None:
         qrows = queries.select("query_id", "qvec").collect()
-    qrows = sorted(qrows, key=lambda r: r["query_id"])
-    out_schema = "query_id long, id long, approx_dist double" + (
-        ", _truth boolean" if truth_fn is not None else ""
-    )
-    spark = corpus.sparkSession
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    cb_ids, cb_mats = _codebook_mats(codebook)
-    # adc[q, sub, code]: codes must be the contiguous 0..N-1 range the
-    # element_at arithmetic of the expr path assumes too
-    adc = np.empty((len(qids), M_SUB, N_CODES))
-    for sub in range(M_SUB):
-        assert list(cb_ids[sub]) == list(range(N_CODES)), (
-            "non-contiguous codebook codes"
-        )
-        sl = Q[:, sub * D_SUB : (sub + 1) * D_SUB]
-        adc[:, sub, :] = _seq_sq_l2(sl, cb_mats[sub])
-    m_sub, d_sub = M_SUB, D_SUB
 
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            ids_b = pdf["id"].to_numpy()
-            if truth_fn is not None:
-                tq, ti, td = truth_fn(V, ids_b)
-                if len(tq):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": tq,
-                            "id": ti,
-                            "approx_dist": td,
-                            "_truth": np.ones(len(tq), dtype=bool),
-                        }
-                    )
-            # encode: first-min argmin + ascending code ids ==
-            # min(struct(d, code)) == pq_codes_udf
-            C = np.empty((len(V), m_sub), dtype=np.int64)
-            for sub in range(m_sub):
-                sl = V[:, sub * d_sub : (sub + 1) * d_sub]
-                Ds = _seq_sq_l2(sl, cb_mats[sub])
-                C[:, sub] = cb_ids[sub][Ds.argmin(axis=1)]
-            n_v = len(C)
-            s = np.zeros((n_v, len(qids)))
-            for j in range(m_sub):
+    def scorer(rows):
+        qids, Q = query_matrix(rows)
+        cb_ids, cb_mats = _codebook_mats(codebook)
+        # adc[q, sub, code]: codes must be the contiguous 0..N-1 range
+        # the element_at arithmetic of the expr path assumes too
+        for sub in range(M_SUB):
+            assert list(cb_ids[sub]) == list(range(N_CODES)), (
+                "non-contiguous codebook codes"
+            )
+        cbs = stack_codebook(cb_ids, cb_mats)
+        zero = np.zeros(Q.shape[1])
+        adc = np.stack([residual_lut(q, zero, cbs) for q in Q])
+
+        def score(V, ids_b):
+            C = pq_encode_np(V, cb_ids, cb_mats)
+            s = np.zeros((len(C), len(qids)))
+            for j in range(M_SUB):
                 s += adc[:, j, C[:, j]].T
-            D = np.sqrt(s)
-            if local_topk is not None and n_v > local_topk and len(qids) > 0:
-                q_o, i_o, d_o = mesh_topk_arrays(D, ids_b, qids, local_topk)
-            else:
-                q_o = np.repeat(qids[None, :], n_v, axis=0).ravel()
-                i_o = np.repeat(ids_b, len(qids))
-                d_o = D.ravel()
-            out = {"query_id": q_o, "id": i_o, "approx_dist": d_o}
-            if truth_fn is not None:
-                out["_truth"] = np.zeros(len(q_o), dtype=bool)
-            yield pd.DataFrame(out)
+            L = len(C) if local_topk is None else local_topk
+            return mesh_topk_arrays(np.sqrt(s), ids_b, qids, L)
 
-    return corpus.select("id", "vec").mapInPandas(gen, out_schema)
+        return score
+
+    return scan_topk(corpus, qrows, scorer, "approx_dist", "l2", truth_k)
 
 
 def ivfpq_adc_scores_fused(
@@ -646,136 +468,64 @@ def ivfpq_adc_scores_fused(
     cell_to_queries: dict,
     qrows: list,
     local_topk: int | None = None,
-    truth_fn=None,
-) -> DataFrame:
+    truth_k: int | None = None,
+):
     """(query_id, id, approx_dist) over the residual-IVFADC chain with
     coarse assignment, residual encode and ADC scoring FUSED into ONE
-    Arrow map stage over the corpus (guide §4.2: one batched kernel in
-    place of a chain of map stages). Replaces the three-piece plan
-    assign_cells -> pq_codes_residual_udf -> broadcast(probe) join ->
-    per-(query, cell) residual ADC kernel, which paid two Python
-    boundary crossings plus a broadcast build per invocation and
-    shipped the code arrays through Arrow twice.
-
-    Bit-identical to that unfused chain, piece by piece:
+    Arrow map stage over the corpus (argmin.scan_topk, guide §4.2).
+    Bit-identical to the unfused assign -> residual encode -> probe
+    join -> ADC chain, piece by piece:
 
       - assignment: sqrt'd sequential-IEEE L2 + first-min argmin over
         ascending cids == argmin_id_arrow(metric='l2') == the Catalyst
         fold (tests/test_argmin_parity.py);
-      - residual codes: same _seq_sq_l2 argmin over the sorted
-        codebook == pq_codes_residual_udf;
-      - ADC: residual_lut tables gathered per (query, cell), per-pair
-        adds in subspace order, sqrt at the end == the serving readers'
-        adc_fold (the ivfpq_residual_adc_verdict oracle hash pins every
-        float);
-      - ``local_topk`` is the same exact per-batch (approx_dist, id)
+      - residual codes: pq_encode_np == pq_codes_residual_udf;
+      - ADC: ivfadc_dists — residual_lut tables per (query, cell),
+        adc_fold's subspace-ordered sums, sqrt at the end (the
+        ivfpq_residual_adc_verdict oracle hash pins every float);
+      - ``local_topk`` is the exact per-batch (approx_dist, id)
         truncation — selection-monotone for every downstream
         topk(shortlist) -> rerank -> topk(k) consumer.
 
     ``cell_to_queries`` maps cell id -> probing query ids (the inverse
     of the driver-side probe selection, ann_ivf.probe_cells_local);
-    ``qrows`` is the collected (query_id, qvec) batch.
-
-    ``truth_fn`` (guide §8.4: one corpus scan feeds both chains): a
-    per-batch exact-KNN closure (exact_knn.exact_local_topk_kernel) —
-    when given, the output gains a ``_truth`` flag column and each
-    batch ADDITIONALLY emits the exact local top-k rows computed from
-    the SAME decoded V matrix. The ADC rows are byte-identical to the
-    truth_fn=None output; callers split the two chains behind one
-    localCheckpoint so the corpus is scanned once per invocation
-    instead of once per chain."""
+    ``qrows`` is the collected (query_id, qvec) batch. ``truth_k``: the
+    scan also feeds the exact-KNN truth chain and the result is an
+    (approx, truth) pair (see scan_topk)."""
     from vector_search_go_spark.operators.argmin import (
         _seq_sq_l2,
         local_topk_flat,
+        query_matrix,
+        scan_topk,
     )
 
-    out_schema = "query_id long, id long, approx_dist double" + (
-        ", _truth boolean" if truth_fn is not None else ""
-    )
-    spark = corpus.sparkSession
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    qrows = sorted(qrows, key=lambda r: r["query_id"])
-    qpos = {int(r["query_id"]): i for i, r in enumerate(qrows)}
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    cb_ids, cb_mats = _codebook_mats(codebook)
-    cbs = stack_codebook(cb_ids, cb_mats)
-    C, cpos = _coarse_pos(coarse_cents)
-    cids_sorted = np.array(sorted(cpos, key=lambda c: cpos[c]), dtype=np.int64)
-    c2q = {int(c): [int(q) for q in qs] for c, qs in cell_to_queries.items()}
-    m_sub, d_sub = M_SUB, D_SUB
+    def scorer(rows):
+        qids, Q = query_matrix(rows)
+        qpos = {int(q): i for i, q in enumerate(qids)}
+        cb_ids, cb_mats = _codebook_mats(codebook)
+        cbs = stack_codebook(cb_ids, cb_mats)
+        C, cpos = _coarse_pos(coarse_cents)
+        cids = np.array(sorted(cpos, key=cpos.get), dtype=np.int64)
+        cell_qpos = {
+            int(c): [qpos[int(q)] for q in qs] for c, qs in cell_to_queries.items()
+        }
+        cent = {c: C[cpos[c]] for c in cell_qpos}
 
-    def gen(batches):
-        LUT_MEMO_CAP = 1024
-        lut_memo: dict = {}
-
-        def lut_for(qp: int, cell: int) -> np.ndarray:
-            key = (qp, cell)
-            lut = lut_memo.get(key)
-            if lut is None:
-                lut = residual_lut(Q[qp], C[cpos[cell]], cbs)
-                if len(lut_memo) >= LUT_MEMO_CAP:
-                    lut_memo.clear()
-                lut_memo[key] = lut
-            return lut
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            ids_arr = pdf["id"].to_numpy()
-            if truth_fn is not None:
-                tq, ti, td = truth_fn(V, ids_arr)
-                if len(tq):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": tq,
-                            "id": ti,
-                            "approx_dist": td,
-                            "_truth": np.ones(len(tq), dtype=bool),
-                        }
-                    )
+        def score(V, ids_b):
             # coarse assignment: compare sqrt'd distances (the domain
             # the expression path compares in — see argmin_id_arrow)
-            Dc = np.sqrt(_seq_sq_l2(V, C))
-            cell_idx = Dc.argmin(axis=1)
-            cells = cids_sorted[cell_idx]
-            R = V - C[cell_idx]
-            codes = np.empty((len(V), m_sub), dtype=np.int64)
-            for sub in range(m_sub):
-                sl = R[:, sub * d_sub : (sub + 1) * d_sub]
-                Ds = _seq_sq_l2(sl, cb_mats[sub])
-                codes[:, sub] = cb_ids[sub][Ds.argmin(axis=1)]
-            out_q, out_i, out_d = [], [], []
-            for c in np.unique(cells):
-                qs = c2q.get(int(c))
-                if not qs:
-                    continue
-                m = cells == c
-                Cd = codes[m]
-                idm = ids_arr[m]
-                for q in qs:
-                    lut = lut_for(qpos[q], int(c))
-                    acc = np.zeros(len(Cd))
-                    for sub in range(m_sub):
-                        acc = acc + lut[sub, Cd[:, sub]]
-                    out_q.append(np.full(len(Cd), q, dtype=np.int64))
-                    out_i.append(idm)
-                    out_d.append(np.sqrt(acc))
-            if not out_q:
-                continue
-            q_arr = np.concatenate(out_q)
-            i_arr = np.concatenate(out_i)
-            d_arr = np.concatenate(out_d)
-            if local_topk is not None and len(d_arr) > local_topk:
-                keep = local_topk_flat(q_arr, i_arr, d_arr, local_topk)
-                q_arr, i_arr, d_arr = q_arr[keep], i_arr[keep], d_arr[keep]
-            out = {"query_id": q_arr, "id": i_arr, "approx_dist": d_arr}
-            if truth_fn is not None:
-                out["_truth"] = np.zeros(len(q_arr), dtype=bool)
-            yield pd.DataFrame(out)
+            cell_idx = np.sqrt(_seq_sq_l2(V, C)).argmin(axis=1)
+            codes = pq_encode_np(V - C[cell_idx], cb_ids, cb_mats)
+            qp, r, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cids[cell_idx], codes)
+            q_arr, i_arr = qids[qp], ids_b[r]
+            if local_topk is None:
+                return q_arr, i_arr, d
+            keep = local_topk_flat(q_arr, i_arr, d, local_topk)
+            return q_arr[keep], i_arr[keep], d[keep]
 
-    return corpus.select("id", "vec").mapInPandas(gen, out_schema)
+        return score
+
+    return scan_topk(corpus, qrows, scorer, "approx_dist", "l2", truth_k)
 
 
 def pq_rerank(
@@ -799,22 +549,6 @@ def pq_rerank(
     )
     top = topk_per_group(rer, ["query_id"], "dist", k, tiebreak_cols=["id"])
     return top.select("query_id", "id", "dist", "rn")
-
-
-def pq_adc_search(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    shortlist: int = PQ_SHORTLIST,
-) -> DataFrame:
-    """queries(query_id, qvec) -> (query_id, id, dist, rn): ADC over the
-    compressed codes for a shortlist, exact L2 rerank for the final
-    top-k. The per-(query, id) ADC sum folds its M terms in subspace
-    order so the float result is bit-portable."""
-    approx = pq_adc_candidates(queries, codes, codebook, local_topk=shortlist)
-    return pq_rerank(approx, queries, corpus, k, shortlist)
 
 
 def ivfpq_save(
@@ -1552,6 +1286,15 @@ def load_ivfpq_models(spark, path: str):
     return coarse, cb
 
 
+def _probed_centroids(enc: str, coarse_model, cells, dims: int) -> dict:
+    """cell id -> the centroid row its ADC tables subtract: the coarse
+    centroid for a residual store, a zero row for a raw one."""
+    if enc != "residual":
+        return dict.fromkeys(cells, np.zeros(dims))
+    C, cpos = _coarse_pos(coarse_model)
+    return {c: C[cpos[c]] for c in cells}
+
+
 def ivfpq_point_search(
     spark,
     path: str,
@@ -1578,10 +1321,7 @@ def ivfpq_point_search(
     from pyspark.sql.functions import pandas_udf
 
     from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-    from vector_search_go_spark.operators.argmin import (
-        _seq_sq_l2,
-        single_query_dist_udf,
-    )
+    from vector_search_go_spark.operators.argmin import single_query_dist_udf
     from vector_search_go_spark.operators.topk import topk_per_group
 
     if metric != "l2":
@@ -1607,46 +1347,24 @@ def ivfpq_point_search(
         spark, f"{path}/centroids", qvec, metric, nprobe, model=coarse_model
     )
 
-    # ADC lookup table(s): raw stores build ONE global LUT[sub][code] =
-    # squared L2 from the query's sub-th subvector to that codeword;
-    # residual stores build one per probed cell over q - centroid(cell)
-    # (same sequential adds as sq_l2 either way)
+    # ADC tables per probed cell over q - centroid(cell); a raw store's
+    # centroid rows are zero (q - 0.0 == q), so both encodings score
+    # through the one IVFADC scorer
     ids, mats = cb_model if cb_model is not None else _codebook_mats(
         spark.read.parquet(f"{path}/codebook").select("sub", "code", "cvec")
     )
-    q = np.asarray(list(qvec), dtype=np.float64)
-    n_codes = max(int(ids[s].max()) for s in ids) + 1
-    if enc == "residual":
-        C, cpos = _coarse_pos(coarse_model)
-        # one batched table per probed cell (sorted), each row's table
-        # picked by its cell's position
-        pcells = np.unique(np.asarray(probe_cells, dtype=np.int64))
-        luts = residual_lut(
-            q, C[[cpos[int(c)] for c in pcells]], stack_codebook(ids, mats)
-        )
+    Q = np.asarray([list(qvec)], dtype=np.float64)
+    cell_qpos = {int(c): [0] for c in probe_cells}
+    cent = _probed_centroids(enc, coarse_model, cell_qpos, Q.shape[1])
+    cbs = stack_codebook(ids, mats)
 
-        @pandas_udf("double")
-        def adc_res(cells: pd.Series, codes: pd.Series) -> pd.Series:
-            Cd = np.array(codes.tolist(), dtype=np.int64).reshape(-1, M_SUB)
-            idx = np.searchsorted(pcells, cells.to_numpy())
-            return pd.Series(np.sqrt(adc_fold(luts, idx, Cd)))
-
-        adc_col = adc_res(F.col("cell"), F.col("codes"))
-    else:
-        lut = np.zeros((M_SUB, n_codes))
-        for sub in range(M_SUB):
-            sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-            lut[sub, ids[sub]] = _seq_sq_l2(sl, mats[sub])[0]
-
-        @pandas_udf("double")
-        def adc(codes: pd.Series) -> pd.Series:
-            C = np.array(codes.tolist(), dtype=np.int64)
-            acc = np.zeros(len(C))
-            for sub in range(M_SUB):
-                acc = acc + lut[sub][C[:, sub]]
-            return pd.Series(np.sqrt(acc))
-
-        adc_col = adc(F.col("codes"))
+    @pandas_udf("double")
+    def adc(cells: pd.Series, codes: pd.Series) -> pd.Series:
+        Cd = np.array(codes.tolist(), dtype=np.int64).reshape(-1, M_SUB)
+        _, rows, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cells.to_numpy(), Cd)
+        out = np.full(len(Cd), np.nan)
+        out[rows] = d
+        return pd.Series(out)
 
     from vector_search_go_spark.streaming.delete import mask_tombstones
 
@@ -1656,7 +1374,7 @@ def ivfpq_point_search(
         .select(
             F.lit(0).cast("bigint").alias("query_id"),
             "id",
-            adc_col.alias("adc_dist"),
+            adc(F.col("cell"), F.col("codes")).alias("adc_dist"),
         )
     )
     short = topk_per_group(
@@ -1713,8 +1431,8 @@ def ivfpq_point_search_batch(
 
     from vector_search_go_spark.operators.ann_ivf import probe_cells_batch
     from vector_search_go_spark.operators.argmin import (
-        _seq_sq_l2,
         fanin_query_scorer,
+        local_topk_flat,
     )
 
     if metric != "l2":
@@ -1745,44 +1463,16 @@ def ivfpq_point_search_batch(
     ids, mats = cb_model if cb_model is not None else _codebook_mats(
         spark.read.parquet(f"{path}/codebook").select("sub", "code", "cvec")
     )
-    n_codes = max(int(ids[s].max()) for s in ids) + 1
 
     cell_qpos: dict[int, list[int]] = {}
     for pos, cells_q in enumerate(probed):
         for c in cells_q:
             cell_qpos.setdefault(int(c), []).append(pos)
     qid_arr = np.asarray(qids, dtype=np.int64)
-
-    if enc == "residual":
-        # ship the (model-sized) probed-cell centroid rows + codebook
-        # and build each (query, cell) LUT lazily in the kernel — a
-        # batch x nprobe LUT blob would be MBs of closure for nothing
-        C_mat, cpos = _coarse_pos(coarse_model)
-        cent_rows = {c: C_mat[cpos[c]] for c in cell_qpos}
-        cbs = stack_codebook(ids, mats)
-
-        def make_lut_for():
-            memo: dict = {}
-
-            def lut_for(pos: int, cell: int) -> np.ndarray:
-                lut = memo.get((pos, cell))
-                if lut is None:
-                    lut = residual_lut(Q[pos], cent_rows[cell], cbs)
-                    memo[(pos, cell)] = lut
-                return lut
-
-            return lut_for
-    else:
-        lut_all = np.zeros((len(qids), M_SUB, n_codes))
-        for sub in range(M_SUB):
-            sl = Q[:, sub * D_SUB : (sub + 1) * D_SUB]
-            lut_all[:, sub, :][:, ids[sub]] = _seq_sq_l2(sl, mats[sub])
-
-        def make_lut_for():
-            def lut_for(pos: int, cell: int) -> np.ndarray:
-                return lut_all[pos]
-
-            return lut_for
+    # the (model-sized) probed-cell centroid rows + codebook ride the
+    # closure; the kernel builds each (query, cell) table per batch
+    cent = _probed_centroids(enc, coarse_model, cell_qpos, Q.shape[1])
+    cbs = stack_codebook(ids, mats)
 
     from vector_search_go_spark.streaming.delete import mask_tombstones
 
@@ -1792,47 +1482,24 @@ def ivfpq_point_search_batch(
     id_t = scan.schema["id"].dataType.simpleString()
 
     def adc_score(batches):
-        # one LUT-add pass per (cell group, probing query): identical
-        # per-row op order to the single-query adc udf (raw: global
-        # LUT per query; residual: per-(query, cell) LUT)
-        lut_for = make_lut_for()
+        # the single path's scorer over the whole batch; the exact
+        # local top-shortlist per query is result-identical for the
+        # downstream topk(shortlist) -> rerank -> topk(k)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            ids_col = np.asarray(pdf["id"])
-            cells_col = pdf["cell"].to_numpy()
-            outs = []
-            for cell in np.unique(cells_col):
-                m = cells_col == cell
-                Cm, idm = C[m], ids_col[m]
-                for pos in cell_qpos[int(cell)]:
-                    lut = lut_for(pos, int(cell))
-                    acc = np.zeros(len(Cm))
-                    for sub in range(M_SUB):
-                        acc = acc + lut[sub][Cm[:, sub]]
-                    d = np.sqrt(acc)
-                    out_ids = idm
-                    # exact local top-shortlist per (cell, query) chunk:
-                    # downstream is topk(shortlist) -> rerank ->
-                    # topk(k), so pre-truncating each chunk under the
-                    # same (adc_dist, id) order is result-identical
-                    if len(d) > shortlist and np.issubdtype(
-                        out_ids.dtype, np.number
-                    ):
-                        keep = np.lexsort((out_ids, d))[:shortlist]
-                        d, out_ids = d[keep], out_ids[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qid_arr[pos],
-                                "id": out_ids,
-                                "adc_dist": d,
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            qp, rows, d = ivfadc_dists(
+                Q, cell_qpos, cent, cbs, pdf["cell"].to_numpy(), C
+            )
+            q_arr, out_ids = qid_arr[qp], np.asarray(pdf["id"])[rows]
+            if np.issubdtype(out_ids.dtype, np.number):
+                keep = local_topk_flat(q_arr, out_ids, d, shortlist)
+                q_arr, out_ids, d = q_arr[keep], out_ids[keep], d[keep]
+            if len(d):
+                yield pd.DataFrame(
+                    {"query_id": q_arr, "id": out_ids, "adc_dist": d}
+                )
 
     cand = scan.select("cell", "id", "codes").mapInPandas(
         adc_score, schema=f"query_id bigint, id {id_t}, adc_dist double"

@@ -36,9 +36,9 @@ def split_fused_pred_truth(
     """Split a fused pred+truth kernel's output into the pred chain's
     approximate rows and the finished exact-KNN truth table.
 
-    ``combined`` is the output of a corpus-scan kernel run with a
-    ``truth_fn`` (exact_knn.exact_local_topk_kernel): pred candidate
-    rows with ``_truth = false`` plus per-batch exact local top-k rows
+    ``combined`` is the output of a corpus scan run with ``truth_k``
+    (argmin.scan_topk, truth rows from
+    exact_knn.exact_local_topk_kernel): pred candidate rows with ``_truth = false`` plus per-batch exact local top-k rows
     with ``_truth = true``, both carrying their distance in
     ``dist_col``. The one lazy localCheckpoint is what makes the
     sharing real: both consumers (and the final precision_recall join

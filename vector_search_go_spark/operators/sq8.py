@@ -90,134 +90,66 @@ def sq8_dequant(codes: Column, dim: int) -> Column:
 
 def sq8_search(
     queries: DataFrame,
-    codes: DataFrame,
+    codes: DataFrame | None,
     stats: DataFrame,
     corpus: DataFrame,
     dim: int,
     k: int = 10,
     shortlist: int = SQ_SHORTLIST,
     impl: str = "arrow",
-    vectors: DataFrame | None = None,
-    truth_fn=None,
-    truth_k: int = 10,
+    truth_k: int | None = None,
     qrows: list | None = None,
-) -> DataFrame:
+):
     """queries(query_id, qvec) -> (query_id, id, dist, rn): approximate
     L2 against dequantized codes for a shortlist, exact rerank for the
     final top-k.
 
-    ``impl='arrow'`` (default) runs the compressed-domain scan as one
-    mapInPandas kernel per code batch — dequantize
-    (``min + (code+0.5)*scale``, the same two IEEE ops per element) and
-    the batch x query distance matrix with sequential per-dimension
-    adds, bit-identical to the ``impl='expr'`` fold (same pattern as
-    operators.exact_knn; pinned by the sq8 oracle hashes).
+    ``impl='arrow'`` (default) encodes and scans ``corpus`` in one
+    Arrow stage (argmin.scan_topk, guide §4.2): each batch is encoded
+    with sq8_encode_np — the parity-pinned numpy twin of the sq8_encode
+    Catalyst expression — dequantized (``min + (code+0.5)*scale``, the
+    same two IEEE ops per element) and scored against every query with
+    sequential per-dimension adds, bit-identical to the ``impl='expr'``
+    fold over the precomputed ``codes`` (pinned by the sq8 oracle
+    hashes). ``codes`` is read only by ``impl='expr'``.
 
-    ``vectors`` (arrow impl): pass the raw (id, vec) corpus instead of
-    ``codes`` and the kernel encodes each batch itself with
-    sq8_encode_np — the parity-pinned numpy twin of the sq8_encode
-    Catalyst expression — fusing encode + dequantized scan into the one
-    Arrow stage (guide §4.2) instead of an interpreted 256-lambda
-    projection + broadcast feeding it.
-
-    ``truth_fn`` (exact_knn.exact_local_topk_kernel, arrow impl with
-    ``vectors`` only): each batch also emits the exact-KNN local
-    top-``truth_k`` rows from the SAME decoded V matrix, and the
-    return value becomes a (search_result, truth) pair split behind
-    one lazy localCheckpoint — the recall-vs-exact entry's truth chain
-    rides the pred chain's corpus scan (guide §8.4)."""
-    if truth_fn is not None and (impl != "arrow" or vectors is None):
-        raise ValueError("truth_fn needs impl='arrow' with vectors=")
+    ``truth_k`` (arrow impl): the scan also feeds the exact-KNN truth
+    chain and the return value becomes a (search_result, truth) pair
+    (see scan_topk) — the recall-vs-exact entry's truth chain rides
+    the pred chain's corpus scan (guide §8.4)."""
     if impl == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
-        srow = stats.collect()[0]
-        mins = np.array(list(srow["mins"]), dtype=np.float64)
-        scales = np.array(list(srow["scales"]), dtype=np.float64)
-        if qrows is None:
-            qrows = queries.select("query_id", "qvec").collect()
-        qrows = sorted(qrows, key=lambda r: r["query_id"])
-        if not qrows:
-            # empty query batch: Q would be 1-D and the kernel slices
-            # invalid — feed an empty approx frame to the shared rerank
-            # (and, with truth_fn, pair it with an empty truth table)
-            spark = queries.sparkSession
-            approx = spark.createDataFrame(
-                [], "query_id long, id long, approx_dist double"
-            )
-            pred = _sq8_finish(approx, queries, corpus, k, shortlist)
-            if truth_fn is None:
-                return pred
-            return pred, spark.createDataFrame(
-                [], "query_id long, id long, dist double, rn int"
-            )
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-
-        fused = vectors is not None
-        out_schema = "query_id long, id long, approx_dist double" + (
-            ", _truth boolean" if truth_fn is not None else ""
+        from vector_search_go_spark.operators.argmin import (
+            _seq_sq_l2,
+            mesh_topk_arrays,
+            query_matrix,
+            scan_topk,
         )
 
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if fused:
-                    V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-                    if truth_fn is not None:
-                        tq, ti, td = truth_fn(V, pdf["id"].to_numpy())
-                        if len(tq):
-                            yield pd.DataFrame(
-                                {
-                                    "query_id": tq,
-                                    "id": ti,
-                                    "approx_dist": td,
-                                    "_truth": np.ones(len(tq), dtype=bool),
-                                }
-                            )
-                    C = sq8_encode_np(V, mins, scales).astype(np.float64)
-                else:
-                    C = np.array(pdf["codes"].tolist(), dtype=np.float64)
+        if qrows is None:
+            qrows = queries.select("query_id", "qvec").collect()
+
+        def scorer(rows):
+            qids, Q = query_matrix(rows)
+            srow = stats.collect()[0]
+            mins = np.array(list(srow["mins"]), dtype=np.float64)
+            scales = np.array(list(srow["scales"]), dtype=np.float64)
+
+            def score(V, ids_b):
+                C = sq8_encode_np(V, mins, scales).astype(np.float64)
                 xhat = mins[None, :] + (C + 0.5) * scales[None, :]
+                # exact local top-shortlist per query: downstream is
+                # topk(shortlist) -> rerank -> topk(k)
                 D = np.sqrt(_seq_sq_l2(xhat, Q))
-                n_v, n_q = D.shape
-                ids_b = pdf["id"].to_numpy()
-                if n_v > shortlist and n_q > 0:
-                    # exact local top-shortlist per query
-                    # (operators.argmin.local_topk_mesh): downstream is
-                    # topk(shortlist) -> rerank -> topk(k), so emitting
-                    # each batch's winners under the same
-                    # (approx_dist, id) order is result-identical and
-                    # |queries| x shortlist rows reach the shuffle
-                    # instead of the full batch x query mesh
-                    from vector_search_go_spark.operators.argmin import (
-                        mesh_topk_arrays,
-                    )
+                return mesh_topk_arrays(D, ids_b, qids, shortlist)
 
-                    q_o, i_o, d_o = mesh_topk_arrays(D, ids_b, qids, shortlist)
-                else:
-                    q_o = np.repeat(qids[None, :], n_v, axis=0).ravel()
-                    i_o = np.repeat(ids_b, n_q)
-                    d_o = D.ravel()
-                out = {"query_id": q_o, "id": i_o, "approx_dist": d_o}
-                if truth_fn is not None:
-                    out["_truth"] = np.zeros(len(q_o), dtype=bool)
-                yield pd.DataFrame(out)
+            return score
 
-        approx = (
-            vectors.select("id", "vec") if fused else codes
-        ).mapInPandas(gen, out_schema)
-        if truth_fn is not None:
-            from vector_search_go_spark.operators.recall import (
-                split_fused_pred_truth,
-            )
-
-            approx, truth = split_fused_pred_truth(approx, k=truth_k)
+        approx = scan_topk(corpus, qrows, scorer, "approx_dist", "l2", truth_k)
+        if truth_k is not None:
+            approx, truth = approx
             return _sq8_finish(approx, queries, corpus, k, shortlist), truth
+    elif truth_k is not None:
+        raise ValueError("truth_k needs impl='arrow'")
     else:
         approx = (
             codes.crossJoin(F.broadcast(stats))

@@ -687,29 +687,18 @@ def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — both pipelines deterministic, so the whole quality
     measurement is itself oracle-checked."""
     from vector_search_go_spark.operators.ann_ivf import ivf_scores_fused
-    from vector_search_go_spark.operators.exact_knn import (
-        exact_local_topk_kernel,
-    )
-    from vector_search_go_spark.operators.recall import (
-        precision_recall,
-        split_fused_pred_truth,
-    )
+    from vector_search_go_spark.operators.recall import precision_recall
     from vector_search_go_spark.operators.topk import topk_per_group
 
     # pred and truth share ONE corpus scan and ONE query-batch collect
-    # (r12, guide §8.4): the fused IVF kernel also emits the exact-KNN
-    # local top-k rows (exact_local_topk_kernel — the _exact_knn_arrow
-    # batch logic verbatim) and split_fused_pred_truth's lazy
-    # localCheckpoint keeps the scan from being planted into both join
-    # sides. Both chains are bit-identical to their standalone twins
-    # (ann_ivf_cosine / exact_knn_join), which this entry's oracle pins.
+    # (r12, guide §8.4): with truth_k the IVF scan also feeds the
+    # exact-KNN chain. Both chains are bit-identical to their
+    # standalone twins (ann_ivf_cosine / exact_knn_join), which this
+    # entry's oracle pins.
     _queries, corpus, cent, c2q, qrows = _ann_ivf_parts(spark, sf_dir)
-    truth_fn = exact_local_topk_kernel(qrows, "cosine", 10)
-    combined = ivf_scores_fused(
-        corpus, cent, c2q, qrows, metric="cosine", local_topk=10,
-        truth_fn=truth_fn,
+    approx, truth = ivf_scores_fused(
+        corpus, cent, c2q, qrows, metric="cosine", local_topk=10, truth_k=10
     )
-    approx, truth = split_fused_pred_truth(combined, k=10, dist_col="dist")
     pred = topk_per_group(
         approx, ["query_id"], "dist", 10, tiebreak_cols=["id"]
     ).select("query_id", "id", "dist", "rn")
@@ -861,10 +850,9 @@ def pq_search_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_shortlist,
     )
 
-    # encode + ADC fused into one Arrow stage (r12, guide §4.2): the
-    # pq_encode_arr projection fed pq_adc_candidates' kernel, so the
-    # code arrays crossed the Python boundary twice and the codebook
-    # was collected once per closure. Bit-identical per the pq oracle.
+    # encode + ADC fused into one Arrow stage (r12, guide §4.2), so
+    # the code arrays never cross the Python boundary. Bit-identical
+    # per the pq oracle.
     queries, corpus, cb, qrows = _pq_adc_parts(spark, sf_dir)
     approx = pq_adc_scores_fused(
         corpus, cb, qrows=qrows, local_topk=pq_shortlist()
@@ -947,31 +935,21 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_recall_fused(spark: SparkSession, sf_dir: str, trained: bool) -> DataFrame:
     """Shared body of the two PQ recall entries: pred and truth share
     ONE corpus scan and ONE query-batch collect (r12, guide §8.4) —
-    the fused encode+ADC kernel also emits the exact-KNN local top-k
-    rows (exact_knn.exact_local_topk_kernel, the _exact_knn_arrow
-    batch logic verbatim), split behind one lazy localCheckpoint. Both
-    chains stay bit-identical to their standalone twins
+    with truth_k the fused encode+ADC scan also feeds the exact-KNN
+    chain. Both chains stay bit-identical to their standalone twins
     (pq_search_adc[_trained] / exact_knn_join); the oracle hash pins
     the composition."""
-    from vector_search_go_spark.operators.exact_knn import (
-        exact_local_topk_kernel,
-    )
     from vector_search_go_spark.operators.pq import (
         pq_adc_scores_fused,
         pq_rerank,
         pq_shortlist,
     )
-    from vector_search_go_spark.operators.recall import (
-        precision_recall,
-        split_fused_pred_truth,
-    )
+    from vector_search_go_spark.operators.recall import precision_recall
 
     queries, corpus, cb, qrows = _pq_adc_parts(spark, sf_dir, trained=trained)
-    truth_fn = exact_local_topk_kernel(qrows, "l2", 10)
-    combined = pq_adc_scores_fused(
-        corpus, cb, qrows=qrows, local_topk=pq_shortlist(), truth_fn=truth_fn
+    approx, truth = pq_adc_scores_fused(
+        corpus, cb, qrows=qrows, local_topk=pq_shortlist(), truth_k=10
     )
-    approx, truth = split_fused_pred_truth(combined, k=10)
     pred = pq_rerank(approx, queries, corpus, k=10, shortlist=pq_shortlist())
     return precision_recall(pred, truth)
 
@@ -1338,17 +1316,17 @@ def _ivfpq_res_components(spark: SparkSession, sf_dir: str):
         for c in cs:
             cell_to_queries.setdefault(int(c), []).append(int(r["query_id"]))
 
-    def approx_fn(local_topk: int | None, truth_fn=None):
+    def approx_fn(local_topk: int | None, truth_k: int | None = None):
         """assign -> residual-encode -> ADC, fused into one Arrow stage
         (pq.ivfpq_adc_scores_fused — bit-identical to the unfused
-        chain; see its docstring). ``truth_fn`` additionally emits the
-        exact-KNN local top-k rows from the same scan (the
+        chain; see its docstring). ``truth_k`` makes the same scan feed
+        the exact-KNN chain and returns an (approx, truth) pair (the
         recall-vs-exact sharing, guide §8.4)."""
         from vector_search_go_spark.operators.pq import ivfpq_adc_scores_fused
 
         return ivfpq_adc_scores_fused(
             corpus, cb, centroids, cell_to_queries, qrows,
-            local_topk=local_topk, truth_fn=truth_fn,
+            local_topk=local_topk, truth_k=truth_k,
         )
 
     return queries, corpus, centroids, cb, approx_fn, qrows
@@ -1434,28 +1412,18 @@ def ivf_pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-based precision/recall of the composed IVF+PQ index against
     exact L2 — compounds the coarse-probe miss rate with the ADC
     shortlist miss rate, the number a capacity planner actually needs."""
-    from vector_search_go_spark.operators.exact_knn import (
-        exact_local_topk_kernel,
-    )
     from vector_search_go_spark.operators.pq import pq_rerank
-    from vector_search_go_spark.operators.recall import (
-        precision_recall,
-        split_fused_pred_truth,
-    )
+    from vector_search_go_spark.operators.recall import precision_recall
 
     # pred and truth share ONE corpus scan and ONE query-batch collect
-    # (r12, guide §8.4): the fused IVFADC kernel also emits the
-    # exact-KNN local top-k rows (exact_local_topk_kernel — the
-    # _exact_knn_arrow batch logic verbatim), split behind one lazy
-    # localCheckpoint. Both chains stay bit-identical to their
+    # (r12, guide §8.4): with truth_k the fused IVFADC scan also feeds
+    # the exact-KNN chain. Both chains stay bit-identical to their
     # standalone twins (ivf_pq_search / exact_knn_join) — this entry's
     # oracle hash pins the whole composition.
     queries, corpus, centroids, cb, approx_fn, qrows = _ivfpq_res_components(
         spark, sf_dir
     )
-    truth_fn = exact_local_topk_kernel(qrows, "l2", 10)
-    combined = approx_fn(_IVFPQ_SHORT, truth_fn=truth_fn)
-    approx, truth = split_fused_pred_truth(combined, k=10)
+    approx, truth = approx_fn(_IVFPQ_SHORT, truth_k=10)
     pred = pq_rerank(approx, queries, corpus, k=10, shortlist=_IVFPQ_SHORT)
     return precision_recall(pred, truth)
 
@@ -1763,12 +1731,9 @@ def sq8_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stats = sq8_stats(corpus, _SQ_DIM)
-    # encode fused into the scan kernel (sq8_search vectors=...): one
-    # Arrow stage encodes + scores each batch with the parity-pinned
-    # numpy twins of the sq8_encode expression
-    return sq8_search(
-        queries, None, stats, corpus, _SQ_DIM, k=10, vectors=corpus
-    )
+    # one Arrow stage encodes + scores each corpus batch with the
+    # parity-pinned numpy twins of the sq8_encode expression
+    return sq8_search(queries, None, stats, corpus, _SQ_DIM, k=10)
 
 
 @register(
@@ -1796,19 +1761,14 @@ def sq8_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-based precision/recall of the SQ8 path against exact L2 —
     documents the accuracy/compression tradeoff next to
     pq_recall_vs_exact (4x compression should stay ~1.0)."""
-    from vector_search_go_spark.operators.exact_knn import (
-        exact_local_topk_kernel,
-    )
     from vector_search_go_spark.operators.recall import precision_recall
     from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
 
     # pred and truth share ONE corpus scan and ONE query-batch collect
-    # (r12, guide §8.4): sq8_search's fused encode+scan kernel also
-    # emits the exact-KNN local top-k rows (exact_local_topk_kernel —
-    # the _exact_knn_arrow batch logic verbatim), split behind one lazy
-    # localCheckpoint inside sq8_search. Both chains are bit-identical
-    # to their standalone twins (sq8_search_rerank / exact_knn_join);
-    # the oracle hash pins the composition.
+    # (r12, guide §8.4): with truth_k sq8_search's encode+scan also
+    # feeds the exact-KNN chain. Both chains are bit-identical to their
+    # standalone twins (sq8_search_rerank / exact_knn_join); the oracle
+    # hash pins the composition.
     emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -1824,9 +1784,7 @@ def sq8_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = sq8_stats(corpus, _SQ_DIM)
     pred, truth = sq8_search(
-        queries, None, stats, corpus, _SQ_DIM, k=10, vectors=corpus,
-        truth_fn=exact_local_topk_kernel(qrows, "l2", 10), truth_k=10,
-        qrows=qrows,
+        queries, None, stats, corpus, _SQ_DIM, k=10, truth_k=10, qrows=qrows
     )
     return precision_recall(pred, truth)
 
