@@ -124,6 +124,36 @@ def test_arrow_two_stage_matches_expr_oracle(spark, n_parts):
             assert a == b, f"metric={metric} threshold={thr}"
 
 
+def test_two_stage_cosine_rescore_equals_scalar_fold():
+    """Above 65,536 pairs exact_local_topk_kernel bounds with BLAS and
+    rescores the margin set exactly: every emitted cosine distance
+    must be the sequential fold's (both norms included — the BLAS
+    stage's einsum norms must not leak into the rescore), and the
+    emitted (query, id) set must be the mesh top-10 by (dist, id)."""
+    from test_metrics import scalar_dist
+
+    from vector_search_go_spark.functions.metrics import seq_dists
+    from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
+
+    rng = np.random.default_rng(3)
+    V = rng.standard_normal((4000, 64))
+    Q = rng.standard_normal((20, 64))
+    assert len(V) * len(Q) > 65536
+    ids = np.arange(len(V), dtype=np.int64) * 3 + 1
+    qrows = [{"query_id": j, "qvec": list(Q[j])} for j in range(len(Q))]
+    q_o, i_o, d_o = exact_local_topk_kernel(qrows, "cosine", 10)(V, ids)
+    for q, i, d in zip(q_o, i_o, d_o):
+        assert d == scalar_dist("cosine", Q[q], V[(i - 1) // 3]), (q, i)
+    mesh = seq_dists("cosine", V[:, None], Q[None])
+    want = {
+        (j, int(ids[r]))
+        for j in range(len(Q))
+        for r in np.lexsort((ids, mesh[:, j]))[:10]
+    }
+    assert len(q_o) == len(want) == 200
+    assert set(zip(q_o.tolist(), i_o.tolist())) == want
+
+
 _EMPTY_PRED_SCHEMA = {
     "ivf": "struct<query_id:bigint,id:bigint,dist:double>",
     "pq": "struct<query_id:bigint,id:bigint,approx_dist:double>",

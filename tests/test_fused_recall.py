@@ -38,7 +38,7 @@ def test_ivf_scores_fused_matches_ivf_search(spark, metric):
         assign_cells,
         ivf_scores_fused,
         ivf_search,
-        probe_cells_local,
+        probe_cells,
     )
     from vector_search_go_spark.operators.argmin import collect_centroids
 
@@ -55,7 +55,8 @@ def test_ivf_scores_fused_matches_ivf_search(spark, metric):
     )
     cids, cmat = collect_centroids(cents)
     c2q: dict = {}
-    for r, cs in probe_cells_local(qrows, cids, cmat, metric, 3):
+    probed = probe_cells([r["qvec"] for r in qrows], (cids, cmat), metric, 3)
+    for r, cs in zip(qrows, probed):
         for c in cs:
             c2q.setdefault(int(c), []).append(int(r["query_id"]))
     cand = ivf_scores_fused(
@@ -142,7 +143,7 @@ def test_fused_truth_rows_match_exact_knn_join(spark, metric):
     kernel) must reproduce exact_knn_join bit-for-bit."""
     from vector_search_go_spark.operators.ann_ivf import (
         ivf_scores_fused,
-        probe_cells_local,
+        probe_cells,
     )
     from vector_search_go_spark.operators.argmin import collect_centroids
 
@@ -155,7 +156,8 @@ def test_fused_truth_rows_match_exact_knn_join(spark, metric):
     )
     cids, cmat = collect_centroids(cents)
     c2q: dict = {}
-    for r, cs in probe_cells_local(qrows, cids, cmat, metric, 2):
+    probed = probe_cells([r["qvec"] for r in qrows], (cids, cmat), metric, 2)
+    for r, cs in zip(qrows, probed):
         for c in cs:
             c2q.setdefault(int(c), []).append(int(r["query_id"]))
     _approx, truth = ivf_scores_fused(

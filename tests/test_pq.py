@@ -126,7 +126,7 @@ def test_ivfpq_point_search_store(spark, tmp_path):
     ids come from the probed cells' members only."""
     from pyspark.sql import functions as F
 
-    from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+    from vector_search_go_spark.operators.ann_ivf import load_ivf_model, probe_cells
     from vector_search_go_spark.operators.exact_knn import exact_knn_join
     from vector_search_go_spark.operators.pq import (
         ivfpq_point_search,
@@ -157,7 +157,8 @@ def test_ivfpq_point_search_store(spark, tmp_path):
 
     part = ivfpq_point_search(spark, path, qvec, "l2", k=5, nprobe=2).collect()
     assert len(part) == 5 and [r["rn"] for r in sorted(part, key=lambda r: r["rn"])] == [1, 2, 3, 4, 5]
-    probed = probe_cells_for(spark, f"{path}/centroids", qvec, "l2", 2)
+    model = load_ivf_model(spark, f"{path}/centroids")
+    probed = probe_cells([qvec], model, "l2", 2)[0]
     members = {
         r["id"]
         for r in spark.read.parquet(f"{path}/cells")
@@ -442,8 +443,8 @@ def test_residual_lut_batched_equals_one_row_calls():
     rows) is bit-identical to one-row builds, and the per-row
     cell-indexed ADC fold equals a per-cell fold."""
     import numpy as np
+    from test_metrics import scalar_dist
 
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
     from vector_search_go_spark.operators.pq import (
         adc_fold,
         residual_lut,
@@ -466,8 +467,10 @@ def test_residual_lut_batched_equals_one_row_calls():
         one = np.zeros((M_SUB, n_codes))
         qr = q - row
         for sub in range(M_SUB):
-            sl = qr[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-            one[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+            sl = qr[sub * D_SUB : (sub + 1) * D_SUB]
+            one[sub, cb_ids[sub]] = [
+                scalar_dist("sq_l2", sl, cw) for cw in cb_mats[sub]
+            ]
         assert np.array_equal(residual_lut(q, row, cbs), one)
         assert np.array_equal(luts[c], one)
 
@@ -486,12 +489,12 @@ def test_residual_lut_batched_equals_one_row_calls():
 
 def test_residual_lut_stacked_equals_per_subspace_tables():
     """ONE residual_lut broadcast over the stacked codebook gives, bit
-    for bit, the tables of one _seq_sq_l2 call per subspace — residual
+    for bit, the per-subspace tables of the scalar squared-L2 fold — residual
     rows and the raw (zero-centroid) table alike — and the code slots a
     ragged trained codebook leaves empty in one subspace stay 0.0."""
     import numpy as np
+    from test_metrics import scalar_dist
 
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
     from vector_search_go_spark.operators.pq import residual_lut, stack_codebook
 
     rng = np.random.default_rng(23)
@@ -512,8 +515,10 @@ def test_residual_lut_stacked_equals_per_subspace_tables():
     for c, row in enumerate(cents):
         want = np.zeros((M_SUB, n_codes))
         for sub in range(M_SUB):
-            sl = (q - row)[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-            want[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+            sl = (q - row)[sub * D_SUB : (sub + 1) * D_SUB]
+            want[sub, cb_ids[sub]] = [
+                scalar_dist("sq_l2", sl, cw) for cw in cb_mats[sub]
+            ]
         assert np.array_equal(luts[c], want), c
     assert (luts[:, 5, [3, 9, 15]] == 0.0).all()
     assert (luts[:, 4, 15] > 0.0).all()
@@ -522,8 +527,10 @@ def test_residual_lut_stacked_equals_per_subspace_tables():
     raw = residual_lut(q, np.zeros(M_SUB * D_SUB), stack_codebook(cb_ids, cb_mats))
     want = np.zeros((M_SUB, n_codes))
     for sub in range(M_SUB):
-        sl = q[sub * D_SUB : (sub + 1) * D_SUB][None, :]
-        want[sub, cb_ids[sub]] = _seq_sq_l2(sl, cb_mats[sub])[0]
+        sl = q[sub * D_SUB : (sub + 1) * D_SUB]
+        want[sub, cb_ids[sub]] = [
+            scalar_dist("sq_l2", sl, cw) for cw in cb_mats[sub]
+        ]
     assert np.array_equal(raw, want)
     assert (raw[5, [3, 9, 15]] == 0.0).all()
 

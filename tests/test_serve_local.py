@@ -452,11 +452,11 @@ def test_local_ivf_two_stage_matches_full_exact_ranking(spark, stores, tmp_path)
     # probed-row sets below (nprobe=2) and above (nprobe=15, every
     # cell) TWO_STAGE_MIN_ROWS: search and search_many, preloaded and
     # lazy, with tombstones and a threshold, must equal the full
-    # single_query_dists ranking of every live probed row
+    # seq_dists ranking of every live probed row
     import shutil
 
-    from vector_search_go_spark.operators.ann_ivf import probe_cells_for
-    from vector_search_go_spark.operators.argmin import single_query_dists
+    from vector_search_go_spark.functions.metrics import seq_dists
+    from vector_search_go_spark.operators.ann_ivf import probe_cells
     from vector_search_go_spark.serve.local_reader import (
         TWO_STAGE_MIN_ROWS,
         LocalIvfReader,
@@ -476,14 +476,13 @@ def test_local_ivf_two_stage_matches_full_exact_ranking(spark, stores, tmp_path)
     cells = readers[0]._mem_cells
 
     def full_rank(q, nprobe, k, threshold, qid):
-        probed = probe_cells_for(None, None, q, "cosine", nprobe,
-                                 model=readers[0].model)
+        probed = probe_cells([q], readers[0].model, "cosine", nprobe)[0]
         hit = [cells[int(c)] for c in probed if int(c) in cells]
         ids = np.concatenate([h[0] for h in hit])
         V = np.concatenate([h[1] for h in hit])
         live = ~np.isin(ids, dead)
         ids, V = ids[live], V[live]
-        d = single_query_dists("cosine", q, V)
+        d = seq_dists("cosine", q, V)
         if threshold is not None:
             ids, d = ids[d <= threshold], d[d <= threshold]
         return _result_frame(ids, d, k, qid), len(live)

@@ -95,27 +95,42 @@ def test_advisor_max_useful_frac_gates_weakly_pruning_index(spark):
     in-band by recall but prunes less than the gate requires must NOT
     be recommended — the scan wins in wall-clock at weak pruning (the
     SCALE.md GloVe row: frac 0.447 in-band, yet scan 13x faster). A
-    near-zero gate forces every index out; the scan is always exempt."""
+    near-zero gate forces every index out; the scan is always exempt.
+    The corpus is measured once (advisor_report's defaults) and the
+    three gates are decided over the same measurement."""
+    from vector_search_go_spark.operators.tune import (
+        _advisor_decide,
+        _advisor_measure,
+    )
+
     rng = np.random.default_rng(5)
     centers = rng.standard_normal((8, 16)) * 4.0
     X = centers[rng.integers(0, 8, size=400)] + 0.05 * rng.standard_normal(
         (400, 16)
     )
+    corpus, queries = _mk(spark, X)
+    measured = _advisor_measure(
+        spark, corpus, queries, metric="cosine", k=5, threshold=None,
+        eps=0.05, lsh_configs=((8, 50), (16, 50)),
+        ivf_configs=((16, 2), (16, 4)), seed=42, sample_size=20_000,
+    )
 
-    ungated = _report(spark, X)
-    best_free = ungated.filter(F.col("recommended")).collect()[0]
+    def decide(max_useful_frac=None):
+        return _advisor_decide(measured, 0.85, max_useful_frac)
+
+    ungated = decide()
+    best_free = [r for r in ungated if r["recommended"]][0]
     assert best_free["family"] != "exact"  # clustered: an index wins
 
-    gated = _report(spark, X, max_useful_frac=1e-4)
-    rows = gated.collect()
+    rows = decide(max_useful_frac=1e-4)
     best = [r for r in rows if r["recommended"]]
     assert len(best) == 1 and best[0]["family"] == "exact"
     # reporting is unchanged — in_band still reflects recall only
     assert any(r["in_band"] and r["family"] != "exact" for r in rows)
 
     # a gate the winning config satisfies leaves the decision alone
-    same = _report(spark, X, max_useful_frac=float(best_free["cand_frac"]))
-    keep = same.filter(F.col("recommended")).collect()[0]
+    same = decide(max_useful_frac=float(best_free["cand_frac"]))
+    keep = [r for r in same if r["recommended"]][0]
     assert (keep["family"], keep["config"]) == (
         best_free["family"],
         best_free["config"],

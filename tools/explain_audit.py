@@ -13,8 +13,9 @@ plan properties that matter at 100 TB:
   (WholeStageCodegen is active but Spark 4's AQE explain output does not
   label codegen spans, so it is not asserted here.)
 
-Writes PLANS.md with every plan + per-check verdicts, and exits nonzero
-on hard violations. Run: python tools/explain_audit.py
+Writes PLANS.md with every plan + per-check verdicts under the system
+temp directory (never over the tracked PLANS.md) and prints its path;
+exits nonzero on hard violations. Run: python tools/explain_audit.py
 """
 
 from __future__ import annotations
@@ -484,17 +485,21 @@ def main() -> int:
     audit_hot_chain(spark, sections, failures)
     audit_sketch_defaults(spark, sections, failures)
 
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
+    import tempfile
+
+    plans_path = os.path.join(tempfile.gettempdir(), "PLANS.md")
+    with open(plans_path, "w") as f:
         f.write(
             "# PLANS — physical-plan audit (auto-generated by tools/explain_audit.py)\n\n"
             f"sf_dir: {SF_DIR}\n\n" + "\n".join(sections)
         )
+    print(f"plans written to {plans_path}")
     if failures:
         print("\nFAILURES:")
         for x in failures:
             print(" -", x)
         return 1
-    print("\nall plan audits passed; PLANS.md written")
+    print("\nall plan audits passed")
     return 0
 
 

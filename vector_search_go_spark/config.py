@@ -13,6 +13,19 @@ from dataclasses import dataclass
 # Float tolerance used across the engine; reference lsh/helpers.go:13-15.
 TOL = 1e-6
 
+# Margin of the two-stage scorers (exact_knn.exact_local_topk_kernel,
+# serve.local_reader._two_stage_dists): the BLAS stage's distance error
+# is bounded by sqrt(64 * ulp(scale^2)) ~ 1e-7 * scale (worst case,
+# near-duplicate cancellation); selecting everything within
+# TWO_STAGE_MARGIN (x max(1, scale) for L2) of the k-th approximate
+# distance therefore provably contains the exact top-k (and every
+# threshold-passing row), with ~400x headroom. Proof sketch:
+# |approx-exact| <= m' and cutoff = kth_approx + m with m >= 2m' => any
+# excluded candidate has exact > kth_approx + m - m' >= exact_kth +
+# (m - 2m') >= the k-th exact distance, strictly — so exclusion never
+# flips the exact (dist, id) ranking of the returned rows.
+TWO_STAGE_MARGIN = 1e-4
+
 # Max tree depth: one bit of the int64 hash per level, sign bit never set.
 # Reference guard at lsh/hasher.go:138 (depth <= 63 keeps uint64 safe; with
 # int64 we stop at 62 so the sign bit stays clear — SURVEY.md section 1.2).

@@ -17,6 +17,7 @@ are bit-identical to the DuckDB oracle builders in
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -86,6 +87,62 @@ def metric_dist(metric: str, a: Column, b: Column) -> Column:
     if metric in ("cosine", "angular"):
         return cosine_dist(a, b)
     raise ValueError(f"unknown metric {metric!r} (want 'l2' or 'cosine')")
+
+
+SEQ_METRICS = ("sq_l2", "l2", "cosine", "angular")
+
+
+def check_metric(metric: str) -> None:
+    """Raise ValueError unless ``metric`` is one seq_dists scores —
+    called where a numpy kernel is BUILT (pandas_udf factories, scan
+    kernels), so a typo fails on the driver like metric_dist does."""
+    if metric not in SEQ_METRICS:
+        raise ValueError(f"unknown metric {metric!r} (want one of {SEQ_METRICS})")
+
+
+def _per_dim(M: np.ndarray):
+    """The slices of M's last axis in order: Python floats for a vector
+    (scalar-array arithmetic is cheapest with them), strided views over
+    the leading axes otherwise."""
+    if M.ndim == 1:
+        return M.tolist()
+    return M.transpose(M.ndim - 1, *range(M.ndim - 1))
+
+
+def seq_dists(metric: str, A, B) -> np.ndarray:
+    """numpy twin of metric_dist, bit for bit: distances between the
+    vectors on the LAST axis of ``A`` and ``B``, broadcast over the
+    leading axes — one query vs rows ``(q, V)``, aligned pairs
+    ``(A, B)``, a mesh ``(V[:, None], C[None])`` or any higher-rank
+    tensor. Every sum is a sequential per-dimension add starting at
+    0.0, the IEEE order of _fold_sum, so each float equals the
+    Catalyst fold's and the DuckDB oracle's. ``sq_l2`` skips the sqrt
+    (centroid argmins and ADC tables compare squared distances);
+    ``cosine``/``angular`` follow cosine_dist's edge rules (norm <=
+    TOL -> 1.0, raw < TOL -> 0.0). Operand order never changes a bit
+    ((a-b)^2 == (b-a)^2, a*b == b*a)."""
+    check_metric(metric)
+    A = np.asarray(A, dtype=np.float64)
+    B = np.asarray(B, dtype=np.float64)
+    shape = np.broadcast_shapes(A.shape[:-1], B.shape[:-1])
+    if metric in ("sq_l2", "l2"):
+        s = np.zeros(shape)[()]
+        for a, b in zip(_per_dim(A), _per_dim(B)):
+            diff = a - b
+            s += diff * diff
+        return s if metric == "sq_l2" else np.sqrt(s)
+    # a 1-D operand accumulates its norm into a scalar, not a 0-d array
+    na, nb = np.zeros(A.shape[:-1])[()], np.zeros(B.shape[:-1])[()]
+    dot = np.zeros(shape)[()]
+    for a, b in zip(_per_dim(A), _per_dim(B)):
+        na += a * a
+        nb += b * b
+        dot += a * b
+    na, nb = np.sqrt(na), np.sqrt(nb)
+    with np.errstate(divide="ignore", invalid="ignore"):  # zero norm -> 1.0
+        raw = 1.0 - dot / (na * nb)
+    out = np.where(raw < TOL, 0.0, raw)
+    return np.where((na <= TOL) | (nb <= TOL), 1.0, out)
 
 
 def is_angular(metric: str) -> bool:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.functions.metrics import metric_dist
+from vector_search_go_spark.functions.metrics import metric_dist, seq_dists
 from vector_search_go_spark.operators.topk import topk_per_group
 
 
@@ -55,48 +55,36 @@ def assign_cells(
 
     from vector_search_go_spark.operators.argmin import argmin_id_arrow
 
-    nearest = argmin_id_arrow(
-        centroids, metric="l2" if metric == "l2" else "cosine"
-    )
+    nearest = argmin_id_arrow(centroids, metric=metric)
     return ensure_parallelism(corpus).select(
         "id", "vec", nearest(F.col("vec")).alias("cell")
     )
 
 
-def probe_cells_local(qrows, cids, cmat, metric: str, nprobe: int):
-    """Driver-side probe selection over the KB-sized centroid model:
-    per query, the ``nprobe`` nearest cells under the exact
-    (dist, cid) order the crossJoin + rank-window path produced — the
-    same sequential-IEEE kernels (argmin._seq_sq_l2 / _seq_cosine), so
-    the selected cell sets are bit-identical (parity pinned in
-    tests/test_argmin_parity.py and the ivf/ivfpq oracle hashes).
+def probe_cells(Q, model, metric: str, nprobe: int) -> list[list[int]]:
+    """Driver-side probe selection over the KB-sized centroid model
+    ``model`` = (cids, centroid matrix) (load_ivf_model /
+    argmin.collect_centroids): per row of the query matrix ``Q``, the
+    ``nprobe`` nearest cell ids under the exact (dist, cid) order the
+    crossJoin + rank-window path produces — functions.metrics.seq_dists
+    distances, so the selected cell sets are bit-identical (parity
+    pinned in tests/test_argmin_parity.py and the ivf/ivfpq oracle
+    hashes).
 
-    Probe selection is query-batch x centroids work (rows x KBs); the
-    serving readers already do it driver-side (pq.ivfpq_point_search),
-    and running it through the cluster cost a crossJoin + window
-    shuffle + broadcast-build job per invocation (guide §8: decide with
-    small rows, move heavy rows once). Returns a list of
-    (query_row, [cell, ...]) pairs in input order."""
+    Probe selection is query-batch x centroids work (rows x KBs); it
+    serves the Spark search paths, the point paths and the local
+    readers alike — running it through the cluster cost a crossJoin +
+    window shuffle + broadcast-build job per invocation (guide §8:
+    decide with small rows, move heavy rows once). Returns one cell
+    list per query row, in row order."""
     import numpy as np
 
-    from vector_search_go_spark.operators.argmin import (
-        _seq_cosine,
-        _seq_sq_l2,
-    )
-
-    if not qrows:
+    if len(Q) == 0:
         return []
-    Q = np.array([list(r["qvec"]) for r in qrows], dtype=np.float64)
-    if metric == "l2":
-        D = np.sqrt(_seq_sq_l2(Q, cmat))
-    else:
-        D = _seq_cosine(Q, cmat)
+    cids, C = model
     cids = np.asarray(cids)
-    out = []
-    for i, r in enumerate(qrows):
-        order = np.lexsort((cids, D[i]))[:nprobe]
-        out.append((r, [int(cids[j]) for j in order]))
-    return out
+    D = seq_dists(metric, np.asarray(Q, dtype=np.float64)[:, None], C[None])
+    return [[int(cids[j]) for j in np.lexsort((cids, d))[:nprobe]] for d in D]
 
 
 def ivf_scores_fused(
@@ -118,32 +106,28 @@ def ivf_scores_fused(
     Bit-identical piece by piece: assignment is argmin_id_arrow's
     first-min argmin over ascending cids in the same distance domain
     (sqrt'd L2 / cosine — tests/test_argmin_parity.py); candidate
-    distances are the _seq_* mesh kernels, whose per-pair arithmetic
-    is the pairwise_dist_udf fold with operand products commuted
-    (IEEE-exact); ``local_topk`` is the exact per-batch (dist, id)
-    truncation (selection-monotone for the downstream topk(k)).
+    distances are seq_dists over the (row, query) mesh, the same
+    per-pair arithmetic as pairwise_dist_udf; ``local_topk`` is the
+    exact per-batch (dist, id) truncation (selection-monotone for the
+    downstream topk(k)).
 
     ``centroids`` = DataFrame or preloaded (cids, matrix);
     ``cell_to_queries`` maps cell id -> probing query ids
-    (probe_cells_local's inverse); ``qrows`` the collected query batch.
+    (probe_cells's inverse); ``qrows`` the collected query batch.
     ``truth_k``: the scan also feeds the exact-KNN truth chain and the
     result is an (approx, truth) pair (see scan_topk)."""
     import numpy as np
 
     from vector_search_go_spark.operators.argmin import (
-        _seq_cosine,
-        _seq_sq_l2,
         collect_centroids,
         local_topk_flat,
         query_matrix,
         scan_topk,
     )
 
-    if metric == "l2":
-        def dist(V, C):
-            return np.sqrt(_seq_sq_l2(V, C))
-    else:
-        dist = _seq_cosine
+    def dist(V, C):
+        return seq_dists(metric, V[:, None], C[None])
+
     c2q = {int(c): [int(q) for q in qs] for c, qs in cell_to_queries.items()}
 
     def scorer(rows):
@@ -216,7 +200,7 @@ def ivf_search(
     tests/test_argmin_parity.py).
 
     The probe list (queries x nprobe rows) is selected driver-side on
-    the arrow path (probe_cells_local): it is a pure function of the
+    the arrow path (probe_cells): it is a pure function of the
     query batch and the KB-sized centroid model, and materializing it
     as a local relation removes a crossJoin + rank-window shuffle +
     broadcast-build job per invocation while shipping the same rows to
@@ -228,8 +212,8 @@ def ivf_search(
         # distributed probe selection (the pre-r11 crossJoin + window
         # shape): same (cdist, cid) ranking, no driver collect; the
         # candidate scorer stays the Arrow pairwise kernel, so rows are
-        # bit-identical to the collected path (probe_cells_local uses
-        # the same sequential-IEEE kernels by construction)
+        # bit-identical to the collected path (probe_cells scores with
+        # seq_dists, metric_dist's numpy twin)
         qprobe = (
             queries.crossJoin(F.broadcast(centroids))
             .withColumn("cdist", metric_dist(metric, F.col("qvec"), F.col("cvec")))
@@ -258,8 +242,10 @@ def ivf_search(
             queries.select("query_id", "qvec").collect(),
             key=lambda r: r["query_id"],
         )
-        cids, cmat = collect_centroids(centroids)
-        probed = probe_cells_local(qrows, cids, cmat, metric, nprobe)
+        probed = probe_cells(
+            [r["qvec"] for r in qrows], collect_centroids(centroids), metric,
+            nprobe,
+        )
         # the local probe relation carries keys only — qvec joins back
         # from the broadcast query table below, so |queries| x nprobe
         # vectors never round-trip through the driver
@@ -270,7 +256,7 @@ def ivf_search(
             ]
         )
         probes = queries.sparkSession.createDataFrame(
-            [(r["query_id"], c) for r, cs in probed for c in cs],
+            [(r["query_id"], c) for r, cs in zip(qrows, probed) for c in cs],
             schema,
         )
         cand = (
@@ -401,44 +387,6 @@ def load_ivf_model(spark, centroids_path: str):
     return collect_centroids(spark.read.parquet(centroids_path))
 
 
-def probe_cells_for(
-    spark, centroids_path: str, qvec, metric: str, nprobe: int, model=None
-) -> list:
-    """Driver-side coarse probe for a saved store: score the centroids
-    with the SAME sequential-IEEE kernels as the distributed path,
-    return the nprobe nearest cell ids under the (dist, cid) tie-break
-    topk_per_group would apply. ``model`` = a preloaded
-    load_ivf_model() result (skips the per-call collect)."""
-    import numpy as np
-
-    from vector_search_go_spark.operators.argmin import _seq_cosine, _seq_sq_l2
-
-    cids, C = model if model is not None else load_ivf_model(spark, centroids_path)
-    q = np.asarray([list(qvec)], dtype=np.float64)
-    d = np.sqrt(_seq_sq_l2(q, C))[0] if metric == "l2" else _seq_cosine(q, C)[0]
-    return [int(cids[i]) for i in np.lexsort((cids, d))[:nprobe]]
-
-
-def probe_cells_batch(
-    spark, centroids_path: str, Q, metric: str, nprobe: int, model=None
-) -> list:
-    """Batch twin of probe_cells_for: one vectorized driver-side score
-    of the centroid matrix for the whole query batch. Returns one
-    nprobe-list per query row, same kernels and (dist, cid) tie-break
-    as the single-query path — row i's list == probe_cells_for(Q[i])."""
-    import numpy as np
-
-    from vector_search_go_spark.operators.argmin import _seq_cosine, _seq_sq_l2
-
-    cids, C = model if model is not None else load_ivf_model(spark, centroids_path)
-    Q = np.asarray(Q, dtype=np.float64)
-    D = np.sqrt(_seq_sq_l2(Q, C)) if metric == "l2" else _seq_cosine(Q, C)
-    return [
-        [int(cids[i]) for i in np.lexsort((cids, D[r]))[:nprobe]]
-        for r in range(len(Q))
-    ]
-
-
 def ivf_point_search_batch(
     spark,
     path: str,
@@ -454,7 +402,7 @@ def ivf_point_search_batch(
     that dominates single-query latency; see SCALE.md serving table).
 
     ``queries`` = [(query_id, qvec), ...]. The coarse probe runs
-    driver-side for the whole batch at once (probe_cells_batch), the
+    driver-side for the whole batch at once (probe_cells), the
     cells scan reads the UNION of probed cells exactly once
     (``cell IN (...)`` partition pruning), each scanned row maps back
     to its probing queries via a broadcast (cell -> query ids) table
@@ -472,9 +420,9 @@ def ivf_point_search_batch(
     if len(set(qids)) != len(qids):
         raise ValueError("duplicate query_id in batch")
     Q = np.asarray([list(v) for _, v in queries], dtype=np.float64)
-    probed = probe_cells_batch(
-        spark, f"{path}/centroids", Q, metric, nprobe, model=model
-    )
+    if model is None:
+        model = load_ivf_model(spark, f"{path}/centroids")
+    probed = probe_cells(Q, model, metric, nprobe)
     cell_qids: dict[int, list[int]] = {}
     for qid, cells_q in zip(qids, probed):
         for c in cells_q:
@@ -525,14 +473,14 @@ def ivf_point_search(
     from vector_search_go_spark.operators.argmin import single_query_dist_udf
     from vector_search_go_spark.operators.topk import topk_per_group
 
-    probe_cells = probe_cells_for(
-        spark, f"{path}/centroids", qvec, metric, nprobe, model=model
-    )
+    if model is None:
+        model = load_ivf_model(spark, f"{path}/centroids")
+    probed = probe_cells([list(qvec)], model, metric, nprobe)[0]
 
     from vector_search_go_spark.streaming.delete import mask_tombstones
 
     cells = mask_tombstones(spark, path, spark.read.parquet(f"{path}/cells")).filter(
-        F.col("cell").isin(probe_cells)
+        F.col("cell").isin(probed)
     )
     dist = single_query_dist_udf(metric, qvec)
     cand = cells.select(

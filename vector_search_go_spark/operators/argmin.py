@@ -30,6 +30,8 @@ import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_go_spark.functions.metrics import check_metric, seq_dists
+
 
 def pack_centroids(
     cents: DataFrame,
@@ -82,38 +84,6 @@ def collect_centroids(cents: DataFrame, id_col: str = "cid", vec_col: str = "cve
     return ids, mat
 
 
-def _seq_sq_l2(V, C):
-    """Row-to-centroid squared L2 with SEQUENTIAL per-dimension adds —
-    the same IEEE order as the Catalyst fold `aggregate(diffsq, 0.0,
-    acc+v)`, so distances (hence argmins) are bit-identical to the
-    expression path and the DuckDB oracle."""
-    D = np.zeros((V.shape[0], C.shape[0]))
-    for d in range(V.shape[1]):
-        diff = V[:, d, None] - C[None, :, d]
-        D += diff * diff
-    return D
-
-
-def _seq_cosine(V, C, tol: float = 1e-6):
-    """Cosine distance mirroring functions.metrics.cosine_dist exactly:
-    sequential-add dot/norms, 1.0 when either norm <= tol, clamp < tol
-    to 0.0."""
-    def _norms(M):
-        s = np.zeros(M.shape[0])
-        for d in range(M.shape[1]):
-            s += M[:, d] * M[:, d]
-        return np.sqrt(s)
-
-    nv, nc = _norms(V), _norms(C)
-    dot = np.zeros((V.shape[0], C.shape[0]))
-    for d in range(V.shape[1]):
-        dot += V[:, d, None] * C[None, :, d]
-    raw = 1.0 - dot / (nv[:, None] * nc[None, :])
-    out = np.where(raw < tol, 0.0, raw)
-    out = np.where((nv[:, None] <= tol) | (nc[None, :] <= tol), 1.0, out)
-    return out
-
-
 def argmin_id_arrow(cents: DataFrame, metric: str = "sq_l2",
                     id_col: str = "cid", vec_col: str = "cvec"):
     """Arrow-batched nearest-centroid id: returns a pandas_udf column
@@ -121,28 +91,24 @@ def argmin_id_arrow(cents: DataFrame, metric: str = "sq_l2",
     (transform/aggregate) evaluate INTERPRETED per element — at 1M
     vectors x 128 codewords the expression argmin is minutes of lambda
     dispatch, while this numpy version is one BLAS-shaped loop per
-    Arrow batch (measured ~30x on the 1M probe). Distances use
-    sequential per-dimension adds (_seq_sq_l2/_seq_cosine), so results
-    are bit-identical to the expression path — asserted in
-    tests/test_argmin_parity.py and by the DuckDB oracle gate."""
+    Arrow batch (measured ~30x on the 1M probe). Distances are
+    functions.metrics.seq_dists over the (row, centroid) mesh, so
+    results are bit-identical to the expression path — asserted in
+    tests/test_argmin_parity.py and by the DuckDB oracle gate.
+
+    ``metric='l2'`` compares sqrt'd distances like the expression
+    path: sqrt is IEEE correctly-rounded in both numpy and the JVM,
+    but it can map two distinct squared values onto one double —
+    compare in the same domain or tie-breaks could diverge."""
     from pyspark.sql.functions import pandas_udf
 
+    check_metric(metric)
     ids, mat = collect_centroids(cents, id_col=id_col, vec_col=vec_col)
-    if metric == "sq_l2":
-        dist = _seq_sq_l2
-    elif metric == "l2":
-        # the expression path compares sqrt'd distances; sqrt is IEEE
-        # correctly-rounded in both numpy and the JVM, but it can map
-        # two distinct squared values onto one double — compare in the
-        # same domain or tie-breaks could diverge
-        dist = lambda V, C: np.sqrt(_seq_sq_l2(V, C))  # noqa: E731
-    else:
-        dist = _seq_cosine
 
     @pandas_udf("int")
     def nearest(vecs: pd.Series) -> pd.Series:
         V = np.array(vecs.tolist(), dtype=np.float64)
-        D = dist(V, mat)
+        D = seq_dists(metric, V[:, None], mat[None])
         # np.argmin returns the FIRST minimum; ids are sorted ascending,
         # so ties break toward the smallest id = min(struct(d, id))
         return pd.Series(ids[D.argmin(axis=1)].astype(np.int32))
@@ -163,6 +129,7 @@ def argmin_id_arrow_grouped(
     in the closure (M x k x dim doubles — still model-sized)."""
     from pyspark.sql.functions import pandas_udf
 
+    check_metric(metric)
     rows = sorted(
         cents.select(group_col, id_col, vec_col).collect(),
         key=lambda r: (r[group_col], r[id_col]),
@@ -173,9 +140,6 @@ def argmin_id_arrow_grouped(
         g_rows = [r for r in rows if r[group_col] == g]
         ids[g] = np.array([r[id_col] for r in g_rows], dtype=np.int64)
         mats[g] = np.array([list(r[vec_col]) for r in g_rows], dtype=np.float64)
-    dist = _seq_sq_l2 if metric == "sq_l2" else (
-        (lambda V, C: np.sqrt(_seq_sq_l2(V, C))) if metric == "l2" else _seq_cosine
-    )
 
     @pandas_udf("int")
     def nearest(groups: pd.Series, vecs: pd.Series) -> pd.Series:
@@ -184,7 +148,8 @@ def argmin_id_arrow_grouped(
         for g in np.unique(gv):
             m = gv == g
             V = np.array(vecs[m].tolist(), dtype=np.float64)
-            out[m] = ids[g][dist(V, mats[g]).argmin(axis=1)]
+            D = seq_dists(metric, V[:, None], mats[g][None])
+            out[m] = ids[g][D.argmin(axis=1)]
         return pd.Series(out)
 
     return nearest
@@ -316,7 +281,7 @@ def query_matrix(qrows) -> tuple[np.ndarray, np.ndarray]:
 
 def fanin_query_scorer(queries: DataFrame, metric: str,
                        qid_col: str = "query_id", qvec_col: str = "qvec",
-                       tol: float = 1e-6, local_topk: int | None = None,
+                       local_topk: int | None = None,
                        qrows: list | None = None):
     """Fan-in candidate scorer for LSH search: consumes rows
     ``(id, qids array, vec)`` — one row per candidate CORPUS vector with
@@ -333,9 +298,8 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
     broadcastable side by assumption — same bound as broadcast_queries)
     and each candidate corpus vector transfers exactly once.
 
-    Distances use the same sequential per-dimension IEEE adds as the
-    fold expression and the pairwise kernel, with identical operand
-    order (A = query, B = corpus), so results are bit-identical to
+    Distances are functions.metrics.seq_dists over the aligned
+    (query, corpus) pairs, so results are bit-identical to
     impl='expr' (pinned in tests/test_argmin_parity.py).
 
     ``local_topk=L`` pre-reduces each emitted Arrow batch to its EXACT
@@ -348,6 +312,7 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
     rows per batch reach the shuffle instead of every candidate pair.
     Distances are never approximated here; this is pure row
     reduction."""
+    check_metric(metric)
     rows = (
         qrows
         if qrows is not None
@@ -355,7 +320,6 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
     )
     Q = np.array([list(r[qvec_col]) for r in rows], dtype=np.float64)
     qpos = {r[qid_col]: i for i, r in enumerate(rows)}
-    is_cos = metric in ("cosine", "angular")
 
     def score(batches):
         for pdf in batches:
@@ -369,13 +333,6 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
             rep = np.repeat(np.arange(len(pdf)), lens)
             n_pairs = len(rep)
             dist = np.empty(n_pairs)
-
-            def _norm(M):
-                t = np.zeros(M.shape[0])
-                for d in range(M.shape[1]):
-                    t += M[:, d] * M[:, d]
-                return np.sqrt(t)
-
             # Chunk the pair dimension: the gathered (A, B) operand
             # pair is n_pairs x dims doubles EACH — at high fan-in
             # (large query batches) materializing it whole is GBs per
@@ -384,22 +341,7 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
             chunk = 8192
             for s0 in range(0, n_pairs, chunk):
                 sl = slice(s0, min(s0 + chunk, n_pairs))
-                A = Q[qidx[sl]]
-                B = V[rep[sl]]
-                if not is_cos:
-                    s = np.zeros(A.shape[0])
-                    for d in range(A.shape[1]):
-                        diff = A[:, d] - B[:, d]
-                        s += diff * diff
-                    dist[sl] = np.sqrt(s)
-                else:
-                    na, nb = _norm(A), _norm(B)
-                    dot = np.zeros(A.shape[0])
-                    for d in range(A.shape[1]):
-                        dot += A[:, d] * B[:, d]
-                    raw = 1.0 - dot / (na * nb)
-                    dc = np.where(raw < tol, 0.0, raw)
-                    dist[sl] = np.where((na <= tol) | (nb <= tol), 1.0, dc)
+                dist[sl] = seq_dists(metric, Q[qidx[sl]], V[rep[sl]])
             pair_ids = np.asarray(pdf["id"])[rep]
             if (
                 local_topk is not None
@@ -427,92 +369,39 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
     return score
 
 
-def single_query_dists(metric: str, q: np.ndarray, V: np.ndarray,
-                       tol: float = 1e-6) -> np.ndarray:
-    """Distances from ONE query vector to each row of V — the shared
-    numpy kernel behind single_query_dist_udf AND the driver-side
-    serving readers (serve/local_reader.py). Sequential per-dimension
-    IEEE adds, operand order A = query / B = corpus, identical to every
-    other kernel, so both consumers are bit-identical to the fold
-    expression by construction."""
-    q = np.asarray(q, dtype=np.float64)
-    V = np.asarray(V, dtype=np.float64)
-    if len(V) == 0:
-        return np.empty(0)
-    if metric not in ("cosine", "angular"):
-        s = np.zeros(len(V))
-        for d in range(V.shape[1]):
-            diff = q[d] - V[:, d]
-            s += diff * diff
-        return np.sqrt(s)
-    nq = 0.0
-    for d in range(q.shape[0]):
-        nq += q[d] * q[d]
-    nq = np.sqrt(nq)
-    nv = np.zeros(len(V))
-    for d in range(V.shape[1]):
-        nv += V[:, d] * V[:, d]
-    nv = np.sqrt(nv)
-    dot = np.zeros(len(V))
-    for d in range(V.shape[1]):
-        dot += q[d] * V[:, d]
-    raw = 1.0 - dot / (nq * nv)
-    out = np.where(raw < tol, 0.0, raw)
-    return np.where((nq <= tol) | (nv <= tol), 1.0, out)
-
-
-def single_query_dist_udf(metric: str, qvec, tol: float = 1e-6):
+def single_query_dist_udf(metric: str, qvec):
     """Distance from ONE fixed query vector (closure) to the row's
-    vector — the point-lookup scorer (lsh.search.lsh_point_search).
-    Thin pandas_udf wrapper over single_query_dists (one kernel, two
-    consumers — Spark serving paths and the local reader)."""
+    vector — the point-lookup scorer (lsh.search.lsh_point_search):
+    functions.metrics.seq_dists, the kernel the driver-side serving
+    readers (serve/local_reader.py) score with too."""
     from pyspark.sql.functions import pandas_udf
 
+    check_metric(metric)
     q = np.asarray(list(qvec), dtype=np.float64)
 
     @pandas_udf("double")
     def dist(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(single_query_dists(metric, q, V, tol=tol))
+        V = np.array(vecs.tolist(), dtype=np.float64).reshape(len(vecs), len(q))
+        return pd.Series(seq_dists(metric, q, V))
 
     return dist
 
 
-def pairwise_dist_udf(metric: str, tol: float = 1e-6):
+def pairwise_dist_udf(metric: str):
     """Arrow-batched row-pair distance (both vectors in the row): the
-    vectorized twin of functions.metrics.metric_dist, with sequential
-    per-dimension adds so each scalar result is bit-identical to the
-    fold expression. Used where candidates are already joined to both
+    vectorized twin of functions.metrics.metric_dist (seq_dists over
+    the aligned pairs, so each scalar result is bit-identical to the
+    fold expression). Used where candidates are already joined to both
     vectors (LSH candidate scoring) and the per-pair fold would be
     interpreted lambda dispatch."""
     from pyspark.sql.functions import pandas_udf
 
-    is_cos = metric in ("cosine", "angular")
+    check_metric(metric)
 
     @pandas_udf("double")
     def dist(a: pd.Series, b: pd.Series) -> pd.Series:
         A = np.array(a.tolist(), dtype=np.float64)
         B = np.array(b.tolist(), dtype=np.float64)
-        if not is_cos:
-            s = np.zeros(len(A))
-            for d in range(A.shape[1]):
-                diff = A[:, d] - B[:, d]
-                s += diff * diff
-            return pd.Series(np.sqrt(s))
-
-        def _norm(M):
-            s = np.zeros(M.shape[0])
-            for d in range(M.shape[1]):
-                s += M[:, d] * M[:, d]
-            return np.sqrt(s)
-
-        na, nb = _norm(A), _norm(B)
-        dot = np.zeros(len(A))
-        for d in range(A.shape[1]):
-            dot += A[:, d] * B[:, d]
-        raw = 1.0 - dot / (na * nb)
-        out = np.where(raw < tol, 0.0, raw)
-        out = np.where((na <= tol) | (nb <= tol), 1.0, out)
-        return pd.Series(out)
+        return pd.Series(seq_dists(metric, A, B))
 
     return dist

@@ -22,8 +22,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.config import TOL
-from vector_search_go_spark.functions.metrics import dot, l2_norm, metric_dist
+from vector_search_go_spark.config import TOL, TWO_STAGE_MARGIN
+from vector_search_go_spark.functions.metrics import (
+    dot,
+    is_angular,
+    l2_norm,
+    metric_dist,
+    seq_dists,
+)
 from vector_search_go_spark.io import read_parquet_cached
 from vector_search_go_spark.operators.topk import topk_per_group
 
@@ -64,8 +70,8 @@ def exact_knn_join(
     that order — |batch| x k rows cross the shuffle instead of
     |batch| x |queries| pairs. Inside a batch the local top-k is found
     two-stage: a BLAS approximate pass bounds the per-query k-th
-    distance, the SEQUENTIAL per-dimension kernels (operators.argmin —
-    the exact IEEE order of the fold) rescore everything within a
+    distance, the SEQUENTIAL per-dimension kernel (seq_dists — the
+    exact IEEE order of the fold) rescores everything within a
     provable margin, and emitted distances are always the exact
     values (parity pinned by the knn oracle hashes and
     tests/test_argmin_parity.py).
@@ -108,46 +114,15 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
     path. ``qrows`` must be the sorted, non-empty (query_id, qvec)
     batch."""
     from vector_search_go_spark.operators.argmin import (
-        _seq_cosine,
-        _seq_sq_l2,
         local_topk_flat,
         mesh_topk_arrays,
         query_matrix,
     )
 
+    is_cos = is_angular(metric)
     qids, Q = query_matrix(qrows)
-    is_cos = metric in ("cosine", "angular")
     q2 = np.einsum("ij,ij->i", Q, Q)
     nq = np.sqrt(q2)
-    # margin for the approximate stage (same bound as the serving
-    # reader's two-stage scorer, serve/local_reader.py): BLAS distance
-    # error is ~1e-7 x scale worst-case, selection within margin of the
-    # per-query k-th approximate distance provably contains the exact
-    # (dist, id) top-k
-    MARGIN = 1e-4
-
-    def _seq_pair(V, rows, cols):
-        # sequential-IEEE distances of the selected (corpus row, query)
-        # pairs only — identical per-pair arithmetic to the full-matrix
-        # kernels (operand broadcast order preserved)
-        A, B = V[rows], Q[cols]
-        if not is_cos:
-            s = np.zeros(len(A))
-            for d in range(A.shape[1]):
-                diff = A[:, d] - B[:, d]
-                s += diff * diff
-            return np.sqrt(s)
-        na = np.zeros(len(A))
-        for d in range(A.shape[1]):
-            na += A[:, d] * A[:, d]
-        na = np.sqrt(na)
-        nb = nq[cols]
-        dot = np.zeros(len(A))
-        for d in range(A.shape[1]):
-            dot += A[:, d] * B[:, d]
-        raw = 1.0 - dot / (na * nb)
-        out = np.where(raw < 1e-6, 0.0, raw)
-        return np.where((na <= 1e-6) | (nb <= 1e-6), 1.0, out)
 
     def batch_fn(V, ids_b):
         n_v, n_q = len(V), len(Q)
@@ -155,7 +130,7 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
         if n_v * n_q <= 65536:
             # small block: the full sequential matrix is cheaper
             # than two stages
-            D = _seq_cosine(V, Q) if is_cos else np.sqrt(_seq_sq_l2(V, Q))
+            D = seq_dists(metric, V[:, None], Q[None])
             return mesh_topk_arrays(D, ids_b, qids, kk)
         n2 = np.einsum("ij,ij->i", V, V)
         G = V @ Q.T
@@ -166,17 +141,20 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
             approx = np.where(
                 (nv[:, None] <= 1e-6) | (nq[None, :] <= 1e-6), 1.0, approx
             )
-            m = MARGIN
+            m = TWO_STAGE_MARGIN
         else:
             approx = np.sqrt(
                 np.maximum(n2[:, None] - 2.0 * G + q2[None, :], 0.0)
             )
-            m = MARGIN * max(
+            m = TWO_STAGE_MARGIN * max(
                 1.0, float(np.sqrt(n2.max() + q2.max()))
             )
         cut = np.partition(approx, kk - 1, axis=0)[kk - 1] + m
         rows, cols = np.nonzero(approx <= cut[None, :])
-        dist_sel = _seq_pair(V, rows, cols)
+        # the exact values of the selected (corpus row, query) pairs
+        # only; BOTH norms come from the sequential fold, never from
+        # the einsum norms of the approximate stage
+        dist_sel = seq_dists(metric, V[rows], Q[cols])
         # grouped by query POSITION, so duplicate query ids stay apart
         keep = local_topk_flat(cols, ids_b[rows], dist_sel, kk)
         return qids[cols[keep]], ids_b[rows[keep]], dist_sel[keep]

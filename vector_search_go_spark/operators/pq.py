@@ -30,7 +30,7 @@ import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.functions.metrics import as_double, l2_dist
+from vector_search_go_spark.functions.metrics import as_double, l2_dist, seq_dists
 from vector_search_go_spark.operators.topk import topk_per_group
 
 M_SUB = 16  # subspaces
@@ -211,15 +211,14 @@ def _codebook_mats(codebook: DataFrame):
 
 def pq_encode_np(V: np.ndarray, cb_ids: dict, cb_mats: dict) -> np.ndarray:
     """float64 rows -> (n, M_SUB) int64 PQ codes: per subspace, the
-    sequential per-dimension squared L2 (_seq_sq_l2) to every codeword
-    and the FIRST minimum over ascending code ids == the Catalyst
-    min(struct(d, code)) fold. The one PQ encode every Arrow kernel
-    runs (raw and residual codes UDFs, fused ADC scans)."""
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
+    sequential per-dimension squared L2 (seq_dists 'sq_l2') to every
+    codeword and the FIRST minimum over ascending code ids == the
+    Catalyst min(struct(d, code)) fold. The one PQ encode every Arrow
+    kernel runs (raw and residual codes UDFs, fused ADC scans)."""
     codes = np.empty((len(V), M_SUB), dtype=np.int64)
     for sub in range(M_SUB):
-        D = _seq_sq_l2(V[:, sub * D_SUB : (sub + 1) * D_SUB], cb_mats[sub])
+        Vs = V[:, sub * D_SUB : (sub + 1) * D_SUB]
+        D = seq_dists("sq_l2", Vs[:, None], cb_mats[sub][None])
         codes[:, sub] = cb_ids[sub][D.argmin(axis=1)]
     return codes
 
@@ -325,17 +324,13 @@ def residual_lut(q: np.ndarray, cent_rows: np.ndarray, codebook) -> np.ndarray:
     ``codebook`` is stack_codebook's (cb3, missing). ``cent_rows`` is a
     (n_cells, D) matrix of centroid rows -> tables (n_cells, M_SUB,
     n_codes); a single (D,) row -> its (M_SUB, n_codes) table. All
-    subspaces and cells come from ONE broadcast over the stacked
-    codebook whose D_SUB per-dimension adds run in the order
-    _seq_sq_l2 uses, so every float equals the per-subspace
-    _seq_sq_l2 table's."""
+    subspaces and cells come from ONE seq_dists broadcast of the
+    (cells, M_SUB, 1, D_SUB) residual subvectors against the stacked
+    codebook, so every float equals a per-subspace 'sq_l2' table's."""
     cb3, missing = codebook
     cent_rows = np.asarray(cent_rows, dtype=np.float64)
     QR = (q[None, :] - np.atleast_2d(cent_rows)).reshape(-1, M_SUB, 1, D_SUB)
-    lut = np.zeros((len(QR), M_SUB, cb3.shape[1]))
-    for d in range(D_SUB):
-        diff = QR[..., d] - cb3[None, :, :, d]
-        lut += diff * diff
+    lut = seq_dists("sq_l2", QR, cb3[None])
     lut[:, missing] = 0.0
     return lut[0] if cent_rows.ndim == 1 else lut
 
@@ -488,12 +483,11 @@ def ivfpq_adc_scores_fused(
         topk(shortlist) -> rerank -> topk(k) consumer.
 
     ``cell_to_queries`` maps cell id -> probing query ids (the inverse
-    of the driver-side probe selection, ann_ivf.probe_cells_local);
+    of the driver-side probe selection, ann_ivf.probe_cells);
     ``qrows`` is the collected (query_id, qvec) batch. ``truth_k``: the
     scan also feeds the exact-KNN truth chain and the result is an
     (approx, truth) pair (see scan_topk)."""
     from vector_search_go_spark.operators.argmin import (
-        _seq_sq_l2,
         local_topk_flat,
         query_matrix,
         scan_topk,
@@ -514,7 +508,7 @@ def ivfpq_adc_scores_fused(
         def score(V, ids_b):
             # coarse assignment: compare sqrt'd distances (the domain
             # the expression path compares in — see argmin_id_arrow)
-            cell_idx = np.sqrt(_seq_sq_l2(V, C)).argmin(axis=1)
+            cell_idx = seq_dists("l2", V[:, None], C[None]).argmin(axis=1)
             codes = pq_encode_np(V - C[cell_idx], cb_ids, cb_mats)
             qp, r, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cids[cell_idx], codes)
             q_arr, i_arr = qids[qp], ids_b[r]
@@ -1003,7 +997,7 @@ def adc_shortlist_probe(
     rows' codes from the STORE's own cells table (measuring the
     encoding the store actually serves, not a re-derivation that a
     floating-point near-tie could flip), build each query's LUT with
-    the sequential-IEEE kernel serving uses (_seq_sq_l2), and take the
+    the sequential-IEEE kernel serving uses (residual_lut), and take the
     ``quantile`` of "rank of the worst true top-k neighbor" as a
     corpus FRACTION, scaled back to store size with a ``safety``
     margin. The exact-truth ranking uses the BLAS form — ranks only,
@@ -1320,7 +1314,7 @@ def ivfpq_point_search(
 
     from pyspark.sql.functions import pandas_udf
 
-    from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+    from vector_search_go_spark.operators.ann_ivf import load_ivf_model, probe_cells
     from vector_search_go_spark.operators.argmin import single_query_dist_udf
     from vector_search_go_spark.operators.topk import topk_per_group
 
@@ -1336,16 +1330,9 @@ def ivfpq_point_search(
         shortlist = max(_stored_shortlist(spark, path) or 0, pq_shortlist(k))
     enc = store_encoding(spark, path)
     coarse_model, cb_model = models if models is not None else (None, None)
-    if enc == "residual" and coarse_model is None:
-        # residual LUTs need the probed cells' centroid rows — load the
-        # (model-sized) coarse table once instead of letting the probe
-        # collect and discard it
-        from vector_search_go_spark.operators.ann_ivf import load_ivf_model
-
+    if coarse_model is None:
         coarse_model = load_ivf_model(spark, f"{path}/centroids")
-    probe_cells = probe_cells_for(
-        spark, f"{path}/centroids", qvec, metric, nprobe, model=coarse_model
-    )
+    probed = probe_cells([list(qvec)], coarse_model, metric, nprobe)[0]
 
     # ADC tables per probed cell over q - centroid(cell); a raw store's
     # centroid rows are zero (q - 0.0 == q), so both encodings score
@@ -1354,7 +1341,7 @@ def ivfpq_point_search(
         spark.read.parquet(f"{path}/codebook").select("sub", "code", "cvec")
     )
     Q = np.asarray([list(qvec)], dtype=np.float64)
-    cell_qpos = {int(c): [0] for c in probe_cells}
+    cell_qpos = {int(c): [0] for c in probed}
     cent = _probed_centroids(enc, coarse_model, cell_qpos, Q.shape[1])
     cbs = stack_codebook(ids, mats)
 
@@ -1370,7 +1357,7 @@ def ivfpq_point_search(
 
     cand = (
         mask_tombstones(spark, path, spark.read.parquet(f"{path}/cells"))
-        .filter(F.col("cell").isin(probe_cells))
+        .filter(F.col("cell").isin(probed))
         .select(
             F.lit(0).cast("bigint").alias("query_id"),
             "id",
@@ -1429,7 +1416,7 @@ def ivfpq_point_search_batch(
 
     from pyspark.sql import Row
 
-    from vector_search_go_spark.operators.ann_ivf import probe_cells_batch
+    from vector_search_go_spark.operators.ann_ivf import load_ivf_model, probe_cells
     from vector_search_go_spark.operators.argmin import (
         fanin_query_scorer,
         local_topk_flat,
@@ -1452,13 +1439,9 @@ def ivfpq_point_search_batch(
     Q = np.asarray([list(v) for _, v in queries], dtype=np.float64)
     enc = store_encoding(spark, path)
     coarse_model, cb_model = models if models is not None else (None, None)
-    if enc == "residual" and coarse_model is None:
-        from vector_search_go_spark.operators.ann_ivf import load_ivf_model
-
+    if coarse_model is None:
         coarse_model = load_ivf_model(spark, f"{path}/centroids")
-    probed = probe_cells_batch(
-        spark, f"{path}/centroids", Q, metric, nprobe, model=coarse_model
-    )
+    probed = probe_cells(Q, coarse_model, metric, nprobe)
 
     ids, mats = cb_model if cb_model is not None else _codebook_mats(
         spark.read.parquet(f"{path}/codebook").select("sub", "code", "cvec")

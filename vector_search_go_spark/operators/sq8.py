@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.functions.metrics import l2_dist
+from vector_search_go_spark.functions.metrics import l2_dist, seq_dists
 from vector_search_go_spark.operators.topk import topk_per_group
 
 SQ_LEVELS = 256  # codes per dimension (8 bits)
@@ -119,7 +119,6 @@ def sq8_search(
     the pred chain's corpus scan (guide §8.4)."""
     if impl == "arrow":
         from vector_search_go_spark.operators.argmin import (
-            _seq_sq_l2,
             mesh_topk_arrays,
             query_matrix,
             scan_topk,
@@ -139,7 +138,7 @@ def sq8_search(
                 xhat = mins[None, :] + (C + 0.5) * scales[None, :]
                 # exact local top-shortlist per query: downstream is
                 # topk(shortlist) -> rerank -> topk(k)
-                D = np.sqrt(_seq_sq_l2(xhat, Q))
+                D = seq_dists("l2", xhat[:, None], Q[None])
                 return mesh_topk_arrays(D, ids_b, qids, shortlist)
 
             return score
@@ -212,10 +211,8 @@ def sq8_dists_np(q, mins, scales, C):
     """uint8 codes -> L2 distance to ``q`` of the midpoint
     reconstruction min + (code + 0.5) * scale — identical float ops
     and per-dimension fold order as sq8_search's arrow kernel."""
-    from vector_search_go_spark.operators.argmin import _seq_sq_l2
-
     xhat = mins[None, :] + (C.astype(np.float64) + 0.5) * scales[None, :]
-    return np.sqrt(_seq_sq_l2(xhat, q[None, :])[:, 0])
+    return seq_dists("l2", xhat, q)
 
 
 def sq8_encode_bytes_udf(mins, scales):

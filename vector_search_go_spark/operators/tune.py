@@ -25,7 +25,7 @@ k_min_vecs (SCALE.md sample_size scaling row) and nprobe/n_cells.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_go_spark.config import LshConfig
@@ -144,6 +144,22 @@ def advisor_report(
     bucket-join, and a trees-factor store blow-up (SCALE.md GloVe
     row). None (default) disables the gate — fraction-only ranking,
     the pre-gate behavior."""
+    rows = _advisor_measure(
+        spark, corpus, queries, metric, k, threshold, eps, lsh_configs,
+        ivf_configs, seed, sample_size,
+    )
+    return spark.createDataFrame(
+        _advisor_decide(rows, recall_band, max_useful_frac),
+        "family string, config string, eps_recall double, "
+        "cand_frac double, in_band boolean, recommended boolean",
+    )
+
+
+def _advisor_measure(spark, corpus, queries, metric, k, threshold, eps,
+                     lsh_configs, ivf_configs, seed, sample_size) -> list:
+    """advisor_report's measurement: one (family, config, eps_recall,
+    cand_frac) tuple per candidate config, the exact scan first. All
+    the Spark work (exact truth, training, candidate counts) is here."""
     from vector_search_go_spark.operators.exact_knn import exact_knn_join
     from vector_search_go_spark.operators.recall import (
         distance_based_precision_recall,
@@ -181,6 +197,19 @@ def advisor_report(
 
     for df in pins:
         df.unpersist()
+    return rows
+
+
+_ReportRow = Row(
+    "family", "config", "eps_recall", "cand_frac", "in_band", "recommended"
+)
+
+
+def _advisor_decide(rows: list, recall_band: float,
+                    max_useful_frac: float | None) -> list:
+    """advisor_report's decision over _advisor_measure's rows, pure (no
+    Spark): one report Row per measured config, ``recommended`` on the
+    cheapest eligible one."""
 
     def _eligible(fam: str, rec: float, frac: float) -> bool:
         if rec < recall_band:
@@ -191,16 +220,11 @@ def advisor_report(
 
     in_band = [row for row in rows if _eligible(row[0], row[2], row[3])]
     best = min(in_band, key=lambda row: (row[3], row[0], row[1]))
-    out = [
-        (fam, cfg, rec, frac, rec >= recall_band,
-         (fam, cfg) == (best[0], best[1]))
+    return [
+        _ReportRow(fam, cfg, rec, frac, rec >= recall_band,
+                   (fam, cfg) == (best[0], best[1]))
         for fam, cfg, rec, frac in rows
     ]
-    return spark.createDataFrame(
-        out,
-        "family string, config string, eps_recall double, "
-        "cand_frac double, in_band boolean, recommended boolean",
-    )
 
 
 def serving_batch_advisor(

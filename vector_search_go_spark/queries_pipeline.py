@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from vector_search_go_spark.io import ensure_parallelism, read_parquet_cached, table
 from vector_search_go_spark.operators.ann_ivf import assign_cells
+from vector_search_go_spark.operators.exact_knn import embeddings_split
 from vector_search_go_spark.oracle.vector_sql import sql_cosine_dist, sql_l2_dist
 from vector_search_go_spark.registry import register
 
@@ -85,32 +86,26 @@ def _ann_ivf_parts(spark: SparkSession, sf_dir: str, nprobe: int = 140):
     (cids, cmat), cell -> probing-query-ids map, collected query rows).
     One query-batch collect + one centroid-model read serve both
     ann_ivf_cosine and ivf_recall_vs_exact's pred AND truth chains."""
-    from vector_search_go_spark.operators.ann_ivf import probe_cells_local
+    from vector_search_go_spark.operators.ann_ivf import probe_cells
     from vector_search_go_spark.operators.argmin import collect_centroids
 
     emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
     centroids = emb.filter(F.col("vec_id") % 7 == 3).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    queries, corpus = embeddings_split(spark, sf_dir)
+    corpus = ensure_parallelism(corpus)
     qrows = sorted(
         queries.select("query_id", "qvec").collect(),
         key=lambda r: r["query_id"],
     )
-    cids, cmat = collect_centroids(centroids)
-    probed = probe_cells_local(qrows, cids, cmat, "cosine", nprobe)
+    model = collect_centroids(centroids)
+    probed = probe_cells([r["qvec"] for r in qrows], model, "cosine", nprobe)
     c2q: dict[int, list[int]] = {}
-    for r, cs in probed:
+    for r, cs in zip(qrows, probed):
         for c in cs:
             c2q.setdefault(int(c), []).append(int(r["query_id"]))
-    return queries, corpus, (cids, cmat), c2q, qrows
+    return queries, corpus, model, c2q, qrows
 
 
 @register(
@@ -872,14 +867,8 @@ def _pq_adc_parts(spark: SparkSession, sf_dir: str, trained: bool = False):
     )
 
     emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    queries, corpus = embeddings_split(spark, sf_dir)
+    corpus = ensure_parallelism(corpus)
     if trained:
         allv = ensure_parallelism(
             emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
@@ -1256,26 +1245,18 @@ def _ivfpq_res_components(spark: SparkSession, sf_dir: str):
     drift apart."""
     from vector_search_go_spark.operators.ann_ivf import (
         assign_cells,
-        probe_cells_local,
+        probe_cells,
     )
     from vector_search_go_spark.operators.argmin import collect_centroids
     from vector_search_go_spark.operators.kmeans import kmeans_fit
     from vector_search_go_spark.operators.model_store import cached_df
     from vector_search_go_spark.operators.pq import (
         pq_codebook_trained,
-        pq_codes_residual_udf,
         residual_vec_udf,
     )
 
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    queries, corpus = embeddings_split(spark, sf_dir)
+    corpus = ensure_parallelism(corpus)
     centroids = cached_df(
         spark,
         f"ivfpq_centroids_k{_IVFPQ_K}_i{_IVFPQ_ITERS}",
@@ -1301,7 +1282,7 @@ def _ivfpq_res_components(spark: SparkSession, sf_dir: str):
     # probe selection is query-batch x KB-model work: one collect of the
     # query batch (shared with the fused ADC kernel), then the same
     # (cdist, cid) ranking the crossJoin + rank-window produced, selected
-    # driver-side (ann_ivf.probe_cells_local) — drops a crossJoin +
+    # driver-side (ann_ivf.probe_cells) — drops a crossJoin +
     # window shuffle + broadcast-build job per invocation. The probe map
     # rides into the fused kernel's closure (cell -> probing query ids)
     # instead of a broadcast join against a separate code table.
@@ -1309,10 +1290,12 @@ def _ivfpq_res_components(spark: SparkSession, sf_dir: str):
         queries.select("query_id", "qvec").collect(),
         key=lambda r: r["query_id"],
     )
-    cids, cmat = collect_centroids(centroids)
-    probed = probe_cells_local(qrows, cids, cmat, "l2", _IVFPQ_NPROBE)
+    probed = probe_cells(
+        [r["qvec"] for r in qrows], collect_centroids(centroids), "l2",
+        _IVFPQ_NPROBE,
+    )
     cell_to_queries: dict[int, list[int]] = {}
-    for r, cs in probed:
+    for r, cs in zip(qrows, probed):
         for c in cs:
             cell_to_queries.setdefault(int(c), []).append(int(r["query_id"]))
 
@@ -1445,12 +1428,7 @@ def _ensure_ivfpq_sharded_store(spark: SparkSession, sf_dir: str) -> str:
         pq_codebook_residual,
     )
 
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    corpus = ensure_parallelism(embeddings_split(spark, sf_dir)[1])
     # every model-shaping parameter rides in the key (the
     # queries_lsh.py:263 convention): a constant change can never serve
     # a store trained under the old parameters to the hash check —
@@ -1501,10 +1479,7 @@ def serving_sharded_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lsh/lsh.go:137-197)."""
     from vector_search_go_spark.serve.sharded import ShardedReader
 
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = embeddings_split(spark, sf_dir)[0]
     path = _ensure_ivfpq_sharded_store(spark, sf_dir)
     qrows = sorted(queries.collect(), key=lambda r: r["query_id"])
     with ShardedReader(path) as reader:
@@ -1662,12 +1637,7 @@ def sq8_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's canonicalizer cannot hash array cells."""
     from vector_search_go_spark.operators.sq8 import sq8_encode, sq8_stats
 
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    corpus = ensure_parallelism(embeddings_split(spark, sf_dir)[1])
     codes = sq8_encode(corpus, sq8_stats(corpus, _SQ_DIM), _SQ_DIM)
     return codes.select(
         "id", F.posexplode("codes").alias("pos", "code")
@@ -1721,15 +1691,8 @@ def sq8_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist stays small and constant."""
     from vector_search_go_spark.operators.sq8 import sq8_search, sq8_stats
 
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    queries, corpus = embeddings_split(spark, sf_dir)
+    corpus = ensure_parallelism(corpus)
     stats = sq8_stats(corpus, _SQ_DIM)
     # one Arrow stage encodes + scores each corpus batch with the
     # parity-pinned numpy twins of the sq8_encode expression
@@ -1769,15 +1732,8 @@ def sq8_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the exact-KNN chain. Both chains are bit-identical to their
     # standalone twins (sq8_search_rerank / exact_knn_join); the oracle
     # hash pins the composition.
-    emb = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    corpus = ensure_parallelism(
-        emb.filter(F.col("vec_id") % 50 != 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    )
+    queries, corpus = embeddings_split(spark, sf_dir)
+    corpus = ensure_parallelism(corpus)
     qrows = sorted(
         queries.select("query_id", "qvec").collect(),
         key=lambda r: r["query_id"],

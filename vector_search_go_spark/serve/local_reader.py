@@ -14,7 +14,7 @@ These readers close that gap using ONLY the engine's own artifacts:
     centroids / PQ codebook — all KB-MB sized);
   - the query hashes / coarse-probes in numpy — the exact same code the
     engine broadcasts to executors (lsh.hasher.Forest,
-    operators.ann_ivf.probe_cells_for);
+    operators.ann_ivf.probe_cells);
   - the probed (tree, hash) bucket or cell partitions are read with
     pyarrow, exploiting the SAME layout the Spark paths rely on
     (hive-partitioned dirs + hash-sorted small row groups written by
@@ -22,8 +22,8 @@ These readers close that gap using ONLY the engine's own artifacts:
     prune everything but the probed buckets);
   - hot buckets are thinned by the same xxhash64 survivor rule
     (serve.xxh64 is a bit-exact port of Spark's hash), and scoring
-    uses the same sequential-IEEE numpy kernels
-    (operators.argmin.single_query_dists / _seq_sq_l2).
+    uses the same sequential-IEEE numpy kernel
+    (functions.metrics.seq_dists).
 
 Result: bit-identical rows to the Spark point paths on the same saved
 store (pinned in tests/test_serve_local.py) at single-digit-to-tens of
@@ -57,7 +57,8 @@ import os
 import numpy as np
 import pandas as pd
 
-from vector_search_go_spark.operators.argmin import single_query_dists
+from vector_search_go_spark.config import TWO_STAGE_MARGIN
+from vector_search_go_spark.functions.metrics import seq_dists
 from vector_search_go_spark.streaming.delete import (
     drop_tombstoned,
     load_tombstone_array,
@@ -233,18 +234,6 @@ def _swap_retry(fn):
     return wrapper
 
 
-# margin for the two-stage scorers: the BLAS stage's distance error is
-# bounded by sqrt(64 * ulp(scale^2)) ~ 1e-7 * scale (worst case,
-# near-duplicate cancellation); selecting everything within
-# TWO_STAGE_MARGIN of the k-th approximate distance therefore provably
-# contains the exact top-k (and every threshold-passing row), with
-# ~400x headroom. Proof sketch: |approx-exact| <= m' and
-# cutoff = kth_approx + m with m >= 2m' => any excluded candidate has
-# exact > kth_approx + m - m' >= exact_kth + (m - 2m') >= the k-th
-# exact distance, strictly — so exclusion never flips the exact
-# (dist, id) ranking of the returned rows.
-TWO_STAGE_MARGIN = 1e-4
-
 # candidate-set size at or below which _two_stage_dists runs the
 # sequential exact kernel on every row instead: the BLAS pass + margin
 # select + partial rescore has a fixed cost that only pays above it.
@@ -262,40 +251,39 @@ def _two_stage_dists(
     n2: np.ndarray,
     k: int,
     threshold: float | None,
-    margin: float = TWO_STAGE_MARGIN,
 ) -> np.ndarray:
     """Distances of q to the rows of V, bit-identical to
-    single_query_dists on every row that can be returned: a BLAS
+    seq_dists on every row that can be returned: a BLAS
     approximate pass (precomputed squared norms ``n2``) picks the
     margin set, the sequential-IEEE exact kernel rescores only that
     set. Sets of at most TWO_STAGE_MIN_ROWS rows take the exact kernel
     whole. Shared by the LSH, IVF and scan readers."""
     n = len(V)
     if n <= TWO_STAGE_MIN_ROWS:
-        return single_query_dists(metric, q, V)
+        return seq_dists(metric, q, V)
     is_cos = metric in ("cosine", "angular")
     q2 = float(q @ q)
     dot = V @ q
     if is_cos:
         nq = math.sqrt(q2)
         if nq <= 1e-6:
-            return single_query_dists(metric, q, V)
+            return seq_dists(metric, q, V)
         nv = np.sqrt(n2)
         with np.errstate(divide="ignore", invalid="ignore"):
             approx = 1.0 - dot / (nq * nv)
         approx = np.where(nv <= 1e-6, 1.0, approx)
-        m = margin
+        m = TWO_STAGE_MARGIN
     else:
         approx = np.sqrt(np.maximum(n2 - 2.0 * dot + q2, 0.0))
         scale = math.sqrt(q2 + float(n2.max()))
-        m = margin * max(1.0, scale)
+        m = TWO_STAGE_MARGIN * max(1.0, scale)
     cutoff = np.partition(approx, k - 1)[k - 1] if n > k else np.inf
     cutoff += m
     if threshold is not None:
         cutoff = max(cutoff, float(threshold) + m)
     sel = approx <= cutoff
     dists = approx
-    dists[sel] = single_query_dists(metric, q, V[sel])
+    dists[sel] = seq_dists(metric, q, V[sel])
     return dists
 
 
@@ -540,22 +528,17 @@ class LocalLshReader:
         V = list_column_matrix(tbl, "vec", self.config.dims)
         return ids[mask].tolist(), V[mask], None
 
-    # kept as a class attribute for existing callers/tests; the proof
-    # lives at the module-level constant
-    TWO_STAGE_MARGIN = TWO_STAGE_MARGIN
-
     def _score(self, q: np.ndarray, V: np.ndarray, rows, k: int,
                threshold: float | None) -> np.ndarray:
-        """Distances of q to V, bit-identical to single_query_dists on
+        """Distances of q to V, bit-identical to seq_dists on
         every row that can be returned. Large preloaded candidate sets
         use the shared two-stage scorer (_two_stage_dists) — the
         64-strided-pass exact kernel over 40k+ candidates was ~50 ms
         of the serving path."""
         if rows is None:
-            return single_query_dists(self.metric, q, V)
+            return seq_dists(self.metric, q, V)
         return _two_stage_dists(
-            self.metric, q, V, self._norms2[rows], k, threshold,
-            self.TWO_STAGE_MARGIN,
+            self.metric, q, V, self._norms2[rows], k, threshold
         )
 
     @_swap_retry
@@ -632,7 +615,7 @@ class LocalIvfReader:
     Probed rows are scored by the shared two-stage scorer
     (_two_stage_dists: BLAS bound, exact rescore of the margin set)
     above TWO_STAGE_MIN_ROWS, so returned rows stay bit-identical to
-    single_query_dists over every probed row.
+    seq_dists over every probed row.
 
     ``preload_cells=True`` pins every cell's (ids, matrix, squared
     norms) in reader RAM at init — the fully in-memory regime (same
@@ -703,10 +686,10 @@ class LocalIvfReader:
         threshold: float | None = None,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+        from vector_search_go_spark.operators.ann_ivf import probe_cells
 
         q = np.asarray(list(qvec), dtype=np.float64)
-        probed = probe_cells_for(None, None, q, self.metric, nprobe, model=self.model)
+        probed = probe_cells(q[None], self.model, self.metric, nprobe)[0]
         cell_map = (
             self._mem_cells if self._mem_cells is not None
             else self._read_cells(probed)
@@ -730,16 +713,12 @@ class LocalIvfReader:
         cost is bounded by the UNION of probed cells, not
         batch x nprobe. Per-query scoring order is unchanged (cells in
         probe order, rows in store order), so results cannot differ."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+        from vector_search_go_spark.operators.ann_ivf import probe_cells
 
         Q, query_ids = _batch_queries(Q, query_ids)
         if len(Q) == 0:
             return _result_frame([], [], k, 0)
-        probes = [
-            probe_cells_for(None, None, Q[i], self.metric, nprobe,
-                            model=self.model)
-            for i in range(len(Q))
-        ]
+        probes = probe_cells(Q, self.model, self.metric, nprobe)
         cell_map = (
             self._mem_cells if self._mem_cells is not None
             else self._read_cells(_union_values(probes))
@@ -935,13 +914,10 @@ class LocalIvfPqReader:
         per query, cells come in probe order and rows in store order,
         and slot selection keys on (adc, id), so a query's slots never
         depend on the rest of the batch."""
-        from vector_search_go_spark.operators.ann_ivf import probe_cells_for
+        from vector_search_go_spark.operators.ann_ivf import probe_cells
         from vector_search_go_spark.operators.pq import M_SUB
 
-        probes = [
-            probe_cells_for(None, None, q, "l2", nprobe, model=self.coarse)
-            for q in Q
-        ]
+        probes = probe_cells(Q, self.coarse, "l2", nprobe)
         if self._mem_codes is not None:
             cell_map = self._mem_codes
         else:
@@ -1010,7 +986,7 @@ class LocalIvfPqReader:
         id-sorted within a query. ONE union read (_rerank_rows) serves
         the batch; each query scores only its own id slice of it, so
         a row's distance never depends on the rest of the batch
-        (single_query_dists is per row)."""
+        (seq_dists is per row)."""
         want = [np.unique(_id_array(ids)) for ids in ids_per_query]
         union = np.concatenate(want) if want else np.empty(0, dtype=np.int64)
         rid, V = self._rerank_rows(union) if len(union) else (None, None)
@@ -1032,7 +1008,7 @@ class LocalIvfPqReader:
             ]
             qpos.append(np.full(len(rows), i, dtype=np.int64))
             sel.append(rows)
-            dist.append(single_query_dists("l2", Q[i], V[rows]))
+            dist.append(seq_dists("l2", Q[i], V[rows]))
         sel = np.concatenate(sel)
         return (
             np.concatenate(qpos),
@@ -1352,8 +1328,6 @@ class LocalScanReader:
     shared two-stage scorer, same (dist, id) tie-break, same threshold
     semantics (pinned in tests/test_serve_scan.py)."""
 
-    TWO_STAGE_MARGIN = TWO_STAGE_MARGIN
-
     def __init__(self, path: str, metric: str | None = None):
         import pyarrow.parquet as pq
 
@@ -1417,8 +1391,7 @@ class LocalScanReader:
     ) -> pd.DataFrame:
         q = np.asarray(list(qvec), dtype=np.float64)
         dists = _two_stage_dists(
-            self.metric, q, self.mat, self._norms2, k, threshold,
-            self.TWO_STAGE_MARGIN,
+            self.metric, q, self.mat, self._norms2, k, threshold
         )
         ids = self.ids
         if threshold is not None:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from vector_search_go_spark.functions.metrics import seq_dists
 from vector_search_go_spark.queries_text import _shingles_col, minhash_band_keys
 
 DOC_SCHEMA = "doc_id bigint, text string"
@@ -486,14 +487,14 @@ def stream_vector_band_keys(spark, vec_stream: DataFrame, forest) -> DataFrame:
     )
 
 
-def _make_vec_claim(dims: int, tol: float = 1e-6):
+def _make_vec_claim(dims: int):
     """Bucket-claim factory for vector buckets. State per (tree, hash):
     member ids + their vectors packed as one float64 blob (binary packs
     denser through the state store than nested arrays and reshapes for
     free). Each newcomer emits one row per existing member with the
-    EXACT cosine distance, computed with the same sequential
-    per-dimension accumulation as operators.argmin.pairwise_dist_udf so
-    gate distances are bit-identical to the batch verify stage."""
+    EXACT cosine distance (functions.metrics.seq_dists, the kernel of
+    operators.argmin.pairwise_dist_udf), so gate distances are
+    bit-identical to the batch verify stage."""
 
     def claim(
         key: tuple,
@@ -520,22 +521,7 @@ def _make_vec_claim(dims: int, tol: float = 1e-6):
                 continue
             v = arrivals[i]
             if len(ids):
-                # pairwise_dist_udf's exact op order: sequential
-                # per-dimension adds for norms and dot
-                na = np.zeros(len(ids))
-                dot = np.zeros(len(ids))
-                nb = 0.0
-                for d in range(dims):
-                    na += M[:, d] * M[:, d]
-                    nb += v[d] * v[d]
-                na = np.sqrt(na)
-                nb = np.sqrt(np.zeros(1) + nb)[0]
-                for d in range(dims):
-                    dot += M[:, d] * v[d]
-                raw = 1.0 - dot / (na * nb)
-                out = np.where(raw < tol, 0.0, raw)
-                out = np.where((na <= tol) | (nb <= tol), 1.0, out)
-                for j, cd in zip(ids, out):
+                for j, cd in zip(ids, seq_dists("cosine", M, v)):
                     a, b = (j, i) if j < i else (i, j)
                     rows.append((tree, a, b, float(cd)))
             ids.append(i)

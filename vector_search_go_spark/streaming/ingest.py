@@ -237,8 +237,7 @@ def ingest_to_sharded_store(
                 "shards_meta — re-save with ivf_save(shards=N)"
             )
         nearest = argmin_id_arrow(
-            spark.read.parquet(f"{shard0}/centroids"),
-            metric="l2" if metric == "l2" else "cosine",
+            spark.read.parquet(f"{shard0}/centroids"), metric=metric
         )
         writers = [
             (
@@ -393,9 +392,7 @@ def ingest_to_ivf_store(
     monitored with the recall harness."""
     from vector_search_go_spark.operators.argmin import argmin_id_arrow
 
-    nearest = argmin_id_arrow(
-        centroids, metric="l2" if metric == "l2" else "cosine"
-    )
+    nearest = argmin_id_arrow(centroids, metric=metric)
     assigned = vec_stream.select(
         "id", "vec", nearest(F.col("vec")).alias("cell")
     )
