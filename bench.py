@@ -20,7 +20,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -108,7 +107,7 @@ def main() -> None:
     from vector_search_go_spark.session import get_spark
     from vector_search_go_spark import registry
 
-    spark = get_spark("bench", cpus=CPUS)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 

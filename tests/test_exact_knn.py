@@ -81,13 +81,16 @@ import pytest
 
 @pytest.mark.parametrize("n_parts", [3, 1])
 def test_arrow_two_stage_matches_expr_oracle(spark, n_parts):
-    """The arrow kernel must be BIT-identical to the pure-Catalyst expr
-    plan, including duplicate-tie clusters, both metrics, and a
+    """The arrow kernel must be BIT-identical to the reference fold
+    (test_metrics.scalar_dist, one Python float at a time) with (dist,
+    id) ranks, including duplicate-tie clusters, both metrics, and a
     threshold cut. n_parts=3 exercises the cross-batch local-top-k
     merge on the small-block (full sequential) branch; n_parts=1 makes
     a single 1200-row batch so n_v x n_q = 72,000 > 65,536 and the
     BLAS-approx + margin-selection + pair-rescore branch is ON the
     tested path."""
+    from test_metrics import scalar_dist
+
     rng = np.random.default_rng(23)
     C = rng.normal(size=(1200, 8))
     C[1100:] = C[1100]  # 100-way tie cluster at the top-k boundary
@@ -108,20 +111,22 @@ def test_arrow_two_stage_matches_expr_oracle(spark, n_parts):
         ]
 
     for metric in ("l2", "cosine"):
+        ref = [
+            sorted((scalar_dist(metric, q, c), i) for i, c in enumerate(C))
+            for q in Q
+        ]
         for thr in (None, 1.0 if metric == "cosine" else 4.0):
-            a = rows(
-                exact_knn_join(
-                    queries, corpus, metric=metric, k=12, threshold=thr,
-                    impl="arrow",
-                )
+            got = rows(
+                exact_knn_join(queries, corpus, metric=metric, k=12, threshold=thr)
             )
-            b = rows(
-                exact_knn_join(
-                    queries, corpus, metric=metric, k=12, threshold=thr,
-                    impl="expr",
+            want = [
+                (j, i, d, rn)
+                for j, pairs in enumerate(ref)
+                for rn, (d, i) in enumerate(
+                    [p for p in pairs if thr is None or p[0] <= thr][:12], start=1
                 )
-            )
-            assert a == b, f"metric={metric} threshold={thr}"
+            ]
+            assert got == want, f"metric={metric} threshold={thr}"
 
 
 def test_two_stage_cosine_rescore_equals_scalar_fold():
@@ -205,8 +210,8 @@ def test_searches_tolerate_empty_queries(spark, family, truth_k):
         )
     elif family == "sq8":
         out = sq8_search(
-            empty_q, None, sq8_stats(corpus, 64), corpus, 64, k=5,
-            shortlist=20, truth_k=truth_k,
+            empty_q, sq8_stats(corpus, 64), corpus, k=5, shortlist=20,
+            truth_k=truth_k,
         )
     elif truth_k is None:
         out = exact_knn_join(empty_q, corpus, metric="l2", k=5)

@@ -175,11 +175,10 @@ def test_sq8_search_truth_fn_returns_identical_pair(spark):
 
     corpus, queries = _mk(spark, n_c=220, dim=8, seed=5)
     stats = sq8_stats(corpus, 8)
-    plain = sq8_search(queries, None, stats, corpus, 8, k=5, shortlist=20)
+    plain = sq8_search(queries, stats, corpus, k=5, shortlist=20)
     qrows = queries.select("query_id", "qvec").collect()
     fused, truth = sq8_search(
-        queries, None, stats, corpus, 8, k=5, shortlist=20, truth_k=5,
-        qrows=qrows,
+        queries, stats, corpus, k=5, shortlist=20, truth_k=5, qrows=qrows
     )
     assert _rows(plain) == _rows(fused)
     want = exact_knn_join(queries, corpus, metric="l2", k=5)

@@ -54,48 +54,16 @@ def test_random_graph_matches_union_find(spark):
     assert got == _uf_components(edges)
 
 
-def test_impl_parity_random_graph(spark):
-    """star and propagate reach the identical (unique) fixpoint."""
-    rng = random.Random(21)
-    edges = [(rng.randint(0, 80), rng.randint(0, 80)) for _ in range(100)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    star = {
-        r["id"]: r["label"]
-        for r in connected_components(df, impl="star", collect_threshold=None).collect()
-    }
-    prop = {
-        r["id"]: r["label"]
-        for r in connected_components(
-            df, impl="propagate", collect_threshold=None
-        ).collect()
-    }
-    assert star == prop == _uf_components(edges)
-
-
-def test_star_long_chain_logarithmic_rounds(spark):
-    """A 64-node chain (diameter 63) converges for star well inside 12
-    rounds — propagate would need 63. This is the scale property the
-    alternation buys (Kiveris et al., SoCC'14)."""
-    edges = [(i, i + 1) for i in range(63)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(
-            df, impl="star", max_iter=12, collect_threshold=None
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(64)}
-
-
 def test_star_self_loop_isolated_node(spark):
     edges = spark.createDataFrame([(7, 7), (1, 2)], "src bigint, dst bigint")
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(
-            edges, impl="star", collect_threshold=None
-        ).collect()
-    }
-    assert got == {7: 7, 1: 1, 2: 1}
+    for collect_threshold in (100_000, None):  # union-find, propagate
+        got = {
+            r["id"]: r["label"]
+            for r in connected_components(
+                edges, collect_threshold=collect_threshold
+            ).collect()
+        }
+        assert got == {7: 7, 1: 1, 2: 1}, collect_threshold
 
 
 def test_nonconvergence_raises(spark):
@@ -134,17 +102,7 @@ def test_local_fast_path_parity_and_fallback(spark):
         connected_components(chain, max_iter=1, collect_threshold=3)
 
 
-@pytest.mark.parametrize("collect_threshold", [0, 100_000])
-def test_unknown_impl_raises_on_both_paths(spark, collect_threshold):
-    """An unknown ``impl`` is rejected before the size probe, so a small
-    edge list cannot slip through to the driver-side union-find."""
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
-    with pytest.raises(ValueError, match="unknown connected_components impl"):
-        connected_components(edges, impl="bogus", collect_threshold=collect_threshold)
-
-
-@pytest.mark.parametrize("impl", ["propagate", "star"])
-def test_null_endpoints_dropped_on_both_paths(spark, impl):
+def test_null_endpoints_dropped_on_both_paths(spark):
     """Edges with a null endpoint are dropped before either path: the
     driver-side union-find (default threshold) and the distributed loop
     (threshold 0) return the same labels, with no null row."""
@@ -152,9 +110,9 @@ def test_null_endpoints_dropped_on_both_paths(spark, impl):
         [(1, 2), (2, None), (None, 3), (None, None), (4, 5), (6, None), (5, 1)],
         "src bigint, dst bigint",
     )
-    fast = {r["id"]: r["label"] for r in connected_components(edges, impl=impl).collect()}
+    fast = {r["id"]: r["label"] for r in connected_components(edges).collect()}
     dist = {
         r["id"]: r["label"]
-        for r in connected_components(edges, impl=impl, collect_threshold=0).collect()
+        for r in connected_components(edges, collect_threshold=0).collect()
     }
     assert fast == dist == {1: 1, 2: 1, 4: 1, 5: 1}

@@ -36,6 +36,29 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert "PartitionFilters: [isnotnull(yr" in plan or "yr#" in plan
 
 
+def test_read_cache_sees_file_added_to_partition(spark, tmp_path):
+    """A file landing in an existing ``tree=N/`` partition dir changes
+    neither the store dir's mtime nor ``_SUCCESS``; the stamp must
+    still change, so read_parquet_cached re-reads the store."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vector_search_go_spark.io import _path_stamp, read_parquet_cached
+
+    path = str(tmp_path / "buckets")
+    spark.createDataFrame(
+        [(0, 1, 10), (1, 2, 20)], "tree int, hash long, id long"
+    ).write.partitionBy("tree").parquet(path)
+    assert read_parquet_cached(spark, path).count() == 2
+    before = _path_stamp(path)
+    pq.write_table(
+        pa.table({"hash": pa.array([3], pa.int64()), "id": pa.array([30], pa.int64())}),
+        f"{path}/tree=0/part-extra.parquet",
+    )
+    assert _path_stamp(path) != before
+    assert read_parquet_cached(spark, path).count() == 3
+
+
 def _skewed_df(spark):
     # 10k rows of one hot key + 100 rows spread over 10 keys
     hot = spark.range(10_000).select(F.lit("hot").alias("k"), F.col("id").alias("v"))

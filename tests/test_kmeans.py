@@ -35,11 +35,16 @@ def test_fit_reduces_distortion(spark, sf_dir):
     trained = kmeans_fit(corpus, 16, iters=3)
 
     def distortion(cents):
-        from vector_search_go_spark.operators.pq import sq_l2
+        from vector_search_go_spark.functions.metrics import as_double
 
         a = kmeans_assign(corpus, cents)
+        diffsq = F.zip_with(
+            as_double(F.col("vec")), as_double(F.col("cvec")),
+            lambda x, y: (x - y) * (x - y),
+        )
+        sq_l2 = F.aggregate(diffsq, F.lit(0.0), lambda acc, v: acc + v)
         best = corpus.crossJoin(F.broadcast(cents)).select(
-            "id", sq_l2(F.col("vec"), F.col("cvec")).alias("d")
+            "id", sq_l2.alias("d")
         ).groupBy("id").agg(F.min("d").alias("d"))
         return best.agg(F.avg("d")).first()[0]
 

@@ -18,7 +18,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -31,7 +30,7 @@ def main() -> None:
 
     import bench
 
-    spark = get_spark("plans", cpus=CPUS)
+    spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     if not names:

@@ -96,9 +96,7 @@ def kcells(n: int = 10_000_000, dims: int = 64, *grid: int) -> None:
         print(f"# k_cells={kc} total build {build_s[kc]:.0f} s", flush=True)
 
     qids, Q = _queries(n, dims)
-    spark = get_spark(
-        "kcells-gt", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("kcells-gt")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     truth = p100._ground_truth(spark, n, dims, Q, qids, 10, f"{BASE}/gt.npz")
@@ -149,9 +147,7 @@ def clustered(
         p100.build(n, dims, 1, k_cells, path)
 
     qids, Q = _queries(n, dims)
-    spark = get_spark(
-        "clustered-gt", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("clustered-gt")
     spark.sparkContext.setLogLevel("ERROR")
     truth = p100._ground_truth(
         spark, n, dims, Q, qids, 10, f"{BASE}/gt_{tag}.npz"

@@ -154,9 +154,7 @@ def build(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "probe-100m-build", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-build")
     spark.sparkContext.setLogLevel("ERROR")
     corpus = gen_corpus(spark, n, dims)
 
@@ -268,9 +266,7 @@ def reencode(
 
     if encoding != "residual":
         raise SystemExit("--reencode currently targets encoding='residual'")
-    spark = get_spark(
-        "probe-100m-reencode", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-reencode")
     spark.sparkContext.setLogLevel("ERROR")
 
     todo = [
@@ -390,9 +386,7 @@ def resume_build(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "probe-100m-resume", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-resume")
     spark.sparkContext.setLogLevel("ERROR")
 
     def complete(k: int) -> bool:
@@ -622,9 +616,7 @@ def recall(
     qids = [int(i) for i in picks[20:]]
     Q = np.stack([vec_of(i, n, dims) for i in qids])
 
-    spark = get_spark(
-        "probe-100m-recall", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-recall")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = _time.time()
     truth = _ground_truth(
@@ -714,10 +706,7 @@ def recall_sq8(
     qids = [int(i) for i in picks[20:]]
     Q = np.stack([vec_of(i, n, dims) for i in qids])
 
-    spark = get_spark(
-        "probe-100m-recall-sq8",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_spark("probe-100m-recall-sq8")
     spark.sparkContext.setLogLevel("ERROR")
     truth = _ground_truth(
         spark, n, dims, Q, qids, k, os.path.join(path, "..", "gt100.npz")
@@ -793,9 +782,7 @@ def sq8_augment(path: str = DEFAULT_PATH, shards: int = 10) -> None:
     from vector_search_go_spark.operators.pq import sq8_augment_store
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "probe-100m-sq8aug", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-sq8aug")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     sq8_augment_store(spark, path, shards=shards)
@@ -821,9 +808,7 @@ def maintain(path: str = DEFAULT_PATH) -> None:
     from vector_search_go_spark.session import get_spark
     from vector_search_go_spark.streaming.maintain import maintain_ivfpq
 
-    spark = get_spark(
-        "probe-100m-maintain", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("probe-100m-maintain")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     rep = maintain_ivfpq(spark, path)

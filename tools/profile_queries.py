@@ -1,13 +1,18 @@
 """Per-query profiling for the optimization rounds (guide §1).
 
 For each named headline query (default: all), after one untimed warm
-pass (model caches hot, JVM warm), measures:
+pass (model caches hot, JVM warm), times 3 calls and reports the one
+with the median total (a single timed call moves by about a quarter
+between runs of the same tree):
 
   - build_s:  time for fn(spark, sf_dir) to RETURN the DataFrame —
               driver-side construction, including any model collects
   - exec_s:   time for the bench action (count / recall reduction)
-  - jobs:     Spark jobs launched during the whole invocation
-  - stages:   stages launched
+  - jobs:     Spark jobs launched during the first timed invocation
+  - stages:   stages launched by those jobs
+
+A timed call that launches a different number of jobs than the first
+raises: the entry's plan is not stable, so its timings do not compare.
 
 Prints one JSON line per query to stdout.  Run:
     python tools/profile_queries.py [query ...]
@@ -23,7 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -32,7 +36,7 @@ def main() -> None:
 
     import bench
 
-    spark = get_spark("profile", cpus=CPUS)
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     names = sys.argv[1:] or bench.HEADLINE
@@ -63,11 +67,21 @@ def main() -> None:
 
         spark.sparkContext.setJobDescription(f"warm:{name}")
         run_once()  # warm pass: models cached, code paths JITed
-        jobs0 = tracker.getJobIdsForGroup(None)
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        build_s, exec_s = run_once()
-        jobs1 = tracker.getJobIdsForGroup(None)
-        new_jobs = sorted(set(jobs1) - set(jobs0))
+        calls = []
+        for _ in range(3):
+            jobs0 = set(tracker.getJobIdsForGroup(None))
+            build, exe = run_once()
+            new_jobs = sorted(set(tracker.getJobIdsForGroup(None)) - jobs0)
+            calls.append((build + exe, build, exe, new_jobs))
+        new_jobs = calls[0][3]
+        for *_, jobs in calls[1:]:
+            if len(jobs) != len(new_jobs):
+                raise RuntimeError(
+                    f"{name}: timed calls launched {len(new_jobs)} and "
+                    f"{len(jobs)} Spark jobs"
+                )
+        _, build_s, exec_s, _ = sorted(calls, key=lambda c: c[0])[1]  # median
         n_stages = 0
         for j in new_jobs:
             ji = tracker.getJobInfo(j)

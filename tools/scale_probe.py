@@ -74,7 +74,7 @@ def main(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("scale-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     rng = np.random.default_rng(7)
@@ -208,7 +208,7 @@ def angular_probe(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("angular-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("angular-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     corpus, queries = make_angular_corpus(spark, n, dims, n_queries)
@@ -297,9 +297,7 @@ def angular_ivf_probe(
     from vector_search_go_spark.operators.tune import ivf_candidate_fraction
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "angular-ivf-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("angular-ivf-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     corpus, queries = make_angular_corpus(
@@ -363,7 +361,7 @@ def pq_probe(n: int = 1_000_000, dims: int = 64, k: int = 10, n_queries: int = 5
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("scale-probe-pq", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("scale-probe-pq")
     spark.sparkContext.setLogLevel("ERROR")
 
     rng = np.random.default_rng(11)
@@ -423,7 +421,7 @@ def vecs_probe(n: int = 1_000_000, dims: int = 64) -> None:
     from vector_search_go_spark.session import get_spark
     from vector_search_go_spark.sources import register_vecs_source, write_fvecs
 
-    spark = get_spark("vecs-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("vecs-probe")
     spark.sparkContext.setLogLevel("ERROR")
     register_vecs_source(spark)
     base = tempfile.mkdtemp(prefix="vecs_probe_")
@@ -488,7 +486,7 @@ def projection_probe(n: int = 1_000_000, dims: int = 64, out_dims: int = 16) -> 
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("proj-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("proj-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     X = rng.standard_normal((n, dims))
@@ -525,7 +523,7 @@ def serve_probe(n: int = 1_000_000, dims: int = 64, k_cells: int = 1024) -> None
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("serve-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("serve-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -599,7 +597,7 @@ def serve_batch_probe(n: int = 1_000_000, dims: int = 64, k_cells: int = 1024) -
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("serve-batch-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("serve-batch-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -672,7 +670,7 @@ def compact_probe(n: int = 1_000_000, dims: int = 64, n_chunks: int = 8) -> None
         ingest_to_bucket_store,
     )
 
-    spark = get_spark("compact-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("compact-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     X = rng.standard_normal((n, dims))
@@ -727,9 +725,7 @@ def capped_serve_probe(n: int = 1_000_000, dims: int = 64, n_dup: int = 100_000)
     from vector_search_go_spark.lsh.search import lsh_point_search
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "capped-serve-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("capped-serve-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(13)
     X = rng.standard_normal((n - n_dup, dims))
@@ -809,9 +805,7 @@ def compact_serve_probe(n: int = 1_000_000, dims: int = 64, n_chunks: int = 4) -
         ingest_to_bucket_store,
     )
 
-    spark = get_spark(
-        "compact-serve-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("compact-serve-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     X = rng.standard_normal((n, dims))
@@ -936,9 +930,7 @@ def sharded_serve_probe(
     from vector_search_go_spark.serve.sharded import ShardedReader
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "sharded-serve-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sharded-serve-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -1004,9 +996,7 @@ def sharded_lsh_probe(
     from vector_search_go_spark.serve.sharded import ShardedReader
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "sharded-lsh-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sharded-lsh-probe")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = LshConfig(
         dims=dims, n_trees=10, k_min_vecs=100, seed=7,
@@ -1130,9 +1120,7 @@ def sharded_ivf_probe(
     from vector_search_go_spark.serve.sharded import ShardedReader
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "sharded-ivf-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sharded-ivf-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -1246,9 +1234,7 @@ def sharded_ivfpq_probe(
     from vector_search_go_spark.serve.sharded import ShardedReader
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "sharded-ivfpq-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sharded-ivfpq-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -1382,9 +1368,7 @@ def vecs_arrival_probe(
     from vector_search_go_spark.sources import register_vecs_source, write_fvecs
     from vector_search_go_spark.streaming.ingest import ingest_to_sharded_store
 
-    spark = get_spark(
-        "vecs-arrival-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("vecs-arrival-probe")
     spark.sparkContext.setLogLevel("ERROR")
     register_vecs_source(spark)
     rng = np.random.default_rng(7)
@@ -1472,9 +1456,7 @@ def sharded_compact_probe(
     from vector_search_go_spark.session import get_spark
     from vector_search_go_spark.streaming.ingest import compact_bucket_store
 
-    spark = get_spark(
-        "sharded-compact-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sharded-compact-probe")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = LshConfig(
         dims=dims, n_trees=10, k_min_vecs=100, seed=7,
@@ -1580,9 +1562,7 @@ def local_serve_probe(n: int = 1_000_000, dims: int = 64, k_cells: int = 1024) -
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "local-serve-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("local-serve-probe")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(64, dims)) * 2.0
@@ -1792,7 +1772,7 @@ def glove_probe(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark("glove-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("glove-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     # corpus lands as parquet via pyarrow (createDataFrame of 1.18M
@@ -1938,9 +1918,7 @@ def media_gate_probe(
         )
         q.awaitTermination(1200)
 
-    spark = get_spark(
-        "media-gate-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("media-gate-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     def synth(lo, hi):
@@ -2055,9 +2033,7 @@ def media_dedup_probe(
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "media-dedup-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("media-dedup-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     # --- Part A: decode+hash throughput over real BMP payloads -------
@@ -2106,7 +2082,7 @@ def media_dedup_probe(
         f"hash-throughput: {n_out:,} {img_h}x{img_w} BMP payloads "
         f"encoded+decoded+pooled+hashed in {t_hash:.1f}s = "
         f"{n_out / t_hash:,.0f} items/s on "
-        f"{os.environ.get('SPARK_GRAFT_CPUS', '32')} cores"
+        f"{spark.sparkContext.defaultParallelism} cores"
     )
 
     # --- Part B: the banded join, worst-case uniform fingerprints ----
@@ -2194,10 +2170,7 @@ def media_probe_recovery(n: int = 10_000_000) -> None:
     )
     from vector_search_go_spark.session import get_spark
 
-    spark = get_spark(
-        "media-probe-recovery",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_spark("media-probe-recovery")
     spark.sparkContext.setLogLevel("ERROR")
 
     plant = {

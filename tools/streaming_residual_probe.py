@@ -77,9 +77,7 @@ def main(n_base: int = 800_000, n_stream: int = 200_000, dims: int = 64):
     from vector_search_go_spark.streaming.ingest import ingest_to_sharded_store
     from vector_search_go_spark.streaming.maintain import maintain_ivfpq
 
-    spark = get_spark(
-        "stream-res-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("stream-res-probe")
     spark.sparkContext.setLogLevel("ERROR")
     if os.path.exists(BASE_DIR):
         shutil.rmtree(BASE_DIR)
@@ -243,9 +241,7 @@ def main(n_base: int = 800_000, n_stream: int = 200_000, dims: int = 64):
         }
     )
     papq.write_table(tbl, f"{land2}/part0.parquet")
-    spark = get_spark(
-        "stream-res-probe2", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("stream-res-probe2")
     spark.sparkContext.setLogLevel("ERROR")
     stream2 = spark.readStream.schema("id bigint, vec array<double>").parquet(
         land2

@@ -42,26 +42,31 @@ _READ_MEMO: dict[str, tuple] = {}
 
 
 def _path_stamp(path: str) -> tuple:
-    """Cheap change detector for a parquet file/dir: mtime of the dir
-    entry itself plus _SUCCESS when present (directory writes touch
-    both), strengthened with the top-level file count + total byte size
-    (ADVICE r11: an in-place rewrite landing within mtime resolution
-    must still invalidate). Writers are expected to go through Spark's
-    directory-replacing overwrite; one scandir per read is the cost."""
+    """Cheap change detector for a parquet file/dir: the newest mtime,
+    file count and total byte size over the dir entry and every file
+    beneath it (ADVICE r11: an in-place rewrite landing within mtime
+    resolution must still invalidate). Subdirectories are walked, so a
+    ``partitionBy`` store (the LSH ``buckets`` table's ``tree=N/``
+    dirs) invalidates on a file added to one partition even when
+    ``_SUCCESS`` is not rewritten. One scandir per directory per read
+    is the cost."""
     st = os.path.getmtime(path)
     n_files = 0
     total = 0
-    if os.path.isdir(path):
-        with os.scandir(path) as it:
+    if not os.path.isdir(path):
+        return (st, 0, os.path.getsize(path))
+    dirs = [path]
+    while dirs:
+        with os.scandir(dirs.pop()) as it:
             for e in it:
-                if e.is_file():
+                if e.is_dir():
+                    dirs.append(e.path)
+                    st = max(st, e.stat().st_mtime)
+                elif e.is_file():
                     s = e.stat()
                     n_files += 1
                     total += s.st_size
-                    if s.st_mtime > st:
-                        st = s.st_mtime
-    else:
-        total = os.path.getsize(path)
+                    st = max(st, s.st_mtime)
     return (st, n_files, total)
 
 

@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.functions.metrics import metric_dist
 from vector_search_go_spark.lsh.index import LshIndex, _hash_probe_udf
 from vector_search_go_spark.operators.topk import topk_per_group
 
@@ -101,7 +100,6 @@ def lsh_search(
     k: int = 10,
     threshold: float | None = None,
     broadcast_queries: bool = True,
-    impl: str = "fanin",
     qrows: list | None = None,
 ) -> DataFrame:
     """queries(query_id, qvec) -> (query_id, id, dist, rn).
@@ -112,25 +110,19 @@ def lsh_search(
     it to skip the per-invocation collect job. Must hold exactly the
     rows ``queries`` would produce; only used when broadcast_queries.
 
-    ``impl='fanin'`` (default) groups candidate pairs per corpus id and
-    scores them in one mapInPandas pass with the query matrix in the
-    closure — each candidate corpus vector crosses the Arrow boundary
-    ONCE instead of once per pair, and no qvec is ever joined onto pair
-    rows (at 60k x 784-d, 100 queries: 39 s -> 13 s warm, 84 s -> 16 s
-    cold).
-    ``impl='arrow'`` is the per-pair vectorized kernel
-    (operators.argmin.pairwise_dist_udf); ``impl='expr'`` the pure
-    Catalyst fold. All three are bit-identical (same sequential IEEE
-    adds; parity pinned by tests/test_argmin_parity.py and the
-    canonical hashes)."""
+    ``broadcast_queries`` (default True): the query batch is
+    driver-collectable, so candidates are grouped per corpus id and
+    scored in one mapInPandas pass with the query matrix in the closure
+    (argmin.fanin_query_scorer) — each candidate corpus vector crosses
+    the Arrow boundary ONCE instead of once per pair, and no qvec is
+    ever joined onto pair rows (at 60k x 784-d, 100 queries: 39 s ->
+    13 s warm, 84 s -> 16 s cold). False is the caller's signal that
+    queries are large: they stay distributed — hashed by a pandas UDF
+    and joined onto the candidate pairs, scored by the per-pair Arrow
+    kernel (argmin.pairwise_dist_udf). Both scorers run seq_dists, so
+    the two paths return bit-identical rows."""
     spark = queries.sparkSession
     n_trees = index.config.n_trees
-    if impl == "fanin" and not broadcast_queries:
-        # fanin ships the collected query matrix in its closure — it
-        # REQUIRES a driver-collectable query batch. broadcast_queries=
-        # False is the caller's signal that queries are large, so keep
-        # them distributed via the per-pair Arrow kernel instead.
-        impl = "arrow"
     q_rows = None
     if broadcast_queries:
         # The query batch is driver-collectable by contract here, and
@@ -207,7 +199,7 @@ def lsh_search(
         .dropDuplicates(["query_id", "id"])
     )
 
-    if impl == "fanin":
+    if broadcast_queries:
         from vector_search_go_spark.operators.argmin import fanin_query_scorer
 
         # One shuffle of (query_id, id) pair rows — tiny — then the
@@ -215,11 +207,11 @@ def lsh_search(
         # being duplicated per pair. collect_set dedups (query, id)
         # inside the same aggregation; sort_array makes the list order
         # (hence Arrow batch content) deterministic.
-        fanin = cand.groupBy("id").agg(
-            F.sort_array(F.collect_set("query_id")).alias("qids")
+        fanin = F.broadcast(
+            cand.groupBy("id").agg(
+                F.sort_array(F.collect_set("query_id")).alias("qids")
+            )
         )
-        if broadcast_queries:
-            fanin = F.broadcast(fanin)
         qid_t = queries.schema["query_id"].dataType.simpleString()
         id_t = index.vectors.schema["id"].dataType.simpleString()
         # downstream is [threshold →] topk(max_candidates) → topk(k),
@@ -232,34 +224,16 @@ def lsh_search(
             fanin_query_scorer(queries, metric, local_topk=local_l, qrows=q_rows),
             schema=f"query_id {qid_t}, id {id_t}, dist double",
         )
-        if threshold is not None:
-            scored = scored.filter(F.col("dist") <= F.lit(float(threshold)))
-        if index.config.max_candidates is not None:
-            scored = topk_per_group(
-                scored,
-                ["query_id"],
-                "dist",
-                index.config.max_candidates,
-                tiebreak_cols=["id"],
-                rank_name="_cand_rank",
-            ).drop("_cand_rank")
-        top = topk_per_group(scored, ["query_id"], "dist", k, tiebreak_cols=["id"])
-        return top.select("query_id", "id", "dist", "rn")
-
-    qvecs = queries
-    if broadcast_queries:
-        qvecs = F.broadcast(qvecs)
-    if impl == "arrow":
+    else:
         from vector_search_go_spark.operators.argmin import pairwise_dist_udf
 
-        dist_col = pairwise_dist_udf(metric)(F.col("qvec"), F.col("vec"))
-    else:
-        dist_col = metric_dist(metric, F.col("qvec"), F.col("vec"))
-    scored = (
-        cand.join(index.vectors, on="id")
-        .join(qvecs, on="query_id")
-        .withColumn("dist", dist_col)
-    )
+        scored = (
+            cand.join(index.vectors, on="id")
+            .join(queries, on="query_id")
+            .withColumn(
+                "dist", pairwise_dist_udf(metric)(F.col("qvec"), F.col("vec"))
+            )
+        )
     if threshold is not None:
         scored = scored.filter(F.col("dist") <= F.lit(float(threshold)))
     if index.config.max_candidates is not None:

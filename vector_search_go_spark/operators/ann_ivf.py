@@ -26,33 +26,14 @@ from vector_search_go_spark.operators.topk import topk_per_group
 
 def assign_cells(
     corpus: DataFrame, centroids: DataFrame, metric: str = "cosine",
-    impl: str = "arrow",
 ) -> DataFrame:
     """corpus(id, vec) x centroids(cid, cvec) -> (id, vec, cell):
     nearest centroid per vector, (dist, cid) tie-break. Never shuffles
-    or aggregates the corpus — a pure map stage either way.
-
-    ``impl='expr'`` packs centroids into one broadcast array row with
-    the argmin in a single projection (operators.argmin) — zero Python
-    but interpreted higher-order lambdas. ``impl='arrow'`` (default) is
-    the Arrow-batched numpy argmin with fold-order-identical distances
-    (operators.argmin.argmin_id_arrow) — bit-identical output, ~30x at
-    the 1M probe."""
+    or aggregates the corpus — one map stage running the Arrow-batched
+    numpy argmin (operators.argmin.argmin_id_arrow), whose distances
+    are metric_dist's fold bit for bit; ~30x the interpreted
+    higher-order-lambda argmin at the 1M probe."""
     from vector_search_go_spark.io import ensure_parallelism
-
-    if impl == "expr":
-        from vector_search_go_spark.operators.argmin import argmin_id, pack_centroids
-
-        cents_arr = pack_centroids(centroids)
-        cell = argmin_id(
-            F.col("_cents"), lambda cv: metric_dist(metric, F.col("vec"), cv)
-        )
-        return (
-            ensure_parallelism(corpus)
-            .crossJoin(F.broadcast(cents_arr))
-            .select("id", "vec", cell.alias("cell"))
-        )
-
     from vector_search_go_spark.operators.argmin import argmin_id_arrow
 
     nearest = argmin_id_arrow(centroids, metric=metric)
@@ -178,65 +159,34 @@ def ivf_search(
     metric: str = "cosine",
     k: int = 10,
     nprobe: int = 4,
-    impl: str = "arrow",
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """queries(query_id, qvec) -> (query_id, id, dist, rn), probing the
     nprobe nearest cells per query.
 
     ``broadcast_queries`` (the lsh_search contract flag, VERDICT r11
-    what's-wrong #1): the arrow path collects the query batch to the
-    driver for driver-side probe selection — correct only when queries
-    are the broadcast-small side. Pass False for query batches that
-    must stay distributed: probes are then selected with the
-    crossJoin + rank-window plan (no driver collect anywhere) and
-    scoring keeps the Arrow pairwise kernel — bit-identical output.
+    what's-wrong #1) picks where probes are selected:
 
-    The candidate distance (the hot expression — every probed-cell
-    member per query) uses the Arrow pairwise kernel by default;
-    Spark's higher-order fold evaluates interpreted per element, so at
-    large cells the lambda dispatch dominates. Bit-identical to
-    ``impl='expr'`` (same sequential IEEE adds; parity pinned in
-    tests/test_argmin_parity.py).
+    - True (driver probe): the query batch is collected and probes are
+      selected driver-side (probe_cells) — a pure function of the
+      query batch and the KB-sized centroid model. Materializing the
+      probe list as a local relation removes a crossJoin + rank-window
+      shuffle + broadcast-build job per invocation while shipping the
+      same rows to the same broadcast join. Correct only when queries
+      are the broadcast-small side.
+    - False (distributed probe): probes are selected with the crossJoin
+      + rank-window plan over the same (cdist, cid) order — no driver
+      collect anywhere, for query batches that must stay distributed.
 
-    The probe list (queries x nprobe rows) is selected driver-side on
-    the arrow path (probe_cells): it is a pure function of the
-    query batch and the KB-sized centroid model, and materializing it
-    as a local relation removes a crossJoin + rank-window shuffle +
-    broadcast-build job per invocation while shipping the same rows to
-    the same broadcast join. ``impl='expr'`` keeps the pure-Catalyst
-    probe so the expression path stays exercised end-to-end."""
-    if impl == "arrow" and not broadcast_queries:
-        from vector_search_go_spark.operators.argmin import pairwise_dist_udf
+    Both score candidates (every probed-cell member per query) with the
+    Arrow pairwise kernel (seq_dists, metric_dist's numpy twin), so
+    the two paths return bit-identical rows."""
+    from vector_search_go_spark.operators.argmin import pairwise_dist_udf
 
-        # distributed probe selection (the pre-r11 crossJoin + window
-        # shape): same (cdist, cid) ranking, no driver collect; the
-        # candidate scorer stays the Arrow pairwise kernel, so rows are
-        # bit-identical to the collected path (probe_cells scores with
-        # seq_dists, metric_dist's numpy twin)
-        qprobe = (
-            queries.crossJoin(F.broadcast(centroids))
-            .withColumn("cdist", metric_dist(metric, F.col("qvec"), F.col("cvec")))
-        )
-        probes = topk_per_group(
-            qprobe, ["query_id"], "cdist", nprobe, tiebreak_cols=["cid"],
-            rank_name="_r",
-        ).select("query_id", "qvec", F.col("cid").alias("cell"))
-        cand = (
-            probes.join(cells, on="cell")
-            .withColumn(
-                "dist", pairwise_dist_udf(metric)(F.col("qvec"), F.col("vec"))
-            )
-        )
-        top = topk_per_group(cand, ["query_id"], "dist", k, tiebreak_cols=["id"])
-        return top.select("query_id", "id", "dist", "rn")
-    if impl == "arrow":
+    if broadcast_queries:
         from pyspark.sql.types import StructField, StructType
 
-        from vector_search_go_spark.operators.argmin import (
-            collect_centroids,
-            pairwise_dist_udf,
-        )
+        from vector_search_go_spark.operators.argmin import collect_centroids
 
         qrows = sorted(
             queries.select("query_id", "qvec").collect(),
@@ -263,12 +213,7 @@ def ivf_search(
             F.broadcast(probes)
             .join(cells, on="cell")
             .join(F.broadcast(queries.select("query_id", "qvec")), on="query_id")
-            .withColumn(
-                "dist", pairwise_dist_udf(metric)(F.col("qvec"), F.col("vec"))
-            )
         )
-        top = topk_per_group(cand, ["query_id"], "dist", k, tiebreak_cols=["id"])
-        return top.select("query_id", "id", "dist", "rn")
     else:
         qprobe = (
             queries.crossJoin(F.broadcast(centroids))
@@ -278,10 +223,10 @@ def ivf_search(
             qprobe, ["query_id"], "cdist", nprobe, tiebreak_cols=["cid"],
             rank_name="_r",
         ).select("query_id", "qvec", F.col("cid").alias("cell"))
-        dist_col = metric_dist(metric, F.col("qvec"), F.col("vec"))
-    # queries x nprobe rows — always the small side; without the hint
-    # Catalyst picks SortMergeJoin and shuffles the whole cell store.
-    cand = F.broadcast(probes).join(cells, on="cell").withColumn("dist", dist_col)
+        cand = probes.join(cells, on="cell")
+    cand = cand.withColumn(
+        "dist", pairwise_dist_udf(metric)(F.col("qvec"), F.col("vec"))
+    )
     top = topk_per_group(cand, ["query_id"], "dist", k, tiebreak_cols=["id"])
     return top.select("query_id", "id", "dist", "rn")
 

@@ -7,10 +7,10 @@ vector, optional distance threshold, top-k by ascending distance. Same
 
 Spark shape: the corpus streams past the in-memory query set exactly
 once (no corpus shuffle — the optimal exact-KNN plan at any scale),
-then WindowGroupLimit top-k. Default distance kernel is an
-Arrow-batched numpy matrix per corpus batch (mapInPandas, query matrix
-in the closure); ``impl='expr'`` keeps the pure-Catalyst broadcast
-cross join + fold expression as the bit-identical oracle reference.
+then WindowGroupLimit top-k. The distance kernel is an Arrow-batched
+numpy matrix per corpus batch (mapInPandas, query matrix in the
+closure) whose distances are metric_dist's fold bit for bit; the
+DuckDB oracle hashes pin them end to end.
 
 At 100 TB this is the ground-truth/oracle path by design — the production
 ANN path is ``vector_search_go_spark.lsh`` (SURVEY.md section 7 Phase 1).
@@ -22,14 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.config import TOL, TWO_STAGE_MARGIN
-from vector_search_go_spark.functions.metrics import (
-    dot,
-    is_angular,
-    l2_norm,
-    metric_dist,
-    seq_dists,
-)
+from vector_search_go_spark.config import TWO_STAGE_MARGIN
+from vector_search_go_spark.functions.metrics import is_angular, seq_dists
 from vector_search_go_spark.io import read_parquet_cached
 from vector_search_go_spark.operators.topk import topk_per_group
 
@@ -40,61 +34,45 @@ def exact_knn_join(
     metric: str = "l2",
     k: int = 10,
     threshold: float | None = None,
-    impl: str = "arrow",
     qrows: list | None = None,
 ) -> DataFrame:
     """queries(query_id, qvec) x corpus(id, vec) -> (query_id, id, dist, rn).
 
-    ``qrows``: a pre-collected (query_id, qvec) row list for the arrow
-    impl — callers that already materialized the query batch (the
-    recall-vs-exact entries share one collect between the pred chain
-    and this truth chain) pass it to skip the per-invocation collect
-    job. Must hold exactly the rows ``queries`` would produce.
+    ``qrows``: a pre-collected (query_id, qvec) row list — callers that
+    already materialized the query batch (the recall-vs-exact entries
+    share one collect between the pred chain and this truth chain)
+    pass it to skip the per-invocation collect job. Must hold exactly
+    the rows ``queries`` would produce.
 
     ``threshold`` mirrors the reference's ``distanceThrsh`` filter
     (lsh/lsh.go:177); None means no thresholding.
 
-    ``impl='expr'``: broadcast cross join + native fold distance — the
-    pure-Catalyst oracle reference. For cosine, norms are precomputed
-    once per row on each side — one fold per pair instead of three
-    (bit-identical: same folds, same vectors).
-
-    ``impl='arrow'`` (default): ``mapInPandas`` over corpus batches
-    with the query matrix in the closure (queries are the
-    broadcast-small side by contract — collecting them driver-side is
-    the same bound as the broadcast). Each batch emits only its LOCAL
-    exact top-k rows per query: top-k under the global (dist, id)
-    order is selection-monotone across any partition of the corpus, so
-    the global winners are exactly the winners of the per-batch
-    winners, and the threshold filter only ever removes a suffix of
-    that order — |batch| x k rows cross the shuffle instead of
-    |batch| x |queries| pairs. Inside a batch the local top-k is found
-    two-stage: a BLAS approximate pass bounds the per-query k-th
-    distance, the SEQUENTIAL per-dimension kernel (seq_dists — the
-    exact IEEE order of the fold) rescores everything within a
-    provable margin, and emitted distances are always the exact
-    values (parity pinned by the knn oracle hashes and
-    tests/test_argmin_parity.py).
+    ``mapInPandas`` over corpus batches with the query matrix in the
+    closure (queries are the broadcast-small side by contract —
+    collecting them driver-side is the same bound as a broadcast).
+    Each batch emits only its LOCAL exact top-k rows per query: top-k
+    under the global (dist, id) order is selection-monotone across any
+    partition of the corpus, so the global winners are exactly the
+    winners of the per-batch winners, and the threshold filter only
+    ever removes a suffix of that order — |batch| x k rows cross the
+    shuffle instead of |batch| x |queries| pairs. Inside a batch the
+    local top-k is found two-stage: a BLAS approximate pass bounds the
+    per-query k-th distance, the SEQUENTIAL per-dimension kernel
+    (seq_dists — the exact IEEE order of the fold) rescores everything
+    within a provable margin, and emitted distances are always the
+    exact values (pinned by the knn oracle hashes and the in-test fold
+    of tests/test_exact_knn.py).
     """
     from vector_search_go_spark.io import ensure_parallelism
+    from vector_search_go_spark.operators.argmin import scan_topk
 
     corpus = ensure_parallelism(corpus)
-    if impl == "arrow":
-        return _exact_knn_arrow(queries, corpus, metric, k, threshold, qrows=qrows)
-    if metric in ("cosine", "angular"):
-        queries = queries.withColumn("_qn", l2_norm(F.col("qvec")))
-        corpus = corpus.withColumn("_vn", l2_norm(F.col("vec")))
-        cand = corpus.crossJoin(F.broadcast(queries))
-        raw = F.lit(1.0) - dot(F.col("qvec"), F.col("vec")) / (
-            F.col("_qn") * F.col("_vn")
-        )
-        dist = F.when(
-            (F.col("_qn") <= F.lit(TOL)) | (F.col("_vn") <= F.lit(TOL)), F.lit(1.0)
-        ).otherwise(F.when(raw < F.lit(TOL), F.lit(0.0)).otherwise(raw))
-        cand = cand.withColumn("dist", dist)
-    else:
-        cand = corpus.crossJoin(F.broadcast(queries))
-        cand = cand.withColumn("dist", metric_dist(metric, F.col("qvec"), F.col("vec")))
+    if qrows is None:
+        qrows = queries.select("query_id", "qvec").collect()
+    cand = scan_topk(
+        corpus, qrows, lambda rows: exact_local_topk_kernel(rows, metric, k),
+        "dist", metric,
+    )
     if threshold is not None:
         cand = cand.filter(F.col("dist") <= F.lit(float(threshold)))
     top = topk_per_group(
@@ -107,7 +85,7 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
     """Per-batch exact-KNN local top-k as a reusable closure:
     ``fn(V, ids_b) -> (q_arr, i_arr, d_arr)`` — two-stage BLAS bound +
     sequential-IEEE rescore above 65,536 pairs, full sequential matrix
-    below. It is ``_exact_knn_arrow``'s scorer AND the truth kernel the
+    below. It is exact_knn_join's scorer AND the truth kernel the
     fused pred+truth scans run (argmin.scan_topk ``truth_k``: the
     ``*_recall_vs_exact`` entries share one corpus scan between the ANN
     chain and this truth chain), so both run the bit-identical code
@@ -160,30 +138,6 @@ def exact_local_topk_kernel(qrows, metric: str, k: int):
         return qids[cols[keep]], ids_b[rows[keep]], dist_sel[keep]
 
     return batch_fn
-
-
-def _exact_knn_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    metric: str,
-    k: int,
-    threshold: float | None,
-    qrows: list | None = None,
-) -> DataFrame:
-    from vector_search_go_spark.operators.argmin import scan_topk
-
-    if qrows is None:
-        qrows = queries.select("query_id", "qvec").collect()
-    cand = scan_topk(
-        corpus, qrows, lambda rows: exact_local_topk_kernel(rows, metric, k),
-        "dist", metric,
-    )
-    if threshold is not None:
-        cand = cand.filter(F.col("dist") <= F.lit(float(threshold)))
-    top = topk_per_group(
-        cand, ["query_id"], "dist", k, tiebreak_cols=["id"], rank_name="rn"
-    )
-    return top.select("query_id", "id", "dist", "rn")
 
 
 def embeddings_split(

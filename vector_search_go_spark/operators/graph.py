@@ -14,24 +14,10 @@ min-id label propagation:
     of scheduling and is oracle-checkable against a recursive-CTE
     transitive closure.
 
-Two interchangeable implementations (identical fixpoint, parity-pinned
-in tests/test_graph.py):
-
-  - ``impl='propagate'`` (default) — min-label propagation; rounds =
-    graph diameter, one join + one groupBy per round. Near-dup graphs
-    are shallow cliques/short chains, so this wins on latency: measured
-    at sf0.01, curate_training_corpus is 5.2 s with propagate vs 13.8 s
-    with star (star pays two grouped passes per round and its log-round
-    advantage never engages on diameter <= 3 graphs).
-  - ``impl='star'`` — the large-star/small-star alternation of
-    Kiveris et al., "Connected Components in MapReduce and Beyond"
-    (SoCC'14): rounds = O(log n) on ANY topology, and high-degree nodes
-    shrink their own stars instead of funneling every neighbor through
-    one reducer. This is the path to pick at 100 TB when components may
-    be deep or a celebrity node would hotspot one reducer
-    (tests/test_graph.py::test_star_long_chain_logarithmic_rounds pins
-    the 64-chain converging inside 12 rounds where propagate needs 63;
-    test_impl_parity_random_graph pins the identical fixpoint).
+Rounds = graph diameter, one join + one groupBy per round. Near-dup
+graphs are shallow cliques/short chains (diameter <= 3), and edge lists
+up to ``collect_threshold`` never reach the loop at all: the driver-side
+union-find resolves them in zero Spark rounds.
 
 Each round ends in `localCheckpoint` to truncate lineage — without it
 the plan doubles per iteration and the job graph, not the data, becomes
@@ -49,7 +35,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    impl: str = "propagate",
     collect_threshold: int | None = 100_000,
 ) -> DataFrame:
     """Resolve an undirected edge list into components.
@@ -74,8 +59,6 @@ def connected_components(
 
     Edges with a null endpoint are dropped before either path runs, so
     a node that appears only in such edges gets no row."""
-    if impl not in ("propagate", "star"):
-        raise ValueError(f"unknown connected_components impl {impl!r}")
     edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
     if collect_threshold is not None:
         probe = edges.select(
@@ -83,8 +66,6 @@ def connected_components(
         ).limit(collect_threshold + 1).collect()
         if len(probe) <= collect_threshold:
             return _cc_local(edges.sparkSession, probe, edges.schema[src].dataType)
-    if impl == "star":
-        return _cc_star(edges, src, dst, max_iter)
     # lazy checkpoints: the convergence count right below is the FIRST
     # action over each round's plan, so materialization rides inside
     # that job — one job per round instead of two (eager checkpoint +
@@ -121,7 +102,7 @@ def connected_components(
 def _cc_local(spark, edge_rows, id_type) -> DataFrame:
     """Driver-side union-find over a collected edge list: one row per
     distinct node, label = min node id in its component — the identical
-    fixpoint to the distributed impls (unique by definition), computed
+    fixpoint to the distributed loop (unique by definition), computed
     without per-round Spark jobs. Path-halving + union-by-min keeps it
     near-linear; the result is a local relation the consumers can
     broadcast."""
@@ -154,104 +135,16 @@ def _cc_local(spark, edge_rows, id_type) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _cc_star(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al., SoCC'14).
-
-    Edge-set rewriting: large-star hangs every neighbor larger than u
-    off u's local minimum; small-star re-hangs the smaller neighbors.
-    The edge set converges to disjoint stars whose centers are the
-    component minima — O(log n) rounds on any topology. Convergence is
-    detected by an (edge count, xor of xxhash64) fingerprint: one cheap
-    agg per round instead of a full except-join (xor is commutative and
-    overflow-free under ANSI mode; edges are distinct so nothing
-    self-cancels)."""
-    nodes = edges.select(F.col(src).alias("id")).union(
-        edges.select(F.col(dst).alias("id"))
-    ).distinct()
-
-    # Canonical undirected edge set (a < b); self-loops carry no
-    # connectivity and are re-attached via `nodes` at the end.
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        # lazy: the fingerprint agg below materializes it in its own job
-        .localCheckpoint(eager=False)
-    )
-
-    def fingerprint(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("a", "b")).alias("h")
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def large_star(df: DataFrame) -> DataFrame:
-        sym = df.union(df.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = sym.groupBy("a").agg(F.min("b").alias("m0"))
-        mins = mins.select("a", F.least("m0", F.col("a")).alias("m"))
-        return (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        )
-
-    def small_star(df: DataFrame) -> DataFrame:
-        # Orient each edge off its larger endpoint u; neighbors v < u.
-        o = df.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        mins = o.groupBy("u").agg(F.min("v").alias("m"))
-        leaves = o.join(mins, "u").where(F.col("v") != F.col("m")).select(
-            F.col("v").alias("x"), F.col("m")
-        )
-        selves = mins.select(F.col("u").alias("x"), F.col("m"))
-        return leaves.union(selves)
-
-    def canon(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    fp = fingerprint(e)
-    for _ in range(max_iter):
-        stepped = small_star(canon(large_star(e))).toDF("a", "b")
-        e = canon(stepped).localCheckpoint(eager=False)
-        fp2 = fingerprint(e)
-        if fp2 == fp:
-            # Stars: every edge is (leaf, center) with center the
-            # component min; a node's label is its min neighbor (or
-            # itself for centers / isolated self-loop nodes).
-            sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            labels = (
-                sym.groupBy("a").agg(F.min("b").alias("m"))
-                .select(F.col("a").alias("id"), F.least("m", F.col("a")).alias("label"))
-            )
-            return (
-                nodes.join(labels, "id", "left")
-                .select("id", F.coalesce("label", F.col("id")).alias("label"))
-            )
-        fp = fp2
-    raise RuntimeError(
-        f"connected_components(star) did not converge in {max_iter} rounds"
-    )
-
-
 def duplicate_groups(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    impl: str = "propagate",
 ) -> DataFrame:
     """Resolve dup-candidate pairs into groups: one row per duplicate
     group — (group_id = canonical min doc id, n_docs, member ids
     sorted). Every node in the edge list lands in exactly one group of
     size >= 2."""
-    comp = connected_components(pairs, src=id_a, dst=id_b, impl=impl)
+    comp = connected_components(pairs, src=id_a, dst=id_b)
     return comp.groupBy(F.col("label").alias("group_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sort_array(F.collect_list("id")).alias("doc_ids"),

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_search_go_spark.functions.metrics import as_double
-from vector_search_go_spark.operators.pq import sq_l2
 
 
 def kmeans_init(
@@ -100,33 +99,21 @@ def kmeans_assign(
     corpus: DataFrame,
     cents: DataFrame,
     group: list[str] | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """corpus(id, vec) x cents(cid, cvec) -> (*group, id, vec, cell):
-    nearest centroid by squared L2, (d, cid) tie-break. Pure map stage
-    over the corpus either way — no corpus shuffle, no per-id
-    aggregation; k-means iterations cost one corpus SCAN each, not one
-    corpus EXCHANGE each.
+    nearest centroid by squared L2, (d, cid) tie-break. One pure map
+    stage over the corpus — no corpus shuffle, no per-id aggregation;
+    k-means iterations cost one corpus SCAN each, not one corpus
+    EXCHANGE each.
 
-    ``impl='expr'``: centroid table collapses to one broadcast array
-    row per group value (operators.argmin) with the argmin in a single
-    projection — the pure-Catalyst reference. ``impl='arrow'``
-    (default): Arrow-batched numpy argmin with fold-order-identical
-    distances — bit-identical output (tests/test_argmin_parity.py),
-    ~10-30x at the 1M probe; grouped input uses the per-group kernel
+    The Arrow-batched numpy argmin (operators.argmin) scores with
+    metric_dist's fold order, so cells are the oracle's bit for bit;
+    ~10-30x the interpreted higher-order-lambda argmin at the 1M
+    probe. Grouped input uses the per-group kernel
     (argmin_id_arrow_grouped, single group column)."""
-    group = group or []
-    if impl == "expr":
-        from vector_search_go_spark.operators.argmin import argmin_id, pack_centroids
-
-        carr = F.broadcast(pack_centroids(cents, group=group))
-        joined = corpus.join(carr, on=group) if group else corpus.crossJoin(carr)
-        cell = argmin_id(F.col("_cents"), lambda cv: sq_l2(F.col("vec"), cv))
-        return joined.select(*group, "id", "vec", cell.alias("cell"))
-
     if group:
         if len(group) != 1:
-            raise ValueError("arrow kmeans_assign supports a single group column")
+            raise ValueError("kmeans_assign supports a single group column")
         from vector_search_go_spark.operators.argmin import argmin_id_arrow_grouped
 
         nearest = argmin_id_arrow_grouped(cents, group[0], metric="sq_l2")
@@ -182,18 +169,17 @@ def kmeans_step(
     dim: int = 64,
     exact: bool = False,
     group: list[str] | None = None,
-    impl: str = "expr",
 ) -> DataFrame:
     """One Lloyd iteration: assign + recompute means; empty cells keep
     their previous centroid (left join + coalesce).
 
-    ``impl`` selects the assignment kernel. The Arrow kernel collects
-    the centroid table eagerly at plan time, so it is only safe here
-    when the caller MATERIALIZES centroids between iterations
-    (kmeans_fit does) — against a lazy unrolled chain the eager collect
-    re-executes the whole lineage once per iteration."""
+    The assignment kernel collects the centroid table eagerly at plan
+    time, so callers chaining steps should MATERIALIZE centroids
+    between iterations (kmeans_fit does) — against a lazy unrolled
+    chain the eager collect re-executes the whole lineage once per
+    iteration."""
     group = group or []
-    assigned = kmeans_assign(corpus, cents, group=group, impl=impl)
+    assigned = kmeans_assign(corpus, cents, group=group)
     means = (
         _means_exact(assigned, dim, group) if exact else _means_avg(assigned, group)
     ).withColumnRenamed("cell", "cid")
@@ -289,9 +275,7 @@ def kmeans_fit(
     schema = cents.schema
     for _ in range(iters):
         cents = spark.createDataFrame(cents.collect(), schema)
-        cents = kmeans_step(
-            train_df, cents, dim=dim, exact=exact, group=group, impl="arrow"
-        )
+        cents = kmeans_step(train_df, cents, dim=dim, exact=exact, group=group)
     if pinned is not None:
         cents = spark.createDataFrame(cents.collect(), schema)
         pinned.unpersist()

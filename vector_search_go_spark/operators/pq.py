@@ -30,7 +30,7 @@ import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.functions.metrics import as_double, l2_dist, seq_dists
+from vector_search_go_spark.functions.metrics import l2_dist, seq_dists
 from vector_search_go_spark.operators.topk import topk_per_group
 
 M_SUB = 16  # subspaces
@@ -74,13 +74,6 @@ def pq_shortlist(k: int = 10) -> int:
     BASELINE.md bands with a rerank cost that stays flat as the corpus
     grows (SCALE.md probes it at 1M vectors)."""
     return max(PQ_SHORTLIST, 4 * k)
-
-
-def sq_l2(a: Column, b: Column) -> Column:
-    """Squared L2 — l2_dist without the sqrt (ADC sums these across
-    subspaces before one final sqrt). Same fold order as metrics.py."""
-    diffsq = F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.aggregate(diffsq, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _subvec(col: Column, sub: Column) -> Column:
@@ -153,40 +146,20 @@ def pq_codebook_residual(
     return pq_codebook_trained(res, iters=iters, exact=exact)
 
 
-def pq_encode(corpus: DataFrame, codebook: DataFrame, impl: str = "arrow") -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
     """corpus(id, vec) -> (id, sub, code): nearest codeword per
     subspace, (dist, code) tie-break. The corpus is never shuffled or
-    aggregated either way (VERDICT r2 finding #3).
+    aggregated (VERDICT r2 finding #3).
 
-    Two bit-identical implementations (asserted in
-    tests/test_argmin_parity.py, and both hash-equal to the DuckDB
-    oracle):
-
-    - ``impl='expr'``: pure-Catalyst — the codebook packs to M_SUB
-      broadcast rows of array<struct<code, cvec>> (operators.argmin)
-      and the argmin is one projection. Zero Python, but Spark
-      evaluates higher-order lambdas INTERPRETED per element: at 1M
-      vectors the 16-subspace x 128-codeword fold is minutes of lambda
-      dispatch.
-    - ``impl='arrow'`` (default): one Arrow-batched pandas UDF computes
-      all M_SUB codes per vector with numpy using SEQUENTIAL
-      per-dimension adds — the exact IEEE order of the fold — then
-      posexplode fans out (sub, code). The codebook rides in the UDF
-      closure (KBs). This is the sanctioned Python hot path: a batched
-      matmul-shaped kernel built-ins cannot express efficiently."""
-    if impl == "expr":
-        from vector_search_go_spark.operators.argmin import argmin_id, pack_centroids
-
-        cb = pack_centroids(codebook, id_col="code", group=["sub"], out_col="_codes")
-        code = argmin_id(
-            F.col("_codes"),
-            lambda cv: sq_l2(_subvec(F.col("vec"), F.col("sub")), cv),
-            id_field="code",
-        )
-        return (
-            corpus.crossJoin(F.broadcast(cb)).select("id", "sub", code.alias("code"))
-        )
-
+    One Arrow-batched pandas UDF (pq_codes_udf) computes all M_SUB
+    codes per vector with numpy using SEQUENTIAL per-dimension adds —
+    the exact IEEE order of the Catalyst fold, so codes hash-equal the
+    DuckDB oracle — then posexplode fans out (sub, code). The codebook
+    rides in the UDF closure (KBs). This is the sanctioned Python hot
+    path: a batched matmul-shaped kernel built-ins cannot express
+    efficiently (the interpreted higher-order-lambda argmin over 16
+    subspaces x 128 codewords is minutes of lambda dispatch at 1M
+    vectors)."""
     return corpus.select(
         "id", F.posexplode(pq_codes_udf(codebook)(F.col("vec"))).alias("sub", "code")
     )
@@ -434,7 +407,6 @@ def pq_adc_scores_fused(
         qids, Q = query_matrix(rows)
         cb_ids, cb_mats = _codebook_mats(codebook)
         # adc[q, sub, code]: codes must be the contiguous 0..N-1 range
-        # the element_at arithmetic of the expr path assumes too
         for sub in range(M_SUB):
             assert list(cb_ids[sub]) == list(range(N_CODES)), (
                 "non-contiguous codebook codes"
@@ -473,7 +445,7 @@ def ivfpq_adc_scores_fused(
 
       - assignment: sqrt'd sequential-IEEE L2 + first-min argmin over
         ascending cids == argmin_id_arrow(metric='l2') == the Catalyst
-        fold (tests/test_argmin_parity.py);
+        fold's (dist, cid) order;
       - residual codes: pq_encode_np == pq_codes_residual_udf;
       - ADC: ivfadc_dists — residual_lut tables per (query, cell),
         adc_fold's subspace-ordered sums, sqrt at the end (the
@@ -507,7 +479,7 @@ def ivfpq_adc_scores_fused(
 
         def score(V, ids_b):
             # coarse assignment: compare sqrt'd distances (the domain
-            # the expression path compares in — see argmin_id_arrow)
+            # metric_dist and the oracle rank in — see argmin_id_arrow)
             cell_idx = seq_dists("l2", V[:, None], C[None]).argmin(axis=1)
             codes = pq_encode_np(V - C[cell_idx], cb_ids, cb_mats)
             qp, r, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cids[cell_idx], codes)

@@ -90,13 +90,10 @@ def sq8_dequant(codes: Column, dim: int) -> Column:
 
 def sq8_search(
     queries: DataFrame,
-    codes: DataFrame | None,
     stats: DataFrame,
     corpus: DataFrame,
-    dim: int,
     k: int = 10,
     shortlist: int = SQ_SHORTLIST,
-    impl: str = "arrow",
     truth_k: int | None = None,
     qrows: list | None = None,
 ):
@@ -104,59 +101,46 @@ def sq8_search(
     L2 against dequantized codes for a shortlist, exact rerank for the
     final top-k.
 
-    ``impl='arrow'`` (default) encodes and scans ``corpus`` in one
-    Arrow stage (argmin.scan_topk, guide §4.2): each batch is encoded
-    with sq8_encode_np — the parity-pinned numpy twin of the sq8_encode
-    Catalyst expression — dequantized (``min + (code+0.5)*scale``, the
-    same two IEEE ops per element) and scored against every query with
-    sequential per-dimension adds, bit-identical to the ``impl='expr'``
-    fold over the precomputed ``codes`` (pinned by the sq8 oracle
-    hashes). ``codes`` is read only by ``impl='expr'``.
+    Encodes and scans ``corpus`` in one Arrow stage (argmin.scan_topk,
+    guide §4.2): each batch is encoded with sq8_encode_np — the numpy
+    twin of the sq8_encode Catalyst expression — dequantized
+    (``min + (code+0.5)*scale``, the same two IEEE ops per element) and
+    scored against every query with sequential per-dimension adds, the
+    fold order of l2_dist (pinned by the sq8 oracle hashes).
 
-    ``truth_k`` (arrow impl): the scan also feeds the exact-KNN truth
-    chain and the return value becomes a (search_result, truth) pair
-    (see scan_topk) — the recall-vs-exact entry's truth chain rides
-    the pred chain's corpus scan (guide §8.4)."""
-    if impl == "arrow":
-        from vector_search_go_spark.operators.argmin import (
-            mesh_topk_arrays,
-            query_matrix,
-            scan_topk,
-        )
+    ``truth_k``: the scan also feeds the exact-KNN truth chain and the
+    return value becomes a (search_result, truth) pair (see scan_topk)
+    — the recall-vs-exact entry's truth chain rides the pred chain's
+    corpus scan (guide §8.4)."""
+    from vector_search_go_spark.operators.argmin import (
+        mesh_topk_arrays,
+        query_matrix,
+        scan_topk,
+    )
 
-        if qrows is None:
-            qrows = queries.select("query_id", "qvec").collect()
+    if qrows is None:
+        qrows = queries.select("query_id", "qvec").collect()
 
-        def scorer(rows):
-            qids, Q = query_matrix(rows)
-            srow = stats.collect()[0]
-            mins = np.array(list(srow["mins"]), dtype=np.float64)
-            scales = np.array(list(srow["scales"]), dtype=np.float64)
+    def scorer(rows):
+        qids, Q = query_matrix(rows)
+        srow = stats.collect()[0]
+        mins = np.array(list(srow["mins"]), dtype=np.float64)
+        scales = np.array(list(srow["scales"]), dtype=np.float64)
 
-            def score(V, ids_b):
-                C = sq8_encode_np(V, mins, scales).astype(np.float64)
-                xhat = mins[None, :] + (C + 0.5) * scales[None, :]
-                # exact local top-shortlist per query: downstream is
-                # topk(shortlist) -> rerank -> topk(k)
-                D = seq_dists("l2", xhat[:, None], Q[None])
-                return mesh_topk_arrays(D, ids_b, qids, shortlist)
+        def score(V, ids_b):
+            C = sq8_encode_np(V, mins, scales).astype(np.float64)
+            xhat = mins[None, :] + (C + 0.5) * scales[None, :]
+            # exact local top-shortlist per query: downstream is
+            # topk(shortlist) -> rerank -> topk(k)
+            D = seq_dists("l2", xhat[:, None], Q[None])
+            return mesh_topk_arrays(D, ids_b, qids, shortlist)
 
-            return score
+        return score
 
-        approx = scan_topk(corpus, qrows, scorer, "approx_dist", "l2", truth_k)
-        if truth_k is not None:
-            approx, truth = approx
-            return _sq8_finish(approx, queries, corpus, k, shortlist), truth
-    elif truth_k is not None:
-        raise ValueError("truth_k needs impl='arrow'")
-    else:
-        approx = (
-            codes.crossJoin(F.broadcast(stats))
-            .withColumn("xhat", sq8_dequant(F.col("codes"), dim))
-            .crossJoin(F.broadcast(queries))
-            .withColumn("approx_dist", l2_dist(F.col("qvec"), F.col("xhat")))
-            .select("query_id", "id", "approx_dist")
-        )
+    approx = scan_topk(corpus, qrows, scorer, "approx_dist", "l2", truth_k)
+    if truth_k is not None:
+        approx, truth = approx
+        return _sq8_finish(approx, queries, corpus, k, shortlist), truth
     return _sq8_finish(approx, queries, corpus, k, shortlist)
 
 
@@ -192,7 +176,7 @@ def _sq8_finish(
 # shortlist against 8-bit scalar-quantized vectors first (8x smaller
 # rows, pinnable at scales where floats are not), keep a small top-K'
 # by (sq8_dist, id), and exact-rerank only those. The numpy kernels
-# below are fold-order-identical to sq8_search's arrow path, so the
+# below are fold-order-identical to sq8_search's scan kernel, so the
 # serving tier, the Spark DataFrame path, and the DuckDB oracle agree
 # bit-for-bit.
 
@@ -210,7 +194,7 @@ def sq8_encode_np(V, mins, scales):
 def sq8_dists_np(q, mins, scales, C):
     """uint8 codes -> L2 distance to ``q`` of the midpoint
     reconstruction min + (code + 0.5) * scale — identical float ops
-    and per-dimension fold order as sq8_search's arrow kernel."""
+    and per-dimension fold order as sq8_search's scan kernel."""
     xhat = mins[None, :] + (C.astype(np.float64) + 0.5) * scales[None, :]
     return seq_dists("l2", xhat, q)
 

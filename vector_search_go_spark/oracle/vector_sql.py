@@ -43,7 +43,7 @@ def sql_l2_dist(a: str, b: str) -> str:
 
 
 def sql_sq_l2(a: str, b: str) -> str:
-    """Squared L2 (no sqrt) — mirrors operators.pq.sq_l2's fold."""
+    """Squared L2 (no sqrt) — mirrors functions.metrics.seq_dists('sq_l2')."""
     diffsq = (
         f"list_transform(list_zip({a}, {b}), "
         f"_t -> (CAST(_t[1] AS DOUBLE) - CAST(_t[2] AS DOUBLE)) * "

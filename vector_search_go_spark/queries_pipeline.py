@@ -1696,7 +1696,7 @@ def sq8_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = sq8_stats(corpus, _SQ_DIM)
     # one Arrow stage encodes + scores each corpus batch with the
     # parity-pinned numpy twins of the sq8_encode expression
-    return sq8_search(queries, None, stats, corpus, _SQ_DIM, k=10)
+    return sq8_search(queries, stats, corpus, k=10)
 
 
 @register(
@@ -1740,7 +1740,7 @@ def sq8_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = sq8_stats(corpus, _SQ_DIM)
     pred, truth = sq8_search(
-        queries, None, stats, corpus, _SQ_DIM, k=10, truth_k=10, qrows=qrows
+        queries, stats, corpus, k=10, truth_k=10, qrows=qrows
     )
     return precision_recall(pred, truth)
 

@@ -13,8 +13,12 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app: str = "vector_search_go_spark", cpus: int | None = None) -> SparkSession:
+    """Local-mode session on ``local[cpus]``. ``cpus`` defaults to
+    $SPARK_GRAFT_CPUS, else the machine's core count — this is the one
+    reader of that variable, so tools and the bench run on the same
+    core count."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
