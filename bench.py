@@ -80,12 +80,13 @@ def _calibration(spark) -> dict:
     """Fixed-work probes timed in THIS process so a reviewer can divide
     box speed out of the headline (VERDICT r6 What's-wrong #1: a 14%
     driver-vs-local delta was judged load noise, but the artifact could
-    not prove it). Two axes, min-of-3 each: a pinned numpy matmul
-    (BLAS/memory-bus speed — what the Arrow kernels see) and a pinned
+    not prove it). Three axes, min-of-3 each: a pinned numpy matmul
+    (BLAS/memory-bus speed — what the Arrow kernels see), a pinned
     trivial Spark job (JVM/scheduler speed — what every query's fixed
-    floor sees). Both are deterministic work; ONLY the wall-clock
-    varies with box state, so the ratio vs another run's calibration is
-    a pure box-speed factor."""
+    floor sees) and a one-partition RDD map (``python_task_sec``: the
+    fixed cost every Python task adds to that floor). All are
+    deterministic work; ONLY the wall-clock varies with box state, so
+    the ratio vs another run's calibration is a pure box-speed factor."""
     import numpy as np
 
     rng = np.random.default_rng(0)
@@ -100,7 +101,13 @@ def _calibration(spark) -> dict:
         t0 = time.time()
         spark.range(50_000_000).selectExpr("sum(id * 2 + 1)").collect()
         t_sp = min(t_sp, time.time() - t0)
-    return {"numpy_matmul_sec": round(t_np, 4), "spark_job_sec": round(t_sp, 4)}
+    t_py = float("inf")
+    for _ in range(3):
+        t0 = time.time()
+        spark.sparkContext.parallelize([1], 1).map(lambda x: x + 1).collect()
+        t_py = min(t_py, time.time() - t0)
+    return {"numpy_matmul_sec": round(t_np, 4), "spark_job_sec": round(t_sp, 4),
+            "python_task_sec": round(t_py, 4)}
 
 
 def main() -> None:

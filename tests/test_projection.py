@@ -1,16 +1,13 @@
 """Random projection (operators.projection): seeded determinism, JL
-distance preservation, and expr==arrow bit-parity."""
+distance preservation, and bit-parity of the Arrow kernel with the
+sequential fold over input dims."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.operators.projection import (
-    project_arrow,
-    project_expr,
-    projection_matrix,
-)
+from vector_search_go_spark.operators.projection import project_arrow, projection_matrix
 
 
 def test_matrix_seeded_and_scaled():
@@ -23,20 +20,27 @@ def test_matrix_seeded_and_scaled():
     assert abs(np.mean(a**2) * 16 - 1.0) < 0.2
 
 
-def test_expr_arrow_bit_parity(spark):
+def _fold_projection(x, mat) -> list[float]:
+    """y_j = fold over input dims i = 0..D-1 of acc + x_i * m[i][j], from
+    0.0, one Python float add at a time."""
+    out = []
+    for j in range(mat.shape[1]):
+        acc = 0.0
+        for i in range(mat.shape[0]):
+            acc = acc + float(x[i]) * float(mat[i, j])
+        out.append(acc)
+    return out
+
+
+def test_arrow_matches_sequential_fold(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     mat = projection_matrix(64, 8, seed=3)
-    e = emb.select(
-        "vec_id", project_expr(F.col("embedding"), mat).alias("y")
+    rows = emb.select(
+        "vec_id", "embedding", project_arrow(mat)(F.col("embedding")).alias("y")
     ).collect()
-    a = emb.select(
-        "vec_id", project_arrow(mat)(F.col("embedding")).alias("y")
-    ).collect()
-    ev = {r["vec_id"]: r["y"] for r in e}
-    av = {r["vec_id"]: r["y"] for r in a}
-    assert ev.keys() == av.keys()
-    for k in ev:
-        assert ev[k] == av[k]  # exact float equality, not approx
+    assert rows
+    for r in rows:
+        assert list(r["y"]) == _fold_projection(r["embedding"], mat)  # exact, not approx
 
 
 def test_jl_preserves_pairwise_distances(spark):

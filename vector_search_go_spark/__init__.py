@@ -6,7 +6,7 @@ north-star baseline requires.
 Layout (SURVEY.md section 7 build plan):
 
 - ``config``     — immutable engine config (reference lsh/lsh.go:59-82)
-- ``session``    — SparkSession builder tuned for local[32] testing
+- ``session``    — SparkSession builder tuned for local[nproc] testing
 - ``io``         — parquet table loading (replaces HDF5 scan, annbench.go:195-218)
 - ``functions``  — native column expressions: metrics, vector math, text
 - ``operators``  — exact KNN, stats, recall, dedup, text analysis, multimodal
@@ -14,6 +14,7 @@ Layout (SURVEY.md section 7 build plan):
 - ``relational`` — relational query pack over the TPC-H-ish tables
 - ``streaming``  — Structured Streaming ingest of the events table
 - ``oracle``     — DuckDB-SQL builders mirroring our Spark expressions
+- ``worker_daemon`` — Python worker daemon: zip importers re-read only changed archives
 """
 
 __version__ = "0.2.0"

@@ -9,19 +9,19 @@ distances within (1 +/- eps) with high probability, shrinking both the
 index and every distance evaluation downstream.
 
 Spark-first shape: the projection matrix is model-sized (dim_in x
-dim_out doubles, KBs) and rides either as a nested array literal
-(expression path) or in a pandas-UDF closure (Arrow path, default).
+dim_out doubles, KBs) and rides in a pandas-UDF closure.
 Projection is a pure per-row map — NO shuffle, no join; at 100 TB it
 pipelines inside the scan stage.
 
-Bit-exactness: both paths accumulate over input dimension i in
+Bit-exactness: the kernel accumulates over input dimension i in
 ascending order with plain IEEE adds:
 
     y_j = fold_{i=0..D-1} acc + x_i * m[i][j]
 
 which is the same order as the DuckDB oracle's
 ``list_reduce(list_prepend(0.0, list_transform(range(1, D+1), ...)))``
-— so expr == arrow == oracle to the last ulp (tests/test_projection.py).
+— so kernel == oracle to the last ulp (tests/test_projection.py checks
+the kernel against that fold written out in the test).
 
 The matrix itself is derived from a counter-mode PCG64 stream seeded by
 an explicit integer — the same "seeded, reproducible model" discipline
@@ -33,8 +33,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
 # survive postponed annotation evaluation
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def projection_matrix(dim_in: int, dim_out: int, seed: int = 0) -> np.ndarray:
@@ -44,35 +42,11 @@ def projection_matrix(dim_in: int, dim_out: int, seed: int = 0) -> np.ndarray:
     return rng.standard_normal((dim_in, dim_out)) / np.sqrt(dim_out)
 
 
-def _matrix_literal(mat: np.ndarray) -> Column:
-    """Nested array<array<double>> literal column of the matrix."""
-    return F.array(
-        *[F.array(*[F.lit(float(v)) for v in row]) for row in mat]
-    )
-
-
-def project_expr(vec: Column, mat: np.ndarray) -> Column:
-    """Pure-Catalyst projection: array<double> of length dim_out.
-    Interpreted lambda dispatch (dim_in x dim_out evaluations per row) —
-    the oracle-reference path; use project_arrow in hot paths."""
-    m = _matrix_literal(mat)
-    dim_in, dim_out = mat.shape
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(dim_out)),
-        lambda j: F.aggregate(
-            F.sequence(F.lit(1), F.lit(dim_in)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + F.element_at(vec, i).cast("double") * F.element_at(F.element_at(m, i), j),
-        ),
-    )
-
-
 def project_arrow(mat: np.ndarray):
     """Arrow-batched projection kernel: returns a pandas_udf column
     function over the row vector. Accumulates over input dims in
-    ascending order (one rank-1 update per dim), matching the fold —
-    bit-identical to project_expr."""
+    ascending order (one rank-1 update per dim), bit-identical to the
+    sequential fold ``sql_projection_fold`` writes for DuckDB."""
     from pyspark.sql.functions import pandas_udf
 
     m = np.ascontiguousarray(mat, dtype=np.float64)
@@ -107,7 +81,7 @@ def sql_projection_fold(mat: np.ndarray, vec_expr: str = "embedding",
                         j_expr: str = "j.pos") -> str:
     """DuckDB fold fragment: projected value at 1-based output position
     ``j_expr``, referencing the CTE's ``m`` column — same ascending-i
-    sequential adds as project_expr/project_arrow."""
+    sequential adds as project_arrow."""
     dim_in = mat.shape[0]
     return (
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "

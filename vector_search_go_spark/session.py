@@ -3,6 +3,22 @@
 On a real cluster the caller owns the session; these defaults matter only
 for the local[N] harness. AQE stays on so skewed bucket joins re-plan at
 runtime — the knob that matters at 100 TB.
+
+Python workers start from ``worker_daemon`` rather than
+``pyspark.daemon``. Before every task pyspark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``,
+and on CPython 3.11 that makes every ``zipimport.zipimporter`` re-read
+its archive's central directory (3.12 made the re-read lazy,
+gh-103200). A reused worker holds 16 such importers: 12 over
+``pyspark.zip`` (1,328 entries), 2 over the py4j zip and 2 over the
+spark-core jar (5,359 entries). On a 4-core box that cost 0.13-0.23 s
+of worker CPU per task before the UDF ran, and a one-partition RDD
+``map`` took 0.18-0.19 s (best of 3). ``worker_daemon`` re-reads an
+archive only when its ``(st_mtime_ns, st_size)`` stamp changed: 0.01-0.02
+s of worker CPU per task, and that ``map`` takes 0.09 s. On CPython >=
+3.12 it patches nothing and only starts ``pyspark.daemon``. The
+package's parent directory goes on the executors' ``PYTHONPATH`` so the
+daemon module imports wherever the driver runs.
 """
 
 from __future__ import annotations
@@ -10,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app: str = "vector_search_go_spark", cpus: int | None = None) -> SparkSession:
@@ -34,6 +52,8 @@ def get_spark(app: str = "vector_search_go_spark", cpus: int | None = None) -> S
         # range, which defeats row-group skipping on hash-spread keys.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "vector_search_go_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .getOrCreate()
     )
