@@ -130,20 +130,21 @@ def test_arrow_two_stage_matches_expr_oracle(spark, n_parts):
 
 
 def test_two_stage_cosine_rescore_equals_scalar_fold():
-    """Above 65,536 pairs exact_local_topk_kernel bounds with BLAS and
-    rescores the margin set exactly: every emitted cosine distance
+    """Above TWO_STAGE_MIN_PAIRS pairs exact_local_topk_kernel bounds
+    with BLAS and rescores the margin set exactly: every emitted cosine distance
     must be the sequential fold's (both norms included — the BLAS
     stage's einsum norms must not leak into the rescore), and the
     emitted (query, id) set must be the mesh top-10 by (dist, id)."""
     from test_metrics import scalar_dist
 
+    from vector_search_go_spark.config import TWO_STAGE_MIN_PAIRS
     from vector_search_go_spark.functions.metrics import seq_dists
     from vector_search_go_spark.operators.exact_knn import exact_local_topk_kernel
 
     rng = np.random.default_rng(3)
     V = rng.standard_normal((4000, 64))
     Q = rng.standard_normal((20, 64))
-    assert len(V) * len(Q) > 65536
+    assert len(V) * len(Q) > TWO_STAGE_MIN_PAIRS
     ids = np.arange(len(V), dtype=np.int64) * 3 + 1
     qrows = [{"query_id": j, "qvec": list(Q[j])} for j in range(len(Q))]
     q_o, i_o, d_o = exact_local_topk_kernel(qrows, "cosine", 10)(V, ids)
@@ -157,6 +158,22 @@ def test_two_stage_cosine_rescore_equals_scalar_fold():
     }
     assert len(q_o) == len(want) == 200
     assert set(zip(q_o.tolist(), i_o.tolist())) == want
+
+
+def test_exact_knn_join_rejects_mismatched_vector_lengths(spark):
+    """A 3-d corpus against 2-d queries raises instead of folding only
+    the shorter vector ([0, 1, 2] against [0, 1] used to score 0.0)."""
+    from vector_search_go_spark.operators.exact_knn import exact_knn_join
+
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 1.0, 2.0]), (2, [5.0, 5.0, 5.0])],
+        "id bigint, vec array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(0, [0.0, 1.0])], "query_id bigint, qvec array<double>"
+    )
+    with pytest.raises(Exception, match="2-d against 3-d"):
+        exact_knn_join(queries, corpus, k=1).collect()
 
 
 _EMPTY_PRED_SCHEMA = {

@@ -264,7 +264,7 @@ def test_survivor_pmod_multi_matches_per_bucket():
 @pytest.fixture(scope="module")
 def big_bucket_store(spark, tmp_path_factory):
     """A store whose candidate sets EXCEED the two-stage scorer's
-    TWO_STAGE_MIN_ROWS cutoff (k_min_vecs > corpus => one bucket per
+    TWO_STAGE_MIN_PAIRS cutoff (k_min_vecs > corpus => one bucket per
     tree, no cap), so these tests exercise the BLAS-prefilter +
     exact-rescore path, not the small-set full-exact shortcut."""
     from vector_search_go_spark.config import LshConfig
@@ -286,23 +286,39 @@ def big_bucket_store(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_two_stage_scorer_matches_full_exact(big_bucket_store, metric):
-    # preloaded reader (two-stage) vs lazy reader (always full exact
-    # kernel) on sets above TWO_STAGE_MIN_ROWS: bit-identical rows,
-    # including the duplicate tie cluster and a threshold cut
-    from vector_search_go_spark.serve.local_reader import LocalLshReader
+    # preloaded reader (precomputed norms) and lazy reader (norms per
+    # read) on sets above TWO_STAGE_MIN_PAIRS vs the full seq_dists
+    # ranking of every candidate: bit-identical rows, including the
+    # duplicate tie cluster and a threshold cut
+    from vector_search_go_spark.config import TWO_STAGE_MIN_PAIRS
+    from vector_search_go_spark.functions.metrics import seq_dists
+    from vector_search_go_spark.serve.local_reader import (
+        LocalLshReader,
+        _result_frame,
+    )
 
     path, X = big_bucket_store
     fast = LocalLshReader(path, metric=metric, preload_buckets=True)
-    exact = LocalLshReader(path, metric=metric, preload_vectors=False)
+    lazy = LocalLshReader(path, metric=metric, preload_vectors=False)
+
+    def full_exact(q, k, threshold=None):
+        h = fast.forest.hash_batch(np.asarray(q, dtype=np.float64)[None, :])
+        cand = np.asarray(fast._candidates(h, fast.forest.probe_batch(h)))
+        assert len(cand) > TWO_STAGE_MIN_PAIRS
+        d = seq_dists(metric, np.asarray(q, dtype=np.float64), X[cand])
+        if threshold is not None:
+            cand, d = cand[d <= threshold], d[d <= threshold]
+        return _frame_rows(_result_frame(cand, d, k, 0))
+
     queries = [X[0], X[2900], X[123] * 1e6]  # huge scale: margin must adapt
     for q in queries:
-        a = _frame_rows(fast.search(q, k=15))
-        b = _frame_rows(exact.search(q, k=15))
-        assert a == b
+        want = full_exact(q, 15)
+        assert _frame_rows(fast.search(q, k=15)) == want
+        assert _frame_rows(lazy.search(q, k=15)) == want
     thr = 1.0 if metric == "cosine" else 5.0
-    a = _frame_rows(fast.search(X[7], k=2500, threshold=thr))
-    b = _frame_rows(exact.search(X[7], k=2500, threshold=thr))
-    assert a == b
+    want = full_exact(X[7], 2500, thr)
+    assert _frame_rows(fast.search(X[7], k=2500, threshold=thr)) == want
+    assert _frame_rows(lazy.search(X[7], k=2500, threshold=thr)) == want
 
 
 def test_preload_buckets_matches_lazy_buckets(spark, stores):
@@ -450,15 +466,15 @@ def test_local_ivf_search_many_matches_single(stores):
 
 def test_local_ivf_two_stage_matches_full_exact_ranking(spark, stores, tmp_path):
     # probed-row sets below (nprobe=2) and above (nprobe=15, every
-    # cell) TWO_STAGE_MIN_ROWS: search and search_many, preloaded and
+    # cell) TWO_STAGE_MIN_PAIRS: search and search_many, preloaded and
     # lazy, with tombstones and a threshold, must equal the full
     # seq_dists ranking of every live probed row
     import shutil
 
+    from vector_search_go_spark.config import TWO_STAGE_MIN_PAIRS
     from vector_search_go_spark.functions.metrics import seq_dists
     from vector_search_go_spark.operators.ann_ivf import probe_cells
     from vector_search_go_spark.serve.local_reader import (
-        TWO_STAGE_MIN_ROWS,
         LocalIvfReader,
         _result_frame,
     )
@@ -494,7 +510,7 @@ def test_local_ivf_two_stage_matches_full_exact_ranking(spark, stores, tmp_path)
             want = []
             for i, q in enumerate(Q):
                 w, n_rows = full_rank(q, nprobe, k, thr, i)
-                sizes.add(n_rows > TWO_STAGE_MIN_ROWS)
+                sizes.add(n_rows > TWO_STAGE_MIN_PAIRS)
                 want.append(w)
                 for rd in readers:
                     pd.testing.assert_frame_equal(
@@ -679,10 +695,11 @@ def test_local_ivfpq_reader_preload_vectors(spark, stores):
 
 def test_topn_equals_full_lexsort_under_pivot_ties():
     """The shared partition-then-lexsort top-n (every reader's result
-    ranking, the IVFADC shortlist and the sharded router) equals a full
-    (dist, id) lexsort when many rows tie with the n-th distance —
-    including duplicate (dist, id) rows, which keep their row order."""
-    from vector_search_go_spark.serve.local_reader import _topn
+    ranking, the IVFADC shortlist, the sharded router and the ADC mesh
+    scorer) equals a full (dist, id) lexsort when many rows tie with the
+    n-th distance — including duplicate (dist, id) rows, which keep
+    their row order — on both sides of its partition switch."""
+    from vector_search_go_spark.operators.argmin import topn
 
     rng = np.random.default_rng(19)
     for trial in range(300):
@@ -694,7 +711,7 @@ def test_topn_equals_full_lexsort_under_pivot_ties():
         else:
             ids = rng.integers(0, max(1, m // 4), size=m)  # repeated ids
         want = np.lexsort((ids, d))[:n]
-        assert np.array_equal(_topn(ids, d, n), want), trial
+        assert np.array_equal(topn(ids, d, n), want), trial
 
 
 def test_row_group_index_serial_and_parallel_reads_identical(tmp_path):

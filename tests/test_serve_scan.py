@@ -9,7 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# N > TWO_STAGE_MIN_ROWS puts the two-stage BLAS path on the tested path
+# N > TWO_STAGE_MIN_PAIRS puts the two-stage BLAS path on the tested path
 N, DIMS = 3000, 32
 
 
@@ -106,8 +106,9 @@ def test_scan_search_many_equals_per_query(scan_store):
 
 
 def test_scan_reader_small_store_exact_path(spark, tmp_path):
-    """Under the TWO_STAGE_MIN_ROWS cutoff the single-stage exact kernel
+    """Under the TWO_STAGE_MIN_PAIRS cutoff the single-stage exact kernel
     serves; parity must hold there too."""
+    from vector_search_go_spark.config import TWO_STAGE_MIN_PAIRS
     from vector_search_go_spark.operators.exact_knn import (
         exact_knn_join,
         scan_save,
@@ -116,6 +117,7 @@ def test_scan_reader_small_store_exact_path(spark, tmp_path):
 
     rng = np.random.default_rng(89)
     X = rng.standard_normal((200, DIMS))
+    assert len(X) <= TWO_STAGE_MIN_PAIRS
     corpus = spark.createDataFrame(
         [(int(i), X[i].tolist()) for i in range(200)],
         "id bigint, vec array<double>",

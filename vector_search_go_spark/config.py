@@ -13,18 +13,30 @@ from dataclasses import dataclass
 # Float tolerance used across the engine; reference lsh/helpers.go:13-15.
 TOL = 1e-6
 
-# Margin of the two-stage scorers (exact_knn.exact_local_topk_kernel,
-# serve.local_reader._two_stage_dists): the BLAS stage's distance error
-# is bounded by sqrt(64 * ulp(scale^2)) ~ 1e-7 * scale (worst case,
-# near-duplicate cancellation); selecting everything within
-# TWO_STAGE_MARGIN (x max(1, scale) for L2) of the k-th approximate
-# distance therefore provably contains the exact top-k (and every
-# threshold-passing row), with ~400x headroom. Proof sketch:
-# |approx-exact| <= m' and cutoff = kth_approx + m with m >= 2m' => any
-# excluded candidate has exact > kth_approx + m - m' >= exact_kth +
-# (m - 2m') >= the k-th exact distance, strictly — so exclusion never
-# flips the exact (dist, id) ranking of the returned rows.
+# Margin of the one two-stage scorer, functions.metrics.seq_nearest.
+# Its BLAS |a|^2 - 2 a.b + |b|^2 and the sequential fold of
+# (a_i - b_i)^2 differ by at most ~(4D + 9) * u * scale^2 over D dims
+# (u = 2^-53, scale^2 = max |a|^2 + max |b|^2; near-duplicate
+# cancellation is the worst case), so sqrt'd distances differ by at
+# most m' = sqrt((4D + 9) * u) * scale (~1.7e-7 * scale at 64-d). The
+# L2 margin TWO_STAGE_MARGIN * sqrt(D / 64) * max(1, scale) is >= ~160x
+# 2m' at any D; it is applied in the sqrt'd domain for sq_l2 too
+# (sqrt is monotone) and squared back, a ~1e-16 relative rounding.
+# Cosine carries at most TOL (its clamp) + ~4D * u, inside the margin
+# unscaled. Proof: |approx - exact| <= m' and cut = kth_approx + m,
+# m >= 2m' => an excluded row has exact > kth_approx + m - m' >=
+# exact_kth + (m - 2m'), strictly past the k-th exact distance: no row
+# that can rank or tie is dropped. (A norm within rounding of TOL can
+# flip cosine's zero-norm rule between the stages; unbounded edge.)
 TWO_STAGE_MARGIN = 1e-4
+
+# Pair count (rows of A x rows of B) at or below which seq_nearest
+# scores the full sequential mesh: the two stages' fixed cost pays only
+# above it. Measured (k=10, one BLAS thread, 4-core x86): one query
+# breaks even at ~1024 rows for 16-d (~256 for 64-d); 5-40 queries win
+# 1.2-2x from ~500 pairs, 2-5x at 2k-10k; 10k-row argmins win 1.7x at
+# 4-d x 128 codes, ~13x at 64-d x 350 centroids.
+TWO_STAGE_MIN_PAIRS = 1024
 
 # Max tree depth: one bit of the int64 hash per level, sign bit never set.
 # Reference guard at lsh/hasher.go:138 (depth <= 63 keeps uint64 safe; with

@@ -17,11 +17,13 @@ are bit-identical to the DuckDB oracle builders in
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.config import TOL
+from vector_search_go_spark.config import TOL, TWO_STAGE_MARGIN, TWO_STAGE_MIN_PAIRS
 
 
 def as_double(arr: Column) -> Column:
@@ -109,6 +111,13 @@ def _per_dim(M: np.ndarray):
     return M.transpose(M.ndim - 1, *range(M.ndim - 1))
 
 
+def _check_dims(A: np.ndarray, B: np.ndarray) -> None:
+    if A.shape[-1] != B.shape[-1]:
+        raise ValueError(
+            f"vector length mismatch: {A.shape[-1]}-d against {B.shape[-1]}-d"
+        )
+
+
 def seq_dists(metric: str, A, B) -> np.ndarray:
     """numpy twin of metric_dist, bit for bit: distances between the
     vectors on the LAST axis of ``A`` and ``B``, broadcast over the
@@ -124,6 +133,7 @@ def seq_dists(metric: str, A, B) -> np.ndarray:
     check_metric(metric)
     A = np.asarray(A, dtype=np.float64)
     B = np.asarray(B, dtype=np.float64)
+    _check_dims(A, B)
     shape = np.broadcast_shapes(A.shape[:-1], B.shape[:-1])
     if metric in ("sq_l2", "l2"):
         s = np.zeros(shape)[()]
@@ -143,6 +153,70 @@ def seq_dists(metric: str, A, B) -> np.ndarray:
         raw = 1.0 - dot / (na * nb)
     out = np.where(raw < TOL, 0.0, raw)
     return np.where((na <= TOL) | (nb <= TOL), 1.0, out)
+
+
+def seq_nearest(metric: str, A, B, k: int, b2=None):
+    """The nearest rows of ``B`` to each row of ``A`` with their exact
+    seq_dists distances: flat pairs ``(i, j, d)`` for a matrix ``A``
+    (n, D), ``(j, d)`` for one query ``A`` (D,), in (i, j) order. Per
+    row of A they hold EVERY row of B at most as far as the k-th
+    nearest (ties included), possibly a few more; each ``d`` is
+    ``seq_dists(metric, A[i], B[j])`` bit for bit. Callers cut them
+    with their own (dist, id) tie-break.
+
+    Up to TWO_STAGE_MIN_PAIRS pairs (or k >= len(B)) score the full
+    sequential mesh. Above it a BLAS pass (``b2``: B's squared row
+    norms, when precomputed) bounds each row's k-th distance and only
+    rows within the config.TWO_STAGE_MARGIN proof's margin of it are
+    rescored sequentially: the one two-stage scorer of exact kNN, the
+    serving readers, the centroid argmins and the SQ8 shortlist."""
+    check_metric(metric)
+    A = np.asarray(A, dtype=np.float64)
+    B = np.asarray(B, dtype=np.float64)
+    _check_dims(A, B)
+    one = A.ndim == 1
+    A2 = A[None] if one else A
+    n, m = len(A2), len(B)
+    kk = min(k, m)
+    if n == 0 or kk < 1:
+        j, d = np.empty(0, dtype=np.int64), np.empty(0)
+        return (j, d) if one else (j, j, d)
+    if n * m <= TWO_STAGE_MIN_PAIRS or kk == m:
+        if one:
+            return np.arange(m), seq_dists(metric, A, B)
+        d = seq_dists(metric, A[:, None], B[None]).ravel()
+        return np.repeat(np.arange(n), m), np.tile(np.arange(m), n), d
+    a2 = np.einsum("ij,ij->i", A2, A2)
+    if b2 is None:
+        b2 = np.einsum("ij,ij->i", B, B)
+    approx = A2 @ B.T  # the BLAS pass, turned in place into distances
+    is_cos = metric in ("cosine", "angular")
+    if is_cos:
+        na, nb = np.sqrt(a2), np.sqrt(b2)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            approx /= na[:, None]
+            approx /= nb[None]
+        np.subtract(1.0, approx, out=approx)
+        approx[na <= TOL] = 1.0
+        approx[:, nb <= TOL] = 1.0
+        margin = TWO_STAGE_MARGIN
+    else:  # squared L2, for sq_l2 too
+        approx *= -2.0
+        approx += a2[:, None]
+        approx += b2[None]
+        scale = math.sqrt(float(a2.max()) + float(b2.max()))
+        margin = TWO_STAGE_MARGIN * math.sqrt(A2.shape[1] / 64) * max(1.0, scale)
+    # k = 1 (the argmins): a NaN-skipping min is ~4x cheaper than a partition
+    kth = (np.fmin.reduce(approx, axis=1) if kk == 1
+           else np.partition(approx, kk - 1, axis=1)[:, kk - 1])
+    # the L2 cut is set in the sqrt'd domain, then squared back: no
+    # sqrt over the whole block
+    cut = kth + margin if is_cos else (np.sqrt(np.maximum(kth, 0.0)) + margin) ** 2
+    # "not beyond the cut" keeps NaN pairs, as the full mesh does
+    i, j = np.nonzero(~(approx > cut[:, None]))
+    if one:
+        return j, seq_dists(metric, A, B[j])
+    return i, j, seq_dists(metric, A[i], B[j])
 
 
 def is_angular(metric: str) -> bool:

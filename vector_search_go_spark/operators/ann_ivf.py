@@ -102,12 +102,10 @@ def ivf_scores_fused(
     from vector_search_go_spark.operators.argmin import (
         collect_centroids,
         local_topk_flat,
+        nearest_pos,
         query_matrix,
         scan_topk,
     )
-
-    def dist(V, C):
-        return seq_dists(metric, V[:, None], C[None])
 
     c2q = {int(c): [int(q) for q in qs] for c, qs in cell_to_queries.items()}
 
@@ -124,7 +122,7 @@ def ivf_scores_fused(
             # assignment in the same distance domain as
             # argmin_id_arrow: sqrt'd L2 / cosine, first-min over
             # ascending cids
-            cells = cids[dist(V, cmat).argmin(axis=1)]
+            cells = cids[nearest_pos(metric, V, cmat)]
             out_q, out_i, out_d = [], [], []
             for c in np.unique(cells):
                 qs = c2q.get(int(c))
@@ -132,7 +130,8 @@ def ivf_scores_fused(
                     continue
                 m = cells == c
                 idm = ids_b[m]
-                Dm = dist(V[m], Q[[qpos[q] for q in qs]])
+                Qm = Q[[qpos[q] for q in qs]]
+                Dm = seq_dists(metric, V[m][:, None], Qm[None])
                 for jj, q in enumerate(qs):
                     out_q.append(np.full(len(idm), q, dtype=np.int64))
                     out_i.append(idm)

@@ -3,14 +3,15 @@ driver of the Spark ANN kernels.
 
 Assignment (``argmin_id_arrow``, ``argmin_id_arrow_grouped``): the
 centroid set is tiny (k x dim doubles, KBs), so it is collected once on
-the driver and rides in a pandas_udf closure; each Arrow batch scores
-its (row, centroid) mesh with functions.metrics.seq_dists — the
-sequential per-dimension IEEE order of the Catalyst ``metric_dist``
-fold, so distances are the oracle's bit for bit — and takes the first
-minimum over ascending ids, the (dist, id) tie-break of
-``min(struct(d, id))``. The corpus is never shuffled or aggregated: an
-assignment plan is one map stage plus the KB-sized centroid collect
-(k-means runs it once per Lloyd iteration, PQ once per encode).
+the driver and rides in a pandas_udf closure; each Arrow batch takes
+every row's nearest centroid with functions.metrics.seq_nearest (a BLAS
+bound, then the sequential per-dimension IEEE kernel of the Catalyst
+``metric_dist`` fold on the few centroids that can win, so distances
+are the oracle's bit for bit) and keeps the first minimum over
+ascending ids, the (dist, id) tie-break of ``min(struct(d, id))``. The
+corpus is never shuffled or aggregated: an assignment plan is one map
+stage plus the KB-sized centroid collect (k-means runs it once per
+Lloyd iteration, PQ once per encode).
 
 Search (``scan_topk``): one ``mapInPandas`` over the corpus per search
 family (IVF, PQ, IVFADC, SQ8, exact KNN), each batch cut to its exact
@@ -24,7 +25,11 @@ import pandas as pd  # noqa: F401 — module scope so pandas_udf signatures
 # survive postponed annotation evaluation
 from pyspark.sql import DataFrame
 
-from vector_search_go_spark.functions.metrics import check_metric, seq_dists
+from vector_search_go_spark.functions.metrics import (
+    check_metric,
+    seq_dists,
+    seq_nearest,
+)
 
 
 def collect_centroids(cents: DataFrame, id_col: str = "cid", vec_col: str = "cvec"):
@@ -49,10 +54,11 @@ def argmin_id_arrow(cents: DataFrame, metric: str = "sq_l2",
     (transform/aggregate) evaluate INTERPRETED per element — at 1M
     vectors x 128 codewords the expression argmin is minutes of lambda
     dispatch, while this numpy version is one BLAS-shaped loop per
-    Arrow batch (measured ~30x on the 1M probe). Distances are
-    functions.metrics.seq_dists over the (row, centroid) mesh, so
-    they are metric_dist's bit for bit (pinned by the DuckDB oracle
-    gate and tests/test_argmin_parity.py's in-test fold).
+    Arrow batch (measured ~30x on the 1M probe). Each row's nearest
+    centroid comes from nearest_pos (functions.metrics.seq_nearest),
+    whose distances are metric_dist's bit for bit (pinned by the
+    DuckDB oracle gate and tests/test_argmin_parity.py's in-test
+    fold).
 
     ``metric='l2'`` compares sqrt'd distances, the domain metric_dist
     and the oracle rank in: sqrt is IEEE correctly-rounded in both
@@ -67,10 +73,9 @@ def argmin_id_arrow(cents: DataFrame, metric: str = "sq_l2",
     @pandas_udf("int")
     def nearest(vecs: pd.Series) -> pd.Series:
         V = np.array(vecs.tolist(), dtype=np.float64)
-        D = seq_dists(metric, V[:, None], mat[None])
-        # np.argmin returns the FIRST minimum; ids are sorted ascending,
-        # so ties break toward the smallest id = min(struct(d, id))
-        return pd.Series(ids[D.argmin(axis=1)].astype(np.int32))
+        # ids are sorted ascending, so the first minimum breaks ties
+        # toward the smallest id = min(struct(d, id))
+        return pd.Series(ids[nearest_pos(metric, V, mat)].astype(np.int32))
 
     return nearest
 
@@ -107,8 +112,7 @@ def argmin_id_arrow_grouped(
         for g in np.unique(gv):
             m = gv == g
             V = np.array(vecs[m].tolist(), dtype=np.float64)
-            D = seq_dists(metric, V[:, None], mats[g][None])
-            out[m] = ids[g][D.argmin(axis=1)]
+            out[m] = ids[g][nearest_pos(metric, V, mats[g])]
         return pd.Series(out)
 
     return nearest
@@ -134,31 +138,45 @@ def local_topk_flat(q_arr, ids_arr, d_arr, L: int):
     return order[rank < L]
 
 
-def local_topk_mesh(D, ids_b, L: int):
-    """Per-column exact top-L of an (n_rows, n_queries) distance matrix
-    under the (dist, id) order, WITHOUT flattening the mesh (a flat
-    lexsort over n_rows x n_queries entries is the cost this avoids).
-    Yields (col_j, row_indices) per column; row_indices are
-    (dist, id)-sorted and at most L long."""
-    n_v, n_q = D.shape
-    for j in range(n_q):
-        col = D[:, j]
-        if n_v > L:
-            pivot = np.partition(col, L - 1)[L - 1]
-            rows = np.nonzero(col <= pivot)[0]
-            rows = rows[np.lexsort((ids_b[rows], col[rows]))[:L]]
-        else:
-            rows = np.lexsort((ids_b, col))
-        yield j, rows
+def topn(ids: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
+    """``np.lexsort((ids, d))[:n]`` for numeric ``ids``: the (dist, id)
+    tie-break of every reader, shard leg, router merge and mesh scorer.
+    Past max(2n, 256) rows it partitions to the n-th smallest ``d``,
+    keeps EVERY row tied with it and lexsorts only those; below, the
+    partition's ~5 us fixed cost exceeds the lexsort (measured at
+    n = 1-400, one core)."""
+    if len(d) > max(2 * n, 256):
+        pivot = np.partition(d, n - 1)[n - 1]
+        keep = np.nonzero(d <= pivot)[0]
+        return keep[np.lexsort((ids[keep], d[keep]))[:n]]
+    return np.lexsort((ids, d))[:n]
+
+
+def nearest_pos(metric: str, V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``seq_dists(metric, V[:, None], C[None]).argmin(axis=1)`` (the
+    FIRST minimum) without the mesh: seq_nearest's pairs cut to one per
+    row by (dist, position)."""
+    i, j, d = seq_nearest(metric, V, C, 1)
+    return j[local_topk_flat(i, j, d, 1)]
+
+
+def nearest_topk_arrays(metric: str, qids, Q, V, ids_b, L: int):
+    """``(query_id, id, dist)`` of each query's exact top-L rows of
+    ``V`` by (dist, id), grouped by query POSITION (duplicate query ids
+    stay apart): the exact-KNN and SQ8 shortlist kernels."""
+    i, j, d = seq_nearest(metric, Q, V, L)
+    keep = local_topk_flat(i, ids_b[j], d, L)
+    return qids[i[keep]], ids_b[j[keep]], d[keep]
 
 
 def mesh_topk_arrays(D, ids_b, qids, L: int):
-    """Consume ``local_topk_mesh`` into the three flat output arrays
-    ``(query_id, id, dist)`` the ADC/SQ8 scan kernels emit — the one
-    place the (dist, id)-order truncation contract is materialized for
-    mesh-shaped scorers."""
+    """Per-column exact top-L of an (n_rows, n_queries) distance mesh
+    by (dist, id) as flat ``(query_id, id, dist)`` arrays (the ADC scan
+    kernel), column by column: a flat lexsort over the whole mesh is
+    the cost this avoids."""
     out_q, out_i, out_d = [], [], []
-    for j, rows in local_topk_mesh(D, ids_b, L):
+    for j in range(D.shape[1]):
+        rows = topn(ids_b, D[:, j], L)
         out_q.append(np.full(len(rows), qids[j], dtype=np.int64))
         out_i.append(ids_b[rows])
         out_d.append(D[rows, j])
@@ -182,7 +200,8 @@ def scan_topk(corpus: DataFrame, qrows: list, scorer, dist_col: str,
     once); the kernel maps a decoded batch ``(V float64[n, D], ids)``
     to flat ``(query_id, id, dist)`` arrays already cut to their exact
     local top-L under the (dist, id) order — ``local_topk_flat`` for
-    flat scorers, ``mesh_topk_arrays`` for mesh scorers. This driver
+    flat scorers, ``nearest_topk_arrays`` for seq_dists scorers,
+    ``mesh_topk_arrays`` for other meshes. This driver
     owns the rest: sort the batch, answer an empty batch with a
     well-formed empty frame, skip empty Arrow batches, decode V once.
 

@@ -7,10 +7,11 @@ vector, optional distance threshold, top-k by ascending distance. Same
 
 Spark shape: the corpus streams past the in-memory query set exactly
 once (no corpus shuffle — the optimal exact-KNN plan at any scale),
-then WindowGroupLimit top-k. The distance kernel is an Arrow-batched
-numpy matrix per corpus batch (mapInPandas, query matrix in the
-closure) whose distances are metric_dist's fold bit for bit; the
-DuckDB oracle hashes pin them end to end.
+then WindowGroupLimit top-k. The distance kernel runs per Arrow corpus
+batch (mapInPandas, query matrix in the closure): the shared two-stage
+nearest scorer (functions.metrics.seq_nearest), whose distances are
+metric_dist's fold bit for bit; the DuckDB oracle hashes pin them end
+to end.
 
 At 100 TB this is the ground-truth/oracle path by design — the production
 ANN path is ``vector_search_go_spark.lsh`` (SURVEY.md section 7 Phase 1).
@@ -18,12 +19,10 @@ ANN path is ``vector_search_go_spark.lsh`` (SURVEY.md section 7 Phase 1).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_go_spark.config import TWO_STAGE_MARGIN
-from vector_search_go_spark.functions.metrics import is_angular, seq_dists
+from vector_search_go_spark.functions.metrics import check_metric
 from vector_search_go_spark.io import read_parquet_cached
 from vector_search_go_spark.operators.topk import topk_per_group
 
@@ -56,12 +55,12 @@ def exact_knn_join(
     winners of the per-batch winners, and the threshold filter only
     ever removes a suffix of that order — |batch| x k rows cross the
     shuffle instead of |batch| x |queries| pairs. Inside a batch the
-    local top-k is found two-stage: a BLAS approximate pass bounds the
-    per-query k-th distance, the SEQUENTIAL per-dimension kernel
-    (seq_dists — the exact IEEE order of the fold) rescores everything
-    within a provable margin, and emitted distances are always the
-    exact values (pinned by the knn oracle hashes and the in-test fold
-    of tests/test_exact_knn.py).
+    local top-k comes from functions.metrics.seq_nearest: a BLAS
+    approximate pass bounds the per-query k-th distance, the
+    SEQUENTIAL per-dimension kernel (seq_dists — the exact IEEE order
+    of the fold) rescores everything within a provable margin, and
+    emitted distances are always the exact values (pinned by the knn
+    oracle hashes and the in-test fold of tests/test_exact_knn.py).
     """
     from vector_search_go_spark.io import ensure_parallelism
     from vector_search_go_spark.operators.argmin import scan_topk
@@ -83,59 +82,24 @@ def exact_knn_join(
 
 def exact_local_topk_kernel(qrows, metric: str, k: int):
     """Per-batch exact-KNN local top-k as a reusable closure:
-    ``fn(V, ids_b) -> (q_arr, i_arr, d_arr)`` — two-stage BLAS bound +
-    sequential-IEEE rescore above 65,536 pairs, full sequential matrix
-    below. It is exact_knn_join's scorer AND the truth kernel the
-    fused pred+truth scans run (argmin.scan_topk ``truth_k``: the
-    ``*_recall_vs_exact`` entries share one corpus scan between the ANN
-    chain and this truth chain), so both run the bit-identical code
-    path. ``qrows`` must be the sorted, non-empty (query_id, qvec)
-    batch."""
+    ``fn(V, ids_b) -> (q_arr, i_arr, d_arr)``, functions.metrics.
+    seq_nearest (BLAS bound + sequential-IEEE rescore of the margin
+    set) cut to each query's top-k by (dist, id). It is
+    exact_knn_join's scorer AND the truth kernel the fused pred+truth
+    scans run (argmin.scan_topk ``truth_k``: the ``*_recall_vs_exact``
+    entries share one corpus scan between the ANN chain and this truth
+    chain), so both run the bit-identical code path. ``qrows`` must be
+    the sorted, non-empty (query_id, qvec) batch."""
     from vector_search_go_spark.operators.argmin import (
-        local_topk_flat,
-        mesh_topk_arrays,
+        nearest_topk_arrays,
         query_matrix,
     )
 
-    is_cos = is_angular(metric)
+    check_metric(metric)
     qids, Q = query_matrix(qrows)
-    q2 = np.einsum("ij,ij->i", Q, Q)
-    nq = np.sqrt(q2)
 
     def batch_fn(V, ids_b):
-        n_v, n_q = len(V), len(Q)
-        kk = min(k, n_v)
-        if n_v * n_q <= 65536:
-            # small block: the full sequential matrix is cheaper
-            # than two stages
-            D = seq_dists(metric, V[:, None], Q[None])
-            return mesh_topk_arrays(D, ids_b, qids, kk)
-        n2 = np.einsum("ij,ij->i", V, V)
-        G = V @ Q.T
-        if is_cos:
-            nv = np.sqrt(n2)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                approx = 1.0 - G / (nv[:, None] * nq[None, :])
-            approx = np.where(
-                (nv[:, None] <= 1e-6) | (nq[None, :] <= 1e-6), 1.0, approx
-            )
-            m = TWO_STAGE_MARGIN
-        else:
-            approx = np.sqrt(
-                np.maximum(n2[:, None] - 2.0 * G + q2[None, :], 0.0)
-            )
-            m = TWO_STAGE_MARGIN * max(
-                1.0, float(np.sqrt(n2.max() + q2.max()))
-            )
-        cut = np.partition(approx, kk - 1, axis=0)[kk - 1] + m
-        rows, cols = np.nonzero(approx <= cut[None, :])
-        # the exact values of the selected (corpus row, query) pairs
-        # only; BOTH norms come from the sequential fold, never from
-        # the einsum norms of the approximate stage
-        dist_sel = seq_dists(metric, V[rows], Q[cols])
-        # grouped by query POSITION, so duplicate query ids stay apart
-        keep = local_topk_flat(cols, ids_b[rows], dist_sel, kk)
-        return qids[cols[keep]], ids_b[rows[keep]], dist_sel[keep]
+        return nearest_topk_arrays(metric, qids, Q, V, ids_b, k)
 
     return batch_fn
 

@@ -461,6 +461,7 @@ def ivfpq_adc_scores_fused(
     (approx, truth) pair (see scan_topk)."""
     from vector_search_go_spark.operators.argmin import (
         local_topk_flat,
+        nearest_pos,
         query_matrix,
         scan_topk,
     )
@@ -480,7 +481,7 @@ def ivfpq_adc_scores_fused(
         def score(V, ids_b):
             # coarse assignment: compare sqrt'd distances (the domain
             # metric_dist and the oracle rank in — see argmin_id_arrow)
-            cell_idx = seq_dists("l2", V[:, None], C[None]).argmin(axis=1)
+            cell_idx = nearest_pos("l2", V, C)
             codes = pq_encode_np(V - C[cell_idx], cb_ids, cb_mats)
             qp, r, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cids[cell_idx], codes)
             q_arr, i_arr = qids[qp], ids_b[r]

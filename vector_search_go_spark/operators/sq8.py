@@ -113,7 +113,7 @@ def sq8_search(
     — the recall-vs-exact entry's truth chain rides the pred chain's
     corpus scan (guide §8.4)."""
     from vector_search_go_spark.operators.argmin import (
-        mesh_topk_arrays,
+        nearest_topk_arrays,
         query_matrix,
         scan_topk,
     )
@@ -132,8 +132,7 @@ def sq8_search(
             xhat = mins[None, :] + (C + 0.5) * scales[None, :]
             # exact local top-shortlist per query: downstream is
             # topk(shortlist) -> rerank -> topk(k)
-            D = seq_dists("l2", xhat[:, None], Q[None])
-            return mesh_topk_arrays(D, ids_b, qids, shortlist)
+            return nearest_topk_arrays("l2", qids, Q, xhat, ids_b, shortlist)
 
         return score
 

@@ -57,8 +57,8 @@ import os
 import numpy as np
 import pandas as pd
 
-from vector_search_go_spark.config import TWO_STAGE_MARGIN
-from vector_search_go_spark.functions.metrics import seq_dists
+from vector_search_go_spark.functions.metrics import seq_dists, seq_nearest
+from vector_search_go_spark.operators.argmin import topn
 from vector_search_go_spark.streaming.delete import (
     drop_tombstoned,
     load_tombstone_array,
@@ -79,20 +79,6 @@ from vector_search_go_spark.serve.xxh64 import (
     survivor_pmod_multi,
     survivor_pmod_vec,
 )
-
-
-def _topn(ids: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
-    """Indices of the ``n`` smallest rows of numeric ``ids`` by
-    (d, id) — the tie-break of every reader, shard leg and router
-    merge. A lexsort over thousands of candidates is ms-visible, so
-    past 4n rows: partition to the n smallest ``d``, keep EVERY row
-    tied with the n-th (<= pivot), and lexsort only that set —
-    identical ranking by construction."""
-    if len(d) > 4 * n:
-        pivot = np.partition(d, n - 1)[n - 1]
-        keep = np.nonzero(d <= pivot)[0]
-        return keep[np.lexsort((ids[keep], d[keep]))[:n]]
-    return np.lexsort((ids, d))[:n]
 
 
 def _span_rows(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -139,7 +125,7 @@ def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
     ids_arr = np.asarray(ids)
     if len(ids_arr) and np.issubdtype(ids_arr.dtype, np.number):
         d = np.asarray(dists, dtype=np.float64)
-        order = _topn(ids_arr, d, k)
+        order = topn(ids_arr, d, k)
         return pd.DataFrame(
             {
                 "query_id": np.full(len(order), query_id, dtype=np.int64),
@@ -234,57 +220,20 @@ def _swap_retry(fn):
     return wrapper
 
 
-# candidate-set size at or below which _two_stage_dists runs the
-# sequential exact kernel on every row instead: the BLAS pass + margin
-# select + partial rescore has a fixed cost that only pays above it.
-# Measured (k=10, one BLAS thread, 4-core x86 box): the two-stage
-# scorer breaks even at ~256-768 rows for 64-d and ~512-1024 rows for
-# 16-d vectors; at 1024 rows it is 1.0-1.7x faster, at 2048 rows
-# 1.4-3.3x, at 8192 rows 2-8x (l2 and cosine).
-TWO_STAGE_MIN_ROWS = 1024
-
-
-def _two_stage_dists(
-    metric: str,
-    q: np.ndarray,
-    V: np.ndarray,
-    n2: np.ndarray,
-    k: int,
-    threshold: float | None,
-) -> np.ndarray:
-    """Distances of q to the rows of V, bit-identical to
-    seq_dists on every row that can be returned: a BLAS
-    approximate pass (precomputed squared norms ``n2``) picks the
-    margin set, the sequential-IEEE exact kernel rescores only that
-    set. Sets of at most TWO_STAGE_MIN_ROWS rows take the exact kernel
-    whole. Shared by the LSH, IVF and scan readers."""
-    n = len(V)
-    if n <= TWO_STAGE_MIN_ROWS:
-        return seq_dists(metric, q, V)
-    is_cos = metric in ("cosine", "angular")
-    q2 = float(q @ q)
-    dot = V @ q
-    if is_cos:
-        nq = math.sqrt(q2)
-        if nq <= 1e-6:
-            return seq_dists(metric, q, V)
-        nv = np.sqrt(n2)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            approx = 1.0 - dot / (nq * nv)
-        approx = np.where(nv <= 1e-6, 1.0, approx)
-        m = TWO_STAGE_MARGIN
-    else:
-        approx = np.sqrt(np.maximum(n2 - 2.0 * dot + q2, 0.0))
-        scale = math.sqrt(q2 + float(n2.max()))
-        m = TWO_STAGE_MARGIN * max(1.0, scale)
-    cutoff = np.partition(approx, k - 1)[k - 1] if n > k else np.inf
-    cutoff += m
+def _nearest_frame(metric: str, q: np.ndarray, ids, V: np.ndarray, k: int,
+                   threshold: float | None, query_id: int,
+                   n2: np.ndarray | None = None) -> pd.DataFrame:
+    """The LSH, IVF and scan readers' result frame over candidate rows
+    ``(ids, V)`` (``n2``: their squared norms, if precomputed):
+    seq_nearest's pairs, threshold-filtered (``dist <= threshold``
+    keeps a prefix of the (dist, id) order, so filtering after the cut
+    keeps the same rows), ranked by _result_frame."""
+    j, d = seq_nearest(metric, q, V, k, n2)
     if threshold is not None:
-        cutoff = max(cutoff, float(threshold) + m)
-    sel = approx <= cutoff
-    dists = approx
-    dists[sel] = seq_dists(metric, q, V[sel])
-    return dists
+        m = d <= float(threshold)
+        j, d = j[m], d[m]
+    ids = ids[j] if isinstance(ids, np.ndarray) else [ids[x] for x in j]
+    return _result_frame(ids, d, k, query_id)
 
 
 def _batch_queries(Q, query_ids):
@@ -507,8 +456,8 @@ class LocalLshReader:
 
     def _fetch_vectors(self, cand: list):
         """-> (ids, V, rows) where rows are V's row indices into the
-        preloaded matrix (None on the lazy / string-keyed paths, which
-        score with the full exact kernel)."""
+        preloaded matrix (None on the lazy / string-keyed paths, whose
+        squared norms the scorer computes itself)."""
         if self._vec_index is not None:
             index, _, mat = self._vec_index
             if isinstance(index, dict):  # string-keyed fallback
@@ -528,18 +477,14 @@ class LocalLshReader:
         V = list_column_matrix(tbl, "vec", self.config.dims)
         return ids[mask].tolist(), V[mask], None
 
-    def _score(self, q: np.ndarray, V: np.ndarray, rows, k: int,
-               threshold: float | None) -> np.ndarray:
-        """Distances of q to V, bit-identical to seq_dists on
-        every row that can be returned. Large preloaded candidate sets
-        use the shared two-stage scorer (_two_stage_dists) — the
-        64-strided-pass exact kernel over 40k+ candidates was ~50 ms
-        of the serving path."""
-        if rows is None:
-            return seq_dists(self.metric, q, V)
-        return _two_stage_dists(
-            self.metric, q, V, self._norms2[rows], k, threshold
-        )
+    def _query_frame(self, q: np.ndarray, cand, k: int,
+                     threshold: float | None, query_id: int) -> pd.DataFrame:
+        """One query's result frame over its candidate ids."""
+        if len(cand) == 0:
+            return _result_frame([], [], k, query_id)
+        ids, V, rows = self._fetch_vectors(cand)
+        n2 = None if rows is None else self._norms2[rows]
+        return _nearest_frame(self.metric, q, ids, V, k, threshold, query_id, n2)
 
     @_swap_retry
     def search(
@@ -553,19 +498,7 @@ class LocalLshReader:
         hashes = self.forest.hash_batch(q[None, :])
         probes = self.forest.probe_batch(hashes)
         cand = self._candidates(hashes, probes)
-        if len(cand) == 0:
-            return _result_frame([], [], k, query_id)
-        ids, V, rows = self._fetch_vectors(cand)
-        dists = self._score(q, V, rows, k, threshold)
-        if threshold is not None:
-            m = dists <= float(threshold)
-            ids = (
-                ids[m]
-                if isinstance(ids, np.ndarray)
-                else [i for i, keep in zip(ids, m) if keep]
-            )
-            dists = dists[m]
-        return _result_frame(ids, dists, k, query_id)
+        return self._query_frame(q, cand, k, threshold, query_id)
 
     @_swap_retry
     def search_many(
@@ -588,23 +521,13 @@ class LocalLshReader:
             return _result_frame([], [], k, 0)
         hashes = self.forest.hash_batch(Q)
         probes = self.forest.probe_batch(hashes)
-        frames = []
-        for i, qid in enumerate(query_ids):
-            cand = self._candidates(hashes[i : i + 1], probes[i : i + 1])
-            if len(cand) == 0:
-                frames.append(_result_frame([], [], k, int(qid)))
-                continue
-            ids, V, rows = self._fetch_vectors(cand)
-            dists = self._score(Q[i], V, rows, k, threshold)
-            if threshold is not None:
-                m = dists <= float(threshold)
-                ids = (
-                    ids[m]
-                    if isinstance(ids, np.ndarray)
-                    else [x for x, keep in zip(ids, m) if keep]
-                )
-                dists = dists[m]
-            frames.append(_result_frame(ids, dists, k, int(qid)))
+        frames = [
+            self._query_frame(
+                Q[i], self._candidates(hashes[i : i + 1], probes[i : i + 1]),
+                k, threshold, int(qid),
+            )
+            for i, qid in enumerate(query_ids)
+        ]
         return pd.concat(frames, ignore_index=True)
 
 
@@ -613,9 +536,9 @@ class LocalIvfReader:
     centroids + cells/cell=N/ holding full vectors).
 
     Probed rows are scored by the shared two-stage scorer
-    (_two_stage_dists: BLAS bound, exact rescore of the margin set)
-    above TWO_STAGE_MIN_ROWS, so returned rows stay bit-identical to
-    seq_dists over every probed row.
+    (functions.metrics.seq_nearest: BLAS bound, exact rescore of the
+    margin set), so returned rows stay bit-identical to seq_dists over
+    every probed row.
 
     ``preload_cells=True`` pins every cell's (ids, matrix, squared
     norms) in reader RAM at init — the fully in-memory regime (same
@@ -670,12 +593,7 @@ class LocalIvfReader:
         )
         if len(ids) == 0:
             return _result_frame([], [], k, query_id)
-        dists = _two_stage_dists(self.metric, q, V, n2, k, threshold)
-        if threshold is not None:
-            m = dists <= float(threshold)
-            ids = ids[m]
-            dists = dists[m]
-        return _result_frame(ids, dists, k, query_id)
+        return _nearest_frame(self.metric, q, ids, V, k, threshold, query_id, n2)
 
     @_swap_retry
     def search(
@@ -899,7 +817,7 @@ class LocalIvfPqReader:
         """Indices of the local ADC top-``shortlist`` by (adc, id) —
         the same tie-break as the unsharded shortlist selection."""
         if np.issubdtype(np.asarray(ids).dtype, np.number):
-            return _topn(np.asarray(ids), adc, shortlist)
+            return topn(np.asarray(ids), adc, shortlist)
         return np.asarray(
             sorted(range(len(ids)), key=lambda i: (adc[i], ids[i]))[:shortlist],
             dtype=np.int64,
@@ -1068,7 +986,7 @@ class LocalIvfPqReader:
         if uid is None:
             return np.empty(0, dtype=np.int64)
         mins, scales = self._sq8_stats
-        return uid[_topn(uid, sq8_dists_np(q, mins, scales, C), keep)]
+        return uid[topn(uid, sq8_dists_np(q, mins, scales, C), keep)]
 
     def _require_sq8(self) -> None:
         if self._sq8_stats is None:
@@ -1324,9 +1242,9 @@ class LocalScanReader:
     argument the Spark exact path relies on).
 
     Bit-identical to exact_knn_join on the same corpus (the engine's
-    backend='exact' batch path): same sequential-IEEE kernels via the
-    shared two-stage scorer, same (dist, id) tie-break, same threshold
-    semantics (pinned in tests/test_serve_scan.py)."""
+    backend='exact' batch path): the same two-stage scorer
+    (functions.metrics.seq_nearest), same (dist, id) tie-break, same
+    threshold semantics (pinned in tests/test_serve_scan.py)."""
 
     def __init__(self, path: str, metric: str | None = None):
         import pyarrow.parquet as pq
@@ -1390,14 +1308,10 @@ class LocalScanReader:
         query_id: int = 0,
     ) -> pd.DataFrame:
         q = np.asarray(list(qvec), dtype=np.float64)
-        dists = _two_stage_dists(
-            self.metric, q, self.mat, self._norms2, k, threshold
+        return _nearest_frame(
+            self.metric, q, self.ids, self.mat, k, threshold, query_id,
+            self._norms2,
         )
-        ids = self.ids
-        if threshold is not None:
-            m = dists <= float(threshold)
-            ids, dists = ids[m], dists[m]
-        return _result_frame(ids, dists, k, query_id)
 
     @_swap_retry
     def search_many(

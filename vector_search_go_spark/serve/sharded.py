@@ -50,6 +50,7 @@ from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
 import numpy as np
 import pandas as pd
 
+from vector_search_go_spark.operators.argmin import topn
 from vector_search_go_spark.serve.local_reader import (
     LocalIvfPqReader,
     LocalIvfReader,
@@ -58,7 +59,6 @@ from vector_search_go_spark.serve.local_reader import (
     _batch_queries,
     _read_store_meta,
     _result_frame,
-    _topn,
 )
 
 _READER_CLS = {
@@ -541,7 +541,7 @@ class ShardedReader:
             s8 = a["sq8"][sel][first]
             live = ~np.isnan(s8)
             ua, sa = uid[live], s8[live]
-            kept[int(qid)] = np.sort(ua[_topn(ua, sa, keep)]).tolist()
+            kept[int(qid)] = np.sort(ua[topn(ua, sa, keep)]).tolist()
         return kept
 
     def _finish_sq8(
