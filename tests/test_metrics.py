@@ -269,7 +269,7 @@ def test_seq_nearest_degenerate_sizes():
         seq_nearest("l2", np.ones((2, 2)), B, 1)
 
 
-@pytest.mark.parametrize("metric", ["l2", "cosine"])
+@pytest.mark.parametrize("metric", ["sq_l2", "l2", "cosine"])
 def test_seq_nearest_keeps_nan_pairs_like_the_mesh(metric):
     """A NaN row or query scores NaN, as in the full mesh: a NaN query
     keeps all its pairs, a NaN row is never cut away, so the argmin of
@@ -288,3 +288,21 @@ def test_seq_nearest_keeps_nan_pairs_like_the_mesh(metric):
     assert set(j[i == 4].tolist()) == set(range(200))
     assert all(7 in j[i == r] for r in range(30))
     assert nearest_pos(metric, A, B)[4] == D[4].argmin() == 0
+    # norms ~1e4 with near-duplicate rows: BLAS cancellation error is
+    # above the unscaled margin, so one NaN row must not drop the
+    # norm scaling the other rows' cut relies on
+    rng = np.random.default_rng(5)
+    Q = rng.standard_normal((6, 64)) * 1e4 / 8
+    B = Q[rng.integers(0, 6, 400)] + rng.standard_normal((400, 64)) * 1e-5
+    B[:6] = Q
+    B[399, 3] = np.nan
+    ids = np.arange(400, dtype=np.int64)
+    for k in (1, 10):
+        D = seq_dists(metric, Q[:, None], B[None])
+        i, j, d = seq_nearest(metric, Q, B, k)
+        assert np.array_equal(d, D[i, j], equal_nan=True)
+        for r in range(6):
+            kth = np.sort(D[r])[k - 1]  # NaN sorts last
+            assert set(np.nonzero(D[r] <= kth)[0]) <= set(j[i == r].tolist())
+    want = [int(np.lexsort((ids, D[r]))[0]) for r in range(6)]
+    assert nearest_pos(metric, Q, B).tolist() == want

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from vector_search_go_spark.operators.pq import (
@@ -10,6 +11,7 @@ from vector_search_go_spark.operators.pq import (
     N_CODES,
     pq_codebook,
     pq_encode,
+    pq_encode_np,
 )
 
 
@@ -37,6 +39,34 @@ def test_encode_is_identity_on_codebook_vectors(spark, sf_dir):
     assert len(codes) == N_CODES * M_SUB
     for r in codes:
         assert r["code"] == r["id"], (r["id"], r["sub"], r["code"])
+
+
+def test_encode_np_skips_nan_codewords_like_training():
+    """pq_encode_np takes the first NaN-skipping minimum, the order of
+    argmin.nearest_pos (codebook training) and of the Catalyst
+    min(struct(d, code)) fold: a NaN codeword never wins a row with a
+    number, an all-NaN subspace encodes to its first code."""
+    from vector_search_go_spark.operators.argmin import nearest_pos
+
+    rng = np.random.default_rng(3)
+    mats = {s: rng.standard_normal((N_CODES, D_SUB)) for s in range(M_SUB)}
+    ids = {s: np.arange(N_CODES, dtype=np.int64) * 3 + 1 for s in range(M_SUB)}
+    mats[0][0] = np.nan  # the first codeword: np.argmin would pick it
+    mats[2][:] = np.nan
+    mats[3][7, 1] = np.nan
+    mats[4][9] = mats[4][2]  # duplicate codeword under a larger code
+    V = rng.standard_normal((300, M_SUB * D_SUB))
+    V[4, :D_SUB] = np.nan
+    V[5, 4 * D_SUB : 5 * D_SUB] = mats[4][2]
+    codes = pq_encode_np(V, ids, mats)
+    for s in range(M_SUB):
+        Vs = V[:, s * D_SUB : (s + 1) * D_SUB]
+        assert np.array_equal(codes[:, s], ids[s][nearest_pos("sq_l2", Vs, mats[s])])
+    assert (codes[np.arange(300) != 4, 0] != ids[0][0]).all()
+    assert (codes[:, 2] == ids[2][0]).all()
+    assert codes[5, 4] == ids[4][2]
+
+
 
 
 def test_adc_search_shape_and_order(spark, sf_dir):

@@ -16,7 +16,8 @@ TOL = 1e-6
 # Margin of the one two-stage scorer, functions.metrics.seq_nearest.
 # Its BLAS |a|^2 - 2 a.b + |b|^2 and the sequential fold of
 # (a_i - b_i)^2 differ by at most ~(4D + 9) * u * scale^2 over D dims
-# (u = 2^-53, scale^2 = max |a|^2 + max |b|^2; near-duplicate
+# (u = 2^-53, scale^2 = max |a|^2 + max |b|^2 over the rows that are
+# not NaN, whose pairs score NaN and are always kept; near-duplicate
 # cancellation is the worst case), so sqrt'd distances differ by at
 # most m' = sqrt((4D + 9) * u) * scale (~1.7e-7 * scale at 64-d). The
 # L2 margin TWO_STAGE_MARGIN * sqrt(D / 64) * max(1, scale) is >= ~160x
@@ -34,8 +35,8 @@ TWO_STAGE_MARGIN = 1e-4
 # scores the full sequential mesh: the two stages' fixed cost pays only
 # above it. Measured (k=10, one BLAS thread, 4-core x86): one query
 # breaks even at ~1024 rows for 16-d (~256 for 64-d); 5-40 queries win
-# 1.2-2x from ~500 pairs, 2-5x at 2k-10k; 10k-row argmins win 1.7x at
-# 4-d x 128 codes, ~13x at 64-d x 350 centroids.
+# 1.2-2x from ~500 pairs, 2-5x at 2k-10k; 10k-row argmins win ~1.1x at
+# 4-d x 128 codes, 8-14x at 64-d x 350 centroids.
 TWO_STAGE_MIN_PAIRS = 1024
 
 # Max tree depth: one bit of the int64 hash per level, sign bit never set.

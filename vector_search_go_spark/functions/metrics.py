@@ -204,11 +204,13 @@ def seq_nearest(metric: str, A, B, k: int, b2=None):
         approx *= -2.0
         approx += a2[:, None]
         approx += b2[None]
-        scale = math.sqrt(float(a2.max()) + float(b2.max()))
+        # NaN-skipping maxima: a NaN row must not drop the other rows'
+        # scale (max(1, nan) is 1); an all-NaN side counts as 0
+        scale = math.sqrt(float(np.fmax.reduce(a2, initial=0.0))
+                          + float(np.fmax.reduce(b2, initial=0.0)))
         margin = TWO_STAGE_MARGIN * math.sqrt(A2.shape[1] / 64) * max(1.0, scale)
-    # k = 1 (the argmins): a NaN-skipping min is ~4x cheaper than a partition
-    kth = (np.fmin.reduce(approx, axis=1) if kk == 1
-           else np.partition(approx, kk - 1, axis=1)[:, kk - 1])
+    # partition sorts NaN last: the k-th skips NaN pairs
+    kth = np.partition(approx, kk - 1, axis=1)[:, kk - 1]
     # the L2 cut is set in the sqrt'd domain, then squared back: no
     # sqrt over the whole block
     cut = kth + margin if is_cos else (np.sqrt(np.maximum(kth, 0.0)) + margin) ** 2

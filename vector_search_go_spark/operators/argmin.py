@@ -154,8 +154,8 @@ def topn(ids: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
 
 def nearest_pos(metric: str, V: np.ndarray, C: np.ndarray) -> np.ndarray:
     """``seq_dists(metric, V[:, None], C[None]).argmin(axis=1)`` (the
-    FIRST minimum) without the mesh: seq_nearest's pairs cut to one per
-    row by (dist, position)."""
+    FIRST minimum, NaN sorted last as in pq_encode_np) without the
+    mesh: seq_nearest's pairs cut to one per row by (dist, position)."""
     i, j, d = seq_nearest(metric, V, C, 1)
     return j[local_topk_flat(i, j, d, 1)]
 

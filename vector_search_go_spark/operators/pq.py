@@ -186,13 +186,20 @@ def pq_encode_np(V: np.ndarray, cb_ids: dict, cb_mats: dict) -> np.ndarray:
     """float64 rows -> (n, M_SUB) int64 PQ codes: per subspace, the
     sequential per-dimension squared L2 (seq_dists 'sq_l2') to every
     codeword and the FIRST minimum over ascending code ids == the
-    Catalyst min(struct(d, code)) fold. The one PQ encode every Arrow
-    kernel runs (raw and residual codes UDFs, fused ADC scans)."""
+    Catalyst min(struct(d, code)) fold. NaN sorts last there, as in
+    argmin.nearest_pos (codebook training), so a NaN codeword never
+    wins a row with a number. The one PQ encode every Arrow kernel runs
+    (raw and residual codes UDFs, fused ADC scans)."""
     codes = np.empty((len(V), M_SUB), dtype=np.int64)
     for sub in range(M_SUB):
         Vs = V[:, sub * D_SUB : (sub + 1) * D_SUB]
         D = seq_dists("sq_l2", Vs[:, None], cb_mats[sub][None])
-        codes[:, sub] = cb_ids[sub][D.argmin(axis=1)]
+        pos = D.argmin(axis=1)
+        nan = np.isnan(D[np.arange(len(D)), pos])  # argmin stops at a NaN
+        if nan.any():
+            Dn = D[nan]  # first NaN-skipping minimum; all-NaN rows -> 0
+            pos[nan] = (Dn == np.fmin.reduce(Dn, axis=1)[:, None]).argmax(axis=1)
+        codes[:, sub] = cb_ids[sub][pos]
     return codes
 
 
