@@ -684,8 +684,8 @@ def test_local_ivfpq_reader_preload_vectors(spark, stores):
     )
     for q in queries:
         pd.testing.assert_frame_equal(
-            mem.shard_candidates(q, shortlist=17, nprobe=3, query_id=3),
-            lazy.shard_candidates(q, shortlist=17, nprobe=3, query_id=3),
+            mem.shard_candidates_many([q], shortlist=17, nprobe=3, query_ids=[3]),
+            lazy.shard_candidates_many([q], shortlist=17, nprobe=3, query_ids=[3]),
         )
     pd.testing.assert_frame_equal(
         mem.shard_candidates_many(Q, shortlist=17, nprobe=3),

@@ -70,7 +70,7 @@ def test_scan_reader_bit_identical_to_exact_knn(spark, scan_store, metric):
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
-def test_scan_reader_threshold_parity(spark, scan_store, metric):
+def test_scan_reader_threshold_parity(spark, scan_store, big_id_scan_stores, metric):
     from vector_search_go_spark.operators.exact_knn import exact_knn_join
     from vector_search_go_spark.serve.local_reader import LocalScanReader
 
@@ -90,6 +90,16 @@ def test_scan_reader_threshold_parity(spark, scan_store, metric):
     got = _frame_rows(reader.search(q, k=10, threshold=thr))
     assert got == want
     assert 0 < len(got) < 10
+
+    # a batch where the threshold empties one query keeps the store's
+    # int64 ids: an empty float64 frame in the concat would promote the
+    # whole column and round ids past 2**53
+    base, ids, X = big_id_scan_stores
+    big = LocalScanReader(f"{base}/{metric}")
+    got = big.search_many([X[2], X[2] + 100], k=3, threshold=1e-9)
+    assert got["id"].dtype == np.int64
+    assert got["id"].tolist() == [int(ids[2])]
+
 
 
 def test_scan_search_many_equals_per_query(scan_store):

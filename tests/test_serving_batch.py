@@ -1,8 +1,11 @@
 """Micro-batch serving parity: for every store family, a batched
-point lookup must return BIT-IDENTICAL rows per query to the
-single-query path it amortizes (same candidates, same kernels, same
-(dist, id) tie-breaks) — the correctness contract behind the SCALE.md
-serving-latency table (VERDICT r3 item 2)."""
+Spark point lookup must return BIT-IDENTICAL rows per query to a
+single-query lookup of the same family's driver-side reader
+(serve.local_reader: pyarrow/numpy, no Spark) on the same saved store —
+same candidates, same kernels, same (dist, id) tie-breaks. The
+correctness contract behind the SCALE.md serving-latency table
+(VERDICT r3 item 2); the Spark single-query lookups are batches of one,
+so the reader is the independent reference."""
 
 from __future__ import annotations
 
@@ -57,12 +60,24 @@ def _by_query(rows):
     return {q: sorted(v) for q, v in out.items()}
 
 
+def _assert_matches_reader(got, batch, search):
+    """``got`` (Spark rows by query) equals ``search(qvec)`` — the
+    local reader's one-query lookup — for every query of ``batch``."""
+    assert set(got) == {q for q, _ in batch}
+    for qid, qvec in batch:
+        pdf = search(qvec)
+        want = sorted(
+            (int(i), float(d), int(r))
+            for i, d, r in zip(pdf["id"], pdf["dist"], pdf["rn"])
+        )
+        assert want, f"query {qid}: the reader found no rows"
+        assert got[qid] == want, f"query {qid} diverged from the local reader"
+
+
 def test_lsh_batch_matches_single(spark, stores):
     from vector_search_go_spark.lsh.index import LshIndex
-    from vector_search_go_spark.lsh.search import (
-        lsh_point_search,
-        lsh_point_search_batch,
-    )
+    from vector_search_go_spark.lsh.search import lsh_point_search_batch
+    from vector_search_go_spark.serve.local_reader import LocalLshReader
 
     base, batch = stores
     path = str(base / "lsh")
@@ -72,23 +87,16 @@ def test_lsh_batch_matches_single(spark, stores):
             spark, path, batch, metric="l2", k=5, forest=forest
         ).collect()
     )
-    assert set(got) == {q for q, _ in batch}
-    for qid, qvec in batch:
-        want = sorted(
-            (r["id"], r["dist"], r["rn"])
-            for r in lsh_point_search(
-                spark, path, qvec, metric="l2", k=5, forest=forest
-            ).collect()
-        )
-        assert got[qid] == want, f"query {qid} diverged from single path"
+    reader = LocalLshReader(path, metric="l2")
+    _assert_matches_reader(got, batch, lambda q: reader.search(q, k=5))
 
 
 def test_ivf_batch_matches_single(spark, stores):
     from vector_search_go_spark.operators.ann_ivf import (
-        ivf_point_search,
         ivf_point_search_batch,
         load_ivf_model,
     )
+    from vector_search_go_spark.serve.local_reader import LocalIvfReader
 
     base, batch = stores
     path = str(base / "ivf")
@@ -98,23 +106,16 @@ def test_ivf_batch_matches_single(spark, stores):
             spark, path, batch, metric="cosine", k=5, nprobe=3, model=model
         ).collect()
     )
-    assert set(got) == {q for q, _ in batch}
-    for qid, qvec in batch:
-        want = sorted(
-            (r["id"], r["dist"], r["rn"])
-            for r in ivf_point_search(
-                spark, path, qvec, metric="cosine", k=5, nprobe=3, model=model
-            ).collect()
-        )
-        assert got[qid] == want, f"query {qid} diverged from single path"
+    reader = LocalIvfReader(path, metric="cosine")
+    _assert_matches_reader(got, batch, lambda q: reader.search(q, k=5, nprobe=3))
 
 
 def test_ivfpq_batch_matches_single(spark, stores):
     from vector_search_go_spark.operators.pq import (
-        ivfpq_point_search,
         ivfpq_point_search_batch,
         load_ivfpq_models,
     )
+    from vector_search_go_spark.serve.local_reader import LocalIvfPqReader
 
     base, batch = stores
     path = str(base / "ivfpq")
@@ -124,15 +125,8 @@ def test_ivfpq_batch_matches_single(spark, stores):
             spark, path, batch, metric="l2", k=5, nprobe=3, models=models
         ).collect()
     )
-    assert set(got) == {q for q, _ in batch}
-    for qid, qvec in batch:
-        want = sorted(
-            (r["id"], r["dist"], r["rn"])
-            for r in ivfpq_point_search(
-                spark, path, qvec, metric="l2", k=5, nprobe=3, models=models
-            ).collect()
-        )
-        assert got[qid] == want, f"query {qid} diverged from single path"
+    reader = LocalIvfPqReader(path)
+    _assert_matches_reader(got, batch, lambda q: reader.search(q, k=5, nprobe=3))
 
 
 def test_batch_input_validation(spark, stores):

@@ -167,7 +167,7 @@ def test_engine_local_reader_routes_sharded(spark, sharded_stores):
     assert _frame_rows(rd.search(q, k=10)) == _frame_rows(single.search(q, k=10))
 
 
-def test_sharded_search_many_positional_order(sharded_stores):
+def test_sharded_search_many_positional_order(sharded_stores, big_id_scan_stores):
     """Row ORDER (not just row set) must match the unsharded reader:
     queries emit in the caller's query_ids order even when a query has
     zero rows in shard 0 (first-appearance order would reorder it)."""
@@ -188,6 +188,16 @@ def test_sharded_search_many_positional_order(sharded_stores):
     assert [tuple(r) for r in got_t.itertuples(index=False)] == [
         tuple(r) for r in want_t.itertuples(index=False)
     ]
+    # ...and whose empty shard frames keep the store's int64 ids past
+    # 2**53 (a float64 empty frame would promote the merged column)
+    base, ids, X = big_id_scan_stores
+    with ShardedReader(f"{base}/sharded") as big:
+        for got in (
+            big.search_many([X[2], X[2] + 100], k=3, threshold=1e-9),
+            big.search(X[2], k=3, threshold=1e-9),
+        ):
+            assert got["id"].dtype == np.int64
+            assert got["id"].tolist() == [int(ids[2])]
 
 
 def test_sharded_save_refuses_empty_shard(spark, tmp_path):
@@ -525,7 +535,7 @@ def test_sharded_ivfpq_survives_shard_compaction_swap(spark, ivfpq_sharded_store
     """A live ShardedReader whose shard workers hold pre-compaction file
     indexes must keep answering after a shard's cells AND vectors
     directories are swapped (compact_codes_store/compact_vectors_store):
-    the per-shard _swap_retry on shard_candidates reloads against the
+    the per-shard _swap_retry on shard_candidates_many reloads against the
     post-swap store. Deterministic version of the compact-under-serve
     probe, through the IVFADC router."""
     import shutil
@@ -682,9 +692,9 @@ def _assert_owner_routed(phase1: dict, fetches: list) -> None:
 
 def test_sharded_sq8_owner_routed_rerank(ivfpq_sq8_stores):
     """Phase 2 of the sharded SQ8 protocol fetches each kept id only
-    from the shard whose phase-1 frame listed it (spied on
-    fetch_dists_many in thread mode, on the worker submits in process
-    mode), and results stay bit-identical to the unsharded reader."""
+    from the shard whose phase-1 frame listed it (spied on the router's
+    one fan-out, in thread mode and in process mode), and results stay
+    bit-identical to the unsharded reader."""
     from vector_search_go_spark.serve import sharded as sh
     from vector_search_go_spark.serve.local_reader import LocalIvfPqReader
 
@@ -696,63 +706,34 @@ def test_sharded_sq8_owner_routed_rerank(ivfpq_sq8_stores):
         queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
     )
 
-    with sh.ShardedReader(str(base / "sharded"), preload_sq8=True) as thr:
-        phase1: dict = {}
-        fetches: list = []
-        for s, r in enumerate(thr.readers):
-            def cand(*a, _s=s, _f=r.shard_candidates_sq8, **k):
-                phase1[_s] = _f(*a, **k)
-                return phase1[_s]
+    for processes in (False, True):
+        with sh.ShardedReader(
+            str(base / "sharded"), processes=processes, preload_sq8=True
+        ) as rd:
+            phase1: dict = {}
+            fetches: list = []
 
-            def cand_many(*a, _s=s, _f=r.shard_candidates_sq8_many, **k):
-                phase1[_s] = _f(*a, **k)
-                return phase1[_s]
+            def fan_out(name, calls, _f=rd._fan_out):
+                frames = _f(name, calls)
+                for (s, args, kwargs), f in zip(calls, frames):
+                    if name == "shard_candidates_sq8_many":
+                        phase1[s] = f
+                    elif name == "fetch_dists_many":
+                        fetches.append((s, args[1], list(kwargs["query_ids"])))
+                return frames
 
-            def fetch(Q, ids, query_ids=None, _s=s, _f=r.fetch_dists_many):
-                fetches.append((_s, ids, list(query_ids)))
-                return _f(Q, ids, query_ids=query_ids)
-
-            r.shard_candidates_sq8 = cand
-            r.shard_candidates_sq8_many = cand_many
-            r.fetch_dists_many = fetch
-        got = thr.search(queries[2], k=10, query_id=0, rerank="sq8", **kw)
-        assert _frame_rows(got) == _frame_rows(want1)
-        _assert_owner_routed(phase1, fetches)
-        phase1.clear()
-        fetches.clear()
-        got = thr.search_many(
-            queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
-        )
-        assert _frame_rows(got) == _frame_rows(want_b)
-        _assert_owner_routed(phase1, fetches)
-
-    with sh.ShardedReader(
-        str(base / "sharded"), processes=True, preload_sq8=True
-    ) as proc:
-        calls: list = []
-        for s, p in enumerate(proc._procs):
-            def submit(fn, args, _s=s, _submit=p.submit):
-                fut = _submit(fn, args)
-                calls.append((_s, fn, args, fut))
-                return fut
-
-            p.submit = submit
-        got = proc.search_many(
-            queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
-        )
-        assert _frame_rows(got) == _frame_rows(want_b)
-        _assert_owner_routed(
-            {
-                s: fut.result()
-                for s, fn, _a, fut in calls
-                if fn is sh._shard_worker_ivfpq_sq8_cand_many
-            },
-            [
-                (s, a[1], a[2])
-                for s, fn, a, _f in calls
-                if fn is sh._shard_worker_fetch_dists_many
-            ],
-        )
+            rd._fan_out = fan_out
+            got = rd.search(queries[2], k=10, query_id=0, rerank="sq8", **kw)
+            assert _frame_rows(got) == _frame_rows(want1)
+            assert sorted(phase1) == [0, 1, 2]
+            _assert_owner_routed(phase1, fetches)
+            phase1.clear()
+            fetches.clear()
+            got = rd.search_many(
+                queries, k=10, query_ids=[4, 3, 2, 1], rerank="sq8", **kw
+            )
+            assert _frame_rows(got) == _frame_rows(want_b)
+            _assert_owner_routed(phase1, fetches)
 
 
 def test_sharded_sq8_frames_equal_unsharded_thread_and_process(ivfpq_sq8_stores):

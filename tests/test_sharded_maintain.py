@@ -588,6 +588,7 @@ def test_vecs_arrival_to_sharded_ivfpq_cycle(spark, tmp_path):
         ivfpq_save,
         pq_codebook,
         pq_shortlist,
+        resolve_shortlist,
     )
     from vector_search_go_spark.serve.local_reader import LocalIvfPqReader
     from vector_search_go_spark.serve.sharded import (
@@ -673,7 +674,7 @@ def test_vecs_arrival_to_sharded_ivfpq_cycle(spark, tmp_path):
     stored = rep.get("recommended_shortlist")
     assert stored is not None and stored >= pq_shortlist(10)
     with ShardedReader(path) as post:
-        assert post._resolve_shortlist(10, None) == max(
+        assert resolve_shortlist(10, None, post._root_rec) == max(
             stored, pq_shortlist(10)
         )
         top = post.search(A[7], k=1)

@@ -275,48 +275,20 @@ class LshIndex:
         single-JSON-line 'model' dir for indexes saved before it."""
         import os
 
-        from vector_search_go_spark.config import LshConfig
-
         if os.path.exists(os.path.join(path, "model_nodes")):
             if "://" not in path:
                 # local store: the model is KBs — read it driver-side
-                # (pyarrow + plain JSON) instead of scheduling two Spark
-                # collect jobs per index load (guide §5; the serving
-                # readers already load models this way). A part the
-                # plain reader cannot read or parse (absent/empty/
-                # compressed config parts — ADVICE r11) falls through,
-                # logged, to the Spark reader below, which handles
-                # every layout Spark itself can write; any other error
-                # is a bug and propagates.
-                import glob
-
+                # (read_forest) instead of scheduling two Spark collect
+                # jobs per index load (guide §5). A part the plain
+                # reader cannot read or parse (absent/empty/compressed
+                # config parts — ADVICE r11) falls through, logged, to
+                # the Spark reader below, which handles every layout
+                # Spark itself can write; any other error is a bug and
+                # propagates.
                 import pyarrow as pa
-                import pyarrow.parquet as pa_pq
 
                 try:
-                    cfg_files = [
-                        f
-                        for f in sorted(
-                            glob.glob(os.path.join(path, "model_config", "*"))
-                        )
-                        if not os.path.basename(f).startswith(("_", "."))
-                        and os.path.isfile(f)
-                    ]
-                    cfg_json = None
-                    for f in cfg_files:
-                        with open(f) as fh:
-                            line = fh.readline().strip()
-                        if line:
-                            cfg_json = json.loads(line)["config_json"]
-                            break
-                    if cfg_json is not None:
-                        rows = pa_pq.read_table(
-                            os.path.join(path, "model_nodes")
-                        ).to_pylist()
-                        return Forest.from_node_rows(
-                            LshConfig(**json.loads(cfg_json)), rows
-                        )
-                    reason = "no non-empty model_config line"
+                    return read_forest(path)
                 except (OSError, ValueError, KeyError, pa.ArrowInvalid) as exc:
                     reason = f"{type(exc).__name__}: {exc}"
                 logging.getLogger(__name__).warning(
@@ -349,3 +321,26 @@ class LshIndex:
             spark, path, read_parquet_cached(spark, f"{path}/vectors")
         )
         return cls(forest.config, forest, vectors, buckets)
+
+
+def read_forest(path: str) -> Forest:
+    """The saved tree model of a local LSH store, read without Spark:
+    the first ``config_json`` line of ``{path}/model_config`` plus the
+    ``{path}/model_nodes`` table. The one driver-side model read of
+    the serving readers, the sharded hot-bucket refresh and
+    LshIndex.load_forest. FileNotFoundError when no config line
+    exists; parse errors raise."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from vector_search_go_spark.serve.local_reader import (
+        meta_files,
+        parse_meta_files,
+    )
+
+    cfg = parse_meta_files(meta_files(path, "model_config"), "config_json")
+    if cfg is None:
+        raise FileNotFoundError(f"no model_config JSON line under {path}")
+    rows = pq.read_table(os.path.join(path, "model_nodes")).to_pylist()
+    return Forest.from_node_rows(LshConfig(**cfg), rows)

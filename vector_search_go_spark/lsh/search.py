@@ -260,32 +260,38 @@ def lsh_point_search_batch(
     threshold: float | None = None,
     forest=None,
 ) -> DataFrame:
-    """Serve a SMALL batch of queries from a PERSISTED index in ONE
-    Spark job — the micro-batch middle ground between
-    ``lsh_point_search`` (one query, ~3 s dominated by Spark's fixed
-    per-job floor) and batch ``lsh_search`` (streams the whole bucket
-    store past a large cached query table). Amortizing the job floor
+    """Serve a SMALL batch of queries from a PERSISTED index — the
+    point-lookup shape of the reference's Search (lsh/lsh.go:137-197),
+    and the one pipeline behind ``lsh_point_search`` (a batch of one).
+    Batch ``lsh_search`` streams the whole bucket store past a large
+    cached query table — right for throughput, wrong for a lookup. Here
+    each call pays Spark's fixed per-job floor once, so amortizing it
     across even 8 queries collapses per-query latency toward the
     large-batch ms/q figure (SCALE.md serving table).
 
-    ``queries`` = [(query_id, qvec), ...]. I/O shape is the single
-    path's, widened: hashes/probes compute driver-side for the whole
-    batch (one ``Forest.hash_batch`` call), the bucket read is one
-    pruned scan PER TREE with ``hash IN (all probed hashes of the
-    batch)`` (row-group skipping intact — hash-sorted files +
-    inFilterThreshold raised in session.py), candidates map back to
-    their probing queries through a broadcast (tree, hash, query_id)
-    probe table, and scoring fans in (each candidate corpus vector
-    crosses Arrow once, however many queries probe it —
-    operators.argmin.fanin_query_scorer). Results are bit-identical
-    per query to ``lsh_point_search`` (tests/test_serving_batch.py).
+    ``queries`` = [(query_id, qvec), ...]. The shape:
 
-    Reference analog: a caller looping Search (lsh/lsh.go:137-197)
-    over a request batch; the reference pays per-call map scans where
-    Spark pays a per-job floor, so batching is the engine's native
-    answer."""
-    from functools import reduce
+      - hashes/probes compute DRIVER-side for the whole batch (one
+        ``Forest.hash_batch`` call — microseconds, no Spark job,
+        exactly the reference's in-process getHashes);
+      - the bucket read is point_bucket_candidates: one pruned scan PER
+        TREE with ``hash IN (all probed hashes of the batch)`` — the
+        tree partition dir is pruned and, because ``LshIndex.save``
+        sorts by hash within each tree, parquet min/max row-group
+        statistics skip everything but the probed buckets (measured at
+        1M x 64-d, 40 trees: 0.11 s per tree scan, ~1.5 s for the
+        union; the single 40-branch OR filter defeats pushdown and
+        costs ~25 s). I/O scales with bucket size, not corpus size;
+      - candidates map back to their probing queries through a
+        broadcast (tree, hash, query_id) probe table, and scoring fans
+        in (each candidate corpus vector crosses Arrow once, however
+        many queries probe it — operators.argmin.fanin_query_scorer).
 
+    A query's rows do not depend on the rest of its batch; they are
+    bit-identical to the driver-side LocalLshReader on the same store
+    (tests/test_serving_batch.py, tests/test_serve_local.py). Pass
+    ``forest`` to skip re-reading the model per call (a serving
+    process loads it once, like the reference holds its hasher)."""
     import numpy as np
 
     from vector_search_go_spark.operators.argmin import fanin_query_scorer
@@ -300,37 +306,22 @@ def lsh_point_search_batch(
     Q = np.asarray([list(v) for _, v in queries], dtype=np.float64)
     hashes = forest.hash_batch(Q)
     probes = forest.probe_batch(hashes)
-    n_trees = hashes.shape[1]
 
     # (tree, hash) -> probing query ids, built driver-side (batch x
-    # trees x 2 entries — tiny); also yields the per-tree pruned scans.
-    probe_rows = sorted(
-        {
-            (t, int(h[i, t]), qids[i])
-            for h in (hashes, probes)
-            for i in range(len(qids))
-            for t in range(n_trees)
-        }
-    )
+    # trees x 2 entries — tiny)
     probe_df = spark.createDataFrame(
-        probe_rows, "tree int, hash bigint, query_id bigint"
+        sorted(
+            {
+                (t, int(h[i, t]), qids[i])
+                for h in (hashes, probes)
+                for i in range(len(qids))
+                for t in range(hashes.shape[1])
+            }
+        ),
+        "tree int, hash bigint, query_id bigint",
     )
-    buckets = spark.read.parquet(f"{index_path}/buckets")
-    parts = []
-    for t in range(n_trees):
-        hs = sorted({h for tr, h, _ in probe_rows if tr == t})
-        parts.append(
-            buckets.where((F.col("tree") == t) & F.col("hash").isin(hs)).select(
-                "tree", "hash", "id"
-            )
-        )
-    from vector_search_go_spark.streaming.delete import mask_tombstones
-
-    # tombstone mask runs BEFORE the thinning: live bucket sizes drive
-    # the survivor rule, matching a store re-saved without the ids
-    scan = _bound_scanned_buckets(
-        mask_tombstones(spark, index_path, reduce(lambda a, b: a.union(b), parts)),
-        forest.config.max_bucket_size,
+    scan = point_bucket_candidates(
+        spark, index_path, hashes, probes, forest.config.max_bucket_size
     )
     # Fan-in list per candidate id; eager-materialized because it feeds
     # a broadcast (an unmaterialized plan would re-run all tree scans).
@@ -341,14 +332,13 @@ def lsh_point_search_batch(
         .agg(F.sort_array(F.collect_set("query_id")).alias("qids"))
         .localCheckpoint(eager=True)
     )
-    queries_df = spark.createDataFrame(
-        [(qid, [float(x) for x in Q[i]]) for i, qid in enumerate(qids)],
-        "query_id bigint, qvec array<double>",
-    )
+    # the batch is driver-side already: the scorer takes its rows as is
+    # (a query DataFrame would cost a collect job per lookup)
+    qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
     vectors = spark.read.parquet(f"{index_path}/vectors")
     id_t = vectors.schema["id"].dataType.simpleString()
     scored = vectors.join(F.broadcast(fanin), on="id").mapInPandas(
-        fanin_query_scorer(queries_df, metric, local_topk=k),
+        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     if threshold is not None:
@@ -360,30 +350,33 @@ def lsh_point_search_batch(
 def point_bucket_candidates(
     spark, index_path: str, hashes, probes, max_bucket_size: int | None = None
 ) -> DataFrame:
-    """Candidate ids for one hashed query: one pruned scan per tree,
-    unioned, hot-bucket-thinned (``max_bucket_size``), distinct. Kept
-    as its own builder so the plan-audit (tools/explain_audit.py
+    """The probed bucket rows ``(tree, hash, id)`` of a hashed query
+    batch (``hashes``/``probes``: one row per query): one pruned scan
+    per tree over the batch's probed hashes, unioned, tombstone-masked,
+    then hot-bucket-thinned (``max_bucket_size``). Kept as its own
+    builder so the plan-audit (tools/explain_audit.py
     op:lsh_point_search) can assert partition pruning and hash pushdown
     on the exact production plan — the eager checkpoint in
-    lsh_point_search otherwise hides the scans."""
+    lsh_point_search_batch otherwise hides the scans."""
     from functools import reduce
+
+    from vector_search_go_spark.streaming.delete import mask_tombstones
 
     buckets = spark.read.parquet(f"{index_path}/buckets")
     parts = []
     for t in range(hashes.shape[1]):
-        hs = sorted({int(hashes[0, t]), int(probes[0, t])})
+        hs = sorted({int(h) for h in hashes[:, t]} | {int(h) for h in probes[:, t]})
         parts.append(
             buckets.where((F.col("tree") == t) & F.col("hash").isin(hs)).select(
                 "tree", "hash", "id"
             )
         )
-    from vector_search_go_spark.streaming.delete import mask_tombstones
-
-    scan = _bound_scanned_buckets(
+    # tombstone mask runs BEFORE the thinning: live bucket sizes drive
+    # the survivor rule, matching a store re-saved without the ids
+    return _bound_scanned_buckets(
         mask_tombstones(spark, index_path, reduce(lambda a, b: a.union(b), parts)),
         max_bucket_size,
     )
-    return scan.select("id").distinct()
 
 
 def lsh_point_search(
@@ -396,61 +389,10 @@ def lsh_point_search(
     forest=None,
     query_id: int = 0,
 ) -> DataFrame:
-    """Single-query point lookup against a PERSISTED index — the
-    serving-latency twin of the reference's one-query Search
-    (lsh/lsh.go:137-197).
-
-    Batch ``lsh_search`` streams the whole bucket store past each query
-    batch — right for throughput, wrong for one query (at 1M x 64-d
-    the cached-store batch path costs ~6 s/query; this path measures
-    ~3 s warm, dominated by Spark's fixed per-job latency — the probed
-    buckets themselves read in ~0.1 s each). The shape difference:
-
-      - hashes compute DRIVER-side (``Forest.hash_batch`` on a 1-row
-        matrix — microseconds, no Spark job, exactly the reference's
-        in-process getHashes);
-      - the bucket read is one pruned scan PER TREE, unioned: a simple
-        ``tree = t AND hash IN (h, probe)`` predicate prunes the tree's
-        partition directory and — because ``LshIndex.save`` sorts by
-        hash within each tree — parquet min/max row-group statistics
-        skip everything but the probed buckets (measured at 1M x 64-d,
-        40 trees: 0.11 s per tree scan, ~1.5 s for the union; the
-        single 40-branch OR filter defeats pushdown entirely and costs
-        ~25 s). I/O scales with bucket size, not corpus size — the
-        100 TB serving story: the store need not be cached or even fit
-        in memory;
-      - candidate ids broadcast into the vectors read; the distance is
-        one numpy pass over candidates only
-        (operators.argmin.single_query_dist_udf — bit-identical to the
-        batch path, pinned in tests/test_lsh_e2e.py).
-
-    Pass ``forest`` to skip re-reading the model per call (a serving
-    process loads it once, like the reference holds its hasher)."""
-    import numpy as np
-
-    from vector_search_go_spark.operators.argmin import single_query_dist_udf
-
-    if forest is None:
-        forest = LshIndex.load_forest(spark, index_path)
-    q = np.asarray(list(qvec), dtype=np.float64)[None, :]
-    hashes = forest.hash_batch(q)
-    probes = forest.probe_batch(hashes)
-    # Materialize the candidate set once: it feeds a broadcast, and an
-    # unmaterialized plan would re-run all tree scans to build it.
-    cand = point_bucket_candidates(
-        spark, index_path, hashes, probes, forest.config.max_bucket_size
-    ).localCheckpoint(eager=True)
-    vectors = spark.read.parquet(f"{index_path}/vectors")
-    scored = vectors.join(F.broadcast(cand), on="id").withColumn(
-        "dist", single_query_dist_udf(metric, q[0])(F.col("vec"))
+    """Single-query point lookup against a PERSISTED index: a one-query
+    lsh_point_search_batch (~3 s at 1M x 64-d, dominated by Spark's
+    fixed per-job latency; the probed buckets read in ~0.1 s each)."""
+    return lsh_point_search_batch(
+        spark, index_path, [(query_id, qvec)], metric, k=k,
+        threshold=threshold, forest=forest,
     )
-    if threshold is not None:
-        scored = scored.filter(F.col("dist") <= F.lit(float(threshold)))
-    top = topk_per_group(
-        scored.withColumn("query_id", F.lit(query_id)),
-        ["query_id"],
-        "dist",
-        k,
-        tiebreak_cols=["id"],
-    )
-    return top.select("query_id", "id", "dist", "rn")

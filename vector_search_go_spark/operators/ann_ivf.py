@@ -344,15 +344,22 @@ def ivf_point_search_batch(
     """Serve a SMALL batch of queries from a saved IVF store in ONE
     job (micro-batch serving — amortizes Spark's fixed per-job floor
     that dominates single-query latency; see SCALE.md serving table).
+    The one pipeline behind ivf_point_search (a batch of one).
 
-    ``queries`` = [(query_id, qvec), ...]. The coarse probe runs
-    driver-side for the whole batch at once (probe_cells), the
-    cells scan reads the UNION of probed cells exactly once
-    (``cell IN (...)`` partition pruning), each scanned row maps back
-    to its probing queries via a broadcast (cell -> query ids) table
-    built driver-side, and scoring fans in (one Arrow crossing per
-    candidate row regardless of batch size). Bit-identical per query
-    to ivf_point_search (tests/test_serving_batch.py)."""
+    ``queries`` = [(query_id, qvec), ...]. Centroids load driver-side
+    (model KBs; pass a preloaded ``model`` = load_ivf_model() to
+    amortize the collect across lookups, the forest= pattern of
+    lsh_point_search). The coarse probe runs driver-side for the whole
+    batch at once (probe_cells: the SAME sequential-IEEE distance and
+    (dist, cid) tie-break as the distributed probe), the cells scan
+    reads the UNION of probed cells exactly once (``cell IN (...)``
+    partition pruning — I/O proportional to the probed cells, not the
+    corpus), each scanned row maps back to its probing queries via a
+    broadcast (cell -> query ids) table built driver-side, and scoring
+    fans in (one Arrow crossing per candidate row regardless of batch
+    size). A query's rows do not depend on the rest of its batch; they
+    are bit-identical to LocalIvfReader on the same store
+    (tests/test_serving_batch.py)."""
     import numpy as np
 
     from vector_search_go_spark.operators.argmin import fanin_query_scorer
@@ -375,10 +382,9 @@ def ivf_point_search_batch(
         sorted((c, sorted(qs)) for c, qs in cell_qids.items()),
         "cell int, qids array<bigint>",
     )
-    queries_df = spark.createDataFrame(
-        [(qid, [float(x) for x in Q[i]]) for i, qid in enumerate(qids)],
-        "query_id bigint, qvec array<double>",
-    )
+    # the batch is driver-side already: the scorer takes its rows as is
+    # (a query DataFrame would cost a collect job per lookup)
+    qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
     from vector_search_go_spark.streaming.delete import mask_tombstones
 
     cells = mask_tombstones(spark, path, spark.read.parquet(f"{path}/cells")).filter(
@@ -386,7 +392,7 @@ def ivf_point_search_batch(
     )
     id_t = cells.schema["id"].dataType.simpleString()
     scored = cells.join(F.broadcast(map_df), on="cell").mapInPandas(
-        fanin_query_scorer(queries_df, metric, local_topk=k),
+        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     if threshold is not None:
@@ -406,31 +412,9 @@ def ivf_point_search(
     model=None,
 ) -> DataFrame:
     """Serve ONE query from a saved IVF store (the IVF twin of
-    lsh.search.lsh_point_search): centroids load driver-side (model
-    KBs; pass a preloaded ``model`` = load_ivf_model() to amortize the
-    collect across lookups, the forest= pattern of lsh_point_search),
-    the nprobe nearest cells are picked in numpy with the SAME
-    sequential-IEEE distance and (dist, cid) tie-break as the
-    distributed probe, and the cells scan carries ``cell IN (...)`` as
-    a partition filter — bucket I/O is proportional to the probed
-    cells, not the corpus. Returns (query_id=0, id, dist, rn)."""
-    from vector_search_go_spark.operators.argmin import single_query_dist_udf
-    from vector_search_go_spark.operators.topk import topk_per_group
-
-    if model is None:
-        model = load_ivf_model(spark, f"{path}/centroids")
-    probed = probe_cells([list(qvec)], model, metric, nprobe)[0]
-
-    from vector_search_go_spark.streaming.delete import mask_tombstones
-
-    cells = mask_tombstones(spark, path, spark.read.parquet(f"{path}/cells")).filter(
-        F.col("cell").isin(probed)
+    lsh.search.lsh_point_search): a one-query ivf_point_search_batch.
+    Returns (query_id=0, id, dist, rn)."""
+    return ivf_point_search_batch(
+        spark, path, [(0, qvec)], metric=metric, k=k, nprobe=nprobe,
+        threshold=threshold, model=model,
     )
-    dist = single_query_dist_udf(metric, qvec)
-    cand = cells.select(
-        F.lit(0).cast("bigint").alias("query_id"), "id", dist(F.col("vec")).alias("dist")
-    )
-    if threshold is not None:
-        cand = cand.filter(F.col("dist") <= threshold)
-    top = topk_per_group(cand, ["query_id"], "dist", k, tiebreak_cols=["id"])
-    return top.select("query_id", "id", "dist", "rn")

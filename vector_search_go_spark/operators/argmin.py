@@ -346,24 +346,6 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
     return score
 
 
-def single_query_dist_udf(metric: str, qvec):
-    """Distance from ONE fixed query vector (closure) to the row's
-    vector — the point-lookup scorer (lsh.search.lsh_point_search):
-    functions.metrics.seq_dists, the kernel the driver-side serving
-    readers (serve/local_reader.py) score with too."""
-    from pyspark.sql.functions import pandas_udf
-
-    check_metric(metric)
-    q = np.asarray(list(qvec), dtype=np.float64)
-
-    @pandas_udf("double")
-    def dist(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64).reshape(len(vecs), len(q))
-        return pd.Series(seq_dists(metric, q, V))
-
-    return dist
-
-
 def pairwise_dist_udf(metric: str):
     """Arrow-batched row-pair distance (both vectors in the row): the
     vectorized twin of functions.metrics.metric_dist (seq_dists over

@@ -76,6 +76,25 @@ def pq_shortlist(k: int = 10) -> int:
     return max(PQ_SHORTLIST, 4 * k)
 
 
+def resolve_shortlist(k: int, shortlist: int | None, recorded: int | None) -> int:
+    """The ADC shortlist an IVFADC lookup reranks: ``shortlist`` when
+    given, else the store's rebuild-time measured budget
+    (``recorded``: store_meta's recommended_shortlist, 0/None when the
+    store has none) floored at pq_shortlist(k), so a larger k keeps its
+    4k margin. The one resolution of the local readers, the shard
+    router and the Spark point path."""
+    if shortlist is not None:
+        return int(shortlist)
+    return max(int(recorded or 0), pq_shortlist(k))
+
+
+def resolve_sq8_keep(k: int, sq8_keep: int | None) -> int:
+    """How many SQ8-ranked ids of the ADC shortlist pay the exact float
+    fetch under rerank='sq8': ``sq8_keep`` when given, else the
+    pq_shortlist(k) floor."""
+    return pq_shortlist(k) if sq8_keep is None else int(sq8_keep)
+
+
 def _subvec(col: Column, sub: Column) -> Column:
     return F.slice(col, sub * D_SUB + 1, F.lit(D_SUB))
 
@@ -1269,104 +1288,6 @@ def _probed_centroids(enc: str, coarse_model, cells, dims: int) -> dict:
     return {c: C[cpos[c]] for c in cells}
 
 
-def ivfpq_point_search(
-    spark,
-    path: str,
-    qvec,
-    metric: str = "l2",
-    k: int = 10,
-    nprobe: int = 4,
-    shortlist: int | None = None,
-    models=None,
-) -> DataFrame:
-    """Serve ONE query from a saved IVF+PQ store: coarse probe and the
-    query's ADC lookup table are computed driver-side (both models are
-    KBs; pass ``models`` = load_ivfpq_models() to amortize the loads
-    across lookups); the codes scan reads ONLY the probed cell
-    partitions and scores each candidate with M_SUB table lookups (no
-    vector math, no full vectors read); the exact rerank collects the
-    shortlist ids (bounded: max(100, 4k) rows) and pushes ``id IN``
-    into the sorted vectors table, so only shortlist row groups are
-    read. I/O = probed-cell codes + shortlist vector row groups — both
-    corpus-size-independent. L2-only, like the store (see ivfpq_save).
-    Returns (query_id=0, id, dist, rn)."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    from vector_search_go_spark.operators.ann_ivf import load_ivf_model, probe_cells
-    from vector_search_go_spark.operators.argmin import single_query_dist_udf
-    from vector_search_go_spark.operators.topk import topk_per_group
-
-    if metric != "l2":
-        raise ValueError(
-            "IVFADC ranks its shortlist by squared L2; for cosine, "
-            "L2-normalize the corpus and queries and use metric='l2'"
-        )
-    if shortlist is None:
-        # honor the rebuild-time measured budget when the store carries
-        # one (maintain_ivfpq + adc_shortlist_probe); the pq_shortlist
-        # floor still applies so a larger k keeps its 4k margin
-        shortlist = max(_stored_shortlist(spark, path) or 0, pq_shortlist(k))
-    enc = store_encoding(spark, path)
-    coarse_model, cb_model = models if models is not None else (None, None)
-    if coarse_model is None:
-        coarse_model = load_ivf_model(spark, f"{path}/centroids")
-    probed = probe_cells([list(qvec)], coarse_model, metric, nprobe)[0]
-
-    # ADC tables per probed cell over q - centroid(cell); a raw store's
-    # centroid rows are zero (q - 0.0 == q), so both encodings score
-    # through the one IVFADC scorer
-    ids, mats = cb_model if cb_model is not None else _codebook_mats(
-        spark.read.parquet(f"{path}/codebook").select("sub", "code", "cvec")
-    )
-    Q = np.asarray([list(qvec)], dtype=np.float64)
-    cell_qpos = {int(c): [0] for c in probed}
-    cent = _probed_centroids(enc, coarse_model, cell_qpos, Q.shape[1])
-    cbs = stack_codebook(ids, mats)
-
-    @pandas_udf("double")
-    def adc(cells: pd.Series, codes: pd.Series) -> pd.Series:
-        Cd = np.array(codes.tolist(), dtype=np.int64).reshape(-1, M_SUB)
-        _, rows, d = ivfadc_dists(Q, cell_qpos, cent, cbs, cells.to_numpy(), Cd)
-        out = np.full(len(Cd), np.nan)
-        out[rows] = d
-        return pd.Series(out)
-
-    from vector_search_go_spark.streaming.delete import mask_tombstones
-
-    cand = (
-        mask_tombstones(spark, path, spark.read.parquet(f"{path}/cells"))
-        .filter(F.col("cell").isin(probed))
-        .select(
-            F.lit(0).cast("bigint").alias("query_id"),
-            "id",
-            adc(F.col("cell"), F.col("codes")).alias("adc_dist"),
-        )
-    )
-    short = topk_per_group(
-        cand, ["query_id"], "adc_dist", shortlist, tiebreak_cols=["id"],
-        rank_name="_s",
-    ).select("id")
-
-    # the shortlist is bounded (max(100, 4k) rows), so collecting it
-    # and pushing `id IN (...)` into the sorted vectors scan keeps the
-    # rerank I/O at shortlist row groups instead of a full-table join
-    # (the lsh_point_search candidate-fetch pattern)
-    short_ids = [r["id"] for r in short.collect()]
-    vectors = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("id").isin(short_ids)
-    )
-    dist = single_query_dist_udf(metric, qvec)
-    rer = vectors.select(
-        F.lit(0).cast("bigint").alias("query_id"),
-        "id",
-        dist(F.col("vec")).alias("dist"),
-    )
-    top = topk_per_group(rer, ["query_id"], "dist", k, tiebreak_cols=["id"])
-    return top.select("query_id", "id", "dist", "rn")
-
-
 def ivfpq_point_search_batch(
     spark,
     path: str,
@@ -1378,19 +1299,24 @@ def ivfpq_point_search_batch(
     models=None,
 ) -> DataFrame:
     """Serve a SMALL batch of queries from a saved IVFADC store in TWO
-    jobs total (shortlist + rerank) regardless of batch size — the
-    micro-batch twin of ivfpq_point_search (see SCALE.md serving
-    table for the per-query latency this buys).
+    jobs total (shortlist + rerank) regardless of batch size; the one
+    pipeline behind ivfpq_point_search (a batch of one). See SCALE.md's
+    serving table for the per-query latency batching buys.
 
     ``queries`` = [(query_id, qvec), ...]. Coarse probes and all ADC
-    lookup tables compute driver-side for the whole batch (LUTs are
-    batch x M_SUB x n_codes doubles — KBs/query, closure-shippable);
-    the codes scan reads the UNION of probed cells once and scores
-    each row against exactly the queries that probed its cell (same
-    sequential LUT-add order as the single path); per-query ADC
-    shortlists collect together (bounded: batch x shortlist rows) and
-    one ``id IN`` vectors fetch reranks them all, fanned in. L2-only
-    like the store. Bit-identical per query to ivfpq_point_search
+    lookup tables compute driver-side for the whole batch (both models
+    are KBs — pass ``models`` = load_ivfpq_models() to amortize the
+    loads across lookups; LUTs are batch x M_SUB x n_codes doubles,
+    closure-shippable). The codes scan reads ONLY the union of probed
+    cell partitions and scores each row against exactly the queries
+    that probed its cell with M_SUB table lookups (no vector math, no
+    full vectors read); per-query ADC shortlists collect together
+    (bounded: batch x shortlist rows) and one ``id IN`` push into the
+    sorted vectors table reads only shortlist row groups for the
+    fanned-in exact rerank. I/O = probed-cell codes + shortlist vector
+    row groups — both corpus-size-independent. L2-only like the store
+    (see ivfpq_save). A query's rows do not depend on the rest of its
+    batch; they are bit-identical to LocalIvfPqReader on the same store
     (tests/test_serving_batch.py)."""
     import numpy as np
 
@@ -1410,9 +1336,8 @@ def ivfpq_point_search_batch(
     if not queries:
         raise ValueError("ivfpq_point_search_batch needs at least one query")
     if shortlist is None:
-        # same resolution as ivfpq_point_search — the two paths must
-        # stay bit-identical (tests/test_serving_batch.py)
-        shortlist = max(_stored_shortlist(spark, path) or 0, pq_shortlist(k))
+        # the store's meta is read only when no budget is given
+        shortlist = resolve_shortlist(k, None, _stored_shortlist(spark, path))
     qids = [int(q) for q, _ in queries]
     if len(set(qids)) != len(qids):
         raise ValueError("duplicate query_id in batch")
@@ -1483,16 +1408,33 @@ def ivfpq_point_search_batch(
         [Row(id=i, qids=sorted(qs)) for i, qs in sorted(id_qids.items())],
         f"id {id_t}, qids array<bigint>",
     )
-    queries_df = spark.createDataFrame(
-        [(qid, [float(x) for x in Q[i]]) for i, qid in enumerate(qids)],
-        "query_id bigint, qvec array<double>",
-    )
+    # the batch is driver-side already: the scorer takes its rows as is
+    # (a query DataFrame would cost a collect job per lookup)
+    qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
     vectors = spark.read.parquet(f"{path}/vectors").filter(
         F.col("id").isin(sorted(id_qids))
     )
     rer = vectors.join(F.broadcast(fan_df), on="id").mapInPandas(
-        fanin_query_scorer(queries_df, metric, local_topk=k),
+        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     top = topk_per_group(rer, ["query_id"], "dist", k, tiebreak_cols=["id"])
     return top.select("query_id", "id", "dist", "rn")
+
+
+def ivfpq_point_search(
+    spark,
+    path: str,
+    qvec,
+    metric: str = "l2",
+    k: int = 10,
+    nprobe: int = 4,
+    shortlist: int | None = None,
+    models=None,
+) -> DataFrame:
+    """Serve ONE query from a saved IVF+PQ store: a one-query
+    ivfpq_point_search_batch. Returns (query_id=0, id, dist, rn)."""
+    return ivfpq_point_search_batch(
+        spark, path, [(0, qvec)], metric=metric, k=k, nprobe=nprobe,
+        shortlist=shortlist, models=models,
+    )

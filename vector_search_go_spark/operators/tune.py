@@ -247,7 +247,7 @@ def serving_batch_advisor(
     Protocol: open the store's own reader (serve.sharded.open_reader —
     local or sharded, any family), warm it, then for each batch size
     run ``search_many`` over disjoint groups of the probe queries and
-    take the median per-query ms (batch 1 uses ``search``). The
+    take the median per-query ms (batch 1 is what ``search`` runs). The
     recommendation is the argmin median with ties to the SMALLER batch
     (smaller batches bound tail latency for free). ``Q`` is the
     caller's probe sample — bounded (hundreds), never the corpus.
@@ -278,19 +278,13 @@ def serving_batch_advisor(
         rows = []
         for b in sorted(int(x) for x in batch_sizes):
             per_q = []
-            if b == 1:
-                for i in range(len(Qm)):
-                    t0 = _time.perf_counter()
-                    reader.search(Qm[i], k=k, **search_kwargs)
-                    per_q.append((_time.perf_counter() - t0) * 1000)
-            else:
-                for g0 in range(0, len(Qm) - b + 1, b):
-                    t0 = _time.perf_counter()
-                    reader.search_many(
-                        Qm[g0 : g0 + b], k=k,
-                        query_ids=list(range(b)), **search_kwargs,
-                    )
-                    per_q.append((_time.perf_counter() - t0) * 1000 / b)
+            for g0 in range(0, len(Qm) - b + 1, b):
+                t0 = _time.perf_counter()
+                reader.search_many(
+                    Qm[g0 : g0 + b], k=k,
+                    query_ids=list(range(b)), **search_kwargs,
+                )
+                per_q.append((_time.perf_counter() - t0) * 1000 / b)
             per_q.sort()
             rows.append((b, float(per_q[len(per_q) // 2])))
     finally:

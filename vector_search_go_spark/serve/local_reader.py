@@ -1,5 +1,5 @@
-"""Driver-side serving readers: single-query point lookups over the
-engine's PERSISTED stores with NO Spark job.
+"""Driver-side serving readers: point lookups over the engine's
+PERSISTED stores with NO Spark job.
 
 The reference serves one query in 15-268 ms because Search walks an
 in-process map (reference lsh/lsh.go:137-197; store/kv/store.go:16-101
@@ -24,6 +24,11 @@ These readers close that gap using ONLY the engine's own artifacts:
     (serve.xxh64 is a bit-exact port of Spark's hash), and scoring
     uses the same sequential-IEEE numpy kernel
     (functions.metrics.seq_dists).
+
+A single lookup and a batch share one pipeline: every reader's
+``search`` is a one-query ``search_many``, and a query's rows never
+depend on the rest of its batch (probes, candidates and scores are per
+query; only model hashing and partition reads are shared).
 
 Result: bit-identical rows to the Spark point paths on the same saved
 store (pinned in tests/test_serve_local.py) at single-digit-to-tens of
@@ -121,9 +126,14 @@ def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
     the exact (query_id, id, dist, rn) contract of the Spark paths
     (operators.topk.topk_per_group tie-break). Numeric ids sort via
     np.lexsort (a Python key-tuple sort over tens of thousands of
-    candidates is serving-visible time); anything else falls back."""
+    candidates is serving-visible time); anything else falls back.
+    An empty id array keeps its dtype and an empty list reads as int64:
+    a float64 ``id`` column in one empty frame would promote every id
+    of a concatenated batch and round ids past 2**53."""
     ids_arr = np.asarray(ids)
-    if len(ids_arr) and np.issubdtype(ids_arr.dtype, np.number):
+    if not len(ids_arr) and not isinstance(ids, np.ndarray):
+        ids_arr = np.empty(0, dtype=np.int64)
+    if np.issubdtype(ids_arr.dtype, np.number):
         d = np.asarray(dists, dtype=np.float64)
         order = topn(ids_arr, d, k)
         return pd.DataFrame(
@@ -145,6 +155,16 @@ def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
     )
 
 
+def _concat(frames) -> pd.DataFrame:
+    """Per-query result frames -> one frame in batch order; no frames
+    is the empty result frame. A batch of one returns its frame as is
+    (pd.concat would copy it)."""
+    frames = list(frames)
+    if not frames:
+        return _result_frame([], [], 0, 0)
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+
 def meta_files(path: str, sub: str = "store_meta") -> list[str]:
     """The JSON part files of a one-line meta table under ``{path}/{sub}``,
     deduplicated (``*.json`` and ``part-*`` both match Spark's
@@ -158,15 +178,16 @@ def meta_files(path: str, sub: str = "store_meta") -> list[str]:
     )
 
 
-def parse_meta_files(files: list[str]) -> dict | None:
-    """First meta_json payload in ``files``; None when no file holds
-    one. Parse errors raise (absence != unreadable)."""
+def parse_meta_files(files: list[str], key: str = "meta_json") -> dict | None:
+    """First ``key`` payload (a JSON string column) in ``files``; None
+    when no file holds a line. Parse errors raise (absence !=
+    unreadable)."""
     for f in files:
         with open(f) as fh:
             for line in fh:
                 line = line.strip()
                 if line:
-                    return json.loads(json.loads(line)["meta_json"])
+                    return json.loads(json.loads(line)[key])
     return None
 
 
@@ -174,6 +195,19 @@ def _read_store_meta(path: str) -> dict:
     """Read ``{path}/store_meta`` (one JSON line, written by ivf_save /
     scan_save) without Spark; {} when the store has none."""
     return parse_meta_files(meta_files(path)) or {}
+
+
+def _read_centroids(path: str):
+    """``{path}/centroids`` -> (cids int64, matrix float64) sorted by
+    cid: the pyarrow twin of argmin.collect_centroids, shared by the
+    IVF and IVFADC readers."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(os.path.join(path, "centroids"), columns=["cid", "cvec"])
+    cids = tbl.column("cid").to_numpy(zero_copy_only=False).astype(np.int64)
+    order = np.argsort(cids, kind="stable")
+    mat = np.array(tbl.column("cvec").to_pylist(), dtype=np.float64)
+    return cids[order], mat[order]
 
 
 def _is_swap_error(exc: BaseException) -> bool:
@@ -312,8 +346,10 @@ class LocalLshReader:
         # tombstoned ids (streaming.delete) masked from every candidate
         # BEFORE the survivor rule — live bucket sizes drive thinning,
         # matching a store re-saved without the ids
+        from vector_search_go_spark.lsh.index import read_forest
+
         self._tomb = load_tombstone_array(path)
-        self.forest = self._load_forest(path)
+        self.forest = read_forest(path)
         self.config = self.forest.config
         self._buckets = TreeBucketIndex(
             os.path.join(path, "buckets"), preload=preload_buckets
@@ -353,34 +389,6 @@ class LocalLshReader:
             self._vec_rgindex = RowGroupIndex(
                 glob.glob(os.path.join(self._vec_path, "*.parquet")), "id"
             )
-
-    @staticmethod
-    def _load_forest(path: str):
-        import pyarrow.parquet as pq
-
-        from vector_search_go_spark.config import LshConfig
-        from vector_search_go_spark.lsh.hasher import Forest
-
-        cfg_files = sorted(
-            glob.glob(os.path.join(path, "model_config", "*.json"))
-            + glob.glob(os.path.join(path, "model_config", "part-*"))
-        )
-        cfg_json = None
-        for f in cfg_files:
-            with open(f) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        cfg_json = json.loads(line)["config_json"]
-                        break
-            if cfg_json:
-                break
-        if cfg_json is None:
-            raise FileNotFoundError(f"no model_config JSON under {path}")
-        rows = pq.read_table(os.path.join(path, "model_nodes")).to_pylist()
-        return Forest.from_node_rows(LshConfig(**json.loads(cfg_json)), rows)
-
-    # ------------------------------------------------------------------
 
     def _candidates(self, hashes: np.ndarray, probes: np.ndarray) -> list:
         """Probed-bucket reads + hot-bucket survivor rule + distinct —
@@ -486,7 +494,6 @@ class LocalLshReader:
         n2 = None if rows is None else self._norms2[rows]
         return _nearest_frame(self.metric, q, ids, V, k, threshold, query_id, n2)
 
-    @_swap_retry
     def search(
         self,
         qvec,
@@ -494,11 +501,10 @@ class LocalLshReader:
         threshold: float | None = None,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        q = np.asarray(list(qvec), dtype=np.float64)
-        hashes = self.forest.hash_batch(q[None, :])
-        probes = self.forest.probe_batch(hashes)
-        cand = self._candidates(hashes, probes)
-        return self._query_frame(q, cand, k, threshold, query_id)
+        """One lookup: a one-query ``search_many``."""
+        return self.search_many(
+            [list(qvec)], k=k, threshold=threshold, query_ids=[query_id]
+        )
 
     @_swap_retry
     def search_many(
@@ -508,27 +514,24 @@ class LocalLshReader:
         threshold: float | None = None,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch point lookups: row-identical to per-query ``search``
-        concatenated (pinned in tests/test_serve_local.py), with the
-        forest hashing amortized across the batch — one vectorized
-        hash_batch/probe_batch pass instead of per-query tree walks.
-        The per-query candidate work (probe, survivor rule, gather,
-        two-stage score) is already bounded by bucket mass, so a
-        serving tier that batches arrivals pays the reader's floor
-        once per batch, not once per query."""
+        """Point lookups with the forest hashing amortized across the
+        batch — one vectorized hash_batch/probe_batch pass instead of
+        per-query tree walks. The per-query candidate work (probe,
+        survivor rule, gather, two-stage score) is bounded by bucket
+        mass, so a serving tier that batches arrivals pays the
+        reader's floor once per batch, not once per query."""
         Q, query_ids = _batch_queries(Q, query_ids)
         if len(Q) == 0:
             return _result_frame([], [], k, 0)
         hashes = self.forest.hash_batch(Q)
         probes = self.forest.probe_batch(hashes)
-        frames = [
+        return _concat(
             self._query_frame(
                 Q[i], self._candidates(hashes[i : i + 1], probes[i : i + 1]),
                 k, threshold, int(qid),
             )
             for i, qid in enumerate(query_ids)
-        ]
-        return pd.concat(frames, ignore_index=True)
+        )
 
 
 class LocalIvfReader:
@@ -548,20 +551,11 @@ class LocalIvfReader:
 
     def __init__(self, path: str, metric: str = "cosine",
                  preload_cells: bool = False):
-        import pyarrow.parquet as pq
-
         self._ctor = dict(path=path, metric=metric, preload_cells=preload_cells)
         self._tomb = load_tombstone_array(path)
         self.path = path
         self.metric = metric
-        tbl = pq.read_table(os.path.join(path, "centroids"))
-        rows = sorted(
-            zip(tbl.column("cid").to_pylist(), tbl.column("cvec").to_pylist())
-        )
-        self.model = (
-            np.array([r[0] for r in rows], dtype=np.int64),
-            np.array([r[1] for r in rows], dtype=np.float64),
-        )
+        self.model = _read_centroids(path)
         self.dims = self.model[1].shape[1]
         self._cells = HivePartIndex(os.path.join(path, "cells"), "cell")
         self._mem_cells = None
@@ -595,7 +589,6 @@ class LocalIvfReader:
             return _result_frame([], [], k, query_id)
         return _nearest_frame(self.metric, q, ids, V, k, threshold, query_id, n2)
 
-    @_swap_retry
     def search(
         self,
         qvec,
@@ -604,16 +597,11 @@ class LocalIvfReader:
         threshold: float | None = None,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        from vector_search_go_spark.operators.ann_ivf import probe_cells
-
-        q = np.asarray(list(qvec), dtype=np.float64)
-        probed = probe_cells(q[None], self.model, self.metric, nprobe)[0]
-        cell_map = (
-            self._mem_cells if self._mem_cells is not None
-            else self._read_cells(probed)
+        """One lookup: a one-query ``search_many``."""
+        return self.search_many(
+            [list(qvec)], k=k, nprobe=nprobe, threshold=threshold,
+            query_ids=[query_id],
         )
-        hits = [cell_map[int(c)] for c in probed if int(c) in cell_map]
-        return self._query_frame(q, hits, k, threshold, query_id)
 
     @_swap_retry
     def search_many(
@@ -624,13 +612,11 @@ class LocalIvfReader:
         threshold: float | None = None,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch point lookups, row-identical to per-query ``search``
-        concatenated (pinned in tests/test_serve_local.py). Each
-        distinct probed cell is decoded ONCE per batch — queries
-        probing overlapping cells share the parquet read, so batch
-        cost is bounded by the UNION of probed cells, not
-        batch x nprobe. Per-query scoring order is unchanged (cells in
-        probe order, rows in store order), so results cannot differ."""
+        """Point lookups. Each distinct probed cell is decoded ONCE per
+        batch — queries probing overlapping cells share the parquet
+        read, so batch cost is bounded by the UNION of probed cells,
+        not batch x nprobe. Per-query scoring order does not depend on
+        the batch (cells in probe order, rows in store order)."""
         from vector_search_go_spark.operators.ann_ivf import probe_cells
 
         Q, query_ids = _batch_queries(Q, query_ids)
@@ -641,15 +627,14 @@ class LocalIvfReader:
             self._mem_cells if self._mem_cells is not None
             else self._read_cells(_union_values(probes))
         )
-        frames = [
+        return _concat(
             self._query_frame(
                 Q[i],
                 [cell_map[int(c)] for c in probes[i] if int(c) in cell_map],
                 k, threshold, int(qid),
             )
             for i, qid in enumerate(query_ids)
-        ]
-        return pd.concat(frames, ignore_index=True)
+        )
 
 
 class LocalIvfPqReader:
@@ -694,14 +679,7 @@ class LocalIvfPqReader:
         )
         self.path = path
         self._tomb = load_tombstone_array(path)
-        ctbl = pq.read_table(os.path.join(path, "centroids"))
-        crows = sorted(
-            zip(ctbl.column("cid").to_pylist(), ctbl.column("cvec").to_pylist())
-        )
-        self.coarse = (
-            np.array([r[0] for r in crows], dtype=np.int64),
-            np.array([r[1] for r in crows], dtype=np.float64),
-        )
+        self.coarse = _read_centroids(path)
         btbl = pq.read_table(os.path.join(path, "codebook"))
         brows = sorted(
             zip(
@@ -996,11 +974,6 @@ class LocalIvfPqReader:
                 "sq8=True) or run pq.sq8_augment_store"
             )
 
-    def _resolve_sq8_keep(self, k: int, sq8_keep) -> int:
-        from vector_search_go_spark.operators.pq import pq_shortlist
-
-        return pq_shortlist(k) if sq8_keep is None else int(sq8_keep)
-
     def search(
         self,
         qvec,
@@ -1019,8 +992,7 @@ class LocalIvfPqReader:
         result is identical to rerank='exact' (the parity pin); with a
         large measured shortlist and a floor-sized keep it trades the
         bulk of the rerank IO for 8x-cheaper compressed reads. A
-        one-query search_many: single lookups and batches share one
-        pipeline."""
+        one-query search_many."""
         return self.search_many(
             [list(qvec)], k=k, nprobe=nprobe, shortlist=shortlist,
             query_ids=[query_id], rerank=rerank, sq8_keep=sq8_keep,
@@ -1037,24 +1009,25 @@ class LocalIvfPqReader:
         rerank: str = "exact",
         sq8_keep: int | None = None,
     ) -> pd.DataFrame:
-        """Batch point lookups, row-identical to per-query ``search``
-        concatenated (pinned in tests/test_serve_local.py). Two batch
-        amortizations, neither able to change results: each distinct
-        probed cell's (ids, codes) decode is shared across the batch
-        (_shortlists), and the rerank reads the UNION of the batch's
-        shortlist ids in one pass (_union_dists)."""
-        from vector_search_go_spark.operators.pq import pq_shortlist
+        """Point lookups. Two batch amortizations, neither able to
+        change a query's rows: each distinct probed cell's (ids, codes)
+        decode is shared across the batch (_shortlists), and the rerank
+        reads the UNION of the batch's shortlist ids in one pass
+        (_union_dists)."""
+        from vector_search_go_spark.operators.pq import (
+            resolve_shortlist,
+            resolve_sq8_keep,
+        )
 
         if rerank not in ("exact", "sq8"):
             raise ValueError(f"unknown rerank mode {rerank!r}")
         if rerank == "sq8":
             self._require_sq8()
-        if shortlist is None:
-            shortlist = max(self._rec_shortlist, pq_shortlist(k))
+        shortlist = resolve_shortlist(k, shortlist, self._rec_shortlist)
         Q, query_ids = _batch_queries(Q, query_ids)
         if len(Q) == 0:
             return _result_frame([], [], k, 0)
-        keep = self._resolve_sq8_keep(k, sq8_keep)
+        keep = resolve_sq8_keep(k, sq8_keep)
         want = []
         for q, got in zip(Q, self._shortlists(Q, nprobe, shortlist)):
             if got is None:
@@ -1065,23 +1038,20 @@ class LocalIvfPqReader:
                 want.append(got[0])
         qpos, rid, dist = self._union_dists(Q, want)
         bounds = np.searchsorted(qpos, np.arange(len(Q) + 1))
-        return pd.concat(
-            [
-                _result_frame(
-                    rid[bounds[j] : bounds[j + 1]],
-                    dist[bounds[j] : bounds[j + 1]],
-                    k, int(qid),
-                )
-                for j, qid in enumerate(query_ids)
-            ],
-            ignore_index=True,
+        return _concat(
+            _result_frame(
+                rid[bounds[j] : bounds[j + 1]],
+                dist[bounds[j] : bounds[j + 1]],
+                k, int(qid),
+            )
+            for j, qid in enumerate(query_ids)
         )
 
     # -- sharded legs (serve/sharded.py) ------------------------------
     #
     # Exact-rerank protocol: each shard returns its LOCAL ADC
     # top-``shortlist`` slots with their exact distances
-    # (shard_candidates); the router merges by (adc, id).
+    # (shard_candidates_many); the router merges by (adc, id).
     #
     # SQ8 protocol: the exact leg fetches `shortlist` float rows PER
     # SHARD per query — at the measured exact-set budgets that is the
@@ -1094,20 +1064,22 @@ class LocalIvfPqReader:
     # GLOBAL top-L can displace a global keeper from the shard's sq8
     # top-K'), hence the second round trip.
     #
-    # Every leg is a batch call; the single-query legs are one-query
-    # batches, so both run the same pipeline and build one frame.
+    # Every leg is a batch call; a single lookup sends a batch of one.
 
-    def shard_candidates(
+    @_swap_retry
+    def shard_candidates_many(
         self,
-        qvec,
+        Q,
         shortlist: int,
         nprobe: int = 4,
-        query_id: int = 0,
+        query_ids=None,
     ) -> pd.DataFrame:
-        """The per-shard leg of the sharded IVFADC composition: this
-        store's LOCAL ADC top-``shortlist`` by (adc, id), each row
-        carrying BOTH its ADC score and its exact rerank distance ->
-        (query_id, id, adc, dist, vmult).
+        """The per-shard leg of the sharded IVFADC composition: per
+        query, this store's LOCAL ADC top-``shortlist`` by (adc, id),
+        each row carrying BOTH its ADC score and its exact rerank
+        distance -> (query_id, id, adc, dist, vmult). Cell decodes are
+        shared across the batch and the rerank vectors come from one
+        union read.
 
         The router merges these by (adc, id), keeps the GLOBAL
         top-``shortlist``, and ranks those by (dist, id) — bit-identical
@@ -1124,22 +1096,6 @@ class LocalIvfPqReader:
         is the vectors one, while shortlist slots are CODES-row
         multiplicity — at-least-once streaming replays or a
         one-component dedup compaction can make these differ."""
-        return self.shard_candidates_many(
-            [list(qvec)], shortlist=shortlist, nprobe=nprobe,
-            query_ids=[query_id],
-        )
-
-    @_swap_retry
-    def shard_candidates_many(
-        self,
-        Q,
-        shortlist: int,
-        nprobe: int = 4,
-        query_ids=None,
-    ) -> pd.DataFrame:
-        """Batch ``shard_candidates``, row-identical to the per-query
-        calls concatenated (shared cell decode; one union read for the
-        rerank vectors)."""
         Q, query_ids = _batch_queries(Q, query_ids)
         slots = list(self._shortlists(Q, nprobe, shortlist))
         qpos, rid, dist = self._union_dists(
@@ -1170,22 +1126,6 @@ class LocalIvfPqReader:
             {"adc": np.float64, "dist": np.float64, "vmult": np.int64},
         )
 
-    def shard_candidates_sq8(
-        self,
-        qvec,
-        shortlist: int,
-        nprobe: int = 4,
-        query_id: int = 0,
-    ) -> pd.DataFrame:
-        """Phase-1 leg: this store's local ADC top-``shortlist`` slots
-        as (query_id, id, adc, sq8) — sq8 is NaN for an id with no SQ8
-        row (the router drops those exactly where the unsharded search
-        drops them). No float vector IO."""
-        return self.shard_candidates_sq8_many(
-            [list(qvec)], shortlist=shortlist, nprobe=nprobe,
-            query_ids=[query_id],
-        )
-
     @_swap_retry
     def shard_candidates_sq8_many(
         self,
@@ -1194,9 +1134,12 @@ class LocalIvfPqReader:
         nprobe: int = 4,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch ``shard_candidates_sq8``, row-identical to the
-        per-query calls concatenated (shared cell decode; the sq8 code
-        fetch is per query over pinned arrays or pruned row groups)."""
+        """Phase-1 leg: per query, this store's local ADC
+        top-``shortlist`` slots as (query_id, id, adc, sq8) — sq8 is
+        NaN for an id with no SQ8 row (the router drops those exactly
+        where the unsharded search drops them). No float vector IO;
+        cell decodes are shared across the batch, and the sq8 code
+        fetch is per query over pinned arrays or pruned row groups."""
         self._require_sq8()
         Q, query_ids = _batch_queries(Q, query_ids)
         parts = [
@@ -1299,7 +1242,6 @@ class LocalScanReader:
     def __len__(self) -> int:
         return len(self.ids)
 
-    @_swap_retry
     def search(
         self,
         qvec,
@@ -1307,10 +1249,9 @@ class LocalScanReader:
         threshold: float | None = None,
         query_id: int = 0,
     ) -> pd.DataFrame:
-        q = np.asarray(list(qvec), dtype=np.float64)
-        return _nearest_frame(
-            self.metric, q, self.ids, self.mat, k, threshold, query_id,
-            self._norms2,
+        """One lookup: a one-query ``search_many``."""
+        return self.search_many(
+            [list(qvec)], k=k, threshold=threshold, query_ids=[query_id]
         )
 
     @_swap_retry
@@ -1321,18 +1262,17 @@ class LocalScanReader:
         threshold: float | None = None,
         query_ids=None,
     ) -> pd.DataFrame:
-        """Batch lookups, row-identical to per-query ``search``
-        concatenated. The per-query cost is the scan itself (one BLAS
-        matvec over the shard), so batching buys allocator locality,
-        not amortized model work."""
+        """Exact lookups, one scan per query. The per-query cost is the
+        scan itself (one BLAS matvec over the shard), so batching buys
+        allocator locality, not amortized model work."""
         Q, query_ids = _batch_queries(Q, query_ids)
-        if len(Q) == 0:
-            return _result_frame([], [], k, 0)
-        frames = [
-            self.search(Q[i], k=k, threshold=threshold, query_id=int(qid))
+        return _concat(
+            _nearest_frame(
+                self.metric, Q[i], self.ids, self.mat, k, threshold,
+                int(qid), self._norms2,
+            )
             for i, qid in enumerate(query_ids)
-        ]
-        return pd.concat(frames, ignore_index=True)
+        )
 
 
 __all__ = [

@@ -57,6 +57,7 @@ from vector_search_go_spark.serve.local_reader import (
     LocalLshReader,
     LocalScanReader,
     _batch_queries,
+    _concat,
     _read_store_meta,
     _result_frame,
 )
@@ -105,49 +106,9 @@ def _shard_worker_init(family: str, shard_path: str, reader_kwargs: dict):
     _WORKER_READER = _READER_CLS[family](shard_path, **reader_kwargs)
 
 
-def _shard_worker_search(args):
-    qvec, k, kwargs = args
-    return _WORKER_READER.search(qvec, k=k, **kwargs)
-
-
-def _shard_worker_search_many(args):
-    Q, k, query_ids, kwargs = args
-    return _WORKER_READER.search_many(Q, k=k, query_ids=query_ids, **kwargs)
-
-
-def _shard_worker_ivfpq_cand(args):
-    qvec, shortlist, nprobe, query_id = args
-    return _WORKER_READER.shard_candidates(
-        qvec, shortlist=shortlist, nprobe=nprobe, query_id=query_id
-    )
-
-
-def _shard_worker_ivfpq_cand_many(args):
-    Q, shortlist, nprobe, query_ids = args
-    return _WORKER_READER.shard_candidates_many(
-        Q, shortlist=shortlist, nprobe=nprobe, query_ids=query_ids
-    )
-
-
-def _shard_worker_ivfpq_sq8_cand(args):
-    qvec, shortlist, nprobe, query_id = args
-    return _WORKER_READER.shard_candidates_sq8(
-        qvec, shortlist=shortlist, nprobe=nprobe, query_id=query_id
-    )
-
-
-def _shard_worker_ivfpq_sq8_cand_many(args):
-    Q, shortlist, nprobe, query_ids = args
-    return _WORKER_READER.shard_candidates_sq8_many(
-        Q, shortlist=shortlist, nprobe=nprobe, query_ids=query_ids
-    )
-
-
-def _shard_worker_fetch_dists_many(args):
-    Q, ids_per_query, query_ids = args
-    return _WORKER_READER.fetch_dists_many(
-        Q, ids_per_query, query_ids=query_ids
-    )
+def _shard_worker_call(name: str, args: tuple, kwargs: dict):
+    """Run reader method ``name`` in this shard's worker process."""
+    return getattr(_WORKER_READER, name)(*args, **kwargs)
 
 
 def shard_expr(n_shards: int):
@@ -244,23 +205,9 @@ def refresh_hot_buckets(spark, path: str) -> int:
         )
     # the cap comes from the (shared) model config; shard=0 is
     # authoritative because every shard was saved from the same index
-    import json as _json
+    from vector_search_go_spark.lsh.index import read_forest
 
-    from vector_search_go_spark.serve.local_reader import meta_files
-
-    cfg = None
-    for f in meta_files(os.path.join(path, "shard=0"), "model_config"):
-        with open(f) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    cfg = _json.loads(_json.loads(line)["config_json"])
-                    break
-        if cfg is not None:
-            break
-    if cfg is None:
-        raise FileNotFoundError(f"no model_config JSON under {path}/shard=0")
-    cap = cfg.get("max_bucket_size")
+    cap = read_forest(os.path.join(path, "shard=0")).config.max_bucket_size
     if cap is None:
         return 0
     hot = (
@@ -324,7 +271,7 @@ class ShardedReader:
     IVFADC (family 'ivfpq', r6 VERDICT item 1) composes differently
     from the top-k families: each shard returns its LOCAL ADC
     top-shortlist WITH both the ADC score and the exact rerank
-    distance (LocalIvfPqReader.shard_candidates), the router merges by
+    distance (LocalIvfPqReader.shard_candidates_many), the router merges by
     (adc, id), keeps the GLOBAL top-shortlist, drops missing-vector
     rows, and ranks by (dist, id). Bit-identical to the unsharded
     reader because per-shard ADC top-L is selection-monotone (every
@@ -450,14 +397,11 @@ class ShardedReader:
         shard contributes zero rows there too). Uses the same
         _result_frame tie-break as every reader."""
         a, segs = _segments(frames, ("id", "dist"), order)
-        out = [
+        return _concat(
             _result_frame(a["id"][seg], a["dist"][seg], k, int(qid))
             for qid, seg in zip(order, segs)
             if len(seg)
-        ]
-        if not out:
-            return _result_frame([], [], k, int(order[0]) if len(order) else 0)
-        return pd.concat(out, ignore_index=True)
+        )
 
     def _check_open(self) -> None:
         if self._closed:
@@ -466,15 +410,25 @@ class ShardedReader:
                 "(close() shut down the shard fan-out executors)"
             )
 
-    def _resolve_shortlist(self, k: int, shortlist) -> int:
-        """The unsharded reader's shortlist=None resolution, applied at
-        the ROUTER (layout-level recommended_shortlist), so the global
-        selection depth matches what one big store would use."""
-        from vector_search_go_spark.operators.pq import pq_shortlist
-
-        if shortlist is None:
-            return max(self._root_rec, pq_shortlist(k))
-        return int(shortlist)
+    def _fan_out(self, name: str, calls) -> list[pd.DataFrame]:
+        """Run shard reader method ``name`` once per ``(shard, args,
+        kwargs)`` of ``calls`` — in the shard's worker process, or on
+        the thread pool over the in-process readers — and return the
+        frames in call order. Every shard round trip of the router goes
+        through here: all shards for a lookup's first leg, the owner
+        subset for the SQ8 fetch (_finish_sq8)."""
+        if self._procs is not None:
+            futs = [
+                self._procs[s].submit(_shard_worker_call, name, args, kwargs)
+                for s, args, kwargs in calls
+            ]
+            return [f.result() for f in futs]
+        return list(
+            self._pool.map(
+                lambda c: getattr(self.readers[c[0]], name)(*c[1], **c[2]),
+                calls,
+            )
+        )
 
     @staticmethod
     def _merge_ivfpq(
@@ -512,11 +466,7 @@ class ShardedReader:
                     k, int(qid),
                 )
             )
-        if not out:
-            # empty batch: same empty frame the unsharded reader (and
-            # _merge) return instead of a pd.concat([]) crash
-            return _result_frame([], [], k, int(order[0]) if len(order) else 0)
-        return pd.concat(out, ignore_index=True)
+        return _concat(out)
 
     @staticmethod
     def _sq8_keep_ids(
@@ -558,9 +508,7 @@ class ShardedReader:
         the fetched rows, with vectors-table multiplicity, are exactly
         what asking every shard returns, without decoding row groups
         for ids a shard cannot hold."""
-        qids = [int(q) for q in qids]
-        Q = np.asarray(Q, dtype=np.float64)
-        calls = []  # (shard, query rows, ids per routed query)
+        calls = []  # (shard, (query rows, ids per routed query), kwargs)
         for s, f in enumerate(phase1):
             a, listed = _segments([f], ("id",), qids)
             rows, ids = [], []
@@ -571,211 +519,70 @@ class ShardedReader:
                     rows.append(j)
                     ids.append(own.tolist())
             if rows:
-                calls.append((s, rows, ids))
-        if self._procs is not None:
-            futs = [
-                self._procs[s].submit(
-                    _shard_worker_fetch_dists_many,
-                    (Q[rows].tolist(), ids, [qids[j] for j in rows]),
+                calls.append(
+                    (s, (Q[rows], ids), {"query_ids": [qids[j] for j in rows]})
                 )
-                for s, rows, ids in calls
-            ]
-            frames = [f.result() for f in futs]
-        else:
-            frames = list(
-                self._pool.map(
-                    lambda c: self.readers[c[0]].fetch_dists_many(
-                        Q[c[1]], c[2], query_ids=[qids[j] for j in c[1]]
-                    ),
-                    calls,
-                )
-            )
-        a, segs = _segments(frames, ("id", "dist"), qids)
-        return pd.concat(
-            [
-                _result_frame(a["id"][seg], a["dist"][seg], k, qid)
-                for qid, seg in zip(qids, segs)
-            ],
-            ignore_index=True,
+        a, segs = _segments(self._fan_out("fetch_dists_many", calls), ("id", "dist"), qids)
+        return _concat(
+            _result_frame(a["id"][seg], a["dist"][seg], k, qid)
+            for qid, seg in zip(qids, segs)
         )
 
-    def _resolve_sq8_keep(self, k: int, sq8_keep) -> int:
-        from vector_search_go_spark.operators.pq import pq_shortlist
-
-        return pq_shortlist(k) if sq8_keep is None else int(sq8_keep)
-
     def search(self, qvec, k: int = 10, query_id: int = 0, **kwargs) -> pd.DataFrame:
-        self._check_open()
-        if self.family == "ivfpq":
-            nprobe = int(kwargs.pop("nprobe", 4))
-            shortlist = self._resolve_shortlist(k, kwargs.pop("shortlist", None))
-            rerank = str(kwargs.pop("rerank", "exact"))
-            sq8_keep = kwargs.pop("sq8_keep", None)
-            if kwargs:
-                raise TypeError(
-                    f"unexpected ivfpq search kwargs {sorted(kwargs)}"
-                )
-            if rerank == "sq8":
-                keep = self._resolve_sq8_keep(k, sq8_keep)
-                if self._procs is not None:
-                    qlist = [float(x) for x in qvec]
-                    futs = [
-                        p.submit(
-                            _shard_worker_ivfpq_sq8_cand,
-                            (qlist, shortlist, nprobe, query_id),
-                        )
-                        for p in self._procs
-                    ]
-                    frames = [f.result() for f in futs]
-                else:
-                    frames = list(
-                        self._pool.map(
-                            lambda r: r.shard_candidates_sq8(
-                                qvec, shortlist=shortlist, nprobe=nprobe,
-                                query_id=query_id,
-                            ),
-                            self.readers,
-                        )
-                    )
-                kept = self._sq8_keep_ids(frames, shortlist, keep, [query_id])
-                return self._finish_sq8(
-                    frames, kept, [list(qvec)], [query_id], k
-                )
-            if rerank != "exact":
-                raise ValueError(f"unknown rerank mode {rerank!r}")
-            if self._procs is not None:
-                qlist = [float(x) for x in qvec]
-                futs = [
-                    p.submit(
-                        _shard_worker_ivfpq_cand,
-                        (qlist, shortlist, nprobe, query_id),
-                    )
-                    for p in self._procs
-                ]
-                frames = [f.result() for f in futs]
-            else:
-                frames = list(
-                    self._pool.map(
-                        lambda r: r.shard_candidates(
-                            qvec, shortlist=shortlist, nprobe=nprobe,
-                            query_id=query_id,
-                        ),
-                        self.readers,
-                    )
-                )
-            return self._merge_ivfpq(frames, k, shortlist, [query_id])
-        if self._procs is not None:
-            qlist = [float(x) for x in qvec]
-            futs = [
-                p.submit(
-                    _shard_worker_search,
-                    (qlist, k, {**kwargs, "query_id": query_id}),
-                )
-                for p in self._procs
-            ]
-            frames = [f.result() for f in futs]
-        else:
-            frames = list(
-                self._pool.map(
-                    lambda r: r.search(qvec, k=k, query_id=query_id, **kwargs),
-                    self.readers,
-                )
-            )
-        return self._merge(frames, k, [query_id])
+        """One lookup: a one-query ``search_many``."""
+        return self.search_many([list(qvec)], k=k, query_ids=[query_id], **kwargs)
 
     def search_many(
         self, Q, k: int = 10, query_ids=None, **kwargs
     ) -> pd.DataFrame:
+        """Lookups over every shard, merged per query in the caller's
+        ``query_ids`` order. ``kwargs`` are the family reader's search
+        options; ivfpq takes nprobe, shortlist, rerank and sq8_keep and
+        resolves the shortlist at the router (layout-level
+        recommended_shortlist), so the global selection depth matches
+        what one big store would use."""
+        from vector_search_go_spark.operators.pq import (
+            resolve_shortlist,
+            resolve_sq8_keep,
+        )
+
         self._check_open()
         # normalize exactly like the shard readers do, so the merge can
         # emit queries in the caller's order even when a query has no
         # rows in shard 0 (first-appearance order would reorder it)
-        _, qids = _batch_queries(Q, query_ids)
-        if len(set(int(q) for q in qids)) != len(qids):
+        Q, qids = _batch_queries(Q, query_ids)
+        qids = [int(q) for q in qids]
+        if len(set(qids)) != len(qids):
             # the merge pools shard rows BY LABEL; two different
             # queries under one id would merge into one wrong top-k
             # (the same contract ivfpq_point_search_batch enforces)
             raise ValueError("duplicate query_id in batch")
-        if self.family == "ivfpq":
-            nprobe = int(kwargs.pop("nprobe", 4))
-            shortlist = self._resolve_shortlist(k, kwargs.pop("shortlist", None))
-            rerank = str(kwargs.pop("rerank", "exact"))
-            sq8_keep = kwargs.pop("sq8_keep", None)
-            if kwargs:
-                raise TypeError(
-                    f"unexpected ivfpq search kwargs {sorted(kwargs)}"
-                )
-            sent_ids = [int(q) for q in qids]
-            if rerank == "sq8":
-                keep = self._resolve_sq8_keep(k, sq8_keep)
-                if self._procs is not None:
-                    qmat = [
-                        [float(x) for x in q]
-                        for q in np.asarray(Q, dtype=np.float64)
-                    ]
-                    futs = [
-                        p.submit(
-                            _shard_worker_ivfpq_sq8_cand_many,
-                            (qmat, shortlist, nprobe, sent_ids),
-                        )
-                        for p in self._procs
-                    ]
-                    frames = [f.result() for f in futs]
-                else:
-                    frames = list(
-                        self._pool.map(
-                            lambda r: r.shard_candidates_sq8_many(
-                                Q, shortlist=shortlist, nprobe=nprobe,
-                                query_ids=query_ids,
-                            ),
-                            self.readers,
-                        )
-                    )
-                kept = self._sq8_keep_ids(frames, shortlist, keep, sent_ids)
-                Qn, _ = _batch_queries(Q, query_ids)
-                return self._finish_sq8(frames, kept, Qn, sent_ids, k)
-            if rerank != "exact":
-                raise ValueError(f"unknown rerank mode {rerank!r}")
-            if self._procs is not None:
-                qmat = [
-                    [float(x) for x in q]
-                    for q in np.asarray(Q, dtype=np.float64)
-                ]
-                futs = [
-                    p.submit(
-                        _shard_worker_ivfpq_cand_many,
-                        (qmat, shortlist, nprobe, sent_ids),
-                    )
-                    for p in self._procs
-                ]
-                frames = [f.result() for f in futs]
-            else:
-                frames = list(
-                    self._pool.map(
-                        lambda r: r.shard_candidates_many(
-                            Q, shortlist=shortlist, nprobe=nprobe,
-                            query_ids=query_ids,
-                        ),
-                        self.readers,
-                    )
-                )
-            return self._merge_ivfpq(frames, k, shortlist, sent_ids)
-        if self._procs is not None:
-            qmat = [[float(x) for x in q] for q in np.asarray(Q, dtype=np.float64)]
-            sent_ids = [int(q) for q in qids]
-            futs = [
-                p.submit(_shard_worker_search_many, (qmat, k, sent_ids, kwargs))
-                for p in self._procs
-            ]
-            frames = [f.result() for f in futs]
-        else:
-            frames = list(
-                self._pool.map(
-                    lambda r: r.search_many(Q, k=k, query_ids=query_ids, **kwargs),
-                    self.readers,
-                )
+        if self.family != "ivfpq":
+            frames = self._fan_out(
+                "search_many",
+                [(s, (Q,), dict(k=k, query_ids=qids, **kwargs))
+                 for s in range(self.n_shards)],
             )
-        return self._merge(frames, k, [int(q) for q in qids])
+            return self._merge(frames, k, qids)
+        nprobe = int(kwargs.pop("nprobe", 4))
+        shortlist = resolve_shortlist(k, kwargs.pop("shortlist", None), self._root_rec)
+        rerank = str(kwargs.pop("rerank", "exact"))
+        sq8_keep = kwargs.pop("sq8_keep", None)
+        if kwargs:
+            raise TypeError(f"unexpected ivfpq search kwargs {sorted(kwargs)}")
+        legs = {"exact": "shard_candidates_many", "sq8": "shard_candidates_sq8_many"}
+        if rerank not in legs:
+            raise ValueError(f"unknown rerank mode {rerank!r}")
+        leg = dict(shortlist=shortlist, nprobe=nprobe, query_ids=qids)
+        frames = self._fan_out(
+            legs[rerank], [(s, (Q,), leg) for s in range(self.n_shards)]
+        )
+        if rerank == "exact":
+            return self._merge_ivfpq(frames, k, shortlist, qids)
+        kept = self._sq8_keep_ids(
+            frames, shortlist, resolve_sq8_keep(k, sq8_keep), qids
+        )
+        return self._finish_sq8(frames, kept, Q, qids, k)
 
     def close(self) -> None:
         """Shut down the fan-out executors (worker processes or the
