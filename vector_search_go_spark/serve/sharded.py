@@ -522,7 +522,8 @@ class ShardedReader:
                 calls.append(
                     (s, (Q[rows], ids), {"query_ids": [qids[j] for j in rows]})
                 )
-        a, segs = _segments(self._fan_out("fetch_dists_many", calls), ("id", "dist"), qids)
+        frames = self._fan_out("fetch_dists_many", calls)
+        a, segs = _segments(frames, ("id", "dist"), qids)
         return _concat(
             _result_frame(a["id"][seg], a["dist"][seg], k, qid)
             for qid, seg in zip(qids, segs)
