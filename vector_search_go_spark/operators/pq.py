@@ -1370,7 +1370,7 @@ def ivfpq_point_search_batch(
     id_t = scan.schema["id"].dataType.simpleString()
 
     def adc_score(batches):
-        # the single path's scorer over the whole batch; the exact
+        # the one IVFADC scorer over the whole batch; the exact
         # local top-shortlist per query is result-identical for the
         # downstream topk(shortlist) -> rerank -> topk(k)
         for pdf in batches:
