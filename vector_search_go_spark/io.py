@@ -4,11 +4,15 @@ Replaces the reference's HDF5 scan + dataset prep
 (annbench/annbench.go:189-293, SURVEY.md section 2 O24/O25): the driver
 supplies parquet, so ``spark.read.parquet`` is the whole story. Column
 pruning and filter pushdown reach the parquet scan for free because every
-operator stays in the DataFrame API.
+operator stays in the DataFrame API. Also the Spark-free reader of the
+one-line JSON meta tables (store_meta, shards_meta, model_config) that
+the serving readers, the LSH model load and the IVFADC store share.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 
@@ -244,3 +248,29 @@ def read_table(
     for k, v in options.items():
         r = r.option(k, v)
     return r.load(path)
+
+
+def meta_files(path: str, sub: str = "store_meta") -> list[str]:
+    """The JSON part files of a one-line meta table under ``{path}/{sub}``,
+    deduplicated (``*.json`` and ``part-*`` both match Spark's
+    ``part-...json`` output) and sorted. Shared by every meta reader —
+    store_meta, shards_meta, and the shortlist memo key."""
+    return sorted(
+        set(
+            glob.glob(os.path.join(path, sub, "*.json"))
+            + glob.glob(os.path.join(path, sub, "part-*"))
+        )
+    )
+
+
+def parse_meta_files(files: list[str], key: str = "meta_json") -> dict | None:
+    """First ``key`` payload (a JSON string column) in ``files``; None
+    when no file holds a line. Parse errors raise (absence !=
+    unreadable)."""
+    for f in files:
+        with open(f) as fh:
+            for line in fh:
+                line = line.strip()
+                if line:
+                    return json.loads(json.loads(line)[key])
+    return None

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from vector_search_go_spark.config import LshConfig
+from vector_search_go_spark.io import meta_files, parse_meta_files
 from vector_search_go_spark.lsh.hasher import Forest
 
 
@@ -323,24 +324,24 @@ class LshIndex:
         return cls(forest.config, forest, vectors, buckets)
 
 
+def read_config(path: str) -> LshConfig:
+    """The saved config of a local LSH store, read without Spark: the
+    first ``config_json`` line of ``{path}/model_config``.
+    FileNotFoundError when no config line exists; parse errors raise."""
+    cfg = parse_meta_files(meta_files(path, "model_config"), "config_json")
+    if cfg is None:
+        raise FileNotFoundError(f"no model_config JSON line under {path}")
+    return LshConfig(**cfg)
+
+
 def read_forest(path: str) -> Forest:
     """The saved tree model of a local LSH store, read without Spark:
-    the first ``config_json`` line of ``{path}/model_config`` plus the
-    ``{path}/model_nodes`` table. The one driver-side model read of
-    the serving readers, the sharded hot-bucket refresh and
-    LshIndex.load_forest. FileNotFoundError when no config line
-    exists; parse errors raise."""
+    read_config plus the ``{path}/model_nodes`` table. The one
+    driver-side model read of the serving readers and
+    LshIndex.load_forest."""
     import os
 
     import pyarrow.parquet as pq
 
-    from vector_search_go_spark.serve.local_reader import (
-        meta_files,
-        parse_meta_files,
-    )
-
-    cfg = parse_meta_files(meta_files(path, "model_config"), "config_json")
-    if cfg is None:
-        raise FileNotFoundError(f"no model_config JSON line under {path}")
     rows = pq.read_table(os.path.join(path, "model_nodes")).to_pylist()
-    return Forest.from_node_rows(LshConfig(**cfg), rows)
+    return Forest.from_node_rows(read_config(path), rows)

@@ -282,10 +282,12 @@ def lsh_point_search_batch(
         1M x 64-d, 40 trees: 0.11 s per tree scan, ~1.5 s for the
         union; the single 40-branch OR filter defeats pushdown and
         costs ~25 s). I/O scales with bucket size, not corpus size;
-      - candidates map back to their probing queries through a
-        broadcast (tree, hash, query_id) probe table, and scoring fans
-        in (each candidate corpus vector crosses Arrow once, however
-        many queries probe it — operators.argmin.fanin_query_scorer).
+      - the probed bucket rows collect to the driver (one job), which
+        maps each candidate id to its probing queries; the ids push one
+        ``id IN (...)`` into the id-sorted vectors table, the map rides
+        the scorer's closure, and scoring fans in (each candidate
+        corpus vector crosses Arrow once, however many queries probe
+        it — operators.argmin.fanin_query_scorer).
 
     A query's rows do not depend on the rest of its batch; they are
     bit-identical to the driver-side LocalLshReader on the same store
@@ -309,36 +311,35 @@ def lsh_point_search_batch(
 
     # (tree, hash) -> probing query ids, built driver-side (batch x
     # trees x 2 entries — tiny)
-    probe_df = spark.createDataFrame(
-        sorted(
-            {
-                (t, int(h[i, t]), qids[i])
-                for h in (hashes, probes)
-                for i in range(len(qids))
-                for t in range(hashes.shape[1])
-            }
-        ),
-        "tree int, hash bigint, query_id bigint",
-    )
+    probe_qids: dict[tuple[int, int], set] = {}
+    for h in (hashes, probes):
+        for i, qid in enumerate(qids):
+            for t in range(h.shape[1]):
+                probe_qids.setdefault((t, int(h[i, t])), set()).add(qid)
     scan = point_bucket_candidates(
         spark, index_path, hashes, probes, forest.config.max_bucket_size
-    )
-    # Fan-in list per candidate id; eager-materialized because it feeds
-    # a broadcast (an unmaterialized plan would re-run all tree scans).
-    fanin = (
-        scan.join(F.broadcast(probe_df), on=["tree", "hash"])
-        .select("query_id", "id")
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_set("query_id")).alias("qids"))
-        .localCheckpoint(eager=True)
-    )
+    ).toArrow()
+    # Fan-in list per candidate id, built driver-side from the probed
+    # bucket rows (bounded: probed buckets x bucket size); it rides the
+    # scorer's closure and its ids push one `id IN (...)` into the
+    # id-sorted vectors table, so only candidate row groups are read
+    id_sets: dict = {}
+    for t, h, i in zip(
+        scan.column("tree").to_pylist(),
+        scan.column("hash").to_pylist(),
+        scan.column("id").to_pylist(),
+    ):
+        id_sets.setdefault(i, set()).update(probe_qids[(t, h)])
+    id_qids = {i: sorted(qs) for i, qs in id_sets.items()}
     # the batch is driver-side already: the scorer takes its rows as is
     # (a query DataFrame would cost a collect job per lookup)
     qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
     vectors = spark.read.parquet(f"{index_path}/vectors")
     id_t = vectors.schema["id"].dataType.simpleString()
-    scored = vectors.join(F.broadcast(fanin), on="id").mapInPandas(
-        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
+    scored = vectors.filter(F.col("id").isin(sorted(id_qids))).mapInPandas(
+        fanin_query_scorer(
+            None, metric, local_topk=k, qrows=qrows, qids_by=("id", id_qids)
+        ),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     if threshold is not None:
@@ -356,8 +357,8 @@ def point_bucket_candidates(
     then hot-bucket-thinned (``max_bucket_size``). Kept as its own
     builder so the plan-audit (tools/explain_audit.py
     op:lsh_point_search) can assert partition pruning and hash pushdown
-    on the exact production plan — the eager checkpoint in
-    lsh_point_search_batch otherwise hides the scans."""
+    on the exact production plan, which lsh_point_search_batch
+    collects."""
     from functools import reduce
 
     from vector_search_go_spark.streaming.delete import mask_tombstones

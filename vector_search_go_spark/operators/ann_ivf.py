@@ -355,7 +355,8 @@ def ivf_point_search_batch(
     reads the UNION of probed cells exactly once (``cell IN (...)``
     partition pruning — I/O proportional to the probed cells, not the
     corpus), each scanned row maps back to its probing queries via a
-    broadcast (cell -> query ids) table built driver-side, and scoring
+    driver-built (cell -> query ids) map in the scorer's closure (a
+    broadcast map table would cost a job per call), and scoring
     fans in (one Arrow crossing per candidate row regardless of batch
     size). A query's rows do not depend on the rest of its batch; they
     are bit-identical to LocalIvfReader on the same store
@@ -378,10 +379,6 @@ def ivf_point_search_batch(
     for qid, cells_q in zip(qids, probed):
         for c in cells_q:
             cell_qids.setdefault(c, []).append(qid)
-    map_df = spark.createDataFrame(
-        sorted((c, sorted(qs)) for c, qs in cell_qids.items()),
-        "cell int, qids array<bigint>",
-    )
     # the batch is driver-side already: the scorer takes its rows as is
     # (a query DataFrame would cost a collect job per lookup)
     qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
@@ -391,8 +388,10 @@ def ivf_point_search_batch(
         F.col("cell").isin(sorted(cell_qids))
     )
     id_t = cells.schema["id"].dataType.simpleString()
-    scored = cells.join(F.broadcast(map_df), on="cell").mapInPandas(
-        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
+    scored = cells.mapInPandas(
+        fanin_query_scorer(
+            None, metric, local_topk=k, qrows=qrows, qids_by=("cell", cell_qids)
+        ),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     if threshold is not None:

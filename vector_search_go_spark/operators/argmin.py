@@ -260,11 +260,15 @@ def query_matrix(qrows) -> tuple[np.ndarray, np.ndarray]:
 def fanin_query_scorer(queries: DataFrame, metric: str,
                        qid_col: str = "query_id", qvec_col: str = "qvec",
                        local_topk: int | None = None,
-                       qrows: list | None = None):
+                       qrows: list | None = None,
+                       qids_by: tuple[str, dict] | None = None):
     """Fan-in candidate scorer for LSH search: consumes rows
     ``(id, qids array, vec)`` — one row per candidate CORPUS vector with
     the list of query ids it must be scored against — and emits
-    ``(query_id, id, dist)`` pairs.
+    ``(query_id, id, dist)`` pairs. ``qids_by=(col, {key: [query ids]})``
+    drops the ``qids`` column: a row's list is the map's entry for its
+    ``col`` value, and the driver-built map rides the closure (the
+    point lookups; a broadcast map table would cost a job per call).
 
     Why this shape: the pairwise scorer joins each candidate pair to
     BOTH vectors, so a corpus vector hit by q queries crosses the
@@ -303,7 +307,10 @@ def fanin_query_scorer(queries: DataFrame, metric: str,
             if len(pdf) == 0:
                 continue
             V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            qlists = pdf["qids"].tolist()
+            if qids_by is None:
+                qlists = pdf["qids"].tolist()
+            else:
+                qlists = [qids_by[1][key] for key in pdf[qids_by[0]].tolist()]
             lens = np.array([len(l) for l in qlists], dtype=np.int64)
             flat_qids = [q for lst in qlists for q in lst]
             qidx = np.array([qpos[q] for q in flat_qids], dtype=np.int64)

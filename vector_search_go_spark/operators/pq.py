@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_search_go_spark.functions.metrics import l2_dist, seq_dists
+from vector_search_go_spark.io import meta_files, parse_meta_files
 from vector_search_go_spark.operators.topk import topk_per_group
 
 M_SUB = 16  # subspaces
@@ -749,8 +750,6 @@ def store_encoding(spark, path: str) -> str:
 
     key: tuple = ()
     if "://" not in path:
-        from vector_search_go_spark.serve.local_reader import meta_files
-
         files = meta_files(path) + meta_files(f"{path}/shard=0")
         key = tuple((f, _os.stat(f).st_mtime_ns) for f in files)
     hit = _ENCODING_MEMO.get(path)
@@ -941,11 +940,6 @@ def _stored_shortlist(spark, path: str) -> int | None:
         )
         _SHORTLIST_MEMO[path] = ((), val)
         return val
-
-    from vector_search_go_spark.serve.local_reader import (
-        meta_files,
-        parse_meta_files,
-    )
 
     files = meta_files(path)
     if not files:
@@ -1320,8 +1314,6 @@ def ivfpq_point_search_batch(
     (tests/test_serving_batch.py)."""
     import numpy as np
 
-    from pyspark.sql import Row
-
     from vector_search_go_spark.operators.ann_ivf import load_ivf_model, probe_cells
     from vector_search_go_spark.operators.argmin import (
         fanin_query_scorer,
@@ -1399,23 +1391,21 @@ def ivfpq_point_search_batch(
 
     # bounded collect: batch x shortlist rows; the union id list pushes
     # one `id IN (...)` into the sorted vectors table and the per-id
-    # query lists ride a broadcast for the fan-in rerank
-    pairs = short.collect()
+    # query lists ride the rerank scorer's closure
     id_qids: dict = {}
-    for r in pairs:
+    for r in short.collect():
         id_qids.setdefault(r["id"], []).append(r["query_id"])
-    fan_df = spark.createDataFrame(
-        [Row(id=i, qids=sorted(qs)) for i, qs in sorted(id_qids.items())],
-        f"id {id_t}, qids array<bigint>",
-    )
+    id_qids = {i: sorted(qs) for i, qs in id_qids.items()}
     # the batch is driver-side already: the scorer takes its rows as is
     # (a query DataFrame would cost a collect job per lookup)
     qrows = [{"query_id": qid, "qvec": Q[i]} for i, qid in enumerate(qids)]
     vectors = spark.read.parquet(f"{path}/vectors").filter(
         F.col("id").isin(sorted(id_qids))
     )
-    rer = vectors.join(F.broadcast(fan_df), on="id").mapInPandas(
-        fanin_query_scorer(None, metric, local_topk=k, qrows=qrows),
+    rer = vectors.mapInPandas(
+        fanin_query_scorer(
+            None, metric, local_topk=k, qrows=qrows, qids_by=("id", id_qids)
+        ),
         schema=f"query_id bigint, id {id_t}, dist double",
     )
     top = topk_per_group(rer, ["query_id"], "dist", k, tiebreak_cols=["id"])

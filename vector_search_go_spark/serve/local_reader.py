@@ -55,7 +55,6 @@ after 'rebuilt'/'compacted' cycles.
 from __future__ import annotations
 
 import glob
-import json
 import math
 import os
 
@@ -63,6 +62,7 @@ import numpy as np
 import pandas as pd
 
 from vector_search_go_spark.functions.metrics import seq_dists, seq_nearest
+from vector_search_go_spark.io import meta_files, parse_meta_files
 from vector_search_go_spark.operators.argmin import topn
 from vector_search_go_spark.streaming.delete import (
     drop_tombstoned,
@@ -157,38 +157,11 @@ def _result_frame(ids, dists, k: int, query_id: int) -> pd.DataFrame:
 
 def _concat(frames) -> pd.DataFrame:
     """Per-query result frames -> one frame in batch order; no frames
-    is the empty result frame. A batch of one returns its frame as is
-    (pd.concat would copy it)."""
+    is the empty result frame."""
     frames = list(frames)
     if not frames:
         return _result_frame([], [], 0, 0)
-    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-
-
-def meta_files(path: str, sub: str = "store_meta") -> list[str]:
-    """The JSON part files of a one-line meta table under ``{path}/{sub}``,
-    deduplicated (``*.json`` and ``part-*`` both match Spark's
-    ``part-...json`` output) and sorted. Shared by every meta reader —
-    store_meta, shards_meta, and the shortlist memo key."""
-    return sorted(
-        set(
-            glob.glob(os.path.join(path, sub, "*.json"))
-            + glob.glob(os.path.join(path, sub, "part-*"))
-        )
-    )
-
-
-def parse_meta_files(files: list[str], key: str = "meta_json") -> dict | None:
-    """First ``key`` payload (a JSON string column) in ``files``; None
-    when no file holds a line. Parse errors raise (absence !=
-    unreadable)."""
-    for f in files:
-        with open(f) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    return json.loads(json.loads(line)[key])
-    return None
+    return pd.concat(frames, ignore_index=True)
 
 
 def _read_store_meta(path: str) -> dict:

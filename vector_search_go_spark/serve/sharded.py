@@ -50,6 +50,7 @@ from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
 import numpy as np
 import pandas as pd
 
+from vector_search_go_spark.io import meta_files, parse_meta_files
 from vector_search_go_spark.operators.argmin import topn
 from vector_search_go_spark.serve.local_reader import (
     LocalIvfPqReader,
@@ -153,11 +154,6 @@ def write_shards_meta(
 def read_shards_meta(path: str) -> dict | None:
     """None when ``path`` is not a sharded layout; parse errors raise
     (absence != unreadable — the store_metric contract)."""
-    from vector_search_go_spark.serve.local_reader import (
-        meta_files,
-        parse_meta_files,
-    )
-
     return parse_meta_files(meta_files(path, "shards_meta"))
 
 
@@ -205,9 +201,9 @@ def refresh_hot_buckets(spark, path: str) -> int:
         )
     # the cap comes from the (shared) model config; shard=0 is
     # authoritative because every shard was saved from the same index
-    from vector_search_go_spark.lsh.index import read_forest
+    from vector_search_go_spark.lsh.index import read_config
 
-    cap = read_forest(os.path.join(path, "shard=0")).config.max_bucket_size
+    cap = read_config(os.path.join(path, "shard=0")).max_bucket_size
     if cap is None:
         return 0
     hot = (
